@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import graft.queries.QueryCorpus
 
 /** Benchmark main: times the headline queries (QueryCorpus.benchNames) at
@@ -248,10 +248,11 @@ object Bench {
       rerun: Map[String, Seq[Double]]): Seq[(String, Seq[Double])] =
     first.map { case (n, rs) => n -> (rs ++ rerun.getOrElse(n, Seq.empty)) }
 
-  /** Minimal JSON string escape (backslash, quote, control chars) for the
-    * path/dir fields interpolated into the record and summary lines — both
-    * are env-var-controlled, and an unescaped quote in a path would
-    * malform the one line whose entire purpose is guaranteed parseability.
+  /** The driver mains' one JSON string escape (backslash, quote, every
+    * control char), for env-var-controlled paths in the bench record and
+    * summary lines, and for names, SQL and error lines in the Verify and
+    * ClusterValidate records. An unescaped quote in a path would malform the
+    * one line whose entire purpose is guaranteed parseability.
     */
   def jstr(s: String): String =
     "\"" + s.flatMap {
@@ -298,38 +299,31 @@ object Bench {
       s""""run_inflated":$runInflated,"queries":$qmap,"sf":${jstr(sf)},"see":${jstr(see)}}"""
   }
 
+  /** UTF-8 byte budget of [[summaryLine]]: a fraction of the multi-KB stdout
+    * tail the driver keeps, so the final line always arrives whole.
+    */
+  val SummaryBudgetBytes = 2048
+
+  /** A warning when `line` exceeds [[SummaryBudgetBytes]]. The per-query map
+    * grows with the bench list; the line itself is never cut, because a
+    * truncated map would be read as a complete one.
+    */
+  def summaryBudgetWarning(line: String): Option[String] = {
+    val bytes = line.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
+    if (bytes <= SummaryBudgetBytes) None
+    else Some(s"[bench] WARNING: summary line is $bytes bytes, over the " +
+      s"$SummaryBudgetBytes-byte budget — the driver's stdout tail may cut it")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // same SQL-function registration path as GraftSession: the bench
-      // exercises the extension wiring, not a privately-built session
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.configuredCpus)
 
-    // Isolate timed queries from each other: drop every cached plan AND every
-    // still-persisted RDD (localCheckpoint blocks are not catalog-tracked)
-    // so one query's residue can't occupy BlockManager memory when the next
-    // one runs. Done BEFORE each run so the run's own time includes none of
-    // the cleanup.
-    def isolate(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
+    // one timed run; a failed run is recorded as -1
     def run(name: String, dir: String): Double = {
-      isolate()
-      val t0 = System.nanoTime()
-      try QueryCorpus.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); return -1.0 }
-      (System.nanoTime() - t0) / 1e9
+      val out = QueryRunner.run(spark)(QueryRunner.materialize(QueryCorpus.queries(name)(spark, dir)))
+      out.failure.foreach(e => System.err.println(s"[bench] $name failed: $e"))
+      if (out.ok) out.secs else -1.0
     }
     def fmt(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -363,18 +357,9 @@ object Bench {
       if (ok.isEmpty) -1.0 else ok.min
     }
 
-    // Local-iteration subset (mirrors Verify's GRAFT_QUERY_FILTER): bench
-    // only queries matching a comma-separated prefix list. Unset in driver
-    // runs — the official bench always times the full headline list.
-    val benchNames = sys.env.get("GRAFT_BENCH_FILTER") match {
-      case Some(f) if f.nonEmpty =>
-        val prefixes = f.split(',').map(_.trim).filter(_.nonEmpty)
-        val kept = QueryCorpus.benchNames.filter(n => prefixes.exists(n.startsWith))
-        require(kept.nonEmpty,
-          s"GRAFT_BENCH_FILTER='$f' matches no bench query — known: ${QueryCorpus.benchNames.mkString(", ")}")
-        kept
-      case _ => QueryCorpus.benchNames
-    }
+    // Local-iteration subset: GRAFT_QUERY_FILTER. Unset for an official
+    // record, which times the full headline list.
+    val benchNames = QueryRunner.selectFromEnv(QueryCorpus.benchNames)
 
     // Prior-round anchor for the end-of-run repair pass: the committed
     // healthy record from the previous round. Read BEFORE any timing so a
@@ -608,8 +593,10 @@ object Bench {
       System.err.println(s"[bench] wrote $absOut")
     } catch { case e: Throwable => System.err.println(s"[bench] could not write $absOut: $e") }
     println(line)
-    println(summaryLine(total, sharedTotal, sentinel, sentDegraded,
-      priorInflated, totalRatio, runInfl, sfDir, absOut.toString, results))
+    val summary = summaryLine(total, sharedTotal, sentinel, sentDegraded,
+      priorInflated, totalRatio, runInfl, sfDir, absOut.toString, results)
+    summaryBudgetWarning(summary).foreach(System.err.println)
+    println(summary)
     spark.stop()
   }
 }

@@ -35,13 +35,11 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: `sbt "runMain graft.ClusterValidate [sfDir] [outJson]"`, env
   * `GRAFT_CLUSTER_MASTER` (default `local-cluster[2,16,4096]`),
-  * `GRAFT_CLUSTER_QUERIES` (comma prefix filter, default all).
+  * `GRAFT_QUERY_FILTER` (comma prefix filter, default all).
   */
 object ClusterValidate {
 
-  /** Per-phase outcome: digest + wall seconds, or the failure line. */
-  private final case class Outcome(digest: Option[ResultDigest.Digest],
-      secs: Double, err: Option[String])
+  private type Outcome = QueryRunner.Outcome[ResultDigest.Digest]
 
   private def extras: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "x_arrow_shard_roundtrip" -> { (s: SparkSession, dir: String) =>
@@ -74,63 +72,51 @@ object ClusterValidate {
   private def runAll(spark: SparkSession, sfDir: String, phase: String,
       qs: Seq[(String, (SparkSession, String) => DataFrame)]): Map[String, Outcome] =
     qs.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val out = try {
-        val d = ResultDigest.digest(fn(spark, sfDir))
-        Outcome(Some(d), (System.nanoTime() - t0) / 1e9, None)
-      } catch {
-        case e: Throwable =>
-          val line = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .linesIterator.next().take(300)
-          Outcome(None, (System.nanoTime() - t0) / 1e9, Some(line))
-      }
+      val out = QueryRunner.run(spark)(ResultDigest.digest(fn(spark, sfDir)))
       println(f"[cluster] $phase%-8s $name%-28s ${out.secs}%7.2fs " +
-        out.err.map("FAIL " + _).getOrElse(s"rows=${out.digest.get.rows}"))
+        out.result.fold(_ => "FAIL " + out.failure.get, d => s"rows=${d.rows}"))
       name -> out
     }.toMap
 
-  private def jq(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  /** Why `master` cannot fork executor JVMs here, or None. The Spark
+    * launcher (`AbstractCommandBuilder`, spark-launcher 4.1.2) needs a Spark
+    * home — `SPARK_HOME`, else the `spark.test.home` property — and a Scala
+    * suffix: `SPARK_SCALA_VERSION`, else `<spark home>/launcher/target/scala-2.13`
+    * must exist (a release distribution has no such build dir). Without them
+    * every executor dies at fork and the master removes the app after 10
+    * retries, leaving the cluster record unwritten.
+    */
+  def forkPreconditionError(master: String, env: Map[String, String],
+      props: Map[String, String], isDir: String => Boolean): Option[String] = {
+    val forks = master.startsWith("local-cluster") || master.startsWith("spark://")
+    val home = env.get("SPARK_HOME").filter(_.nonEmpty)
+      .orElse(props.get("spark.test.home").filter(_.nonEmpty))
+    if (!forks) None
+    else home match {
+      case None => Some(s"master=$master forks executor JVMs: set SPARK_HOME to the " +
+        "Spark distribution root so the launcher can locate the jars dir")
+      case Some(h) if !env.contains("SPARK_SCALA_VERSION") &&
+          !isDir(s"$h/launcher/target/scala-2.13") =>
+        Some(s"master=$master forks executor JVMs: set SPARK_SCALA_VERSION (e.g. 2.13) " +
+          s"— $h has no launcher/target/scala-2.13 for the launcher to infer it from")
+      case _ => None
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outPath = if (args.length > 1) args(1) else "CLUSTER_r18.json"
     val master = sys.env.getOrElse("GRAFT_CLUSTER_MASTER", "local-cluster[2,16,4096]")
-    val keep: String => Boolean = sys.env.get("GRAFT_CLUSTER_QUERIES") match {
-      case Some(f) if f.nonEmpty =>
-        val ps = f.split(',').map(_.trim).filter(_.nonEmpty)
-        name => ps.exists(name.startsWith)
-      case _ => _ => true
-    }
-    val qs = (QueryCorpus.queries.toSeq ++ extras).sortBy(_._1)
-      .filter(kv => keep(kv._1))
+    val all = (QueryCorpus.queries.toSeq ++ extras).toMap
+    val qs = QueryRunner.selectFromEnv(all.keys.toSeq.sorted).map(n => n -> all(n))
 
-    // local-cluster workers fork executor JVMs through the Spark launcher,
-    // which (a) resolves the jars dir from SPARK_HOME and (b) resolves the
-    // Scala suffix from SPARK_SCALA_VERSION — a release distribution has no
-    // launcher/target build dir to infer it from, and a worker forked
-    // inside sbt never ran load-spark-env.sh. Either unset means every
-    // executor dies at fork ("Cannot find any build directories") and the
-    // master removes the app after 10 retries — the r17/r18 failure mode
-    // that left CLUSTER_r17.json unwritten. Fail loud and early instead:
-    // SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13.
-    if (master.startsWith("local-cluster") || master.startsWith("spark://")) {
-      require(sys.env.contains("SPARK_HOME") || sys.props.contains("spark.test.home"),
-        s"master=$master forks executor JVMs: set SPARK_HOME to the Spark " +
-          "distribution root (e.g. SPARK_HOME=/opt/spark) so the launcher " +
-          "can locate the jars dir")
-      require(sys.env.contains("SPARK_SCALA_VERSION"),
-        s"master=$master forks executor JVMs: set SPARK_SCALA_VERSION " +
-          "(e.g. 2.13) — a release distro has no launcher/target dir for " +
-          "the launcher to infer it from")
-    }
+    // fail loud and early, not after the local phase
+    forkPreconditionError(master, sys.env, sys.props.toMap,
+      new java.io.File(_).isDirectory).foreach(e => throw new IllegalArgumentException(e))
 
+    val cpus = GraftSession.configuredCpus
     val tLocal0 = System.nanoTime()
-    val local = GraftSession.local(32)
+    val local = GraftSession.local(cpus)
     val ref = runAll(local, sfDir, "local", qs)
     local.stop()
     val wallLocal = (System.nanoTime() - tLocal0) / 1e9
@@ -152,12 +138,12 @@ object ClusterValidate {
     val wallClus = (System.nanoTime() - tClus0) / 1e9
 
     val names = qs.map(_._1)
-    def matched(n: String): Boolean = (ref(n), clus(n)) match {
-      case (Outcome(Some(a), _, None), Outcome(Some(b), _, None)) => a.matches(b)
+    def matched(n: String): Boolean = (ref(n).result, clus(n).result) match {
+      case (Right(a), Right(b)) => a.matches(b)
       case _ => false
     }
-    val mismatches = names.filter(n => !matched(n) && ref(n).err.isEmpty && clus(n).err.isEmpty)
-    val errored = names.filter(n => ref(n).err.nonEmpty || clus(n).err.nonEmpty)
+    val mismatches = names.filter(n => !matched(n) && ref(n).ok && clus(n).ok)
+    val errored = names.filter(n => !ref(n).ok || !clus(n).ok)
     val ok = names.count(matched)
     val multiJvmProven = pids.nonEmpty && !pids.contains(driverPid)
 
@@ -165,30 +151,30 @@ object ClusterValidate {
       val (r, c) = (ref(n), clus(n))
       val fields = Seq(
         Some(s""""match": ${matched(n)}"""),
-        r.digest.map(d => s""""rows": ${d.rows}"""),
+        r.result.toOption.map(d => s""""rows": ${d.rows}"""),
         Some(f""""local_s": ${r.secs}%.3f"""),
         Some(f""""cluster_s": ${c.secs}%.3f"""),
-        r.err.map(e => s""""err_local": ${jq(e)}"""),
-        c.err.map(e => s""""err_cluster": ${jq(e)}""")).flatten
-      s"${jq(n)}: {${fields.mkString(", ")}}"
+        r.failure.map(e => s""""err_local": ${Bench.jstr(e)}"""),
+        c.failure.map(e => s""""err_cluster": ${Bench.jstr(e)}""")).flatten
+      s"${Bench.jstr(n)}: {${fields.mkString(", ")}}"
     }.mkString(",\n    ")
 
     val json =
       s"""{
   "metric": "multi_jvm_validation",
   "round": 18,
-  "master": ${jq(master)},
-  "sf": ${jq(sfDir)},
+  "master": ${Bench.jstr(master)},
+  "sf": ${Bench.jstr(sfDir)},
   "driver_pid": $driverPid,
   "executor_pids": [${pids.mkString(", ")}],
   "multi_jvm_proven": $multiJvmProven,
   "queries_total": ${names.size},
   "matched": $ok,
-  "mismatched": [${mismatches.map(jq).mkString(", ")}],
-  "errored": [${errored.map(jq).mkString(", ")}],
+  "mismatched": [${mismatches.map(Bench.jstr).mkString(", ")}],
+  "errored": [${errored.map(Bench.jstr).mkString(", ")}],
   "wall_local_s": ${f"$wallLocal%.1f"},
   "wall_cluster_s": ${f"$wallClus%.1f"},
-  "note": "digest = order-independent xxhash64 fold (count + xor + wraparound sum), doubles canonicalized at 6 significant digits (see ResultDigest scaladoc); corpus queries + 3 cluster-sensitive extras, each run under local[32] then under a forked-executor local-cluster, same box",
+  "note": "digest = order-independent xxhash64 fold (count + xor + wraparound sum), doubles canonicalized at 6 significant digits (see ResultDigest scaladoc); corpus queries + 3 cluster-sensitive extras, each run under local[$cpus] then under a forked-executor local-cluster, same box",
   "queries": {
     $perQuery
   }

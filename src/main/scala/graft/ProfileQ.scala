@@ -1,84 +1,57 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.scheduler.{SparkListenerJobStart, SparkListenerStageCompleted}
+import graft.core.{GraftSession, JobCounter}
 import graft.queries.QueryCorpus
 
 /** Per-query profiling main (developer tool, not a driver artifact): runs
-  * each named corpus query `GRAFT_PROFILE_REPEATS` times (default 5) in ONE
-  * JVM under the same session config as [[Bench]], printing per-run wall
-  * time plus Spark job count, task count, and summed executor task time.
-  * The task-time line separates "the plan does more work" (task time up)
-  * from "the box was contended / JIT was cold" (wall up, task time flat) —
-  * the distinction round verdicts keep needing when a query's bench line
-  * moves between rounds.
+  * each selected corpus query `GRAFT_PROFILE_REPEATS` times (default 5) in
+  * ONE JVM under the engine session, printing per-run wall time plus Spark
+  * job count, task count, and summed executor task time. The task-time line
+  * separates "the plan does more work" (task time up) from "the box was
+  * contended / JIT was cold" (wall up, task time flat) — the distinction
+  * round verdicts keep needing when a query's bench line moves between
+  * rounds. A failed run prints its failure and the loop goes on, so
+  * `GRAFT_PROFILE_REPEATS=1` with the prefix `q` is a full-corpus wall sweep.
   *
   * Usage: sbt "runMain graft.ProfileQ q64_asof_join q175_web_pipeline"
+  * (arguments are name prefixes; none profiles the bench queries)
   */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeats = sys.env.getOrElse("GRAFT_PROFILE_REPEATS", "5").toInt
-    val names = if (args.nonEmpty) args.toSeq else QueryCorpus.benchNames
-    val unknown = names.filterNot(QueryCorpus.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-
-    // same session factory as the engine (and conf-identical to Bench's
-    // builder) so profiles measure the config queries actually run under —
-    // a conf added in one place reaches all three
-    val spark = graft.core.GraftSession.local(cpus.toInt)
+    val names = QueryRunner.selectArgs(args.toSeq)
+    val spark = GraftSession.local(GraftSession.configuredCpus)
 
     val verbose = sys.env.get("GRAFT_PROFILE_STAGES").contains("1")
     println(s"[profile] verbose=$verbose repeats=$repeats sf=$sfDir")
-    val jobs = new AtomicInteger(0)
-    val tasks = new AtomicInteger(0)
-    val taskTimeMs = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
+    def counter(): JobCounter = if (!verbose) new JobCounter else new JobCounter {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        if (verbose)
-          println(s"[job] id=${j.jobId} stages=${j.stageIds.mkString(",")} " +
-            s"sqlExec=${j.properties.getProperty("spark.sql.execution.id", "-")} " +
-            s"callsite=${j.properties.getProperty("callSite.short", "").take(60)}")
+        super.onJobStart(j)
+        println(s"[job] id=${j.jobId} stages=${j.stageIds.mkString(",")} " +
+          s"sqlExec=${j.properties.getProperty("spark.sql.execution.id", "-")} " +
+          s"callsite=${j.properties.getProperty("callSite.short", "").take(60)}")
       }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        tasks.addAndGet(s.stageInfo.numTasks)
-        taskTimeMs.addAndGet(s.stageInfo.taskMetrics.executorRunTime)
-        if (verbose) {
-          println(f"[stage] id=${s.stageInfo.stageId}%4d tasks=${s.stageInfo.numTasks}%4d " +
-            f"time=${s.stageInfo.taskMetrics.executorRunTime / 1000.0}%7.2f s " +
-            f"cpu=${s.stageInfo.taskMetrics.executorCpuTime / 1e9}%7.2f s " +
-            f"deser=${s.stageInfo.taskMetrics.executorDeserializeTime / 1000.0}%6.2f s " +
-            f"gc=${s.stageInfo.taskMetrics.jvmGCTime / 1000.0}%5.2f s  ${s.stageInfo.name.takeWhile(_ != '\n').take(60)}")
-          if (s.stageInfo.taskMetrics.executorRunTime > 1000)
-            s.stageInfo.details.linesIterator.filter(_.contains("graft")).take(6)
-              .foreach(l => println(s"[stage]    ^ $l"))
-        }
+        super.onStageCompleted(s)
+        println(f"[stage] id=${s.stageInfo.stageId}%4d tasks=${s.stageInfo.numTasks}%4d " +
+          f"time=${s.stageInfo.taskMetrics.executorRunTime / 1000.0}%7.2f s " +
+          f"cpu=${s.stageInfo.taskMetrics.executorCpuTime / 1e9}%7.2f s " +
+          f"deser=${s.stageInfo.taskMetrics.executorDeserializeTime / 1000.0}%6.2f s " +
+          f"gc=${s.stageInfo.taskMetrics.jvmGCTime / 1000.0}%5.2f s  ${s.stageInfo.name.takeWhile(_ != '\n').take(60)}")
+        if (s.stageInfo.taskMetrics.executorRunTime > 1000)
+          s.stageInfo.details.linesIterator.filter(_.contains("graft")).take(6)
+            .foreach(l => println(s"[stage]    ^ $l"))
       }
-    })
+    }
 
-    for (name <- names) {
-      for (i <- 1 to repeats) {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        jobs.set(0); tasks.set(0); taskTimeMs.set(0L)
-        val t0 = System.nanoTime()
-        QueryCorpus.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        // listener events drain asynchronously (the public API offers no
-        // flush); settle until the counters stop moving, bounded like
-        // PlanSpec's drain loop so a straggling event source can't hang
-        // the profiler
-        var prev = -1L
-        var spins = 0
-        while (prev != jobs.get.toLong + tasks.get + taskTimeMs.get && spins < 20) {
-          prev = jobs.get.toLong + tasks.get + taskTimeMs.get
-          Thread.sleep(150)
-          spins += 1
-        }
-        println(f"[profile] $name run$i%2d wall=$wall%7.3f s jobs=${jobs.get}%3d tasks=${tasks.get}%5d taskTime=${taskTimeMs.get / 1000.0}%8.2f s")
-      }
+    for (name <- names; i <- 1 to repeats) {
+      val c = counter()
+      val out = c.observe(spark.sparkContext)(QueryRunner.run(spark)(
+        QueryRunner.materialize(QueryCorpus.queries(name)(spark, sfDir))))
+      println(f"[profile] $name run$i%2d wall=${out.secs}%7.3f s jobs=${c.jobs}%3d tasks=${c.tasks}%5d taskTime=${c.taskTimeMs / 1000.0}%8.2f s" +
+        out.failure.fold("")("  FAIL " + _))
     }
     spark.stop()
   }

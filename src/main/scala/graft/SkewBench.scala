@@ -29,9 +29,7 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val uniformDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf1.0")
     val skewDir = sys.env.getOrElse("GRAFT_SKEW_DIR", "/tmp/sf1.0skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.local(cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(graft.core.GraftSession.configuredCpus)
 
     def docs(dir: String): DataFrame =
       spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
@@ -53,15 +51,10 @@ object SkewBench {
           .count()
       })
 
-    def isolate(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
+    // a failed op aborts the run: a ratio needs both legs
     def time(f: => Long): (Double, Long) = {
-      isolate()
-      val t0 = System.nanoTime()
-      val rows = f
-      ((System.nanoTime() - t0) / 1e9, rows)
+      val out = QueryRunner.run(spark)(f)
+      (out.secs, out.result.toTry.get)
     }
 
     // warm-up pass (JIT + parquet footers) then min-of-2, the Bench estimator

@@ -1,53 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * `GRAFT_QUERY_FILTER=q182,q183` dumps (and lists in oracle_sql.json) only
+  * the queries whose name starts with a given prefix; unset, all of them.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = QueryRunner.selectFromEnv(SparkEntry.queries.keys.toSeq.sorted)
+    val spark = GraftSession.local(GraftSession.configuredCpus)
     new java.io.File(outDir).mkdirs()
-    // Local-iteration subset: GRAFT_QUERY_FILTER=q182,q183 dumps (and lists
-    // in oracle_sql.json) only queries whose name starts with a given
-    // prefix. Unset in driver runs — full-corpus behavior is unchanged.
-    val keep: String => Boolean = sys.env.get("GRAFT_QUERY_FILTER") match {
-      case Some(f) if f.nonEmpty =>
-        val prefixes = f.split(',').map(_.trim).filter(_.nonEmpty)
-        name => prefixes.exists(name.startsWith)
-      case _ => _ => true
+    for (name <- names) {
+      val out = QueryRunner.run(spark)(SparkEntry.queries(name)(spark, sfDir)
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+      out.failure.foreach(e => System.err.println(s"[verify] $name failed: $e"))
     }
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // Bench.jstr escapes every control char: a tab or CR in hand-written
+    // oracle SQL would otherwise fail the compare's json.load and silently
+    // zero the correctness record.
+    val json = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
+      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

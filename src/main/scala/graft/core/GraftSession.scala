@@ -17,6 +17,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
+  /** The core count the driver mains run `local[n]` with: `SPARK_GRAFT_CPUS`
+    * when set, else the machine's core count.
+    */
+  def configuredCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Create (or reuse) a local session sized for `local[cpus]`.
     *
     * At cluster scale the same builder settings apply, except
@@ -29,10 +36,11 @@ object GraftSession {
     spark
   }
 
-  /** The engine's session conf, independent of execution mode — one builder
-    * so a conf added here reaches `local`, `multiJvm`, Bench and ProfileQ
-    * alike. `parallelism` sizes `shuffle.partitions` (cores locally; ~2-3×
-    * total executor cores on a real cluster, AQE coalescing the rest).
+  /** The engine's session conf, independent of execution mode — the only
+    * session builder in the program, so a conf added here reaches `local`,
+    * `multiJvm` and every driver main alike. `parallelism` sizes
+    * `shuffle.partitions` (cores locally; ~2-3× total executor cores on a
+    * real cluster, AQE coalescing the rest).
     */
   private def engineBuilder(master: String, parallelism: Int): SparkSession.Builder =
     SparkSession

@@ -523,13 +523,16 @@ object TextAnalysis {
     // LAZY checkpoint (r18, guide §5 — one blocking driver job fewer per
     // call at every scale): eager=true ran a dedicated materialization job
     // and every caller's first action then re-read the blocks as a second
-    // job. With eager=false the caller's first full action (q208's kSel
-    // count, q182's noop write, a test's collect) computes the chain AND
-    // persists it in ONE job; Spark finalizes the local checkpoint at that
-    // job's end, launching a completion job only for partitions the action
-    // skipped (none of the callers take/limit). Callers that fan out
-    // CONCURRENT jobs before any full action would compute partitions
-    // twice — none do; keep a materializing action first if one appears.
+    // job. Only the FINAL result stage is deferred: under AQE the call
+    // still executes the adaptive plan, so every upstream exchange stage
+    // materializes here, at the localCheckpoint call. The caller's first
+    // full action (q208's kSel count, q182's noop write, a test's collect)
+    // then computes that last stage AND persists it in one job; Spark
+    // finalizes the local checkpoint at that job's end, launching a
+    // completion job only for partitions the action skipped (none of the
+    // callers take/limit). Callers that fan out CONCURRENT jobs before any
+    // full action would compute the last stage twice — none do; keep a
+    // materializing action first if one appears.
     val result = base
       .join(coveredSets, Seq("id"), "left")
       .withColumn("__ps__", keptExpr)

@@ -325,6 +325,20 @@ class BenchSpec extends AnyFunSuite {
     assert(s.count(_ == '{') == s.count(_ == '}') && s.count(_ == '"') % 2 == 0)
   }
 
+  test("summaryBudgetWarning: silent within the 2048-byte budget, loud past it") {
+    def line(n: Int) = Bench.summaryLine(total = 1.0, sharedTotal = 0.5, sentinel = 1.0,
+      sentinelDegraded = false, priorInflated = 0.0, totalVsPrior = 1.0,
+      runInflated = false, sf = "sf0.1", see = "/x.json",
+      queries = (1 to n).map(i => f"q$i%03d_some_query_name" -> (0.123456789 * i)))
+    assert(Bench.summaryBudgetWarning(line(25)).isEmpty)
+    // a grown bench list: the warning names the size, the line is not cut
+    val big = line(100)
+    assert(big.getBytes("UTF-8").length > Bench.SummaryBudgetBytes)
+    val warn = Bench.summaryBudgetWarning(big)
+    assert(warn.exists(_.contains(s"${big.getBytes("UTF-8").length} bytes")), warn)
+    assert(Bench.parsePriorQueries(big).size == 100)
+  }
+
   test("warm anchor: degraded or failed warm-up never false-triggers") {
     // inflated warm-up only RAISES the anchor
     assert(!Bench.needsWarmAnchorHeal(Seq(5.0, 5.2), warmTime = 4.0))

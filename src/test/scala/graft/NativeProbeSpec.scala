@@ -133,49 +133,31 @@ class NativeProbeSpec extends AnyFunSuite {
   // ------------------------------------------------- PageRank job accounting
 
   test("pageRank with dangling nodes: no per-iteration driver action (fused dangling mass)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     // count driver-blocking ACTIONS (SQL executions), not AQE stage jobs —
     // pre-fix every iteration ran its own dangling-mass first(), so the
     // execution count scaled with iterations; post-fix it scales only with
     // the snapshot cadence.
-    val execs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet()
-        case _ => ()
-      }
-    }
+    val counter = new graft.core.JobCounter
     // star graph with a dangling center: 1..40 -> 0, node 0 has no out-edges.
     // broadcastNodeLimit=0 forces the web-scale SMJ loop — the invariant
     // under test is THAT path's: no action may scale with iterations when
     // |V| is too big to broadcast. (The broadcast fork snapshots per round
     // by design; its per-round work is |V|-bounded and locally measured.)
     val edges = (1 to 40).map(i => (i.toString, "0")).toDF("src", "dst")
-    spark.sparkContext.addSparkListener(listener)
-    val ranks =
-      try graft.ops.Graph.pageRank(edges, "src", "dst", iterations = 8,
-        broadcastNodeLimit = 0L)
-      finally {
-        // the listener bus is async — poll until the count stabilizes
-        var last = -1
-        var spins = 0
-        while (execs.get() != last && spins < 20) {
-          last = execs.get(); Thread.sleep(150); spins += 1
-        }
-        spark.sparkContext.removeSparkListener(listener)
-      }
+    val ranks = counter.observe(spark.sparkContext)(
+      graft.ops.Graph.pageRank(edges, "src", "dst", iterations = 8,
+        broadcastNodeLimit = 0L))
+    val execs = counter.sqlExecutions
     val total = ranks.agg(sum(col("rank"))).head().getDouble(0)
     assert(math.abs(total - 1.0) < 1e-9, s"rank mass not conserved: $total")
     // setup actions (node count, withDeg count, dangling probe) + snapshots
     // at i=4,8 + the final snapshot ≈ 6; pre-fix added 8 more (one per
     // iteration). The bound fails if the per-iteration action returns.
-    assert(execs.get() <= 9,
-      s"pageRank ran ${execs.get()} SQL executions for 8 iterations — dangling mass is driver-blocking again")
+    assert(execs <= 9,
+      s"pageRank ran $execs SQL executions for 8 iterations — dangling mass is driver-blocking again")
   }
 
   test("pageRank driver-held fork: per-iteration job cadence stays at its designed constant") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // Companion to the forced-SMJ guard above (ADVICE r5): the driver-held
     // fork's per-round driver-job count is a designed constant per tier —
     //   - local-edge tier (default on a small graph): ZERO jobs per round,
@@ -188,27 +170,15 @@ class NativeProbeSpec extends AnyFunSuite {
     // accidental extra per-round action (old snapshot-per-round shape) on
     // either tier.
     def countJobs(iterations: Int, smallBytes: Long): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
+      val counter = new graft.core.JobCounter
       // symmetrized ring: every node has out-edges, so hasDangling=false
       val edges = (0 until 60).flatMap(i =>
         Seq((i.toString, ((i + 1) % 60).toString), (((i + 1) % 60).toString, i.toString)))
         .toDF("src", "dst")
-      spark.sparkContext.addSparkListener(listener)
-      try graft.ops.Graph.pageRank(edges, "src", "dst", iterations = iterations,
-        smallGraphMaxBytes = smallBytes).count()
-      finally {
-        var last = -1
-        var spins = 0
-        while (jobs.get() != last && spins < 20) {
-          last = jobs.get(); Thread.sleep(150); spins += 1
-        }
-        spark.sparkContext.removeSparkListener(listener)
-      }
-      jobs.get()
+      counter.observe(spark.sparkContext)(
+        graft.ops.Graph.pageRank(edges, "src", "dst", iterations = iterations,
+          smallGraphMaxBytes = smallBytes).count())
+      counter.jobs
     }
     val localAt8 = countJobs(8, graft.ops.Graph.defaultSmallGraphMaxBytes)
     val localAt16 = countJobs(16, graft.ops.Graph.defaultSmallGraphMaxBytes)
@@ -230,7 +200,6 @@ class NativeProbeSpec extends AnyFunSuite {
     // ~120k edges). A silent fall-through to the distributed-gather or SMJ
     // tier would add >= 1 job per round and read exactly like the r11
     // 1.84× bench anomaly.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = "/root/testdata/sf0.1"
     assume(new java.io.File(dir).isDirectory, s"$dir not present")
     def edgesOf(): org.apache.spark.sql.DataFrame = {
@@ -246,23 +215,11 @@ class NativeProbeSpec extends AnyFunSuite {
     }
     def countJobs(iterations: Int): Int = {
       val edges = edgesOf()
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try graft.ops.Graph.pageRank(edges, "src", "dst", iterations = iterations,
-        damping = 0.85, edgesDistinct = true).count()
-      finally {
-        var last = -1
-        var spins = 0
-        while (jobs.get() != last && spins < 20) {
-          last = jobs.get(); Thread.sleep(150); spins += 1
-        }
-        spark.sparkContext.removeSparkListener(listener)
-      }
-      jobs.get()
+      val counter = new graft.core.JobCounter
+      counter.observe(spark.sparkContext)(
+        graft.ops.Graph.pageRank(edges, "src", "dst", iterations = iterations,
+          damping = 0.85, edgesDistinct = true).count())
+      counter.jobs
     }
     val at10 = countJobs(10) // the bench's iteration count
     val at20 = countJobs(20)

@@ -1569,12 +1569,9 @@ class OpsSpec extends AnyFunSuite {
     val docs = (1L to 40L).map(i => (i, s"body $i shared words here plus tail"))
       .toDF("doc_id", "text")
     val out = TextAnalysis.removeDuplicateSpans(docs, col("doc_id"), col("text"), k = 3)
-    // statusTracker is listener-fed; poll until the group's count stabilizes
+    // statusTracker is listener-fed: final once the bus is drained
     def jobs(group: String): Int = {
-      val deadline = System.currentTimeMillis() + 10000
-      while (sc.statusTracker.getJobIdsForGroup(group).length < 1 &&
-        System.currentTimeMillis() < deadline) Thread.sleep(50)
-      Thread.sleep(300) // catch stragglers — an EXTRA job here is the bug
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(sc)
       sc.statusTracker.getJobIdsForGroup(group).length
     }
     def countedJobs(tag: String): (Long, Int) = {
@@ -1592,6 +1589,8 @@ class OpsSpec extends AnyFunSuite {
     val (n1, jobsFirst) = countedJobs("first")
     val (n2, jobsWarm) = countedJobs("warm")
     assert(n1 == 40L && n2 == n1)
+    // both actions ran jobs: the drained status store saw them
+    assert(jobsFirst >= 1 && jobsWarm >= 1, s"no job observed: $jobsFirst, $jobsWarm")
     assert(jobsFirst == jobsWarm,
       s"first action over the lazily-checkpointed result ran $jobsFirst jobs; " +
         s"the same action over persisted blocks ran $jobsWarm — materialization " +

@@ -226,30 +226,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   /** Count the SQL executions a body triggers — the staged-pass budget
-    * harness shared by the q208/q38/op-level guards (listener drained with
-    * a bounded quiescence spin: the bus is async).
+    * harness shared by the q208/q38/op-level guards.
     */
   private def sqlExecutionsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    val execs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet()
-        case _ => ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try body
-    finally {
-      var last = -1
-      var spins = 0
-      while (execs.get() != last && spins < 20) {
-        last = execs.get(); Thread.sleep(150); spins += 1
-      }
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    execs.get()
+    val counter = new graft.core.JobCounter
+    counter.observe(spark.sparkContext)(body)
+    counter.sqlExecutions
   }
 
   private def sqlExecutions(queryName: String): Int =

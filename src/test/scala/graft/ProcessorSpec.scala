@@ -397,6 +397,7 @@ class ProcessorSpec extends AnyFunSuite {
     val rows = Seq(org.apache.spark.sql.Row("hello"), org.apache.spark.sql.Row("world"))
     val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
     val out = pipe.transformLocal(spark, rows, sparkSchema, schema)
+    org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
     val after = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
     assert(out.map(_.getString(1)) == Seq("HELLO", "WORLD"))
     assert(after == before, "local path must not launch a Spark job")
