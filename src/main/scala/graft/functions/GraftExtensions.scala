@@ -43,10 +43,16 @@ object GraftExtensions {
     // SQL form takes the shingle size as a trailing int literal:
     //   shingles_from_tokens(word_tokens(text), 3)
     "shingles_from_tokens" -> ((exprs: Seq[Expression]) =>
-      ShinglesFromTokens(exprs.head, literalInt("shingles_from_tokens", exprs(1)))))
+      ShinglesFromTokens(exprs.head, literalInt("shingles_from_tokens", exprs(1)))),
+    // SQL form takes dim as an int literal and an optional norm literal
+    // ('count' | 'none' | 'l2'):
+    //   hashed_token_counts(word_tokens(text), 16, 'l2')
+    "hashed_token_counts" -> ((exprs: Seq[Expression]) =>
+      HashedTokenCounts(exprs.head, literalInt("hashed_token_counts", exprs(1)),
+        if (exprs.size >= 3) literalString("hashed_token_counts", exprs(2)) else "count")))
 
   private def literalString(fn: String, e: Expression): String = {
-    require(e.foldable, s"$fn vocabulary entries must be string literals, got $e")
+    require(e.foldable, s"$fn string arguments must be literals, got $e")
     String.valueOf(e.eval(null))
   }
 

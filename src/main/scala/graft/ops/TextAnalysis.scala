@@ -186,11 +186,21 @@ object TextAnalysis {
   /** Hashed bag-of-tokens feature vector (fastText/Vowpal hashing trick):
     * token t increments bucket `hash60(t) mod dim` — a fixed-width integer
     * feature vector with no vocabulary pass, the standard input for cheap
-    * quality/language classifiers over a corpus. Shuffle-free column
-    * algebra, O(dim·tokens) per doc; engine-portable because the bucket
-    * hash is the shared md5-based [[hash60]].
+    * quality/language classifiers over a corpus. Shuffle-free, O(tokens +
+    * dim) per doc: evaluated by the native
+    * [[graft.functions.HashedTokenCounts]] codegen Expression (one pass into
+    * a primitive count array); engine-portable because the bucket hash is
+    * the shared md5-based [[hash60]]. [[hashedTokenFeaturesReference]] keeps
+    * the built-in spelling for the differential spec.
     */
-  def hashedTokenFeatures(text: Column, dim: Int): Column = {
+  def hashedTokenFeatures(text: Column, dim: Int): Column =
+    graft.functions.HashedTokenCounts.hashed_token_counts(tokens(text), dim)
+
+  /** The portable built-in spelling of [[hashedTokenFeatures]] — pinned
+    * bit-identical (values and dataType) to the native kernel by
+    * HashedTokenCountsSpec. O(dim·tokens) per doc.
+    */
+  def hashedTokenFeaturesReference(text: Column, dim: Int): Column = {
     require(dim > 0, "dim must be positive")
     // single-pass fold into a counts accumulator: the per-dim
     // `size(filter(buckets, _ === j))` spelling captures the bucket

@@ -18,8 +18,8 @@ import graft.core.MLType
   *     billion distinct values.
   *   - [[HashedTextVectorization]]: the hashing-trick vectorizer (sklearn
   *     HashingVectorizer) — no vocabulary pass AT ALL; fit is a no-op and
-  *     transform is shuffle-free Column algebra over
-  *     [[graft.ops.TextAnalysis.hashedTokenFeatures]].
+  *     transform is one shuffle-free native kernel,
+  *     [[graft.functions.HashedTokenCounts]].
   */
 object ScalableEncoders {
 
@@ -177,8 +177,9 @@ object ScalableEncoders {
     * are bucket counts, optionally L2-normalized. NO fit pass, NO vocabulary,
     * NO driver state — the unbounded-vocab TF path a 100 TB corpus needs
     * (the trade: no inverse mapping, collisions fold rare terms together).
-    * Pure shuffle-free Column algebra via
-    * [[graft.ops.TextAnalysis.hashedTokenFeatures]].
+    * Shuffle-free: the [[graft.ops.TextAnalysis.hashedTokenFeatures]] counts
+    * with the L2 norm fused into the same native kernel
+    * ([[graft.functions.HashedTokenCounts]]), O(tokens + dim) per row.
     */
   final class HashedTextVectorization(params: Map[String, Any]) extends SingleColumnProcessor {
     import Processors.P._
@@ -192,17 +193,9 @@ object ScalableEncoders {
     require(dim > 0, s"dim must be positive, got $dim")
     require(norm == "l2" || norm == "none", s"norm must be l2|none, got $norm")
 
-    def transform(in: Column): Column = {
-      val counts = org.apache.spark.sql.functions.transform(
-        graft.ops.TextAnalysis.hashedTokenFeatures(in, dim), _.cast("double"))
-      if (norm == "none") counts
-      else {
-        val l2 = sqrt(aggregate(counts, lit(0.0), (acc, v) => acc + v * v))
-        // all-zero vector (empty/whitespace doc) stays all-zero, not NaN
-        when(l2 === 0.0, counts)
-          .otherwise(org.apache.spark.sql.functions.transform(counts, v => v / l2))
-      }
-    }
+    def transform(in: Column): Column =
+      graft.functions.HashedTokenCounts.hashed_token_counts(
+        graft.ops.TextAnalysis.tokens(in), dim, norm)
   }
 
   def registerAll(): Unit = if (!registered) {

@@ -86,6 +86,9 @@ class CodegenPropertySpec extends AnyFunSuite {
       WordTokens.word_tokens(col("s"), minLen = 3),
       ShinglesFromTokens.shingles_from_tokens(WordTokens.word_tokens(col("s")), 3),
       TopFreqFraction.top_freq_fraction(WordTokens.word_tokens(col("s"))),
+      HashedTokenCounts.hashed_token_counts(WordTokens.word_tokens(col("s")), 7),
+      HashedTokenCounts.hashed_token_counts(WordTokens.word_tokens(col("s")), 7, "none"),
+      HashedTokenCounts.hashed_token_counts(WordTokens.word_tokens(col("s")), 7, "l2"),
       VocabTokenCount.vocab_token_count(col("s"), vocab),
       VocabTokenCount.vocab_tokenize(col("s"), vocab),
       // the optimizer barrier must be value-identity in both modes — and
