@@ -3,16 +3,21 @@ package graft.io
 import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector._
-import org.apache.arrow.vector.complex.ListVector
+import org.apache.arrow.vector.VectorSchemaRoot
 import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
-import org.apache.arrow.vector.types.FloatingPointPrecision
-import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
+import org.apache.arrow.vector.types.pojo.{ArrowType, Field, Schema => ArrowSchema}
 import org.apache.hadoop.fs.{FileSystem, Path => HadoopPath}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.arrow.ArrowWriter
+import org.apache.spark.sql.graftbridge.ArrowBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnarBatch}
 import org.apache.spark.util.SerializableConfiguration
 
 /** Arrow IPC stream source/sink — the interchange closure for the
@@ -20,8 +25,11 @@ import org.apache.spark.util.SerializableConfiguration
   * (`core/frame/ScalableDataFrameDataset.py:13-72`): the JVM cannot host
   * torch, but every Python DataLoader stack consumes Arrow zero-copy
   * (`pyarrow.ipc.open_stream` → `to_batches` → tensors), so emitting the
-  * standard IPC stream format IS the adapter. Uses the arrow-vector
-  * library Spark itself ships — no new dependency.
+  * standard IPC stream format IS the adapter. The codec is Spark's own
+  * Arrow converters — `ArrowUtils` for the type mapping, `ArrowWriter` to
+  * fill record batches from `InternalRow`s, `ArrowColumnVector` to read them
+  * back — the ones that also write every Spark Connect result batch; graft
+  * adds only the stream framing, the type gate and the commit protocol.
   *
   * Scale note: this is the LAST-HOP feed format (one stream per training
   * worker), not a bulk store — bulk data stays parquet. [[writeStream]]
@@ -30,9 +38,12 @@ import org.apache.spark.util.SerializableConfiguration
   * shard written executor-side through one identity-partitioned exchange,
   * deterministic content-hash shard assignment, no driver pass.
   *
-  * Types: the DataLoader surface — integral/floating scalars, boolean,
-  * string, binary, and `array<numeric>` embeddings. Anything else refuses
-  * loudly (no silent casts).
+  * Types: the DataLoader surface — int/long/float/double, boolean,
+  * string, binary, and arrays of those (embeddings). Anything else, and any
+  * unsigned Arrow int, refuses loudly (no silent casts). On the wire
+  * strings, binaries and arrays are `Utf8`, `Binary` and `List` (not the
+  * `Large*` 64-bit-offset layouts); a list's child is named `element` and is
+  * nullable exactly when the array type's `containsNull` is.
   */
 object ArrowIpc {
 
@@ -45,8 +56,7 @@ object ArrowIpc {
   def writeStream(df: DataFrame, path: String, batchRows: Int = 8192): Unit = {
     require(batchRows > 0, s"batchRows $batchRows <= 0")
     val sparkSchema = df.schema
-    sparkSchema.fields.foreach(f => arrowField(f)) // validate types up front
-    import scala.jdk.CollectionConverters._
+    refuseUnsupported(sparkSchema, "Arrow IPC sink")
     val conf = df.sparkSession.sessionState.newHadoopConf()
     val p = new HadoopPath(path)
     // same commit protocol as the sharded sink: stream into an .inprogress
@@ -59,7 +69,11 @@ object ArrowIpc {
     val tmp = new HadoopPath(s"$p.inprogress")
     try {
       val out = fs.create(tmp, /*overwrite=*/ true)
-      try writeRows(df.toLocalIterator().asScala, sparkSchema, out, batchRows)
+      // Dataset.toLocalIterator's plan path, minus its Row deserializer
+      val qe = df.queryExecution
+      val rows = SQLExecution.withNewExecutionId(qe, Some("toLocalIterator"))(
+        qe.executedPlan.executeToIterator())
+      try writeRows(rows, sparkSchema, out, batchRows)
       finally out.close()
       commitRename(fs, tmp, p)
     } finally fs.delete(tmp, false)
@@ -99,7 +113,7 @@ object ArrowIpc {
     require(shardBy.nonEmpty,
       "shardBy columns required — content-hash sharding is the deterministic assignment law")
     val sparkSchema = df.schema
-    sparkSchema.fields.foreach(f => arrowField(f)) // validate types up front, driver-side
+    refuseUnsupported(sparkSchema, "Arrow IPC sink") // driver-side, before any job
     val missing = shardBy.filterNot(sparkSchema.fieldNames.contains)
     require(missing.isEmpty, s"shardBy columns absent from frame: ${missing.mkString(", ")}")
     // withColumn REPLACES an existing column in place (not appended last),
@@ -118,8 +132,10 @@ object ArrowIpc {
     val serConf = new SerializableConfiguration(conf)
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     val shardCol = pmod(xxhash64(shardBy.map(col) :+ lit(seed): _*), lit(numShards.toLong))
-    val keyed = df.withColumn(ShardTag, shardCol).rdd
-      .map(r => (r.getLong(r.length - 1), Row.fromSeq(r.toSeq.dropRight(1))))
+    // the shard tag rides along as the last field: writeRows reads only
+    // sparkSchema's ordinals. copy(): toRdd reuses one mutable row per task
+    val keyed = df.withColumn(ShardTag, shardCol).queryExecution.toRdd
+      .map(r => (r.getLong(r.numFields - 1), r.copy()))
     val parted = keyed
       .partitionBy(new org.apache.spark.Partitioner {
         override def numPartitions: Int = numShards
@@ -127,7 +143,7 @@ object ArrowIpc {
       })
       .map(_._2)
     val bRows = batchRows
-    parted.foreachPartition { (it: Iterator[Row]) =>
+    parted.foreachPartition { (it: Iterator[InternalRow]) =>
       val tc = org.apache.spark.TaskContext.get()
       val path = shardPath(dirStr, tc.partitionId())
       // unwrap ChecksumFileSystem (the local-FS default) so the feed dir
@@ -187,29 +203,31 @@ object ArrowIpc {
   /** The row→IPC-stream kernel shared by the driver sink and the
     * executor-side shard sink: bounded memory (`batchRows` rows per record
     * batch, one batch in flight), schema header always written — an empty
-    * iterator yields a valid zero-batch stream.
+    * iterator yields a valid zero-batch stream. Spark's `ArrowWriter` reads
+    * only the schema's own ordinals, so trailing row fields are ignored.
     */
-  private[io] def writeRows(rows: Iterator[Row], sparkSchema: StructType,
+  private def writeRows(rows: Iterator[InternalRow], sparkSchema: StructType,
       out: java.io.OutputStream, batchRows: Int): Unit = {
     val alloc = new RootAllocator(Long.MaxValue)
     try {
-      val schema = new ArrowSchema(java.util.Arrays.asList(
-        sparkSchema.fields.map(arrowField): _*))
-      val root = VectorSchemaRoot.create(schema, alloc)
+      val root = VectorSchemaRoot.create(ArrowBridge.toArrowSchema(sparkSchema), alloc)
       try {
+        val arrow = ArrowWriter.create(root)
         val writer = new ArrowStreamWriter(root, null,
           java.nio.channels.Channels.newChannel(out))
         try {
           writer.start()
-          val buf = mutable.ArrayBuffer.empty[Row]
-          def flush(): Unit = if (buf.nonEmpty) {
-            fillRoot(root, sparkSchema, buf)
+          var n = 0
+          def flush(): Unit = if (n > 0) {
+            arrow.finish()
             writer.writeBatch()
-            buf.clear()
+            arrow.reset()
+            n = 0
           }
           while (rows.hasNext) {
-            buf += rows.next()
-            if (buf.size >= batchRows) flush()
+            arrow.write(rows.next())
+            n += 1
+            if (n >= batchRows) flush()
           }
           flush()
           writer.end()
@@ -227,8 +245,8 @@ object ArrowIpc {
     *
     * DRIVER-MEMORY CEILING (same discipline as the TfIdf vocab / BPE
     * word-table ceilings): this path materializes the WHOLE feed as
-    * `Seq[Row]` in driver heap — it exists for re-ingesting one training
-    * worker's feed file, not bulk data. Files larger than `maxBytes`
+    * `Seq[InternalRow]` in driver heap — it exists for re-ingesting one
+    * training worker's feed file, not bulk data. Files larger than `maxBytes`
     * (default 1 GiB of on-disk IPC bytes; row-ized heap is a small multiple
     * of that) are refused with a pointer to [[readStreamSharded]], the
     * distributed one-shard-per-task scale path. Raise `maxBytes` explicitly
@@ -245,7 +263,7 @@ object ArrowIpc {
         "sharded feed dir for distributed ingest, or raise maxBytes with a driver " +
         "heap sized for the row-ized feed")
     val (sparkSchema, rows) = parseShard(p, conf)
-    spark.createDataFrame(
+    ArrowBridge.internalCreateDataFrame(spark,
       spark.sparkContext.parallelize(rows,
         math.max(1, spark.sparkContext.defaultParallelism)), sparkSchema)
   }
@@ -278,20 +296,23 @@ object ArrowIpc {
         s"shard schema mismatch: $f reads $sch, shard 0 read ${schemaBc.value}")
       rows
     }
-    spark.createDataFrame(rdd, sparkSchema)
+    ArrowBridge.internalCreateDataFrame(spark, rdd, sparkSchema)
   }
 
   /** Open + fully parse one IPC stream shard (runs driver-side for
     * [[readStream]], executor-side for [[readStreamSharded]]). Applies the
     * ARROW1 file-format sniff before handing bytes to the stream parser.
     *
-    * Memory bound: the whole shard row-izes into one `Seq[Row]` in the
+    * Each batch is wrapped as a `ColumnarBatch` of `ArrowColumnVector`s and
+    * every row is copied into an on-heap `UnsafeRow` (the vectors' strings
+    * point into Arrow memory, which is freed when the shard closes).
+    * Memory bound: the whole shard row-izes into one `Seq[InternalRow]` in the
     * calling JVM — a DataLoader shard (one worker's slice), not bulk data.
     * [[readStream]] enforces a byte ceiling driver-side;
     * [[readStreamSharded]] bounds it to one shard per executor task.
     */
   private def parseShard(p: HadoopPath,
-      conf: org.apache.hadoop.conf.Configuration): (StructType, Seq[Row]) = {
+      conf: org.apache.hadoop.conf.Configuration): (StructType, Seq[InternalRow]) = {
     val alloc = new RootAllocator(Long.MaxValue)
     try {
       val in = p.getFileSystem(conf).open(p)
@@ -312,15 +333,13 @@ object ArrowIpc {
       val reader = new ArrowStreamReader(in, alloc)
       try {
         val root = reader.getVectorSchemaRoot
-        val sparkSchema = StructType(
-          root.getSchema.getFields.toArray(Array.empty[Field]).map(sparkField))
-        val rows = mutable.ArrayBuffer.empty[Row]
+        val sparkSchema = sparkSchemaOf(root.getSchema)
+        val toUnsafe = UnsafeProjection.create(sparkSchema)
+        val rows = mutable.ArrayBuffer.empty[InternalRow]
         while (reader.loadNextBatch()) {
-          val n = root.getRowCount
-          (0 until n).foreach { i =>
-            rows += Row.fromSeq(sparkSchema.indices.map(j =>
-              readCell(root.getVector(j), i)))
-          }
+          val batch = new ColumnarBatch(
+            root.getFieldVectors.asScala.map(new ArrowColumnVector(_)).toArray, root.getRowCount)
+          batch.rowIterator().asScala.foreach(r => rows += toUnsafe(r).copy())
         }
         (sparkSchema, rows.toSeq)
       } finally { reader.close(); in.close() }
@@ -334,116 +353,47 @@ object ArrowIpc {
     try {
       val in = p.getFileSystem(conf).open(p)
       val reader = new ArrowStreamReader(in, alloc)
-      try StructType(reader.getVectorSchemaRoot.getSchema.getFields
-        .toArray(Array.empty[Field]).map(sparkField))
+      try sparkSchemaOf(reader.getVectorSchemaRoot.getSchema)
       finally { reader.close(); in.close() }
     } finally alloc.close()
   }
 
-  // ------------------------------------------------------------ type mapping
+  // --------------------------------------------------------------- type gate
 
-  private def arrowField(f: StructField): Field = {
-    def prim(t: ArrowType): Field =
-      new Field(f.name, new FieldType(f.nullable, t, null), null)
-    f.dataType match {
-      case LongType => prim(new ArrowType.Int(64, true))
-      case IntegerType => prim(new ArrowType.Int(32, true))
-      case DoubleType => prim(new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE))
-      case FloatType => prim(new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE))
-      case BooleanType => prim(ArrowType.Bool.INSTANCE)
-      case StringType => prim(ArrowType.Utf8.INSTANCE)
-      case BinaryType => prim(ArrowType.Binary.INSTANCE)
-      case ArrayType(et, _) =>
-        val child = arrowField(StructField("item", et, nullable = true))
-        new Field(f.name, new FieldType(f.nullable, ArrowType.List.INSTANCE, null),
-          java.util.Arrays.asList(child))
-      case other => throw new IllegalArgumentException(
-        s"Arrow IPC sink for $other unsupported (column ${f.name}) — the DataLoader " +
-          "surface is scalars, strings, binary, and array<numeric> embeddings")
-    }
+  /** The DataLoader surface, for both directions. */
+  private def supported(dt: DataType): Boolean = dt match {
+    case LongType | IntegerType | DoubleType | FloatType | BooleanType | StringType | BinaryType =>
+      true
+    case ArrayType(et, _) => supported(et)
+    case _ => false
   }
 
-  private def sparkField(f: Field): StructField = {
-    val dt = f.getType match {
-      // signedness matters: a uint64 column cannot live in LongType (values
-      // >= 2^63) and readCell has no unsigned vector path — refuse at
-      // schema time with a clear message, not mid-read
-      case i: ArrowType.Int if !i.getIsSigned =>
-        throw new IllegalArgumentException(
+  private def refuseUnsupported(schema: StructType, side: String): Unit =
+    schema.fields.find(f => !supported(f.dataType)).foreach { f =>
+      throw new IllegalArgumentException(
+        s"$side for ${f.dataType} unsupported (column ${f.name}) — the DataLoader " +
+          "surface is scalars, strings, binary, and arrays of those (embeddings)")
+    }
+
+  /** Spark's mapping of a stream header, gated to the DataLoader surface. */
+  private def sparkSchemaOf(schema: ArrowSchema): StructType = {
+    // signedness matters: a uint64 column cannot live in LongType (values
+    // >= 2^63) — refuse at schema time with a clear message, not mid-read
+    def refuseUnsigned(f: Field): Unit = {
+      f.getType match {
+        case i: ArrowType.Int if !i.getIsSigned => throw new IllegalArgumentException(
           s"Arrow IPC read: unsigned int${i.getBitWidth} column ${f.getName} unsupported — " +
             "cast to a signed type (or float) on the writer side")
-      case i: ArrowType.Int if i.getBitWidth == 64 => LongType
-      case i: ArrowType.Int if i.getBitWidth == 32 => IntegerType
-      case fp: ArrowType.FloatingPoint if fp.getPrecision == FloatingPointPrecision.DOUBLE => DoubleType
-      case fp: ArrowType.FloatingPoint if fp.getPrecision == FloatingPointPrecision.SINGLE => FloatType
-      case _: ArrowType.Bool => BooleanType
-      case _: ArrowType.Utf8 => StringType
-      case _: ArrowType.Binary => BinaryType
-      case _: ArrowType.List =>
-        ArrayType(sparkField(f.getChildren.get(0)).dataType, containsNull = true)
-      case other => throw new IllegalArgumentException(s"Arrow IPC read: $other unsupported")
-    }
-    StructField(f.getName, dt, f.isNullable)
-  }
-
-  // ---------------------------------------------------------------- writing
-
-  private def fillRoot(root: VectorSchemaRoot, schema: StructType,
-      rows: mutable.ArrayBuffer[Row]): Unit = {
-    root.allocateNew()
-    schema.indices.foreach { j =>
-      val vec = root.getVector(j)
-      rows.indices.foreach { i =>
-        val v = rows(i).get(j)
-        writeCell(vec, i, v, schema(j).name)
+        case _ =>
       }
-      vec.setValueCount(rows.size)
+      f.getChildren.forEach(refuseUnsigned)
     }
-    root.setRowCount(rows.size)
-  }
-
-  private def writeCell(vec: ValueVector, i: Int, v: Any, col: String): Unit = vec match {
-    case x: BigIntVector => if (v == null) x.setNull(i) else x.setSafe(i, v.asInstanceOf[Long])
-    case x: IntVector => if (v == null) x.setNull(i) else x.setSafe(i, v.asInstanceOf[Int])
-    case x: Float8Vector => if (v == null) x.setNull(i) else x.setSafe(i, v.asInstanceOf[Double])
-    case x: Float4Vector => if (v == null) x.setNull(i) else x.setSafe(i, v.asInstanceOf[Float])
-    case x: BitVector => if (v == null) x.setNull(i) else x.setSafe(i, if (v.asInstanceOf[Boolean]) 1 else 0)
-    case x: VarCharVector =>
-      if (v == null) x.setNull(i)
-      else x.setSafe(i, v.asInstanceOf[String].getBytes(StandardCharsets.UTF_8))
-    case x: VarBinaryVector =>
-      if (v == null) x.setNull(i) else x.setSafe(i, v.asInstanceOf[Array[Byte]])
-    case x: ListVector =>
-      if (v == null) x.setNull(i)
-      else {
-        val xs = v.asInstanceOf[scala.collection.Seq[Any]]
-        val start = x.startNewValue(i)
-        val child = x.getDataVector
-        xs.zipWithIndex.foreach { case (e, k) => writeCell(child, start + k, e, col) }
-        x.endValue(i, xs.size)
-      }
-    case other => throw new IllegalArgumentException(
-      s"Arrow IPC: no writer for ${other.getClass.getSimpleName} (column $col)")
-  }
-
-  // ---------------------------------------------------------------- reading
-
-  private def readCell(vec: ValueVector, i: Int): Any =
-    if (vec.isNull(i)) null
-    else vec match {
-      case x: BigIntVector => x.get(i)
-      case x: IntVector => x.get(i)
-      case x: Float8Vector => x.get(i)
-      case x: Float4Vector => x.get(i)
-      case x: BitVector => x.get(i) == 1
-      case x: VarCharVector => new String(x.get(i), StandardCharsets.UTF_8)
-      case x: VarBinaryVector => x.get(i)
-      case x: ListVector =>
-        val start = x.getOffsetBuffer.getInt(i.toLong * 4)
-        val end = x.getOffsetBuffer.getInt((i + 1).toLong * 4)
-        val child = x.getDataVector
-        (start until end).map(k => readCell(child, k))
-      case other => throw new IllegalArgumentException(
-        s"Arrow IPC: no reader for ${other.getClass.getSimpleName}")
+    schema.getFields.forEach(refuseUnsigned)
+    val sparkSchema = try ArrowBridge.fromArrowSchema(schema) catch {
+      case e: UnsupportedOperationException =>
+        throw new IllegalArgumentException(s"Arrow IPC read: ${e.getMessage}", e)
     }
+    refuseUnsupported(sparkSchema, "Arrow IPC read")
+    sparkSchema
+  }
 }

@@ -85,7 +85,7 @@ object Dedup {
 
   /** Signature from a precomputed shingles column — stage the shingles as
     * their own projection first (see [[graft.processor.TfIdfVectorization
-    * .transformStaged]]: inlined Column references re-evaluate the whole
+    * .transformFrame]]: inlined Column references re-evaluate the whole
     * tokenize→shingle subtree once per hash function otherwise).
     */
   def minhashFromShingles(shinglesCol: Column, numHashes: Int): Column = {
@@ -262,17 +262,8 @@ object Dedup {
     val (pruned, scratch) = maxBucketSize match {
       case None => (withBands, Seq.empty[DataFrame])
       case Some(cap) =>
-        val hot = withBands.groupBy(col("band"), col("band_hash"))
-          .agg(count(lit(1)).as("__bsz__"))
-          .filter(col("__bsz__") > cap)
-          .persist()
-        val nHot = hot.count()
-        if (nHot > 0)
-          org.apache.log4j.Logger.getLogger(getClass)
-            .warn(s"minhashCandidates: dropping $nHot LSH bucket(s) over cap=$cap " +
-              "(pathological duplicate mass — run exactDedup first)")
-        (withBands.join(hot.select(col("band"), col("band_hash")),
-          Seq("band", "band_hash"), "left_anti"), Seq(hot))
+        val (kept, hot) = dropHotBuckets(withBands, cap, "minhashCandidates")
+        (kept, Seq(hot))
     }
     val l = pruned.as("l")
     val r = pruned.as("r")
@@ -284,16 +275,49 @@ object Dedup {
     (pairs, withBands +: scratch)
   }
 
-  /** Full near-dup pipeline: LSH candidate pairs verified by exact n-gram
-    * Jaccard ≥ `threshold`. Returns (id_a, id_b, jac) with jac rounded to 4
-    * (the oracle-portable quantum). The per-doc distinct-shingle frame is
+  /** Drop LSH buckets over `cap` docs, logging their count under `op`.
+    * Returns the kept band rows and the persisted hot-bucket frame to release.
+    */
+  private def dropHotBuckets(withBands: DataFrame, cap: Long,
+      op: String): (DataFrame, DataFrame) = {
+    val hot = withBands.groupBy(col("band"), col("band_hash"))
+      .agg(count(lit(1)).as("__bsz__"))
+      .filter(col("__bsz__") > cap)
+      .persist()
+    val nHot = hot.count()
+    if (nHot > 0)
+      org.apache.log4j.Logger.getLogger(getClass)
+        .warn(s"$op: dropping $nHot LSH bucket(s) over cap=$cap " +
+          "(pathological duplicate mass — run exactDedup first)")
+    (withBands.join(hot.select(col("band"), col("band_hash")),
+      Seq("band", "band_hash"), "left_anti"), hot)
+  }
+
+  /** Verify candidate `(id_a, id_b)` pairs by exact shingle Jaccard ≥
+    * `threshold`, returning (id_a, id_b, jac) with jac rounded to 4 (the
+    * oracle-portable quantum). The per-doc distinct-shingle frame is
     * deliberately UNSTAGED (r7 staging verdict): the two pair-join sides
     * each re-derive it through the tokenize/shingle codegen kernels, which
     * measured cheaper on every axis (10 vs 13 jobs, ~40% less task time)
     * than writing an O(corpus shingle strings) array cache through the
     * BlockManager — the cache that would also be the op's only unbounded
-    * memory at cluster scale. Verified pairs are eagerly materialized, so
-    * callers still get a small lineage-free pair frame.
+    * memory at cluster scale.
+    */
+  private def verifyPairs(cands: DataFrame, df: DataFrame, textCol: Column, idCol: Column,
+      k: Int, threshold: Double): DataFrame = {
+    val sh = df.select(idCol.as("doc_id"), array_distinct(shingles(textCol, k)).as("sh"))
+    cands
+      .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
+      .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
+      .withColumn("jac", round(jaccardShingles(col("sh_a"), col("sh_b")), 4))
+      .filter(col("jac") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jac"))
+  }
+
+  /** Full near-dup pipeline: LSH candidate pairs verified by exact n-gram
+    * Jaccard ≥ `threshold` ([[verifyPairs]]). Returns (id_a, id_b, jac) with
+    * jac rounded to 4. Verified pairs are eagerly materialized, so callers
+    * still get a small lineage-free pair frame.
     *
     * Lineage determinism: the unstaged shingle frame evaluates `df` once
     * per pair-join side — as with [[Graph.pageRank]]'s edge contract, a
@@ -306,15 +330,7 @@ object Dedup {
       exactPrepass: Boolean = false): DataFrame = {
     val (cands, release) =
       candidatePlan(df, textCol, idCol, k, numHashes, bands, maxBucketSize, exactPrepass)
-    val sh = df.select(idCol.as("doc_id"),
-      array_distinct(shingles(textCol, k)).as("sh"))
-    val verified = cands
-      .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jac", round(jaccardShingles(col("sh_a"), col("sh_b")), 4))
-      .filter(col("jac") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jac"))
-    materialize(verified, release)
+    materialize(verifyPairs(cands, df, textCol, idCol, k, threshold), release)
   }
 
   /** Star-reduced verified near-dup EDGES for component building — the
@@ -341,31 +357,15 @@ object Dedup {
     require(maxBucketSize >= 2, s"maxBucketSize must be >= 2: $maxBucketSize")
     val docs = df.select(idCol.as("id"), textCol.as("__text__"))
     val withBands = bandedSignatures(docs, k, numHashes, bands).persist()
-    val hot = withBands.groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("__bsz__"))
-      .filter(col("__bsz__") > maxBucketSize)
-      .persist()
-    val nHot = hot.count()
-    if (nHot > 0)
-      org.apache.log4j.Logger.getLogger(getClass)
-        .warn(s"verifiedHubEdges: dropping $nHot LSH bucket(s) over cap=$maxBucketSize " +
-          "(pathological duplicate mass — run exactDedup first)")
-    val pruned = withBands.join(hot.select(col("band"), col("band_hash")),
-      Seq("band", "band_hash"), "left_anti")
+    val (pruned, hot) = dropHotBuckets(withBands, maxBucketSize, "verifiedHubEdges")
     val hubs = pruned.groupBy(col("band"), col("band_hash")).agg(min(col("id")).as("id_a"))
     val cands = pruned.join(hubs, Seq("band", "band_hash"))
       .filter(col("id") > col("id_a"))
       .select(col("id_a"), col("id").as("id_b"))
       .distinct()
-    // same unstaged-shingle verification discipline as verifiedNearDupPairs
-    // (r7 staging verdict) — the pair frame carries only ids until the
-    // shingle joins, and those joins now see star-linear traffic
-    val sh = df.select(idCol.as("doc_id"), array_distinct(shingles(textCol, k)).as("sh"))
-    val verified = cands
-      .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jac", round(jaccardShingles(col("sh_a"), col("sh_b")), 4))
-      .filter(col("jac") >= threshold)
+    // the pair frame carries only ids until the shingle joins, and those
+    // joins see star-linear traffic
+    val verified = verifyPairs(cands, df, textCol, idCol, k, threshold)
       .select(col("id_a"), col("id_b"))
     materialize(verified, Seq(withBands, hot))
   }

@@ -75,7 +75,7 @@ object TextAnalysis {
     * `withColumn` when combining with other token consumers (quality, count,
     * TF-IDF): Catalyst inlines Column trees at every reference, so an
     * unstaged composition re-tokenizes per consumer (the TfIdf
-    * transformStaged lesson).
+    * transformFrame lesson).
     */
   def langIdStaged(c: Column, toks: Column): Column = {
     def score(words: Seq[String]): Column =

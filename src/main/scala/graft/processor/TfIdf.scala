@@ -15,17 +15,17 @@ import graft.core.MLType
   *     frequency pass, `min_df` / `max_features` pruning, smooth idf
   *     `ln((1+n)/(1+df)) + 1`, vocabulary indexed by sorted term (sklearn's
   *     convention); the vocabulary broadcasts to executors as literal maps;
-  *   - transform = a single Column expression over higher-order functions
-  *     producing the sparse vector struct(size, indices, values), L2
-  *     normalized (sklearn `norm='l2'`). No UDF, no Python, no per-row
-  *     vectorizer call.
+  *   - transform = a frame rewrite over higher-order functions producing
+  *     the sparse vector struct(size, indices, values), L2 normalized
+  *     (sklearn `norm='l2'`). No UDF, no Python, no per-row vectorizer
+  *     call.
   *
   * Scale: fit shuffles one row per distinct term (partial-aggregated);
   * transform is embarrassingly parallel. The vocabulary must fit in the
   * driver/broadcast (`max_features` caps it), which is the same constraint
   * sklearn+bears has — but here the corpus itself never leaves the cluster.
   */
-final class TfIdfVectorization(params: Map[String, Any]) extends SingleColumnProcessor {
+final class TfIdfVectorization(params: Map[String, Any]) extends FrameLevelProcessor {
   import Processors.P._
 
   val name = "TFIDFVectorization"
@@ -126,14 +126,14 @@ final class TfIdfVectorization(params: Map[String, Any]) extends SingleColumnPro
   }
 
   /** Staged transform: materializes each stage (tokens → entries → norm) as
-    * its own projection so every subexpression evaluates ONCE per row.
-    * The single-Column [[transform]] inlines the whole tree at every
-    * reference — nested HOFs then re-evaluate tokenization per term, which
-    * is exponential in stage depth (measured 168s → ~2s at sf0.1). Use this
-    * from pipelines; `transform` remains for tiny frames / API parity.
+    * its own projection so every subexpression evaluates ONCE per row. A
+    * single Column expression would inline the whole tree at every
+    * reference — the HOF lambdas capture the token array and the norm, so
+    * tokenization re-runs per term, exponential in stage depth (measured
+    * 168s → ~2s at sf0.1). This is why TF-IDF is a frame-level processor.
     */
-  def transformStaged(df: DataFrame, inputCol: String, outCol: String): DataFrame = {
-    val v = vocab.getOrElse(notFitted("transformStaged"))
+  def transformFrame(df: DataFrame, inputCol: String, outCol: String): DataFrame = {
+    val v = vocab.getOrElse(notFitted("transformFrame"))
     val idxMap = typedLit(v.map { case (t, (i, _)) => t -> i }.toMap)
     val idfMap = typedLit(v.map { case (t, (_, f)) => t -> f }.toMap)
     val size = v.size
@@ -153,31 +153,6 @@ final class TfIdfVectorization(params: Map[String, Any]) extends SingleColumnPro
       .drop(toks, entries, nrm)
     if (outputSparse) staged
     else staged.withColumn(outCol, new Processors.VectorDensifier(Map.empty).transform(col(outCol)))
-  }
-
-  def transform(in: Column): Column = {
-    val v = vocab.getOrElse(notFitted("transform"))
-    val idxMap = typedLit(v.map { case (t, (i, _)) => t -> i }.toMap)
-    val idfMap = typedLit(v.map { case (t, (_, f)) => t -> f }.toMap)
-    val size = v.size
-
-    val toks = filter(tokenize(in), t => element_at(idxMap, t).isNotNull)
-    val terms = array_sort(array_distinct(toks))
-    // raw tf * idf per present term, then L2-normalize
-    val entries = transform_hof(terms, t =>
-      struct(
-        element_at(idxMap, t).as("i"),
-        (size_of_matches(toks, t) * element_at(idfMap, t)).as("v")))
-    val norm = sqrt(aggregate(entries, lit(0.0), (acc, e) => acc + e.getField("v") * e.getField("v")))
-    val normed = transform_hof(entries, e =>
-      struct(e.getField("i").as("i"), (e.getField("v") / norm).as("v")))
-
-    val sparse = struct(
-      lit(size).as("size"),
-      transform_hof(normed, _.getField("i")).as("indices"),
-      transform_hof(normed, _.getField("v")).as("values"))
-    if (outputSparse) sparse
-    else new Processors.VectorDensifier(Map.empty).transform(sparse)
   }
 
   private def transform_hof(arr: Column, f: Column => Column): Column =

@@ -225,7 +225,7 @@ object ProcessorQueries {
       // child before shuffling it, and this child (tokenize + HOF
       // vectorization) is shuffle-free — unstaged, the whole transform
       // would execute twice (once for range bounds, once for real)
-      val entries = tfidf.transformStaged(docs, "text", "vec")
+      val entries = tfidf.transformFrame(docs, "text", "vec")
         .select(col("doc_id"),
           posexplode(arrays_zip(col("vec.indices"), col("vec.values"))).as(Seq("pos", "entry")))
         .select(
@@ -268,7 +268,7 @@ object ProcessorQueries {
       val docs = table(s, dir, "documents")
       val tfidf = new TfIdfVectorization(Map("max_features" -> 20, "output_sparse" -> true))
       tfidf.fit(docs, "text")
-      val entries = tfidf.transformStaged(docs, "text", "vec")
+      val entries = tfidf.transformFrame(docs, "text", "vec")
         .select(col("doc_id"),
           posexplode(arrays_zip(col("vec.indices"), col("vec.values"))).as(Seq("pos", "entry")))
         .select(col("doc_id"), col("entry.indices").cast("long").as("term_idx"),

@@ -134,8 +134,8 @@ class ProcessorSpec extends AnyFunSuite {
     p.fit(df, "t")
     val p2 = new TfIdfVectorization(Map("output_sparse" -> true))
     p2.restore(p.state)
-    val v1 = df.withColumn("v", p.transform($"t")).select("v").collect().toSeq
-    val v2 = df.withColumn("v", p2.transform($"t")).select("v").collect().toSeq
+    val v1 = p.transformFrame(df, "t", "v").select("v").collect().toSeq
+    val v2 = p2.transformFrame(df, "t", "v").select("v").collect().toSeq
     assert(v1 == v2)
   }
 
@@ -149,7 +149,7 @@ class ProcessorSpec extends AnyFunSuite {
     val p2 = new TfIdfVectorization(Map("output_sparse" -> true))
     p2.restore(p.state)
     assert(p2.fittedVocabulary.isEmpty)
-    val out = df.withColumn("v", p2.transform($"t")).select("v.size").head()
+    val out = p2.transformFrame(df, "t", "v").select("v.size").head()
     assert(out.getInt(0) == 0)
   }
 

@@ -4,14 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Similarity
-import graft.processor.TfIdfVectorization
+import graft.core.{MLSchema, MLType}
+import graft.functions.WordTokens
+import graft.processor.{DataPipeline, PipelineConfig, TfIdfVectorization}
 
 /** Randomized driver-reference differentials for the similarity primitives
   * and the TF-IDF vectorizer: brute-force cosine top-k against an exact
   * driver ranking, mean pooling against an element-wise average, JL random
   * projection against its linearity/determinism contract, and the fitted
-  * vocabulary + staged sparse transform against the sklearn formulas
-  * (idf = ln((1+n)/(1+df)) + 1, l2-normalized rows, alphabetical indices).
+  * vocabulary + staged sparse transform, called directly and through a
+  * `DataPipeline` step, against the sklearn formulas (idf =
+  * ln((1+n)/(1+df)) + 1, l2-normalized rows, alphabetical indices).
   */
 class SimilarityTfIdfPropertySpec extends AnyFunSuite {
 
@@ -85,6 +88,14 @@ class SimilarityTfIdfPropertySpec extends AnyFunSuite {
 
   private val textVocab = Vector("alpha", "bravo", "charlie", "delta", "echo", "foxtrot")
 
+  private val tfidfPipeline =
+    """pipeline:
+      |  - input: [text]
+      |    transformer: TFIDFVectorization
+      |    params: {output_sparse: true}
+      |    output: "v"
+      |""".stripMargin
+
   test("TfIdf fit + staged transform match the sklearn formulas") {
     import org.scalacheck.Gen
     val word = Gen.oneOf(textVocab)
@@ -105,21 +116,36 @@ class SimilarityTfIdfPropertySpec extends AnyFunSuite {
       assert(i == dfreq.keys.toSeq.sorted.indexOf(t), s"index($t)")
     }
     val idfMap = fitted.map { case (t, i, f) => t -> (i, f) }.toMap
-    val out = proc.transformStaged(docs.toDF("id", "text"), "text", "v")
-      .select(col("id"), col("v.size"), col("v.indices"), col("v.values"))
-      .collect().map(r => r.getAs[Long](0) ->
-        ((r.getAs[Int](1), r.getSeq[Int](2), r.getSeq[Double](3)))).toMap
-    docs.foreach { case (id, _) =>
+    def entries(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("id"), col("v.size"), col("v.indices"), col("v.values"))
+        .collect().map(r => r.getAs[Long](0) ->
+          ((r.getAs[Int](1), r.getSeq[Int](2), r.getSeq[Double](3)))).toMap
+    val direct = entries(proc.transformFrame(docs.toDF("id", "text"), "text", "v"))
+    val piped = entries(new DataPipeline(PipelineConfig.fromYaml(tfidfPipeline))
+      .fitTransform(docs.toDF("id", "text"), MLSchema(Map("text" -> MLType.Text))))
+    for ((how, out) <- Seq("transformFrame" -> direct, "pipeline" -> piped); (id, _) <- docs) {
       val ws = tk(id)
       val present = ws.distinct.sorted
       val raw = present.map(t => ws.count(_ == t).toDouble * idfMap(t)._2)
       val nrm = math.sqrt(raw.map(x => x * x).sum)
       val (size, indices, values) = out(id)
       assert(size == fitted.size)
-      assert(indices == present.map(t => idfMap(t)._1), s"doc $id indices")
+      assert(indices == present.map(t => idfMap(t)._1), s"$how doc $id indices")
       values.zip(raw.map(_ / nrm)).foreach { case (g, w) =>
-        assert(math.abs(g - w) < 1e-9, s"doc $id value: $g vs $w")
+        assert(math.abs(g - w) < 1e-9, s"$how doc $id value: $g vs $w")
       }
     }
+  }
+
+  test("a TF-IDF pipeline step tokenizes once per row: one WordTokens in the optimized plan") {
+    // not a local Seq: the optimizer would fold a LocalRelation's whole
+    // projection away and leave no expressions to count
+    val docs = spark.range(4).select(col("id"),
+      concat(lit("alpha bravo charlie "), col("id").cast("string")).as("text"))
+    val plan = new DataPipeline(PipelineConfig.fromYaml(tfidfPipeline))
+      .fitTransform(docs, MLSchema(Map("text" -> MLType.Text)))
+      .queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(exprs.count(_.isInstanceOf[WordTokens]) == 1, plan.toString)
   }
 }
