@@ -39,8 +39,9 @@ import org.apache.spark.util.SerializableConfiguration
   * deterministic content-hash shard assignment, no driver pass.
   *
   * Types: the DataLoader surface — int/long/float/double, boolean,
-  * string, binary, and arrays of those (embeddings). Anything else, and any
-  * unsigned Arrow int, refuses loudly (no silent casts). On the wire
+  * string, binary, and arrays of those (embeddings). Anything else, any
+  * unsigned Arrow int and any dictionary-encoded column refuses loudly (no
+  * silent casts). On the wire
   * strings, binaries and arrays are `Utf8`, `Binary` and `List` (not the
   * `Large*` 64-bit-offset layouts); a list's child is named `element` and is
   * nullable exactly when the array type's `containsNull` is.
@@ -378,17 +379,22 @@ object ArrowIpc {
   /** Spark's mapping of a stream header, gated to the DataLoader surface. */
   private def sparkSchemaOf(schema: ArrowSchema): StructType = {
     // signedness matters: a uint64 column cannot live in LongType (values
-    // >= 2^63) — refuse at schema time with a clear message, not mid-read
-    def refuseUnsigned(f: Field): Unit = {
+    // >= 2^63) — refuse at schema time with a clear message, not mid-read.
+    // A dictionary-encoded field's type is its index type: mapped as is, it
+    // would read back as the integer codes, not the values
+    def refuseUnmappable(f: Field): Unit = {
+      if (f.getDictionary != null) throw new IllegalArgumentException(
+        s"Arrow IPC read: dictionary-encoded column ${f.getName} unsupported — " +
+          "decode it to its value type on the writer side")
       f.getType match {
         case i: ArrowType.Int if !i.getIsSigned => throw new IllegalArgumentException(
           s"Arrow IPC read: unsigned int${i.getBitWidth} column ${f.getName} unsupported — " +
             "cast to a signed type (or float) on the writer side")
         case _ =>
       }
-      f.getChildren.forEach(refuseUnsigned)
+      f.getChildren.forEach(refuseUnmappable)
     }
-    schema.getFields.forEach(refuseUnsigned)
+    schema.getFields.forEach(refuseUnmappable)
     val sparkSchema = try ArrowBridge.fromArrowSchema(schema) catch {
       case e: UnsupportedOperationException =>
         throw new IllegalArgumentException(s"Arrow IPC read: ${e.getMessage}", e)

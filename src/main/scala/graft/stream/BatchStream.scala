@@ -1,8 +1,12 @@
 package graft.stream
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{JoinedRow, SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.PositionBridge
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Batch streaming & sharding over a distributed DataFrame — the Spark
   * re-expression of `sdf.stream(...)` (`src/bears/core/frame/ScalableDataFrame
@@ -11,10 +15,14 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * bears materializes the frame and slices numpy index arrays; that cannot
   * exist at 100 TB. Instead:
   *
-  *   1. a global row position is synthesized with sort + `zipWithIndex`
-  *      (range-partitioned sort, per-partition offset fix — the same
-  *      `__ROW_UID__` trick the reference's Dask layout uses,
+  *   1. a global row position comes from one sort plus one count per
+  *      sorted partition: partition i starts at the sum of the counts before
+  *      it (the `__ROW_UID__` trick of the reference's Dask layout, which
+  *      derives uids from per-partition lengths,
   *      `DaskScalableDataFrame.py:643-684`, without a driver materialize);
+  *      the row count is the sum of those counts, so there is no separate
+  *      `count()`, and the positioned frame declares itself range-partitioned
+  *      and sorted by position;
   *   2. seeded shuffling = ordering by `xxhash64(uid, seed)` — deterministic
   *      on any cluster layout (a partition-seeded `rand()` is not), and
   *      identical across shard ranks as the reference requires
@@ -25,7 +33,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * Consumption: `toLocalBatches` for driver-side iteration (DL feeding —
   * Spark prefetches a partition ahead, like the reference's
-  * `fetch_partitions=1`), or keep the annotated frame distributed and
+  * `fetch_partitions=1`) reads the annotated frame in position order, which
+  * is batch order; because the frame declares that order, the read plans no
+  * Exchange and no Sort. Or keep the annotated frame distributed and
   * `groupBy(BatchCol)` / `repartitionByRange(BatchCol)` for executor-side
   * batch processing.
   */
@@ -55,14 +65,40 @@ object BatchStream {
     * deterministic base order (a key, not `rand()`); with `shuffle` the
     * order is the seeded hash of those columns.
     */
-  def withPosition(df: DataFrame, orderBy: Seq[Column], shuffle: Boolean, seed: Long): DataFrame = {
+  def withPosition(df: DataFrame, orderBy: Seq[Column], shuffle: Boolean, seed: Long): DataFrame =
+    positioned(df, orderBy, shuffle, seed)._1
+
+  /** The positioned frame and its row count (step 1 above). A global sort's
+    * partitions hold ascending key ranges, which is what makes the declared
+    * range partitioning and ordering by [[PosCol]] true.
+    */
+  private def positioned(df: DataFrame, orderBy: Seq[Column], shuffle: Boolean,
+      seed: Long): (DataFrame, Long) = {
     val sortKey: Seq[Column] =
       if (shuffle) Seq(xxhash64(orderBy :+ lit(seed): _*)) ++ orderBy
       else orderBy
     val sorted = df.orderBy(sortKey: _*)
-    val schema = StructType(sorted.schema.fields :+ StructField(PosCol, LongType, nullable = false))
-    val withPos = sorted.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    df.sparkSession.createDataFrame(withPos, schema)
+    val qe = sorted.queryExecution
+    // one registered execution: work run through toRdd outside it (the
+    // sort's scans and Exchange) reaches no execution-end event
+    val (rows, counts) = SQLExecution.withNewExecutionId(qe, Some("position")) {
+      val rows = qe.toRdd
+      (rows, rows.mapPartitions(it => Iterator.single(it.size.toLong)).collect())
+    }
+    val offsets = counts.scanLeft(0L)(_ + _)
+    val schema = sorted.schema.add(StructField(PosCol, LongType, nullable = false))
+    val withPos = rows.mapPartitionsWithIndex[InternalRow] { (i, it) =>
+      val pos = new SpecificInternalRow(Seq(LongType))
+      val joined = new JoinedRow
+      val project = UnsafeProjection.create(schema)
+      var next = offsets(i)
+      it.map { r =>
+        pos.setLong(0, next)
+        next += 1
+        project(joined(r, pos))
+      }
+    }
+    (PositionBridge.positioned(df.sparkSession, withPos, schema), offsets.last)
   }
 
   /** Filter to the requested shard and assign batch ids — all Column
@@ -166,18 +202,20 @@ object BatchStream {
     * total order (e.g. the primary key) for deterministic results.
     */
   def assign(df: DataFrame, orderBy: Seq[Column], plan: Plan): DataFrame = {
-    val n = df.count()
-    val withPos = withPosition(df, orderBy, plan.shuffle, plan.seed)
+    val (withPos, n) = positioned(df, orderBy, plan.shuffle, plan.seed)
     assignBatches(withPos, n, plan)
   }
 
-  /** Driver-side batch iterator (the DL-feeding path): cluster-side sort by
-    * batch, then stream partitions with one-ahead prefetch and group rows
-    * into batches. For numChunks-mode with drop_last=true, rows beyond the
-    * planned chunks are dropped (reference drops the remainder).
+  /** Driver-side batch iterator (the DL-feeding path): read the frame in
+    * position order — batch ids and shard positions ascend with it, and an
+    * [[assign]]ed frame is already in that order, so no shuffle runs unless
+    * the caller reordered it — streaming partitions with one-ahead prefetch
+    * and grouping rows into batches. For numChunks-mode with drop_last=true,
+    * rows beyond the planned chunks are dropped (reference drops the
+    * remainder).
     */
   def toLocalBatches(assigned: DataFrame): Iterator[(Long, Seq[Row])] = {
-    val ordered = assigned.repartitionByRange(col(BatchCol)).sortWithinPartitions(col(BatchCol), col(ShardPosCol))
+    val ordered = assigned.orderBy(col(PosCol))
     val meta = Set(PosCol, ShardPosCol, BatchCol)
     val keep = ordered.schema.fieldNames.filterNot(meta.contains)
     val batchIdx = ordered.schema.fieldIndex(BatchCol)

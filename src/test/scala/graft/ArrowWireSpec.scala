@@ -161,4 +161,43 @@ class ArrowWireSpec extends AnyFunSuite {
       assert(e.getMessage.contains("Arrow IPC read"), n)
     }
   }
+
+  test("dictionary-encoded columns refuse on read instead of reading back as their codes") {
+    import org.apache.arrow.vector.{BigIntVector, VarCharVector}
+    import org.apache.arrow.vector.dictionary.{Dictionary, DictionaryEncoder, DictionaryProvider}
+    import org.apache.arrow.vector.types.pojo.DictionaryEncoding
+    val dir = Files.createTempDirectory("arrowdict")
+    val alloc = new RootAllocator(Long.MaxValue)
+    try {
+      val values = new VarCharVector("values", alloc)
+      values.allocateNew()
+      Seq("a", "b").zipWithIndex.foreach { case (v, i) => values.setSafe(i, v.getBytes(StandardCharsets.UTF_8)) }
+      values.setValueCount(2)
+      val dictionary = new Dictionary(values, new DictionaryEncoding(1L, false, null))
+      val cat = new VarCharVector("cat", alloc)
+      cat.allocateNew()
+      Seq("a", "b", "a").zipWithIndex.foreach { case (v, i) => cat.setSafe(i, v.getBytes(StandardCharsets.UTF_8)) }
+      cat.setValueCount(3)
+      val codes = DictionaryEncoder.encode(cat, dictionary).asInstanceOf[FieldVector]
+      val id = new BigIntVector("id", alloc)
+      id.allocateNew(3)
+      (0 until 3).foreach(i => id.setSafe(i, i + 1L))
+      id.setValueCount(3)
+      val root = new VectorSchemaRoot(Seq[FieldVector](id, codes).asJava)
+      root.setRowCount(3)
+      Seq(dir.resolve("dict.arrows"), dir.resolve("shard-00000.arrows")).foreach { p =>
+        val out = Files.newOutputStream(p)
+        val w = new ArrowStreamWriter(root, new DictionaryProvider.MapDictionaryProvider(dictionary), out)
+        try { w.start(); w.writeBatch(); w.end() } finally { w.close(); out.close() }
+      }
+      root.close(); cat.close(); values.close()
+    } finally alloc.close()
+    Seq[() => Unit](
+      () => ArrowIpc.readStream(spark, dir.resolve("dict.arrows").toString),
+      () => ArrowIpc.readStreamSharded(spark, dir.toString)).foreach { read =>
+      val e = intercept[IllegalArgumentException](read())
+      assert(e.getMessage.contains("dictionary-encoded column cat"), e.getMessage)
+      assert(e.getMessage.contains("decode it"), e.getMessage)
+    }
+  }
 }

@@ -231,6 +231,118 @@ class StreamSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("numChunks must be positive"))
   }
 
+  /** Run `body` with the SQL confs set, restoring (or unsetting) them after. */
+  private def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def idBatches(assigned: org.apache.spark.sql.DataFrame): Seq[(Long, Seq[Long])] =
+    BatchStream.toLocalBatches(assigned).map { case (b, rows) => b -> rows.map(_.getLong(0)) }.toSeq
+
+  /** Driver-side reference for one plan: the ids in sort order, cut by
+    * [[Sharding]]'s bounds and batch sizes alone.
+    */
+  private def referenceBatches(order: IndexedSeq[Long], plan: BatchStream.Plan): Seq[(Long, Seq[Long])] = {
+    val (rank, s) = plan.shard
+    val bounds = Sharding.inMemoryShardBounds(order.size.toLong, s,
+      plan.numRows.getOrElse(1L), plan.dropLast.contains(true))
+    val segments = bounds.zipWithIndex.collect {
+      case ((a, e, k), i) if plan.reverseSharding ^ (i == rank) => (order.slice(a.toInt, e.toInt), k)
+    }
+    val shardIds = segments.flatMap(_._1)
+    def cut(ids: Seq[Long], sizes: Seq[Long]): Seq[Seq[Long]] =
+      sizes.scanLeft(0L)(_ + _).zip(sizes).map { case (off, sz) => ids.slice(off.toInt, (off + sz).toInt) }
+    val batches = (plan.numRows, plan.dropLast) match {
+      case (Some(b), Some(false)) => // every original shard's segment pads its own last batch
+        segments.flatMap { case (ids, k) => cut(ids, Sharding.batchSizes(ids.size, Some(b), None, Some(false), k)) }
+      case (Some(b), d) => cut(shardIds, Sharding.batchSizes(shardIds.size, Some(b), None, d, shardIds.size / b))
+      case (None, _) => cut(shardIds, Sharding.batchSizes(shardIds.size, None, plan.numChunks, plan.dropLast, 0L))
+    }
+    batches.filter(_.nonEmpty).zipWithIndex.map { case (ids, i) => i.toLong -> ids }
+  }
+
+  test("spark assign: positions across many sorted partitions == driver-side Sharding reference") {
+    val n = 500L
+    val seed = 11L
+    val df = spark.range(0, n, 1, 7).withColumn("payload", concat(lit("r"), col("id")))
+    val byId = (0L until n).toIndexedSeq
+    val byHash = spark.range(n).select(col("id"), xxhash64(col("id"), lit(seed)))
+      .collect().map(r => (r.getLong(1), r.getLong(0))).sorted.map(_._2).toIndexedSeq
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "6") {
+      val sizes = BatchStream.withPosition(df, Seq(col("id")), shuffle = true, seed)
+        .rdd.mapPartitions(it => Iterator.single(it.size)).collect()
+      assert(sizes.count(_ > 0) >= 5, s"sorted partition sizes: ${sizes.mkString(",")}")
+      val cases = for {
+        chunks <- Seq(false, true)
+        dropLast <- Seq(None, Some(false), Some(true))
+        shuffle <- Seq(true, false)
+        reverse <- Seq(false, true)
+      } yield (chunks, dropLast, shuffle, reverse)
+      cases.zipWithIndex.foreach { case ((chunks, dropLast, shuffle, reverse), i) =>
+        val plan = BatchStream.Plan(
+          numRows = if (chunks) None else Some(7L), numChunks = if (chunks) Some(4L) else None,
+          shard = (i % 3, 3), dropLast = dropLast, shuffle = shuffle, seed = seed,
+          reverseSharding = reverse)
+        val want = referenceBatches(if (shuffle) byHash else byId, plan)
+        assert(idBatches(BatchStream.assign(df, Seq(col("id")), plan)) == want, plan)
+      }
+    }
+  }
+
+  test("spark toLocalBatches: reads an assigned frame with no shuffle or sort, in 3 + 1 jobs") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.core.JobCounter
+    val df = spark.range(0, 103, 1, 3).withColumn("payload", concat(lit("r"), col("id")))
+    val plan = BatchStream.Plan(numRows = Some(10L), shard = (1, 4), dropLast = Some(false),
+      shuffle = true, seed = 5L)
+    val assignJobs = new JobCounter
+    val assigned = assignJobs.observe(spark.sparkContext)(BatchStream.assign(df, Seq(col("id")), plan))
+    val consumeJobs = new JobCounter
+    val batches = consumeJobs.observe(spark.sparkContext)(idBatches(assigned))
+    // the sort's sampling and map jobs, then the per-partition count; one read
+    assert((assignJobs.jobs, assignJobs.sqlExecutions) == ((3, 1)))
+    assert((consumeJobs.jobs, consumeJobs.sqlExecutions) == ((1, 1)))
+    assert(batches.map(_._2.size).sum == 26L)
+
+    val ordered = assigned.orderBy(col(BatchStream.PosCol))
+    ordered.collect()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val executed = ordered.queryExecution.executedPlan
+    assert(helper.collect(executed) { case e: ShuffleExchangeExec => e }.isEmpty, executed)
+    assert(helper.collect(executed) { case s: SortExec => s }.isEmpty, executed)
+
+    // a caller's reorder brings the Exchange and Sort back: same batches
+    assert(idBatches(assigned.repartition(7)) == batches)
+  }
+
+  test("spark withPosition: the positioned frame caches, aggregates and holds distinct positions") {
+    val n = 250L
+    val df = spark.range(0, n, 1, 5).withColumn("payload", concat(lit("r"), col("id")))
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val positioned = BatchStream.withPosition(df, Seq(col("id")), shuffle = true, 3L).cache()
+      try {
+        assert(positioned.count() == n)
+        val pairs = positioned.select(col(BatchStream.PosCol), col("id"), col("payload")).collect()
+        assert(pairs.map(_.getLong(0)).sorted.toSeq == (0L until n))
+        assert(pairs.forall(r => r.getString(2) == s"r${r.getLong(1)}"))
+      } finally positioned.unpersist()
+      val assigned = BatchStream.assign(df, Seq(col("id")),
+        BatchStream.Plan(numRows = Some(25L), shard = (0, 2), dropLast = Some(true), shuffle = true))
+      val byBatch = assigned.groupBy(BatchStream.BatchCol).count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(byBatch == (0L until 5L).map(_ -> 25L).toMap)
+    }
+  }
+
   test("stream-static incremental dedup == batch anti-join + digest dedup") {
     import graft.streaming.EventStreams
     import graft.core.GraftSession
