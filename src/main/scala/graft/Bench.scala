@@ -9,244 +9,58 @@ import graft.queries.QueryCorpus
   * Materialization uses the `noop` sink so every output column is actually
   * computed (a bare `count()` lets Catalyst prune the plan to row counting).
   *
-  * Noise armor (a contended box once produced a bench whose sf0.01 times
-  * exceeded its sf0.1 times — impossible on a healthy run, and invisible
-  * from inside the JSON). Four defenses make a degraded run self-labeling:
-  *   - queries are timed CHEAPEST-FIRST (by warm-up time), so one heavy
-  *     query's GC/page-cache wake can't poison a long tail of cheap ones;
-  *   - every raw run per query is emitted (`queries_raw`; a healed query
-  *     carries >2 entries and is named in `healed`), so min-vs-max spread
-  *     exposes intra-run contention after the fact — healing never rewrites
-  *     the raw record;
-  *   - each query's warm-up time (emitted as `queries_warm`) anchors a
-  *     second retry rule: a timed PAIR that is mutually consistent but
-  *     collectively >2× the warm-up measurement sat in one shared degraded
-  *     window (the r5 q144/q168 failure mode) and earns one extra run;
-  *   - the first-timed query is re-timed at the VERY END and the ratio is
-  *     emitted as `noise_sentinel` (last/first ≈ 1.0 healthy; the rule is
-  *     TWO-SIDED: >> 1 means the box degraded mid-bench and later numbers
-  *     are inflated, << 1 means the run STARTED contended — the r6 failure
-  *     mode, where early timed pairs AND their warm anchors were poisoned
-  *     together so neither per-query heal could fire);
-  *   - when the sentinel proves the run STARTED degraded (<< 1, so the
-  *     END the sentinel just measured is the healthy side), the queries
-  *     most inflated versus the committed prior-round record
-  *     (`bench_prior.json` / `bench_out.json` in the working directory — an
-  *     anchor taken entirely OUTSIDE this run, which no in-run window can
-  *     poison) are re-timed at the very end; the re-times merge into the
-  *     min-estimator and are named in `retimed`. End-of-run degradation
-  *     (>> 1) is labeled (`sentinel_degraded`) but not re-timed: the early
-  *     timed pairs already measured the healthy window and min() keeps
-  *     them, while extra runs would sample the degraded window.
+  * One estimator, read entirely from inside the run:
+  *   - a discarded priming run, then one warm-up pass whose times order the
+  *     timed pass cheapest-first, so one heavy query's GC or page-cache wake
+  *     cannot poison a long tail of cheap ones;
+  *   - each query's time is the min of two timed runs, plus one retry when
+  *     the two disagree by more than [[SpreadLimit]] (see [[needsHealing]]);
+  *   - the sf0.01 sibling dir, when present, is timed the same way;
+  *   - the first-timed query is timed again after everything else, and
+  *     last/first is the noise sentinel (see [[sentinelDegraded]]).
+  *
+  * The record (written to `GRAFT_BENCH_OUT`, default `bench_out.json`, and
+  * printed as one line) carries: `value` (the total of per-query mins),
+  * `queries` (the mins), `queries_raw` (every run, never rewritten),
+  * `queries_warm` (warm-up times), `healed` (queries that took the retry),
+  * `noise_sentinel`, `noise_sentinel_query`, `sentinel_degraded`, `sf`,
+  * `r1_shared_total`, and `sf_small`/`queries_small` for the curve. A
+  * failed run counts as -1. The last stdout line is [[summaryLine]].
   */
 object Bench {
 
-  /** Spread rule for the self-healing retry: two valid timed runs of the
-    * same query differing by more than `limit`× can't both be the query's
-    * cost — one sat in a degraded window (GC storm, page-cache eviction,
-    * external contention), so a third run is warranted. Failed runs (< 0)
-    * never trigger healing: a deterministic failure re-fails identically.
+  /** Two valid timed runs of one query further apart than this factor cannot
+    * both be its cost: one sat in a degraded window (GC storm, page-cache
+    * eviction, outside contention), so a third run is taken.
     */
-  def needsHealing(a: Double, b: Double, limit: Double = 3.0): Boolean =
-    a > 0 && b > 0 && math.max(a, b) / math.min(a, b) > limit
+  val SpreadLimit = 3.0
 
-  /** Warm-anchor rule (r5 lesson: q144's timed pair [6.39, 5.71] sat
-    * ENTIRELY inside one degraded window — mutually consistent, so the
-    * spread rule never fired, and the end-of-run sentinel can't see a
-    * window that closed before the bench ended — while the warm-up pass
-    * had already measured the query at ~1.2 s). The warm-up time is a
-    * per-query anchor taken OUTSIDE the timed window: when even the best
-    * timed run exceeds `factor`× it, both timed runs are suspect and one
-    * extra run is warranted. A degraded WARM-UP only raises the anchor
-    * (never a false trigger); warm-up failure (< 0) disables the anchor.
+  /** A sentinel ratio past this factor in either direction marks the run. */
+  val SentinelLimit = 1.5
+
+  /** The spread retry rule. Failed runs (< 0) never retry: a deterministic
+    * failure fails again identically. One retry at most: a box degraded for
+    * the whole bench should stay visibly degraded, not retry forever.
     */
-  def needsWarmAnchorHeal(runs: Seq[Double], warmTime: Double,
-      factor: Double = 2.0): Boolean = {
-    val ok = runs.filter(_ >= 0)
-    warmTime > 0 && ok.nonEmpty && ok.min > factor * warmTime
-  }
+  def needsHealing(a: Double, b: Double): Boolean =
+    a > 0 && b > 0 && math.max(a, b) / math.min(a, b) > SpreadLimit
 
   /** Two-sided sentinel rule (r6 lesson: the official run carried sentinel
     * 0.54 — the first-timed query ran ~2× SLOWER at the start than at the
     * end, proving the run *started* inside a degraded window — yet nothing
     * acted on it because only >> 1 was treated as degraded). A healthy run
-    * has last/first ≈ 1.0; deviation past `limit` in EITHER direction means
-    * part of the run sat in an unhealthy window. Failed sentinel legs
-    * (ratio <= 0) are already labeled by the -1 ratio itself.
+    * has last/first ≈ 1.0; deviation past [[SentinelLimit]] in EITHER
+    * direction means part of the run sat in an unhealthy window. Failed
+    * sentinel legs (ratio <= 0) are already labeled by the -1 ratio itself.
     */
-  def sentinelDegraded(sentinel: Double, limit: Double = 1.5): Boolean =
-    sentinel > 0 && math.max(sentinel, 1.0 / sentinel) > limit
+  def sentinelDegraded(sentinel: Double): Boolean =
+    sentinel > 0 && math.max(sentinel, 1.0 / sentinel) > SentinelLimit
 
-  /** The repair pass may only fire when the START of the run was the
-    * degraded side (sentinel = last/first << 1): the re-times execute at
-    * the END of the run, so they repair something only when the end window
-    * is the healthy one. End-of-run degradation (>> 1) needs no repair —
-    * the early timed pairs already measured the healthy window and min()
-    * keeps them — and re-timing there would sample the degraded window
-    * while labeling the record repaired. The two-sided
-    * [[sentinelDegraded]] stays the RECORD label (`sentinel_degraded`);
-    * this rule gates only the extra runs.
-    */
-  def frontDegraded(sentinel: Double, limit: Double = 1.5): Boolean =
-    sentinel > 0 && 1.0 / sentinel > limit
-
-  /** Extract the per-query times from a prior bench record (the one-line
-    * JSON this object itself writes). Format-private on purpose: the
-    * `queries` object holds only "name":number pairs, so no JSON library is
-    * needed and any malformed/foreign input degrades to an empty map (which
-    * simply disables the prior anchor — never a crash, never a false heal).
-    */
-  def parsePriorQueries(line: String): Map[String, Double] = {
-    val obj = """"queries"\s*:\s*\{([^{}]*)\}""".r
-    obj.findFirstMatchIn(line).map(_.group(1)) match {
-      case None => Map.empty
-      case Some(body) =>
-        val pair = """"([^"]+)"\s*:\s*(-?[0-9.Ee+-]+)""".r
-        pair.findAllMatchIn(body).flatMap { m =>
-          scala.util.Try(m.group(1) -> m.group(2).toDouble).toOption
-        }.toMap
-    }
+  /** The min of the valid runs, or -1 when every run failed. */
+  def best(runs: Seq[Double]): Double = {
+    val ok = runs.filter(_ >= 0)
+    if (ok.isEmpty) -1.0 else ok.min
   }
-
-  /** The `sf` field of a prior bench record — the anchor is only meaningful
-    * against the SAME scale factor (an sf1.0 run compared to an sf0.1
-    * anchor reads as uniformly 2-5× "inflated" and would fire the hard
-    * re-time rule on every query). Absent field (pre-r3 records) → None.
-    */
-  def parsePriorSf(line: String): Option[String] =
-    """"sf"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(line).map(_.group(1))
-
-  /** SF-keyed anchor filename for a bench data dir: the committed healthy
-    * record AT THAT SCALE (e.g. `bench_prior_sf1.0.json` for /tmp/sf1.0) —
-    * tried before the generic `bench_prior.json`, which carries the sf0.1
-    * record and is SF-guard-rejected everywhere else. This is what arms the
-    * hard >2x retime rule at the sf1.0 scale point (r13 verdict item 3).
-    */
-  def sfKeyedAnchorName(sfDir: String): String =
-    s"bench_prior_${new java.io.File(sfDir).getName}.json"
-
-  /** Fraction of prior-matched queries whose min timed run exceeds
-    * `factor`× the committed prior-round time. The sentinel can only see
-    * POSITIONAL degradation (start vs end of the run); a box that is
-    * uniformly loaded for the whole bench passes the sentinel with every
-    * line inflated, which reads as a code regression. This ratio is pure
-    * observability — emitted as `prior_inflated` so a reader (or the next
-    * round's judge) can tell "the box was slow" from "the code got slower"
-    * without a same-hour re-measurement; it never triggers healing, since
-    * a uniform slowdown can also be a real regression and the harness
-    * cannot distinguish the two on its own.
-    */
-  def priorInflatedFraction(results: Seq[(String, Double)],
-      prior: Map[String, Double], factor: Double = 1.5): Double = {
-    val matched = results.flatMap { case (n, t) =>
-      prior.get(n).collect { case p if t > 0 && p > 0 => t > factor * p }
-    }
-    if (matched.isEmpty) -1.0
-    else matched.count(identity).toDouble / matched.size
-  }
-
-  /** Queries worth an end-of-run re-time when the sentinel flags the run as
-    * degraded: those whose min timed run is > `factor`× the committed
-    * prior-round healthy time, worst inflation first, capped at `cap` (the
-    * re-time pass is a repair, not a second bench). The prior record is an
-    * anchor measured entirely outside this run, so — unlike the warm anchor
-    * — a window that degrades the START of the run cannot poison it. A
-    * degraded PRIOR only shrinks ratios (fewer re-times, never a false
-    * one); queries absent from the prior or failed in this run are skipped.
-    */
-  def retimeCandidates(results: Seq[(String, Double)], prior: Map[String, Double],
-      factor: Double = 1.5, cap: Int = 8): Seq[String] = {
-    results.iterator.flatMap { case (n, t) =>
-      prior.get(n) match {
-        case Some(p) if t > 0 && p > 0 && t > factor * p => Some(n -> t / p)
-        case _ => None
-      }
-    }.toSeq.sortBy(-_._2).take(cap).map(_._1)
-  }
-
-  /** The complete end-of-run re-time list: the front-degraded repair list
-    * (sentinel-gated — see [[frontDegraded]]) PLUS, regardless of sentinel
-    * state, every query whose min timed run exceeds `hardFactor`× the
-    * committed prior anchor (r12 lesson: the official record shipped q175 at
-    * 4.0× the round's own healthy anchor under an IN-BAND 0.72 sentinel —
-    * contention that is neither positional nor front-loaded slips both the
-    * sentinel and the warm anchor, and only the out-of-run prior can see
-    * it). The hard rule costs nothing on a healthy run (no query trips 2×)
-    * and at worst re-times a genuine 2× code regression once — the re-time
-    * merges into min(), so a real regression keeps its (still-slow) time
-    * and stays visible; only noise gets repaired. Worst-inflation-first,
-    * deduplicated, and capped ONCE after the union (r13 ADVICE: capping the
-    * front and hard lists independently let the combined repair list reach
-    * 2×cap — double the intended budget).
-    *
-    * Sub-second anchors trip the hard rule at the tighter `subSecondFactor`
-    * (r13 q99 lesson: a single 0.2 s hiccup on a 0.29 s query is 1.8× —
-    * under the 2× bar, so the official record carried it unexplained).
-    * Re-timing a sub-second query costs almost nothing, and the min() merge
-    * keeps any real regression visible either way.
-    */
-  def retimeSet(results: Seq[(String, Double)], prior: Map[String, Double],
-      sentinel: Double, hardFactor: Double = 2.0,
-      subSecondFactor: Double = 1.5, cap: Int = 8): Seq[String] = {
-    val front =
-      if (frontDegraded(sentinel)) retimeCandidates(results, prior, cap = cap)
-      else Seq.empty
-    val hard = results.iterator.flatMap { case (n, t) =>
-      prior.get(n) match {
-        case Some(p) if t > 0 && p > 0 =>
-          val f = if (p < 1.0) subSecondFactor else hardFactor
-          if (t > f * p) Some(n -> t / p) else None
-        case _ => None
-      }
-    }.toSeq.sortBy(-_._2).map(_._1)
-    (front ++ hard).distinct.take(cap)
-  }
-
-  /** Whole-run secondary sentinel (r14 lesson: the official sf0.1 record
-    * shipped a 1.23× ACROSS-THE-BOARD drift under a healthy per-query
-    * sentinel of 0.89 — the first-vs-last sentinel only sees POSITIONAL
-    * degradation, and `prior_inflated`'s 1.5× per-query bar misses a
-    * uniform ~1.2× slowdown entirely). This is the run-total ratio against
-    * the committed prior anchor over MATCHED queries only (both sides
-    * > 0, so a failed query or an anchor gap can't skew the sum); -1.0
-    * when nothing matches (anchor absent/foreign — the label then stays
-    * quiet, never false-fires).
-    */
-  def totalVsPrior(results: Seq[(String, Double)],
-      prior: Map[String, Double]): Double = {
-    val matched = results.flatMap { case (n, t) =>
-      prior.get(n).collect { case p if t > 0 && p > 0 => (t, p) }
-    }
-    if (matched.isEmpty) -1.0 else matched.map(_._1).sum / matched.map(_._2).sum
-  }
-
-  /** The label rule for [[totalVsPrior]]: a run whose matched total
-    * exceeds `limit`× the anchor total is flagged `run_inflated` even when
-    * every per-query check is quiet — the box (or the code, uniformly) was
-    * slower for the WHOLE window, and the record should not become the
-    * next anchor. Pure observability, like `prior_inflated`: a uniform
-    * slowdown can also be a real regression, and no re-time executed
-    * inside the same window can tell the two apart.
-    */
-  def runInflated(ratio: Double, limit: Double = 1.2): Boolean = ratio > limit
-
-  /** Whole-run self-heal merge law (r16 lesson: the official record shipped
-    * `run_inflated=true` three rounds running — the per-query retime loop
-    * cannot repair UNIFORM contention, because every extra run it schedules
-    * samples the same loaded window a query at a time; only re-running the
-    * complete timed pass once, after the window has had the whole bench
-    * duration to clear, can). The second pass's runs APPEND to each query's
-    * raw record (evidence is never rewritten) and the min-estimator picks
-    * per query across both passes, so the merged record is at least as good
-    * as either pass and a genuine uniform code regression stays visible
-    * (both passes measure it slow). Bounded at ONE re-pass — a box
-    * degraded for both windows should stay visibly degraded (the final
-    * `run_inflated` label is recomputed on the merged results), not retry
-    * forever.
-    */
-  def mergeRerun(first: Seq[(String, Seq[Double])],
-      rerun: Map[String, Seq[Double]]): Seq[(String, Seq[Double])] =
-    first.map { case (n, rs) => n -> (rs ++ rerun.getOrElse(n, Seq.empty)) }
 
   /** The driver mains' one JSON string escape (backslash, quote, every
     * control char), for env-var-controlled paths in the bench record and
@@ -262,24 +76,6 @@ object Bench {
       case c => c.toString
     } + "\""
 
-  /** The driver-facing handoff line (r8 lesson — eighth consecutive
-    * `parsed: null` official record): the driver keeps the TAIL of stdout,
-    * so the >4 KB full record line arrives head-truncated and never parses,
-    * and a pointer printed BEFORE it scrolls off with the head. The
-    * contract is therefore: write bench_out.json (the primary artifact),
-    * print the full record line, then print THIS short summary as the
-    * FINAL stdout line — the kept tail always ends in one complete,
-    * parseable JSON object carrying the headline numbers and the path to
-    * the full record.
-    *
-    * Since r18 the summary ALSO carries the min-estimate per-query map
-    * (r17 verdict item 2: PERF_r17's per_query/geomean/scaling were all
-    * empty because the only line that survives the tail capture carried no
-    * per-query numbers). The 25-entry map is ~1 KB — the full record line
-    * only truncated because of the `queries_raw`/`queries_warm`/
-    * `queries_small` maps, which stay OUT of the summary; the summary
-    * remains a fraction of the observed multi-KB tail window.
-    */
   /** Render a double as a JSON number, or `null` when non-finite — raw
     * interpolation of NaN/Infinity would malform the one line whose entire
     * contract is guaranteed parseability.
@@ -287,17 +83,64 @@ object Bench {
   def jnum(d: Double): String =
     if (java.lang.Double.isFinite(d)) d.toString else "null"
 
-  def summaryLine(total: Double, sharedTotal: Double, sentinel: Double,
-      sentinelDegraded: Boolean, priorInflated: Double, totalVsPrior: Double,
-      runInflated: Boolean, sf: String, see: String,
-      queries: Seq[(String, Double)] = Seq.empty): String = {
-    val qmap = queries.map { case (n, t) => s"${jstr(n)}:${jnum(t)}" }
-      .mkString("{", ",", "}")
-    s"""{"metric":"total","value":${jnum(total)},"unit":"sec","r1_shared_total":${jnum(sharedTotal)},""" +
-      s""""noise_sentinel":${jnum(sentinel)},"sentinel_degraded":$sentinelDegraded,""" +
-      s""""prior_inflated":${jnum(priorInflated)},"total_vs_prior":${jnum(totalVsPrior)},""" +
-      s""""run_inflated":$runInflated,"queries":$qmap,"sf":${jstr(sf)},"see":${jstr(see)}}"""
+  /** A JSON object from keys and already-rendered values, in order. */
+  def jobj(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+
+  /** A per-query `{"name":seconds,...}` map, in the given order. */
+  def jtimes(qs: Seq[(String, Double)]): String =
+    jobj(qs.map { case (n, t) => n -> jnum(t) })
+
+  /** The 9 queries BENCH_r01 timed: their subtotal keeps round-over-round
+    * ratios readable as the bench list grows.
+    */
+  val R1Shared = Set("q01_agg_pricing_summary", "q03_join_topk_revenue",
+    "q07_window_rank", "q38_tfidf", "q51_exact_dedup", "q53_minhash_lsh_jaccard",
+    "q55_cosine_topk", "q64_asof_join", "q95_corpus_clean")
+
+  /** Sum of the valid [[R1Shared]] times. */
+  def sharedTotal(results: Seq[(String, Double)]): Double =
+    results.collect { case (k, v) if R1Shared(k) && v > 0 => v }.sum
+
+  /** The full record line (see the object doc for its fields). `raw` holds
+    * every timed run per query in timed order; `small` is the sf0.01 curve,
+    * when one was timed.
+    */
+  def recordLine(raw: Seq[(String, Seq[Double])], warm: Seq[(String, Double)],
+      sentinel: Double, sentinelQuery: String, sf: String,
+      small: Option[Seq[(String, Double)]]): String = {
+    val results = raw.map { case (n, rs) => n -> best(rs) }
+    val curve = small.toSeq.flatMap(s => Seq("sf_small" -> jstr("sf0.01"), "queries_small" -> jtimes(s)))
+    jobj(Seq(
+      "metric" -> jstr("total"), "value" -> jnum(results.map(_._2).sum), "unit" -> jstr("sec"),
+      "runs" -> "2", "timing" -> jstr("min"),
+      "healed" -> raw.collect { case (n, rs) if rs.size > 2 => jstr(n) }.mkString("[", ",", "]"),
+      "sentinel_degraded" -> sentinelDegraded(sentinel).toString,
+      "queries" -> jtimes(results),
+      "queries_raw" -> jobj(raw.map { case (n, rs) => n -> rs.map(jnum).mkString("[", ",", "]") }),
+      "queries_warm" -> jtimes(warm),
+      "noise_sentinel" -> jnum(sentinel), "noise_sentinel_query" -> jstr(sentinelQuery),
+      "sf" -> jstr(sf), "r1_shared_total" -> jnum(sharedTotal(results))) ++ curve)
   }
+
+  /** The driver-facing handoff line (r8 lesson — eighth consecutive
+    * `parsed: null` official record): the driver keeps the TAIL of stdout,
+    * so the >4 KB full record line arrives head-truncated and never parses,
+    * and a pointer printed BEFORE it scrolls off with the head. The
+    * contract is therefore: write bench_out.json (the primary artifact),
+    * print the full record line, then print THIS short summary as the
+    * FINAL stdout line — the kept tail always ends in one complete,
+    * parseable JSON object carrying the headline numbers, the min-estimate
+    * per-query map and the path to the full record. The `queries_raw`,
+    * `queries_warm` and `queries_small` maps stay out of it.
+    */
+  def summaryLine(total: Double, sharedTotal: Double, sentinel: Double,
+      sentinelDegraded: Boolean, sf: String, see: String,
+      queries: Seq[(String, Double)] = Seq.empty): String =
+    jobj(Seq("metric" -> jstr("total"), "value" -> jnum(total), "unit" -> jstr("sec"),
+      "r1_shared_total" -> jnum(sharedTotal), "noise_sentinel" -> jnum(sentinel),
+      "sentinel_degraded" -> sentinelDegraded.toString, "queries" -> jtimes(queries),
+      "sf" -> jstr(sf), "see" -> jstr(see)))
 
   /** UTF-8 byte budget of [[summaryLine]]: a fraction of the multi-KB stdout
     * tail the driver keeps, so the final line always arrives whole.
@@ -325,266 +168,54 @@ object Bench {
       out.failure.foreach(e => System.err.println(s"[bench] $name failed: $e"))
       if (out.ok) out.secs else -1.0
     }
-    def fmt(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def fmtRaw(rs: Seq[(String, Seq[Double])]): String =
-      rs.map { case (k, vs) => "\"" + k + "\":[" + vs.mkString(",") + "]" }
-        .mkString("{", ",", "}")
-
-    // min of 2 timed runs after a full warm-up pass: single-JVM wall times
-    // on this box vary +-15% run to run; the min is the stable estimator of
-    // the query's actual cost (the variance is GC/JIT noise, not work).
-    // Self-healing (r4 lesson: a contended box produced run pairs like
-    // [10.69, 1.98] — labeled by the sentinel but still polluting the
-    // official record): when the two runs diverge more than SPREAD_LIMIT,
-    // one hit a degraded window, so schedule ONE extra run. Bounded at one
-    // retry — a box degraded for the whole bench should stay visibly
-    // degraded, not retry forever. EVERY raw run stays in `queries_raw`
-    // (a 3-element entry marks a healed query) so the contention evidence
-    // the raw record exists for is never rewritten.
-    // warmTime < 0 disables the warm anchor (the sentinel re-run and the
-    // small-SF curve have no same-dir warm-up to anchor on)
-    def timedRuns(name: String, dir: String, warmTime: Double = -1.0): Seq[Double] = {
+    // single-JVM wall times vary run to run from GC/JIT noise, not work; the
+    // min of two is the stable estimator of the query's cost
+    def timedRuns(name: String, dir: String): Seq[Double] = {
       val a = run(name, dir); val b = run(name, dir)
-      val base = if (Bench.needsHealing(a, b)) Seq(a, b, run(name, dir)) else Seq(a, b)
-      // second line of defense, same one-extra-run bound: fires when BOTH
-      // timed runs sat in one degraded window (consistent with each other,
-      // inconsistent with the out-of-window warm-up measurement)
-      if (Bench.needsWarmAnchorHeal(base, warmTime)) base :+ run(name, dir) else base
-    }
-    def best(runs: Seq[Double]): Double = {
-      val ok = runs.filter(_ >= 0)
-      if (ok.isEmpty) -1.0 else ok.min
+      if (needsHealing(a, b)) Seq(a, b, run(name, dir)) else Seq(a, b)
     }
 
     // Local-iteration subset: GRAFT_QUERY_FILTER. Unset for an official
     // record, which times the full headline list.
     val benchNames = QueryRunner.selectFromEnv(QueryCorpus.benchNames)
 
-    // Prior-round anchor for the end-of-run repair pass: the committed
-    // healthy record from the previous round. Read BEFORE any timing so a
-    // mid-bench overwrite can't change the anchor. bench_prior.json is the
-    // snapshot this repo commits each round (the per-round driver overwrites
-    // bench_out.json with the official — possibly degraded — record, so it
-    // is only the fallback).
-    // isRegularFile, not just isReadable: a directory is "readable" (and
-    // GRAFT_BENCH_PRIOR="" resolves to the cwd), but readString on it
-    // would crash the bench before any timing — the anchor contract is
-    // "malformed input degrades to an empty map, never a crash". One
-    // predicate for BOTH the chain and the explicit-prior warning below,
-    // so they cannot drift apart.
-    def usableAnchor(p: java.nio.file.Path): Boolean =
-      java.nio.file.Files.isRegularFile(p) && java.nio.file.Files.isReadable(p)
-    // Resolve to the first candidate that actually READS: a candidate that
-    // passes the stat check but fails readString (deleted mid-flight,
-    // non-UTF-8 bytes) warns and hands resolution to the NEXT candidate
-    // instead of silently disabling the repair pass.
-    // SF-keyed anchor first (r13 verdict item 3: no sf1.0 anchor was ever
-    // committed, so the hard >2x retime rule was mute at exactly the scale
-    // point where the heavy queries live): bench_prior_<sfname>.json (e.g.
-    // bench_prior_sf1.0.json) outranks the generic bench_prior.json, which
-    // carries the sf0.1 record and is SF-guard-rejected at other scales.
-    val sfKeyedAnchor = Bench.sfKeyedAnchorName(sfDir)
-    val resolved: Option[(java.nio.file.Path, String)] =
-      (sys.env.get("GRAFT_BENCH_PRIOR").toSeq ++
-          Seq(sfKeyedAnchor, "bench_prior.json", "bench_out.json"))
-        .map(java.nio.file.Paths.get(_))
-        .filter(usableAnchor)
-        .iterator
-        .map { p =>
-          scala.util.Try(java.nio.file.Files.readString(p)) match {
-            case scala.util.Success(txt) => Some(p -> txt)
-            case scala.util.Failure(e) =>
-              System.err.println(
-                s"[bench] WARNING: prior anchor $p failed to read " +
-                  s"(${e.getClass.getSimpleName}) — trying the next candidate")
-              None
-          }
-        }
-        .collectFirst { case Some(x) => x }
-    val priorPath = resolved.map(_._1)
-    // Loudness on the fallback chain: bench_out.json is the file THIS
-    // binary overwrites, so anchoring on it means the committed healthy
-    // snapshot (bench_prior.json) is missing and the repair pass may be
-    // comparing against a degraded record; no anchor at all mutes the
-    // repair pass entirely; and an explicitly requested GRAFT_BENCH_PRIOR
-    // that is unreadable (typo, deleted file) silently hands resolution to
-    // the fallback chain the caller meant to override. All three deserve a
-    // visible warning, not silence.
-    val explicitPrior = sys.env.get("GRAFT_BENCH_PRIOR")
-    for (e <- explicitPrior
-         if !usableAnchor(java.nio.file.Paths.get(e)))
-      System.err.println(
-        s"[bench] WARNING: GRAFT_BENCH_PRIOR=$e is not a readable file — " +
-          "falling back to the committed snapshot chain")
-    priorPath match {
-      // suppress only when the caller EXPLICITLY anchored on bench_out.json
-      // (resolved path == the readable env value, matched by construction)
-      case Some(p) if p.getFileName.toString == "bench_out.json" &&
-          !explicitPrior.contains(p.toString) =>
-        System.err.println(
-          "[bench] WARNING: prior anchor fell back to bench_out.json (the file this run " +
-            "overwrites) — commit a healthy bench_prior.json so the repair pass anchors " +
-            "on a known-good record")
-      case None =>
-        System.err.println(
-          "[bench] WARNING: no readable prior anchor (bench_prior.json / bench_out.json) — " +
-            "the degraded-sentinel repair pass is disabled for this run")
-      case _ => ()
-    }
-    val prior: Map[String, Double] = resolved match {
-      case None => Map.empty
-      case Some((p, txt)) =>
-        // SF guard: an anchor recorded at a different scale factor is not a
-        // time reference — comparing against it would re-time every query
-        // (hard rule) and report prior_inflated ≈ 1.0 as if the box or the
-        // code were at fault. Records without an sf field (foreign/ancient)
-        // stay usable.
-        Bench.parsePriorSf(txt) match {
-          case Some(psf) if psf != sfDir =>
-            System.err.println(
-              s"[bench] prior anchor $p was recorded at sf=$psf, this run is sf=$sfDir — " +
-                "anchor disabled (repair pass and prior_inflated are SF-local)")
-            Map.empty
-          case _ => Bench.parsePriorQueries(txt)
-        }
-    }
-
     // JVM priming (r11 lesson — the q01 7.5× anomaly): the FIRST query the
     // process ever runs absorbs one-time session startup (codegen compiler
     // warm-up, listener bus, noop-sink classloading, parquet footer cache),
     // ~4 s on this box regardless of the query. Without this discarded run,
-    // that startup lands in benchNames.head's WARM time, which (a) mis-sorts
-    // the genuinely-cheapest query to the END of the cheapest-first timed
-    // order — in r11 that parked q01 inside the end-of-run degraded window —
-    // and (b) inflates its warm anchor ~13×, muting the warm-anchor heal for
-    // exactly the query most exposed to positional degradation.
+    // that startup lands in benchNames.head's WARM time and mis-sorts the
+    // genuinely-cheapest query to the END of the cheapest-first timed order.
     benchNames.headOption.foreach(run(_, sfDir))
 
     // warm-up: JIT + parquet footer cache; its times order the timed pass
     // cheapest-first
     val warm = benchNames.map(n => n -> run(n, sfDir))
-    val warmByName = warm.toMap
     val names = warm.sortBy { case (_, t) => if (t < 0) Double.MaxValue else t }.map(_._1)
-    val rawBase = names.map(n => n -> timedRuns(n, sfDir, warmByName(n)))
-    def resultsOf(rs: Seq[(String, Seq[Double])]) = rs.map { case (n, runs) => n -> best(runs) }
-    val resultsBase = resultsOf(rawBase)
+    val raw = names.map(n => n -> timedRuns(n, sfDir))
 
     // Second scale point (sf0.01 sibling dir, if distinct and present) → a
-    // two-point scale curve in the same JSON line; extra keys are
-    // backward-compatible with the driver's {"value","queries","sf"} read.
+    // two-point scale curve in the same record. Same estimator as the main
+    // pass: a single cold run once recorded sf0.01 "costing more" than
+    // sf0.1, which was page-cache noise, not work.
     val smallDir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01")
-    val curve =
-      if (smallDir.isDirectory && smallDir.getAbsolutePath != new java.io.File(sfDir).getAbsolutePath) {
-        // same min-of-2 + healing estimator as the main pass: the curve runs
-        // cold at the END of the bench, and a single cold run once recorded
-        // sf0.01 "costing more" than sf0.1 — a physically impossible scale
-        // curve that was page-cache noise, not work
-        val small = names.map(n => n -> best(timedRuns(n, smallDir.getAbsolutePath)))
-        s""","sf_small":"sf0.01","queries_small":${fmt(small)}"""
-      } else ""
+    val small =
+      if (smallDir.isDirectory && smallDir.getAbsolutePath != new java.io.File(sfDir).getAbsolutePath)
+        Some(names.map(n => n -> best(timedRuns(n, smallDir.getAbsolutePath))))
+      else None
 
-    // noise sentinel: re-time the first-timed (cheapest) query after
-    // EVERYTHING else — min-of-2 again, so the ratio compares like
-    // estimators. Bracketing the whole bench (including the small-SF curve)
-    // makes a slowdown at EITHER end visible in the JSON itself.
-    val sentinelName = names.head
-    val firstTime = resultsBase.head._2
-    val lastTime = best(timedRuns(sentinelName, sfDir))
-    val sentinel =
-      if (firstTime > 0 && lastTime > 0) lastTime / firstTime else -1.0
+    // noise sentinel: time the first-timed (cheapest) query again after
+    // EVERYTHING else, with the same estimator. Bracketing the whole bench
+    // (including the small-SF curve) makes a slowdown at EITHER end visible
+    // in the record itself.
+    val firstTime = best(raw.head._2)
+    val lastTime = best(timedRuns(names.head, sfDir))
+    val sentinel = if (firstTime > 0 && lastTime > 0) lastTime / firstTime else -1.0
 
-    // Repair pass (r6 lesson): when the sentinel proves the run STARTED
-    // degraded, re-time the queries most inflated vs the committed
-    // prior-round record NOW — the end of the run, which the sentinel just
-    // measured as the healthy side (end-of-run degradation gets no repair:
-    // the early mins are already healthy, and extra runs here would sample
-    // the degraded window — see frontDegraded). The extra runs merge into
-    // the min-estimator and append to queries_raw; the original runs are
-    // never rewritten. Worst-inflation-first so a still-shrinking budget
-    // repairs the biggest distortions first.
-    // … plus the sentinel-independent hard rule (r12 lesson — see retimeSet):
-    // any query >2× the prior anchor earns an end-of-run re-time even when
-    // the sentinel reads healthy.
-    val retimeNames: Seq[String] = Bench.retimeSet(resultsBase, prior, sentinel)
-    if (retimeNames.nonEmpty)
-      System.err.println(s"[bench] sentinel $sentinel / prior-anchor check — re-timing: ${retimeNames.mkString(", ")}")
-    val extra: Map[String, Seq[Double]] =
-      retimeNames.map(n => n -> timedRuns(n, sfDir)).toMap
-    val rawRepaired = rawBase.map { case (n, rs) => n -> (rs ++ extra.getOrElse(n, Seq.empty)) }
-    val resultsRepaired = resultsOf(rawRepaired)
-
-    // Whole-run self-heal (r16 lesson — see mergeRerun): when the matched
-    // total is still >1.2x the committed prior anchor AFTER the per-query
-    // repairs, the whole first window was loaded; re-run the complete timed
-    // pass ONCE (same cheapest-first order, same warm anchors, same
-    // per-query healing) and merge by min. The first pass's total is kept
-    // in the record (`total_first_pass`) so the rerun is auditable.
-    val firstPassRatio = Bench.totalVsPrior(resultsRepaired, prior)
-    val rerunNeeded = Bench.runInflated(firstPassRatio)
-    val rerunRaw: Map[String, Seq[Double]] =
-      if (!rerunNeeded) Map.empty
-      else {
-        System.err.println(
-          f"[bench] run total is $firstPassRatio%.2fx the prior anchor after per-query " +
-            "repairs — uniform contention; re-running the complete timed pass once")
-        names.map(n => n -> timedRuns(n, sfDir, warmByName(n))).toMap
-      }
-    val raw = Bench.mergeRerun(rawRepaired, rerunRaw)
-    val results = resultsOf(raw)
-    val total = results.map(_._2).sum
-    val firstPassTotal = resultsRepaired.map(_._2).sum
-
-    // the 9 queries BENCH_r01 timed — their subtotal makes the
-    // round-over-round ratio directly readable as the bench list grows
-    val r1Shared = Set("q01_agg_pricing_summary", "q03_join_topk_revenue",
-      "q07_window_rank", "q38_tfidf", "q51_exact_dedup", "q53_minhash_lsh_jaccard",
-      "q55_cosine_topk", "q64_asof_join", "q95_corpus_clean")
-    val sharedTotal = results.collect { case (k, v) if r1Shared(k) && v > 0 => v }.sum
-
-    // healed = queries whose raw entry gained >2 runs DURING the timed pass
-    // (spread-retry and/or warm-anchor retry — 4 runs means both);
-    // retimed = extra end-of-run repair runs after a degraded sentinel.
-    // "runs":2 stays the BASE methodology; healed/retimed list exceptions.
-    val healed = rawBase.collect { case (n, rs) if rs.size > 2 => "\"" + n + "\"" }
-      .mkString("[", ",", "]")
-    val retimed = retimeNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val priorStr = priorPath.map(p => jstr(p.toAbsolutePath.toString)).getOrElse("null")
-    // post-repair inflation vs the committed prior: ~0 on a healthy box,
-    // ~1.0 when the whole window was loaded (see priorInflatedFraction)
-    val priorInflated = Bench.priorInflatedFraction(results, prior)
-    // Post-repair inflation still >10% of queries means the WHOLE window was
-    // loaded (even the end-of-run re-times sampled a slow box) — the record
-    // is not a trustworthy code measurement and should be re-run, loudly:
-    // the r11/r12 official records both shipped degraded because nothing
-    // said so at generation time.
-    if (priorInflated > 0.1)
-      System.err.println(
-        f"[bench] WARNING: prior_inflated=$priorInflated%.2f after repair — more than 10%% of " +
-          "queries still exceed 1.5x the committed prior anchor. The box was likely " +
-          "contended for this entire run; RE-RUN this bench before committing the record.")
-    // whole-run secondary sentinel (r14 lesson — see totalVsPrior): a
-    // uniform ~1.2x drift slips both the positional sentinel and the
-    // per-query 1.5x bar; the matched-total ratio catches it
-    val totalRatio = Bench.totalVsPrior(results, prior)
-    val runInfl = Bench.runInflated(totalRatio)
-    if (runInfl)
-      System.err.println(
-        f"[bench] WARNING: run total is $totalRatio%.2fx the committed prior anchor's matched " +
-          "total despite per-query checks AND a full re-pass — both windows were slow (box " +
-          "or uniform regression). Do NOT promote this record to bench_prior.json.")
-    val sentDegraded = Bench.sentinelDegraded(sentinel)
-    val rerunField =
-      if (rerunNeeded) s""""rerun":true,"total_first_pass":$firstPassTotal,"""
-      else """"rerun":false,"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","runs":2,"timing":"min",$rerunField"healed":$healed,"retimed":$retimed,"sentinel_degraded":$sentDegraded,"prior_anchor":$priorStr,"prior_inflated":$priorInflated,"total_vs_prior":${Bench.jnum(totalRatio)},"run_inflated":$runInfl,"queries":${fmt(results)},"queries_raw":${fmtRaw(raw)},"queries_warm":${fmt(warm)},"noise_sentinel":$sentinel,"noise_sentinel_query":"$sentinelName","sf":${jstr(sfDir)},"r1_shared_total":$sharedTotal$curve}"""
-    // The FILE is the primary artifact (stdout gets truncated/regex-
-    // reconstructed by log capture — every BENCH_r1-r8 artifact carries
-    // "parsed": null). Write it first, print the full record line, then
-    // print the SHORT summary as the FINAL stdout line: the driver keeps
-    // the tail of stdout, so only a last-line summary survives truncation
-    // intact (see summaryLine — r8 lesson; a "see" pointer printed before
-    // the long line scrolled off with its head).
+    val results = raw.map { case (n, rs) => n -> best(rs) }
+    val line = recordLine(raw, warm, sentinel, names.head, sfDir, small)
+    // The FILE is the primary artifact (stdout gets truncated by log
+    // capture). Write it first, print the full record line, then print the
+    // SHORT summary as the FINAL stdout line (see summaryLine).
     val outPath = sys.env.getOrElse("GRAFT_BENCH_OUT", "bench_out.json")
     val absOut = java.nio.file.Paths.get(outPath).toAbsolutePath
     try {
@@ -593,8 +224,8 @@ object Bench {
       System.err.println(s"[bench] wrote $absOut")
     } catch { case e: Throwable => System.err.println(s"[bench] could not write $absOut: $e") }
     println(line)
-    val summary = summaryLine(total, sharedTotal, sentinel, sentDegraded,
-      priorInflated, totalRatio, runInfl, sfDir, absOut.toString, results)
+    val summary = summaryLine(results.map(_._2).sum, sharedTotal(results), sentinel,
+      sentinelDegraded(sentinel), sfDir, absOut.toString, results)
     summaryBudgetWarning(summary).foreach(System.err.println)
     println(summary)
     spark.stop()

@@ -892,13 +892,6 @@ object TextAnalysis {
   def matchedPhrases(textCol: Column, phrases: Seq[String]): Column =
     filter(typedLit(phrases.map(_.toLowerCase)), p => contains(lower(textCol), p))
 
-  /** Rows whose text matches NO blocklist phrase — the standard lexicon
-    * gate (NSFW/spam lists) as a map-side filter.
-    */
-  def blocklistFilter(docs: org.apache.spark.sql.DataFrame, textCol: Column,
-      blocked: Seq[String]): org.apache.spark.sql.DataFrame =
-    docs.filter(size(matchedPhrases(textCol, blocked)) === 0)
-
   /** Overlapping fixed-width character chunks (context-window splitting for
     * LLM corpora): chunk k covers `[k·(size−overlap), … + size)`. Pure HOF
     * expression — narrow, codegen'd, rows expand in place when exploded.
