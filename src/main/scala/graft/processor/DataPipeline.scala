@@ -2,7 +2,7 @@ package graft.processor
 
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import graft.core.{MLSchema, MLType}
 import graft.io.{FileMetadata, Writers}
 
@@ -194,6 +194,9 @@ final case class ResolvedStep(
 /** Per-step timing record — the reference's `ProcessorPerf`/
   * `PipelineStepPerf` (`_DataPipeline.py:61-144`); here only fit does eager
   * work (transform is one lazy plan), so fit wall-time is what's recorded.
+  * Steps fitted together by one aggregate share one wall: it goes on the
+  * run's first step and the others read 0, so the records still sum to the
+  * fit's wall.
   */
 final case class StepPerf(transformer: String, inputCols: Seq[String], fitSec: Double)
 
@@ -237,41 +240,56 @@ final class DataPipeline(
     pattern.replace("{col_name}", inputCol)
 
   /** Fit: resolve each step against the evolving schema and fit its
-    * processors (each fit = one distributed aggregate at most), exactly the
-    * reference's `from_config` + `fit_transform` split.
+    * processors, exactly the reference's `from_config` + `fit_transform`
+    * split. Each run of consecutive steps whose processors fit as aggregates
+    * ([[AggregateFit]]) and that read no column written earlier in the run
+    * fits with one `agg` over the frame before the run. A processor with its
+    * own `fit` (TextConcatenation, TF-IDF, DenseRankLabelEncoding) ends the
+    * run and fits alone.
     */
   def fit(df0: DataFrame, schema0: MLSchema): this.type = {
-    var df = df0
-    var schema = schema0
+    var df = df0 // every step before the open run applied
+    var schema = schema0 // every step so far, the open run's too
+    var run = Vector.empty[(ResolvedStep, Seq[String], Seq[AggregateFit])]
     val out = Seq.newBuilder[ResolvedStep]
     val perfOut = Seq.newBuilder[StepPerf]
+    def timed(body: => Unit): Double = {
+      val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e9
+    }
+    def finish(rs: ResolvedStep, cols: Seq[String], fitSec: Double): Unit = {
+      perfOut += StepPerf(rs.transformer, cols, fitSec)
+      out += rs
+      df = applyStep(df, rs)
+    }
+    def closeRun(): Unit = {
+      val sec = timed(AggregateFit.run(df, run.flatMap(_._3)))
+      run.zipWithIndex.foreach { case ((rs, cols, _), i) => finish(rs, cols, if (i == 0) sec else 0.0) }
+      run = Vector.empty
+    }
+    def outputs: Seq[String] = run.flatMap(_._1.bindings.map(_._3))
     config.steps.foreach { step =>
-      val cols = matchColumns(step.input, df.columns.toSeq, schema)
-      resolveStep(step, cols) match {
-        case None => // SKIP behavior
-        case Some(rs) =>
-          val t0 = System.nanoTime()
-          val fitted = rs.bindings.map { case (ins, proc, o) =>
-            proc match {
-              case p: SingleColumnProcessor =>
-                p.fit(df, ins.head)
-                (ins, proc, o)
-              case p: Nto1ColumnProcessor =>
-                p.fit(df, ins)
-                (ins, proc, o)
-              case p: FrameLevelProcessor =>
-                p.fit(df, ins.head)
-                (ins, proc, o)
-            }
-          }
-          perfOut += StepPerf(rs.transformer, cols, (System.nanoTime() - t0) / 1e9)
-          val rstep = ResolvedStep(rs.transformer, fitted)
-          out += rstep
-          val (df2, schema2) = applyStep(df, schema, rstep)
-          df = df2
-          schema = schema2
+      // the open run's outputs, named as applying it will name them
+      val columns = outputs.foldLeft(df)((d, o) => d.withColumn(o, lit(null))).columns.toSeq
+      val cols = matchColumns(step.input, columns, schema)
+      resolveStep(step, cols).foreach { rs =>
+        val written = outputs.map(_.toLowerCase).toSet
+        if (rs.bindings.exists(_._1.exists(c => written(c.toLowerCase)))) closeRun()
+        val fits = rs.bindings.map { case (ins, proc, _) => proc.aggregateFit(df, ins) }
+        if (fits.forall(_.isDefined)) run :+= ((rs, cols, fits.flatten))
+        else {
+          closeRun()
+          finish(rs, cols, timed(rs.bindings.foreach {
+            case (ins, p: SingleColumnProcessor, _) => p.fit(df, ins.head)
+            case (ins, p: Nto1ColumnProcessor, _) => p.fit(df, ins)
+            case (ins, p: FrameLevelProcessor, _) => p.fit(df, ins.head)
+          }))
+        }
+        schema = stepSchema(schema, rs)
       }
     }
+    closeRun()
     resolved = Some(out.result())
     perf = perfOut.result()
     this
@@ -301,19 +319,17 @@ final class DataPipeline(
     }
   }
 
-  private def applyStep(df: DataFrame, schema: MLSchema, step: ResolvedStep): (DataFrame, MLSchema) = {
-    var cur = df
-    var sch = schema.fields
-    step.bindings.foreach { case (ins, proc, o) =>
+  private def applyStep(df: DataFrame, step: ResolvedStep): DataFrame =
+    step.bindings.foldLeft(df) { case (cur, (ins, proc, o)) =>
       proc match {
-        case p: SingleColumnProcessor => cur = cur.withColumn(o, p.transform(col(ins.head)))
-        case p: Nto1ColumnProcessor => cur = cur.withColumn(o, p.transform(cur, ins))
-        case p: FrameLevelProcessor => cur = p.transformFrame(cur, ins.head, o)
+        case p: SingleColumnProcessor => cur.withColumn(o, p.transform(col(ins.head)))
+        case p: Nto1ColumnProcessor => cur.withColumn(o, p.transform(cur, ins))
+        case p: FrameLevelProcessor => p.transformFrame(cur, ins.head, o)
       }
-      sch = sch + (o -> proc.outputMLType)
     }
-    (cur, MLSchema(sch))
-  }
+
+  private def stepSchema(schema: MLSchema, step: ResolvedStep): MLSchema =
+    MLSchema(schema.fields ++ step.bindings.map { case (_, proc, o) => o -> proc.outputMLType })
 
   /** Transform: fold the resolved steps into one lazy plan; persist hooks per
     * `PersistLevel` (`_DataPipeline.py:762-925`).
@@ -326,9 +342,9 @@ final class DataPipeline(
     }
     var schema = schema0
     steps.foreach { s =>
-      val (d2, s2) = applyStep(df, schema, s)
+      val d2 = applyStep(df, s)
       df = if (persist == PersistLevel.EveryStep) materialize(d2) else d2
-      schema = s2
+      schema = stepSchema(schema, s)
     }
     df = persist match {
       case PersistLevel.AfterPipeline | PersistLevel.BeforeAfterPipeline => materialize(df)

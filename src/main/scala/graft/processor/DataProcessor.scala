@@ -3,6 +3,32 @@ package graft.processor
 import org.apache.spark.sql.{Column, DataFrame}
 import graft.core.MLType
 
+/** A fit expressed as aggregate Columns over the input frame plus a
+  * driver-side absorb of their values, in the same order. A pipeline fits a
+  * run of these with one `agg`; a processor's standalone `fit` is the
+  * one-processor case.
+  */
+final case class AggregateFit(aggregates: Seq[Column], absorb: Seq[Any] => Unit)
+
+object AggregateFit {
+
+  /** The fit of a stateless processor: no aggregate, nothing to absorb. */
+  val Stateless: AggregateFit = AggregateFit(Nil, _ => ())
+
+  /** Evaluate every fit's aggregates in one `agg` over `df` (no job when
+    * there are none) and hand each fit its own values.
+    */
+  def run(df: DataFrame, fits: Seq[AggregateFit]): Unit = {
+    val aggs = fits.flatMap(_.aggregates)
+    val values = if (aggs.isEmpty) Seq.empty else df.agg(aggs.head, aggs.tail: _*).head().toSeq
+    fits.foldLeft(0) { (i, f) =>
+      val n = f.aggregates.size
+      f.absorb(values.slice(i, i + n))
+      i + n
+    }
+  }
+}
+
 /** Missing-column policy for pipeline steps — reference
   * `src/bears/constants/_DataProcessingConstants.py:108-111` and usage at
   * `src/bears/processor/_DataProcessor.py:11-30`: e.g. a label-encoding step
@@ -32,7 +58,8 @@ object MissingColumnBehavior {
   * whole-stage-codegen'd projection (SURVEY.md §3.2 "the whole pipeline
   * typically becomes a single projection"), which is what makes the same
   * pipeline viable on 100 TB: no serialization boundary, full pushdown, and
-  * the fit statistics are one distributed aggregate each.
+  * the fit statistics are aggregates: a pipeline fits each run of independent
+  * steps with one distributed `agg` ([[AggregateFit]]).
   */
 trait DataProcessor extends Serializable {
   def name: String
@@ -47,6 +74,14 @@ trait DataProcessor extends Serializable {
   def state: Map[String, String] = Map.empty
   def restore(state: Map[String, String]): Unit = ()
 
+  /** The fit over `inputCols` of `df` as an [[AggregateFit]], which a
+    * pipeline fuses with its neighbours' into one `agg`; `None` for a
+    * processor whose own `fit` runs its own actions. A stateless processor
+    * fits with no aggregate.
+    */
+  def aggregateFit(df: DataFrame, inputCols: Seq[String]): Option[AggregateFit] =
+    Some(AggregateFit.Stateless)
+
   protected def notFitted(what: String): Nothing =
     throw new IllegalStateException(s"$name: .fit() must be called before $what")
 }
@@ -54,8 +89,11 @@ trait DataProcessor extends Serializable {
 /** 1:1 processor shape (`src/bears/processor/_SingleColumnProcessor.py:15-65`). */
 trait SingleColumnProcessor extends DataProcessor {
 
-  /** Fit on one column; default no-op (stateless). */
-  def fit(df: DataFrame, inputCol: String): this.type = this
+  /** Fit on one column: the one-processor case of [[aggregateFit]]. */
+  final def fit(df: DataFrame, inputCol: String): this.type = {
+    AggregateFit.run(df, aggregateFit(df, Seq(inputCol)).toSeq)
+    this
+  }
 
   /** The compiled transform: input column expression → output expression. */
   def transform(input: Column): Column
@@ -82,6 +120,7 @@ trait Nto1ColumnProcessor extends DataProcessor {
   * narrow on either side still fuses into single projections.
   */
 trait FrameLevelProcessor extends DataProcessor {
+  override def aggregateFit(df: DataFrame, inputCols: Seq[String]): Option[AggregateFit] = None
   def fit(df: DataFrame, inputCol: String): this.type = this
   def transformFrame(df: DataFrame, inputCol: String, outputCol: String): DataFrame
 }

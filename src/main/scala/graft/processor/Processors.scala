@@ -2,6 +2,7 @@ package graft.processor
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 import graft.core.MLType
 
 /** The reference's 13 processors (SURVEY.md §2.10), each compiled to native
@@ -147,6 +148,7 @@ object Processors {
       case _ => None
     }
 
+    override def aggregateFit(df: DataFrame, inputCols: Seq[String]): Option[AggregateFit] = None
     override def fit(df: DataFrame, inputCols: Seq[String]): this.type = {
       orderedCols = Some(order match {
         case "sort_by_name_ascending" => inputCols.sorted
@@ -188,9 +190,9 @@ object Processors {
   // ---- categorical (§2.10) ---------------------------------------------
 
   /** Label → dense int codes (`_categorical/_LabelEncoding.py:45-218`).
-    * Fit: sorted distinct labels (numeric sort for numeric inputs, like
-    * np.unique) → index per `encoding_range`; one distributed
-    * distinct+collect, vocabulary broadcast as a literal map.
+    * Fit: distinct labels sorted by the column's own type, like np.unique
+    * → index per `encoding_range`; one sorted `collect_set` aggregate,
+    * vocabulary broadcast as a literal map.
     * Transform: `element_at(map, label)` + unknown-label fill
     * (`ENCODING_RANGE_TO_UNKNOWN_LABELS_MAP`). Inverse transform included.
     */
@@ -206,24 +208,23 @@ object Processors {
       .map(_.toLong).getOrElse(LabelEncoding.UnknownByRange(range))
     private var encoding: Option[Seq[(String, Long)]] = None
 
-    override def fit(df: DataFrame, inputCol: String): this.type = {
+    override def aggregateFit(df: DataFrame, inputCols: Seq[String]): Option[AggregateFit] = {
       // Driver-memory contract (the Spark-ML StringIndexer contract): the
       // fitted label space collects to the driver. Label encoding is for
       // categorical columns — a high-cardinality (≈ row-count) key column
       // fit would gather the whole key space; encode such columns with a
       // hash/dense-rank instead.
-      val c = col(inputCol)
+      val c = col(inputCols.head)
       val filled = missingFill.fold(c)(f => coalesce(c, lit(f)))
-      val numeric = df.schema(inputCol).dataType match {
-        case _: org.apache.spark.sql.types.NumericType => true
-        case _ => false
+      // sorted in the column's own type, so longs above 2^53 and wide
+      // decimals keep their order; NaN is no label and -0.0 is the label 0.0
+      val label = df.select(filled).schema.head.dataType match {
+        case dt @ (FloatType | DoubleType) =>
+          when(!isnan(filled), when(filled === 0, lit(0).cast(dt)).otherwise(filled))
+        case _ => filled
       }
-      val distinct = df.select(filled.as("v")).na.drop()
-        .distinct()
-        .orderBy(if (numeric) col("v").cast("double") else col("v").cast("string"))
-        .collect().map(_.get(0).toString).toSeq
-      fitLabels(distinct)
-      this
+      Some(AggregateFit(Seq(sort_array(collect_set(label))),
+        v => fitLabels(v.head.asInstanceOf[collection.Seq[Any]].map(_.toString).toSeq)))
     }
 
     private[processor] def fitLabels(sortedLabels: Seq[String]): Unit = {
@@ -332,14 +333,13 @@ object Processors {
         None
     }
 
-    override def fit(df: DataFrame, inputCol: String): this.type = {
-      // backtick-escape (the SCol.mode_ discipline): a space/dot in the
-      // column name would otherwise break the SQL or resolve a nested field
-      if (strategy == "mode")
-        imputed = Option(df.select(
-          expr(s"mode(${P.quoted(inputCol)}, true)")).head().get(0)).map(_.toString)
-      this
-    }
+    override def aggregateFit(df: DataFrame, inputCols: Seq[String]): Option[AggregateFit] =
+      Some(if (strategy != "mode") AggregateFit.Stateless
+      else AggregateFit(
+        // backtick-escape (the SCol.mode_ discipline): a space/dot in the
+        // column name would otherwise break the SQL or resolve a nested field
+        Seq(expr(s"mode(${P.quoted(inputCols.head)}, true)")),
+        v => imputed = Option(v.head).map(_.toString)))
     def transform(in: Column): Column = {
       val v = imputed.getOrElse(notFitted("transform"))
       coalesce(in, lit(v))
@@ -351,8 +351,8 @@ object Processors {
   // ---- numeric (§2.10) --------------------------------------------------
 
   /** mean/median/mode/min/max/constant fill
-    * (`_numeric/_NumericMissingValueImputation.py:27-87`); each strategy is
-    * one distributed aggregate at fit.
+    * (`_numeric/_NumericMissingValueImputation.py:27-87`); each strategy
+    * but constant fits as one aggregate.
     */
   final class NumericMissingValueImputation(params: Map[String, Any]) extends SingleColumnProcessor {
     val name = "NumericMissingValueImputation"
@@ -368,20 +368,20 @@ object Processors {
         None
     }
 
-    override def fit(df: DataFrame, inputCol: String): this.type = {
-      val c = col(inputCol)
+    override def aggregateFit(df: DataFrame, inputCols: Seq[String]): Option[AggregateFit] = {
+      val c = col(inputCols.head)
       val agg = strategy match {
         case "mean" => avg(c)
-        // backtick-escape: see CategoricalMissingValueImputation.fit
-        case "median" => expr(s"median(${P.quoted(inputCol)})")
-        case "mode" => expr(s"mode(${P.quoted(inputCol)}, true)")
+        // backtick-escape: see CategoricalMissingValueImputation.aggregateFit
+        case "median" => expr(s"median(${P.quoted(inputCols.head)})")
+        case "mode" => expr(s"mode(${P.quoted(inputCols.head)}, true)")
         case "min" => min(c)
         case "max" => max(c)
-        case "constant" => return this
+        case "constant" => return Some(AggregateFit.Stateless)
         case other => throw new IllegalArgumentException(s"strategy: $other")
       }
-      imputed = Option(df.agg(agg.cast("double")).head().get(0)).map(_.asInstanceOf[Double])
-      this
+      Some(AggregateFit(Seq(agg.cast("double")),
+        v => imputed = Option(v.head).map(_.asInstanceOf[Double])))
     }
     def transform(in: Column): Column = {
       val v = imputed.getOrElse(notFitted("transform"))

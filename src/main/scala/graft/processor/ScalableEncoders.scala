@@ -67,21 +67,11 @@ object ScalableEncoders {
     override def fit(df: DataFrame, inputCol: String): this.type = {
       val c = col(inputCol)
       val filled = missingFill.fold(c)(f => coalesce(c, lit(f)))
-      // sort key mirrors LabelEncoding.fit's orderBy (np.unique numeric sort
-      // for numeric inputs, lexicographic otherwise); the JOIN key is always
-      // the string form so restore()d tables round-trip type-exactly.
-      // Integral inputs sort as decimal(38,0), not double: above 2^53 a
-      // double collapses distinct longs onto one value and the dense codes
-      // would diverge from LabelEncoding's exact numeric order.
-      import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, NumericType, ShortType}
-      val sortKey = df.schema(inputCol).dataType match {
-        case ByteType | ShortType | IntegerType | LongType => filled.cast("decimal(38,0)")
-        case dt: DecimalType => filled.cast(dt)
-        case _: NumericType => filled.cast("double")
-        case _ => filled.cast("string")
-      }
+      // sorted in the column's own type, as LabelEncoding sorts its labels
+      // (np.unique); the JOIN key is always the string form so restore()d
+      // tables round-trip type-exactly
       val d = df.select(filled.cast("string").as("__dre_label__"),
-          sortKey.as("__dre_sort__"))
+          filled.as("__dre_sort__"))
         .na.drop("any", Seq("__dre_label__"))
         .dropDuplicates("__dre_label__")
       val (laid, offsets) = graft.ops.Offsets.rangeLayout(d, Seq(col("__dre_sort__")), lit(1L))

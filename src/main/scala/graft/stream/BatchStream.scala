@@ -22,14 +22,17 @@ import org.apache.spark.sql.types.{LongType, StructField}
   *      `DaskScalableDataFrame.py:643-684`, without a driver materialize);
   *      the row count is the sum of those counts, so there is no separate
   *      `count()`, and the positioned frame declares itself range-partitioned
-  *      and sorted by position;
+  *      and sorted by position. The positions are shared: one frame object
+  *      positioned again with the same sort key, `shuffle` and `seed` (the
+  *      K ranks of one epoch) reuses the first positioning, so all ranks
+  *      read one sort's shuffle output, one snapshot of the rows;
   *   2. seeded shuffling = ordering by `xxhash64(uid, seed)` — deterministic
   *      on any cluster layout (a partition-seeded `rand()` is not), and
   *      identical across shard ranks as the reference requires
   *      (`ScalableDataFrame.py:822-848`);
   *   3. shard membership and batch ids are pure Column arithmetic derived
   *      from [[Sharding]]'s closed-form bounds — no driver-side index
-  *      arrays, no shuffle beyond the one sort.
+  *      arrays, and no shuffle beyond the one sort the ranks share.
   *
   * Consumption: `toLocalBatches` for driver-side iteration (DL feeding —
   * Spark prefetches a partition ahead, like the reference's
@@ -68,11 +71,34 @@ object BatchStream {
   def withPosition(df: DataFrame, orderBy: Seq[Column], shuffle: Boolean, seed: Long): DataFrame =
     positioned(df, orderBy, shuffle, seed)._1
 
-  /** The positioned frame and its row count (step 1 above). A global sort's
-    * partitions hold ascending key ranges, which is what makes the declared
-    * range partitioning and ordering by [[PosCol]] true.
+  /** The last positioning of each frame object, under its sort key,
+    * `shuffle` and `seed`. Frames are held weakly and nothing in an entry
+    * refers back to its frame, so dropping a frame releases its positions
+    * and the sort's shuffle output; a new key replaces the entry.
+    */
+  private final case class Positions(key: (Seq[Column], Boolean, Long), frame: DataFrame, rows: Long)
+  private val memo = new java.util.WeakHashMap[DataFrame, Positions]()
+
+  /** The positioned frame and its row count (step 1 above), shared by every
+    * call on the same frame object and key.
     */
   private def positioned(df: DataFrame, orderBy: Seq[Column], shuffle: Boolean,
+      seed: Long): (DataFrame, Long) = {
+    val key = (orderBy, shuffle, seed)
+    val p = memo.synchronized(Option(memo.get(df))).filter(_.key == key).getOrElse {
+      val (frame, rows) = position(df, orderBy, shuffle, seed)
+      val fresh = Positions(key, frame, rows)
+      memo.synchronized(memo.put(df, fresh))
+      fresh
+    }
+    (p.frame, p.rows)
+  }
+
+  /** One positioning: a global sort's partitions hold ascending key ranges,
+    * which is what makes the declared range partitioning and ordering by
+    * [[PosCol]] true.
+    */
+  private def position(df: DataFrame, orderBy: Seq[Column], shuffle: Boolean,
       seed: Long): (DataFrame, Long) = {
     val sortKey: Seq[Column] =
       if (shuffle) Seq(xxhash64(orderBy :+ lit(seed): _*)) ++ orderBy
@@ -199,7 +225,11 @@ object BatchStream {
     }
 
   /** Full pipeline: position → shard filter → batch ids. `orderBy` must be a
-    * total order (e.g. the primary key) for deterministic results.
+    * total order (e.g. the primary key) for deterministic results. The ranks
+    * of one frame object share its positions (step 1): only the first
+    * `assign` for a sort key, `shuffle` and `seed` runs the sort, and later
+    * ranks filter the rows that sort delivered. Position a new epoch with a
+    * new `seed`, or re-read changed data as a new frame.
     */
   def assign(df: DataFrame, orderBy: Seq[Column], plan: Plan): DataFrame = {
     val (withPos, n) = positioned(df, orderBy, plan.shuffle, plan.seed)

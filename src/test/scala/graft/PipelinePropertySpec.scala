@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{MLSchema, MLType}
-import graft.processor.{DataPipeline, PipelineConfig, StepConfig}
+import graft.processor.{DataPipeline, PipelineConfig, ProcessorRegistry, SingleColumnProcessor, StepConfig}
 
 /** Randomized orchestration differential: a generated sequence of text
   * processor steps is serialized to YAML, parsed back, fitted and applied
@@ -72,6 +72,41 @@ class PipelinePropertySpec extends AnyFunSuite {
         assert(got(id) == want, s"trial $trial doc $id: '${got(id)}' vs '$want'")
       }
     }
+
+    // aggregate-fitting steps: the fused fit leaves every processor in the
+    // state of its standalone fit over the frame its step reads. The label
+    // encoding of `lab` reads the imputer's output, so it must see the fill.
+    val numSteps = Seq("mean", "median", "mode", "min", "max").map(s => StepConfig(
+      Seq("num"), "NumericMissingValueImputation", Map("strategy" -> s), s"{col_name}_$s"))
+    val fitSteps = Seq(
+      StepConfig(Seq("cat"), "CategoricalMissingValueImputation", Map.empty, "{col_name}_mode")) ++
+      numSteps ++ Seq(
+      StepConfig(Seq("cat", "num"), "LabelEncoding", Map.empty, "{col_name}_code"),
+      StepConfig(Seq("txt"), "CaseTransformation", Map.empty, "{col_name}"),
+      StepConfig(Seq("lab"), "CategoricalMissingValueImputation",
+        Map("strategy" -> "constant", "fill_value" -> "zz_missing"), "{col_name}"),
+      StepConfig(Seq("lab"), "LabelEncoding", Map.empty, "{col_name}_code"))
+    val cfg = PipelineConfig.fromYaml(PipelineConfig.toYaml(PipelineConfig(fitSteps, Nil)))
+    val frame = Seq[(Option[String], Option[Double], Option[String], String)](
+      (Some("b"), Some(1.5), Some("x"), "A"), (None, None, None, "b"),
+      (Some(""), Some(Double.NaN), Some("y"), ""), (Some("\uD83D\uDE00"), Some(-0.0), Some("x"), "c"),
+      (Some("b"), Some(0.0), None, "D"), (Some(""), Some(2.0), Some("\uD83D\uDE00"), "e"),
+      (Some("\uD83D\uDE00"), Some(Double.NaN), Some(""), "f"), (None, Some(-3.25), Some("y"), "g"),
+      (Some("\uD83D\uDE00"), None, None, "h"), (Some("a"), Some(-0.0), Some("x"), "i"))
+      .toDF("cat", "num", "lab", "txt")
+    val fitSchema = MLSchema(Map("cat" -> MLType.Categorical, "num" -> MLType.Float,
+      "lab" -> MLType.Categorical, "txt" -> MLType.Text))
+    val fused = new DataPipeline(cfg).fit(frame, fitSchema)
+    val read = fused.transform(frame, fitSchema) // outputs are new columns, but for lab
+    fused.steps.zip(cfg.steps).foreach { case (step, sc) =>
+      step.bindings.foreach { case (ins, proc, _) =>
+        val alone = ProcessorRegistry.create(sc.transformer, sc.params)
+          .asInstanceOf[SingleColumnProcessor].fit(read, ins.head)
+        assert(proc.state == alone.state, s"${sc.transformer} ${sc.params} on $ins")
+      }
+    }
+    assert(fused.steps.last.bindings.head._2.state("labels").contains("zz_missing"),
+      "label encoding fitted before the imputer that feeds it")
   }
 
   test("random deep param trees round-trip the config writer exactly") {

@@ -3,12 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.{MLSchema, MLType}
+import graft.processor.{DataPipeline, PipelineConfig, StepConfig}
 import graft.processor.Processors.{LabelEncoding, NumericMissingValueImputation}
 
 /** Randomized driver-reference differentials for the fit/transform
   * processors: label encoding across all four ranges with unknown values
   * and the inverse round-trip, and numeric imputation against driver
-  * aggregates of the same generated columns.
+  * aggregates of the same generated columns and against a pipeline's fused
+  * fit.
   */
 class ProcessorPropertySpec extends AnyFunSuite {
 
@@ -58,6 +61,17 @@ class ProcessorPropertySpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       new LabelEncoding(Map("encoding_range" -> "binary_zero_one")).fit(df, "v")
     }
+    // longs above 2^53 tie under a cast to double: in every input order
+    // they must still code in their own order
+    val big = Seq(1L << 53, (1L << 53) + 1)
+    for (order <- big.permutations; reps <- Seq(1, 3)) {
+      val ldf = order.flatMap(Seq.fill(reps)(_)).toDF("v")
+      val p = new LabelEncoding(Map("encoding_range" -> "one_to_n"))
+      p.fit(ldf, "v")
+      val codes = big.toDF("v").select(col("v"), p.transform(col("v")))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(codes == Map(big(0) -> 1L, big(1) -> 2L), s"input order $order x$reps: $codes")
+    }
   }
 
   test("NumericMissingValueImputation: every strategy matches the driver aggregate") {
@@ -93,6 +107,16 @@ class ProcessorPropertySpec extends AnyFunSuite {
     val out = df.select(pc.transform(col("v")).as("o")).collect().map(_.getDouble(0))
     data.zip(out).foreach { case (orig, o) =>
       assert(o == orig.getOrElse(7.5), "constant fill")
+    }
+    // one pipeline fits every strategy with one aggregate; each step holds
+    // its standalone fit's state
+    val strategies = Seq("mean", "median", "mode", "min", "max")
+    val pipe = new DataPipeline(PipelineConfig(strategies.map(s => StepConfig(
+      Seq("v"), "NumericMissingValueImputation", Map("strategy" -> s), s"{col_name}_$s")), Nil))
+      .fit(df, MLSchema(Map("v" -> MLType.Float)))
+    pipe.steps.zip(strategies).foreach { case (step, s) =>
+      val alone = new NumericMissingValueImputation(Map("strategy" -> s)).fit(df, "v")
+      assert(step.bindings.head._2.state == alone.state, s"fused $s fit")
     }
   }
 

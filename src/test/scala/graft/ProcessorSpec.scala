@@ -194,6 +194,41 @@ class ProcessorSpec extends AnyFunSuite {
     assert(pipe.lastFitPerf.map(_.transformer) == Seq("LabelEncoding", "CaseTransformation"))
     assert(pipe.lastFitPerf.forall(_.fitSec >= 0))
 
+    // fused fit: the imputers fit in one aggregate; the label encoding reads
+    // their outputs, so it starts a second one that the stateless steps join
+    val feedCfg = PipelineConfig.fromYaml(
+      """pipeline:
+        |  - input: [categorical]
+        |    transformer: CategoricalMissingValueImputation
+        |  - input: [float]
+        |    transformer: NumericMissingValueImputation
+        |  - input: [categorical]
+        |    transformer: LabelEncoding
+        |    output: "{col_name}_code"
+        |  - input: [text]
+        |    transformer: CaseTransformation
+        |  - input: [text]
+        |    transformer: HashedTextVectorization
+        |    params: {dim: 8}
+        |    output: "{col_name}_vec"
+        |""".stripMargin)
+    val feedDf = Seq[(Long, String, Option[String], Option[String], Option[Double], Option[Double])](
+      (1L, "Some Text", Some("a"), None, Some(1.0), None),
+      (2L, "more TEXT", None, Some("q"), None, Some(2.5)),
+      (3L, "text", Some("b"), Some("q"), Some(3.0), Some(0.5)))
+      .toDF("id", "text", "cat_a", "cat_b", "num_x", "num_y")
+    val feedSchema = MLSchema(Map("id" -> MLType.Index, "text" -> MLType.Text,
+      "cat_a" -> MLType.Categorical, "cat_b" -> MLType.Categorical,
+      "num_x" -> MLType.Float, "num_y" -> MLType.Float))
+    val feedFit = new graft.core.JobCounter
+    val feedPipe = feedFit.observe(spark.sparkContext)(new DataPipeline(feedCfg).fit(feedDf, feedSchema))
+    assert(feedFit.sqlExecutions == 2)
+    // one StepPerf per step; a fused run's wall sits on its first step
+    assert(feedPipe.lastFitPerf.map(_.transformer) == feedCfg.steps.map(_.transformer))
+    val secs = feedPipe.lastFitPerf.map(_.fitSec)
+    assert(secs(0) > 0 && secs(1) == 0.0 && secs(2) > 0 && secs(3) == 0.0, secs)
+    assert(col1(feedPipe.transform(feedDf, feedSchema), "cat_a_code") == Seq(1L, 1L, 2L))
+
     val tmp = java.nio.file.Files.createTempFile("pipe", ".json").toString
     pipe.saveState(tmp)
     val pipe2 = new DataPipeline(cfg).loadState(tmp)

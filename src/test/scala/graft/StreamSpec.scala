@@ -313,6 +313,17 @@ class StreamSpec extends AnyFunSuite {
     assert((consumeJobs.jobs, consumeJobs.sqlExecutions) == ((1, 1)))
     assert(batches.map(_._2.size).sum == 26L)
 
+    // another rank of the same frame object reuses its positions; a new seed
+    // or a fresh frame positions afresh
+    def assignJobsOf(frame: org.apache.spark.sql.DataFrame, p: BatchStream.Plan): Int = {
+      val c = new JobCounter
+      c.observe(spark.sparkContext)(BatchStream.assign(frame, Seq(col("id")), p))
+      c.jobs
+    }
+    assert(assignJobsOf(df, plan.copy(shard = (2, 4))) == 0)
+    assert(assignJobsOf(df, plan.copy(seed = 6L)) == 3)
+    assert(assignJobsOf(df.select("*"), plan) == 3)
+
     val ordered = assigned.orderBy(col(BatchStream.PosCol))
     ordered.collect()
     val helper = new AdaptiveSparkPlanHelper {}
