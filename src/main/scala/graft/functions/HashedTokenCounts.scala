@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   *
   * `norm` picks the output, each pinned bit-identical (values AND dataType)
   * to the Column spelling by a differential spec:
-  *   - `count`: `array<bigint>` counts ([[graft.ops.TextAnalysis.hashedTokenFeaturesReference]]);
+  *   - `count`: `array<bigint>` counts (the per-token `aggregate` fold);
   *   - `none`: the same counts as `array<double>`;
   *   - `l2`: the double counts divided by `sqrt` of their left-to-right sum
   *     of squares from 0.0; an all-zero vector stays all-zero. Its elements

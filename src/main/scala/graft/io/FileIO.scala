@@ -246,13 +246,6 @@ object Writers {
     }
   }
 
-  /** Parquet write + `_MANIFEST.json`: one JSON object per output file with
-    * row count and byte size, plus totals — the artifact a downstream
-    * trainer/auditor reads instead of re-listing and re-counting a
-    * million-file dataset. Rows-per-file comes from ONE distributed count
-    * over the written data (grouped by input_file_name), byte sizes from a
-    * single directory listing; nothing driver-side scales with row count.
-    */
   /** Small-file compaction — the operational complement of the layout
     * writers (range-sorted, Z-ordered): a landing directory accreted by
     * many micro-batches/tasks ends up with thousands of KB-scale parquet
@@ -304,6 +297,13 @@ object Writers {
     numFiles
   }
 
+  /** Parquet write + `_MANIFEST.json`: one JSON object per output file with
+    * row count and byte size, plus totals — the artifact a downstream
+    * trainer/auditor reads instead of re-listing and re-counting a
+    * million-file dataset. Rows-per-file comes from ONE distributed count
+    * over the written data (grouped by input_file_name), byte sizes from a
+    * single directory listing; nothing driver-side scales with row count.
+    */
   def writeWithManifest(df: DataFrame, path: String): Unit = {
     df.write.mode("overwrite").parquet(path)
     val spark = df.sparkSession

@@ -29,11 +29,6 @@ object ObjectStore {
     fs.exists(p)
   }
 
-  def isDir(path: String, conf: Configuration = new Configuration()): Boolean = {
-    val (fs, p) = fsFor(path, conf)
-    fs.exists(p) && fs.getFileStatus(p).isDirectory
-  }
-
   /** `get_s3_object_size` (s3.py:132-148). */
   def size(path: String, conf: Configuration = new Configuration()): Long = {
     val (fs, p) = fsFor(path, conf)

@@ -44,12 +44,6 @@ object Behavior {
     }.reduce(_ unionByName _)
   }
 
-  /** Cohort retention: users grouped by their first-activity bucket
-    * (`date_trunc(bucket, ts)`), counted in every later bucket they return
-    * in. Returns (cohort, k, users) where k is the bucket offset (0 = the
-    * cohort bucket itself). `bucketDays` is the bucket length for the
-    * offset arithmetic (7 for "week", 1 for "day").
-    */
   /** Top event-type transitions (the path-analysis bigram table): for each
     * user's time-ordered event sequence, count consecutive (from → to)
     * pairs corpus-wide and keep the top-N. One keyed window (lead over the
@@ -91,6 +85,12 @@ object Behavior {
       round(percentile(col("__lag_us__").cast("double") / lit(1e6), lit(0.9)), 4).as("p90_sec"))
   }
 
+  /** Cohort retention: users grouped by their first-activity bucket
+    * (`date_trunc(bucket, ts)`), counted in every later bucket they return
+    * in. Returns (cohort, k, users) where k is the bucket offset (0 = the
+    * cohort bucket itself). `bucketDays` is the bucket length for the
+    * offset arithmetic (7 for "week", 1 for "day").
+    */
   def cohortRetention(df: DataFrame, user: Column, ts: Column,
       bucket: String, bucketDays: Int): DataFrame = {
     require(bucketDays > 0, "bucketDays must be positive")

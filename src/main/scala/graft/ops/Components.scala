@@ -30,6 +30,16 @@ object Components {
   /** Truncate lineage every this many label-propagation rounds. */
   val CheckpointEvery = 3
 
+  /** Edge-count threshold below which the graph is solved with ONE
+    * driver-side union-find instead of the iterative join loop — the
+    * broadcast-join principle applied to graphs: near-dup candidate graphs
+    * are routinely tiny relative to the corpus (pairs survive banding AND
+    * Jaccard), and a 10^5-edge union-find runs in milliseconds where each
+    * distributed round costs whole jobs. Above the threshold (or for
+    * non-integral id types) the scale path runs unchanged.
+    */
+  val SmallGraphMaxEdges = 100000L
+
   /** @param edges two-column frame of undirected edges (ids)
     * @param checkpointDir when set, lineage truncation uses RELIABLE
     *        `checkpoint()` into this directory (HDFS/S3/posix path via
@@ -51,16 +61,6 @@ object Components {
     *         (labels then under-merge); use [[connectedComponentsWithStatus]]
     *         to branch on it programmatically.
     */
-  /** Edge-count threshold below which the graph is solved with ONE
-    * driver-side union-find instead of the iterative join loop — the
-    * broadcast-join principle applied to graphs: near-dup candidate graphs
-    * are routinely tiny relative to the corpus (pairs survive banding AND
-    * Jaccard), and a 10^5-edge union-find runs in milliseconds where each
-    * distributed round costs whole jobs. Above the threshold (or for
-    * non-integral id types) the scale path runs unchanged.
-    */
-  val SmallGraphMaxEdges = 100000L
-
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 10, checkpointDir: Option[String] = None,
       smallGraphMaxEdges: Long = SmallGraphMaxEdges): DataFrame =
@@ -151,8 +151,8 @@ object Components {
           // cache the propagate result for the round: both sides of the jump
           // self-join read it — uncached it would compute twice
           val nm = neighborMin.persist()
-          val parent = nm.select(col("id").as("__pid__"), col("next_label").as("__plbl__"))
-          val jumped = nm.join(parent, col("next_label") === col("__pid__"), "left")
+          val parent = nm.select(col("id").as("__parent_id__"), col("next_label").as("__plbl__"))
+          val jumped = nm.join(parent, col("next_label") === col("__parent_id__"), "left")
             .select(col("id"), coalesce(col("__plbl__"), col("next_label")).as("next_label"))
           (jumped, Some(nm))
         }

@@ -370,9 +370,6 @@ object Dedup {
     materialize(verified, Seq(withBands, hot))
   }
 
-  /** Exact n-gram Jaccard similarity of two texts (the verification stage
-    * after LSH candidates): |A∩B| / |A∪B| over distinct shingles.
-    */
   /** Jaccard ESTIMATE from minhash signatures: the fraction of agreeing
     * signature components — E[estimate] = true Jaccard (the MinHash
     * guarantee), s.e. ≈ √(J(1−J)/numHashes). At scale this verifies LSH
@@ -387,6 +384,9 @@ object Dedup {
       aggregate(zip_with(sigA, sigB, (a, b) => when(a === b, 1L).otherwise(0L)),
         lit(0L), (acc, v) => acc + v).cast("double") / size(sigA).cast("double"))
 
+  /** Exact n-gram Jaccard similarity of two texts (the verification stage
+    * after LSH candidates): |A∩B| / |A∪B| over distinct shingles.
+    */
   def jaccard(a: Column, b: Column, k: Int): Column =
     jaccardShingles(array_distinct(shingles(a, k)), array_distinct(shingles(b, k)))
 

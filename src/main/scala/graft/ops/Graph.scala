@@ -279,12 +279,6 @@ object Graph {
     rebind(ranks, owner)
   }
 
-  /** Re-plan a frame under another session of the same SparkContext via a
-    * throwaway global temp view (the one public API that carries an
-    * ANALYZED plan across sessions). Dataset construction analyzes
-    * eagerly, so the view is dropped before returning; cached/checkpointed
-    * inputs are unaffected (the plan, not the data, is rebound).
-    */
   /** Cross-tier |E| guard for the SMJ-loop edge re-layout: the laid-out
     * count must equal the profiled edge count `m` or the lineage is
     * nondeterministic (it would silently drop/duplicate edges). On failure
@@ -304,6 +298,12 @@ object Graph {
           "nondeterministic edge lineage? checkpoint/stage the edges or use edgesDistinct=false")
     }
 
+  /** Re-plan a frame under another session of the same SparkContext via a
+    * throwaway global temp view (the one public API that carries an
+    * ANALYZED plan across sessions). Dataset construction analyzes
+    * eagerly, so the view is dropped before returning; cached/checkpointed
+    * inputs are unaffected (the plan, not the data, is rebound).
+    */
   private def rebind(df: DataFrame, to: org.apache.spark.sql.SparkSession): DataFrame = {
     if (df.sparkSession eq to) return df
     val name = "graft_pr_rebind_" +

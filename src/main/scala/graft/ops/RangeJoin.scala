@@ -28,14 +28,13 @@ object RangeJoin {
     * @param hiCol exclusive upper bound column name in `intervals`
     * @param bucketWidth bucket size in the point's units (choose ≈ typical
     *        interval span; must be > 0)
-    * @return inner join of both frames' columns for each containment match
-    */
-  /** @param maxBucketsPerInterval replication guard: an interval spanning
+    * @param maxBucketsPerInterval replication guard: an interval spanning
     *        more buckets than this raises a clear runtime error instead of
     *        silently exploding the replication (a sentinel "open-ended"
     *        upper bound like 1e15 would otherwise try to materialize a
     *        billions-long sequence and kill the job). Raise it, or widen
     *        `bucketWidth`, for legitimately wide intervals.
+    * @return inner join of both frames' columns for each containment match
     */
   def pointInInterval(points: DataFrame, intervals: DataFrame,
       pointCol: String, loCol: String, hiCol: String,

@@ -2,15 +2,16 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Positions
 
 /** Rank-based statistics — the Spearman method of the reference's
   * `corr(other, method)` contract (`ScalableSeries.py:896-898`; SURVEY §2.4
   * maps it to "rank-window then corr").
   *
   * Scale: fractional ranks need a global total order, but NOT a global
-  * `Window.orderBy` (which funnels the table through one task). We range-sort
-  * the VALUE-FREQUENCY table in parallel, stitch global positions from
-  * per-partition count totals (a ≤1-row-per-partition offset aggregate),
+  * `Window.orderBy` (which funnels the table through one task). We sort the
+  * VALUE-FREQUENCY table in parallel, number it with
+  * [[graft.core.Positions]] (global positions from per-partition counts),
   * and map ranks back with a shuffle join — every stage is
   * partition-parallel at any scale, and only distinct values ever sort.
   */
@@ -81,38 +82,20 @@ object RankStats {
     * p + (k-1)/2 — pandas `rank(method="average")`. Null values rank null.
     *
     * Scale shape: ranks derive from the VALUE-FREQUENCY table, not the row
-    * stream — one row per distinct value moves through the range sort, so
-    * a billion-row column with a million distinct values sorts a million
-    * rows. The tie-group's start position is an exclusive prefix sum of
-    * counts in value order, stitched across partitions the
-    * `selectByTokenBudget` way (partition-local window + a ≤1-row-per-
-    * partition offset aggregate) — never a single-task global window, no
-    * RDD round-trip. avg = start + (k−1)/2 is exact integer math until the
-    * one final halving, identical to averaging the positions themselves.
+    * stream — one row per distinct value moves through the sort, so a
+    * billion-row column with a million distinct values sorts a million
+    * rows. The tie-group's start is the exclusive prefix sum of counts in
+    * value order, [[graft.core.Positions.of]]'s `__cum__` with the count as
+    * weight — never a single-task global window. avg = `__cum__` + (k+1)/2
+    * is exact integer math until the one final halving, identical to
+    * averaging the 1-based positions themselves.
     */
   def withAverageRank(df: DataFrame, c: String, out: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (freq, offsets) = Offsets.rangeLayout(
-      df.select(col(c).as("__val__")).filter(col("__val__").isNotNull)
-        .groupBy(col("__val__")).agg(count(lit(1)).as("__cnt__")),
-      Seq(col("__val__")), col("__cnt__"))
-    val w = Window.partitionBy(col("__pid__")).orderBy(col("__val__"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranks = freq.join(broadcast(offsets), Seq("__pid__"))
-      .withColumn("__before__",
-        col("__off__") + sum(col("__cnt__")).over(w) - col("__cnt__"))
+    val freq = df.select(col(c).as("__val__")).filter(col("__val__").isNotNull)
+      .groupBy(col("__val__")).agg(count(lit(1)).as("__cnt__"))
+    val ranks = Positions.of(freq, Seq(col("__val__")), Some(col("__cnt__")))._1
       .select(col("__val__"),
-        (col("__before__").cast("double") + (col("__cnt__") + 1L).cast("double") / 2.0).as(out))
-      // eager cut WHILE the freq cache is warm, then release: the rank
-      // table is |distinct| rows (small), and without the cut the lazy
-      // result would re-derive freq through TWO independent range
-      // exchanges (offsets + join input) whose samplings need not agree
-      // on partition boundaries once the cache is gone. (The cut is a
-      // localCheckpoint — same executor-loss trade every iterative op here
-      // makes; at |distinct| rows the pinned footprint is the rank table
-      // itself.)
-      .localCheckpoint(true)
-    freq.unpersist(false)
+        (col(Positions.CumCol).cast("double") + (col("__cnt__") + 1L).cast("double") / 2.0).as(out))
     df.join(ranks, df(c) === ranks("__val__"), "left").drop("__val__")
   }
 
@@ -200,16 +183,6 @@ object RankStats {
     if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
   }
 
-  /** Kendall tau-b — the last method of the `corr(other, method)` contract
-    * (`ScalableSeries.py:896-898`): (C − D) / √((n0 − n1)(n0 − n2)) over
-    * concordant/discordant pair counts with tie corrections.
-    *
-    * Scale: exact tau is inherently pairwise — this is ONE distributed
-    * self-join producing n(n−1)/2 comparison rows and a single aggregate
-    * (no driver loop), fine to ~10^5 rows (10^10 pair-rows streamed, never
-    * materialized). Beyond that, estimate on a [[Sampling]] subset: tau is
-    * an average over pairs, so a uniform sample is unbiased.
-    */
   /** [[kendall]] on a deterministic hash sample capped at ~`maxRows` rows —
     * the 100 TB path: tau is an average over pairs, so a uniform row sample
     * gives an unbiased estimate with s.e. ~ 1/√pairs; `maxRows`=10^5 keeps
@@ -241,6 +214,16 @@ object RankStats {
     }
   }
 
+  /** Kendall tau-b — the last method of the `corr(other, method)` contract
+    * (`ScalableSeries.py:896-898`): (C − D) / √((n0 − n1)(n0 − n2)) over
+    * concordant/discordant pair counts with tie corrections.
+    *
+    * Scale: exact tau is inherently pairwise — this is ONE distributed
+    * self-join producing n(n−1)/2 comparison rows and a single aggregate
+    * (no driver loop), fine to ~10^5 rows (10^10 pair-rows streamed, never
+    * materialized). Beyond that, estimate on a [[Sampling]] subset: tau is
+    * an average over pairs, so a uniform sample is unbiased.
+    */
   def kendall(df: DataFrame, a: String, b: String): Double = {
     // The pair ids MUST be pinned before the self-join: the two join sides
     // evaluate the frame independently (no CSE across join inputs), and

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Positions
 
 /** Deterministic sampling for training-data pipelines.
   *
@@ -176,19 +177,6 @@ object Sampling {
     df.withColumn(out, labeled)
   }
 
-  /** Quality-ranked token-budget selection — "keep the best documents until
-    * the budget is spent": rows ordered by (score desc, id asc) survive
-    * while their EXCLUSIVE cumulative token count is under `budget`, so the
-    * selection fills the budget and only the last kept document may overflow
-    * it (the streaming-packing relaxation).
-    *
-    * The global quality order is NOT a single-task `Window.orderBy`:
-    * `repartitionByRange` on (−score, id) gives a sorted partitioning, each
-    * partition cumsums locally, and per-partition token totals (one tiny
-    * aggregate, ≤ one row per partition) stitch the global offsets — the
-    * same scheme `SCol.is_monotonic` uses. One range shuffle + one
-    * partition-local window at any scale.
-    */
   /** Deterministic mixture-weighted source interleave — the training ORDER
     * op: documents from different sources emerge evenly braided in
     * proportion to `weights` (no long single-source runs, which bias
@@ -215,42 +203,34 @@ object Sampling {
     df.withColumn(out, row_number().over(w).cast("double") / weight)
   }
 
+  /** Quality-ranked token-budget selection — "keep the best documents until
+    * the budget is spent": rows ordered by (score desc, id asc), null scores
+    * LAST (worst quality), survive while their EXCLUSIVE cumulative token
+    * count is under `budget`, so the selection fills the budget and only the
+    * last kept document may overflow it (the streaming-packing relaxation).
+    *
+    * The global quality order is NOT a single-task `Window.orderBy`: the
+    * exclusive token sum is [[graft.core.Positions.of]]'s `__cum__` with the
+    * token count as weight — one sort, one count per sorted partition, and
+    * a filter over the sort's output.
+    */
   def selectByTokenBudget(df: DataFrame, id: Column, score: Column,
       tokens: Column, budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive: $budget")
-    import org.apache.spark.sql.expressions.Window
-    // global quality order via the shared range-layout + offset stitch
-    // (Offsets.rangeLayout): ranked is persisted there for its three
-    // consumers (sampling pass, offsets aggregate, final join) and
-    // released after the eager cut below
-    // null scores sort LAST (worst quality): a bare `-score` is null for a
-    // null score, and the ascending range layout + window order put nulls
-    // FIRST — unscored rows would eat the token budget ahead of every
-    // scored document
-    val negScore = when(score.isNull, lit(Double.PositiveInfinity))
-      .otherwise(-score.cast("double"))
+    // null scores sort LAST: `score.isNull` leads the key, because a bare
+    // `-score` is null for a null score (ascending puts nulls first) and a
+    // stand-in value ties with a real score (a -Inf score negates to +Inf).
+    // NaN negates to NaN, which sorts after every finite value
+    val order = Seq(score.isNull, -score.cast("double"), id)
     // fail LOUD on null/negative token counts (the weightedNByHash posture):
-    // a null count makes the row's cumsum null — silently dropping the row
-    // without consuming budget — and a negative count deflates every later
-    // row's cumsum, silently over-filling the budget
+    // a negative count deflates every later row's cumsum, silently
+    // over-filling the budget
     val tok = tokens.cast("long")
     val checkedTok = when(tok.isNull || tok < 0L,
       raise_error(concat(lit("selectByTokenBudget: token counts must be non-negative, got "),
         coalesce(tok.cast("string"), lit("null"))))).otherwise(tok)
-    val (ranked, offsets) = Offsets.rangeLayout(
-      df.withColumn("__neg__", negScore)
-        .withColumn("__sid__", id)
-        .withColumn("__tok__", checkedTok),
-      Seq(col("__neg__"), col("__sid__")), col("__tok__"))
-    val w = Window.partitionBy(col("__pid__"))
-      .orderBy(col("__neg__"), col("__sid__"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val selected = ranked.join(broadcast(offsets), Seq("__pid__"))
-      .withColumn("__cum__", col("__off__") + sum(col("__tok__")).over(w) - col("__tok__"))
-      .filter(col("__cum__") < budget)
-      .drop("__pid__", "__neg__", "__sid__", "__tok__", "__off__", "__cum__")
-    val out = selected.localCheckpoint(true)
-    ranked.unpersist(false)
-    out
+    Positions.of(df, order, Some(checkedTok))._1
+      .filter(col(Positions.CumCol) < budget)
+      .drop(Positions.CumCol, Positions.PosCol)
   }
 }

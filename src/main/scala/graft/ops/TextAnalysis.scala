@@ -190,27 +190,11 @@ object TextAnalysis {
     * dim) per doc: evaluated by the native
     * [[graft.functions.HashedTokenCounts]] codegen Expression (one pass into
     * a primitive count array); engine-portable because the bucket hash is
-    * the shared md5-based [[hash60]]. [[hashedTokenFeaturesReference]] keeps
-    * the built-in spelling for the differential spec.
+    * the shared md5-based [[hash60]]. HashedTokenCountsSpec keeps the
+    * built-in spelling as its differential reference.
     */
   def hashedTokenFeatures(text: Column, dim: Int): Column =
     graft.functions.HashedTokenCounts.hashed_token_counts(tokens(text), dim)
-
-  /** The portable built-in spelling of [[hashedTokenFeatures]] — pinned
-    * bit-identical (values and dataType) to the native kernel by
-    * HashedTokenCountsSpec. O(dim·tokens) per doc.
-    */
-  def hashedTokenFeaturesReference(text: Column, dim: Int): Column = {
-    require(dim > 0, "dim must be positive")
-    // single-pass fold into a counts accumulator: the per-dim
-    // `size(filter(buckets, _ === j))` spelling captures the bucket
-    // transform in the lambda, re-evaluating the md5 hash of EVERY token
-    // once per dim (dim× the hashing); here each token hashes exactly once
-    aggregate(
-      transform(tokens(text), t => pmod(hash60(t), lit(dim.toLong)).cast("int")),
-      typedLit(Seq.fill(dim)(0L)),
-      (acc, b) => transform(acc, (v, i) => when(i === b, v + 1L).otherwise(v)))
-  }
 
   /** Within-doc line dedup — keep the FIRST occurrence of every line inside
     * one document (navigation menus, repeated footers): line i survives iff

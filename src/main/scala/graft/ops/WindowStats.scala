@@ -245,14 +245,6 @@ object WindowStats {
       .drop("__ns__")
   }
 
-  /** pandas `rolling(n).corr(other)` over a keyed window: Pearson correlation
-    * of the last `n` rows, null until the frame holds `n` rows
-    * (min_periods = n, the pandas default). Spelled from the naive sum
-    * formula — `(n·Σxy − Σx·Σy) / (√(n·Σx² − (Σx)²) · √(n·Σy² − (Σy)²))` —
-    * so any SQL engine reproduces it term for term; sample vs population
-    * scaling cancels in the ratio. One shuffle, five frame aggregates over
-    * one sort.
-    */
   /** pandas `Series.autocorr(lag)` per group: Pearson correlation of the
     * series with its own lag-k shift, ordered by `orderCols` within each
     * key. One keyed window (the lag) + one grouped corr — scale-parallel
@@ -274,6 +266,14 @@ object WindowStats {
       .agg(graft.sdf.SCol.safeCorr(col("__x__"), col("__xl__")).as(out))
   }
 
+  /** pandas `rolling(n).corr(other)` over a keyed window: Pearson correlation
+    * of the last `n` rows, null until the frame holds `n` rows
+    * (min_periods = n, the pandas default). Spelled from the naive sum
+    * formula — `(n·Σxy − Σx·Σy) / (√(n·Σx² − (Σx)²) · √(n·Σy² − (Σy)²))` —
+    * so any SQL engine reproduces it term for term; sample vs population
+    * scaling cancels in the ratio. One shuffle, five frame aggregates over
+    * one sort.
+    */
   def rollingCorr(x: Column, y: Column, n: Int,
       over: org.apache.spark.sql.expressions.WindowSpec): Column = {
     val w = over.rowsBetween(-(n - 1), 0)

@@ -2,7 +2,7 @@ package graft.processor
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.MLType
+import graft.core.{MLType, Positions}
 
 /** Unbounded-cardinality encoders — the scale companions to
   * [[Processors.LabelEncoding]] and [[TfIdfVectorization]], whose fitted
@@ -29,10 +29,10 @@ object ScalableEncoders {
     * assignment (sorted distinct labels, numeric sort for numeric inputs),
     * but:
     *
-    *   - fit = distinct (one shuffle of the label space) → range-partitioned
-    *     parallel sort with per-partition offsets ([[graft.ops.Offsets
-    *     .rangeLayout]]) → per-partition `row_number` + offset = exact global
-    *     dense index. No global one-task window, no driver collect.
+    *   - fit = distinct (one shuffle of the label space) → one parallel
+    *     sort numbered by [[graft.core.Positions.of]]: each label's global
+    *     position is its exact dense index, and the returned row count is
+    *     the label count. No global one-task window, no driver collect.
     *   - transform = a left equi-join on the label (AQE picks
     *     broadcast-vs-shuffle by measured size); unseen labels take the
     *     range's unknown value, null inputs stay null (pandas
@@ -74,31 +74,22 @@ object ScalableEncoders {
           filled.as("__dre_sort__"))
         .na.drop("any", Seq("__dre_label__"))
         .dropDuplicates("__dre_label__")
-      val (laid, offsets) = graft.ops.Offsets.rangeLayout(d, Seq(col("__dre_sort__")), lit(1L))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("__pid__")).orderBy(col("__dre_sort__"), col("__dre_label__"))
-      // zero-based exact global dense index: per-partition row_number plus
-      // the exclusive prefix count of earlier partitions
-      val indexed = laid.join(broadcast(offsets), Seq("__pid__"))
-        .withColumn("__dre_idx__", row_number().over(w).cast("long") + col("__off__") - 1L)
-        .select(col("__dre_label__"), col("__dre_idx__"))
-        // eager cut while the range layout's cache is warm (the rangeLayout
-        // contract — see RankStats.withAverageRank's identical discipline)
-        .localCheckpoint(true)
-      laid.unpersist(false)
-      // label count: one near-free job over the checkpointed table —
-      // LabelEncoding's non-empty contract and the binary modes' ≤2 bound
-      val cnt = indexed.count()
+      // zero-based exact global dense index: the label's position in
+      // (sort value, label) order — the label breaks sort-value ties such
+      // as -0.0 and 0.0; the returned row count is the label count
+      // (LabelEncoding's non-empty contract and the binary modes' ≤2 bound)
+      val (indexed, cnt) = Positions.of(d, Seq(col("__dre_sort__"), col("__dre_label__")))
       require(cnt > 0, "input must contain at least one non-null label")
+      val idx = col(Positions.PosCol)
       val code: Column = range match {
-        case "zero_to_n_minus_one" => col("__dre_idx__")
-        case "one_to_n" => col("__dre_idx__") + 1L
+        case "zero_to_n_minus_one" => idx
+        case "one_to_n" => idx + 1L
         case "binary_zero_one" =>
           require(cnt <= 2, s"binary_zero_one supports <=2 labels, found $cnt")
-          col("__dre_idx__")
+          idx
         case "binary_plus_minus_one" =>
           require(cnt <= 2, s"binary_plus_minus_one supports <=2 labels, found $cnt")
-          when(col("__dre_idx__") === 0L, lit(-1L)).otherwise(lit(1L))
+          when(idx === 0L, lit(-1L)).otherwise(lit(1L))
         case other => throw new IllegalArgumentException(s"encoding_range: $other")
       }
       codes = Some(indexed.select(col("__dre_label__"), code.as("__dre_code__")))

@@ -2197,9 +2197,10 @@ object LlmOpsQueries {
 
   /** Token-budget corpus selection ([[graft.ops.Sampling
     * .selectByTokenBudget]]): keep the best documents (by n_chars, tie →
-    * doc_id) until the token budget fills. The implementation stitches
-    * per-partition cumsums over a range partitioning (never a single-task
-    * global window); the oracle is the equivalent single global window.
+    * doc_id) until the token budget fills. The implementation numbers one
+    * parallel sort with exclusive token sums ([[graft.core.Positions]],
+    * never a single-task global window); the oracle is the equivalent
+    * single global window.
     */
   val q170_token_budget_select: Q = Q(
     fn = (s, dir) => {
@@ -2364,11 +2365,11 @@ object LlmOpsQueries {
     * [[TextAnalysis.stripHtml]] → token-floor + [[TextAnalysis.linearScore]]
     * classifier gate → exact dedup ([[Dedup.exactDedupRows]]) →
     * quality-ranked token-budget selection
-    * ([[graft.ops.Sampling.selectByTokenBudget]]), all ONE lazy plan. Every
-    * stage is individually oracle-verified elsewhere (q163/q157/q51/q170);
-    * this query hash-verifies their composition and the bench watches it.
-    * Shuffle census: digest groupBy + keeper semi-join + range partition +
-    * tiny offset stitch — text crosses the wire exactly once.
+    * ([[graft.ops.Sampling.selectByTokenBudget]]). Every stage is
+    * individually oracle-verified elsewhere (q163/q157/q51/q170); this query
+    * hash-verifies their composition and the bench watches it. Shuffle
+    * census: digest groupBy + keeper semi-join + the budget's one
+    * positioning sort — text crosses the wire exactly once.
     */
   val q175_web_pipeline: Q = Q(
     fn = (s, dir) => {

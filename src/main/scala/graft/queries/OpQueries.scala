@@ -326,8 +326,9 @@ object OpQueries {
       ORDER BY l_returnflag"""))
 
   /** §2.4 `corr(method="spearman")` (`ScalableSeries.py:896-898`) via
-    * scale-safe fractional ranks ([[graft.ops.RankStats]]: parallel sort +
-    * zipWithIndex + tie-group averaging — no global window).
+    * scale-safe fractional ranks ([[graft.ops.RankStats]]: the value counts
+    * sorted and numbered by [[graft.core.Positions]] + tie-group averaging —
+    * no global window).
     */
   val q80_spearman_corr: Q = Q(
     fn = (s, dir) => {

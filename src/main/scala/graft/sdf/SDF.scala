@@ -3,6 +3,7 @@ package graft.sdf
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Positions
 
 /** Pandas-flavored DataFrame surface — the capability layer of the
   * reference's `ScalableDataFrame` (`src/bears/core/frame/ScalableDataFrame
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
   * Tungsten + whole-stage codegen + AQE serve those purposes natively, so the
   * layout machinery collapses. Every method here builds a lazy Catalyst plan;
   * nothing is materialized except the explicitly scalar/driver-side calls
-  * (`head`, `shape`, series statistics on [[SCol]]).
+  * (`head`, `shape`, series statistics on [[SCol]]) and `iloc`'s sort.
   *
   * Mutation: bears SDFs are mutable (`sdf[col] = series`,
   * `DictScalableDataFrame.py:315-346`). We keep the pandas feel with
@@ -57,16 +58,13 @@ final class SDF private (private var _df: DataFrame) {
     * Requires a stable global order; callers supply the order columns (Spark
     * has no implicit row index — SURVEY §1.4).
     *
-    * Scale: a parallel range-partitioned sort + per-partition offset fix
-    * (`zipWithIndex`), never a global `Window.orderBy` — an un-partitioned
-    * window funnels the whole table through one task at 100 TB.
+    * Scale: a filter on [[graft.core.Positions.of]]'s global position — one
+    * parallel sort numbered from per-partition counts, never a global
+    * `Window.orderBy`, which funnels the whole table through one task.
     */
   def iloc(start: Long, end: Long, orderBy: Seq[Column]): SDF = {
-    val sorted = _df.orderBy(orderBy: _*)
-    val sliced = sorted.rdd.zipWithIndex()
-      .filter { case (_, i) => i >= start && i < end }
-      .map(_._1)
-    SDF(_df.sparkSession.createDataFrame(sliced, sorted.schema))
+    val pos = col(Positions.PosCol)
+    SDF(Positions.of(_df, orderBy)._1.filter(pos >= start && pos < end).drop(Positions.PosCol))
   }
 
   def head(n: Int): SDF = SDF(_df.limit(n))
@@ -329,14 +327,6 @@ final class SDF private (private var _df: DataFrame) {
       .withColumnRenamed("__bucket__", on))
   }
 
-  /** pandas `groupby(keys).resample(freq, on=ts)` — [[resample]] per group,
-    * with each group's empty buckets materialized between ITS OWN min and
-    * max (pandas semantics). Fully distributed: group spans come from one
-    * min/max aggregate keyed like the bucket aggregate (no driver scalars),
-    * and the per-group skeleton is a `sequence()` explode joined LEFT
-    * against the aggregated frame on (keys, bucket). Two aggregates + one
-    * join — all shuffles on the same group keys.
-    */
   /** pandas `resample().ohlc()`: open/high/low/close of `value` per time
     * bucket (and group). Open/close are `min_by`/`max_by` against an
     * explicit `tieKey` — pass a per-row-unique ordering key (an event id,
@@ -376,6 +366,14 @@ final class SDF private (private var _df: DataFrame) {
       .select(col("p.*"))
   }
 
+  /** pandas `groupby(keys).resample(freq, on=ts)` — [[resample]] per group,
+    * with each group's empty buckets materialized between ITS OWN min and
+    * max (pandas semantics). Fully distributed: group spans come from one
+    * min/max aggregate keyed like the bucket aggregate (no driver scalars),
+    * and the per-group skeleton is a `sequence()` explode joined LEFT
+    * against the aggregated frame on (keys, bucket). Two aggregates + one
+    * join — all shuffles on the same group keys.
+    */
   def resampleBy(groups: Seq[String], on: String, every: String,
       aggs: Seq[Column]): SDF = {
     require(groups.nonEmpty, "resampleBy needs group columns; use resample")

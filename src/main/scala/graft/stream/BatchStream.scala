@@ -1,12 +1,8 @@
 package graft.stream
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{JoinedRow, SpecificInternalRow, UnsafeProjection}
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.PositionBridge
-import org.apache.spark.sql.types.{LongType, StructField}
+import graft.core.Positions
 
 /** Batch streaming & sharding over a distributed DataFrame — the Spark
   * re-expression of `sdf.stream(...)` (`src/bears/core/frame/ScalableDataFrame
@@ -15,17 +11,14 @@ import org.apache.spark.sql.types.{LongType, StructField}
   * bears materializes the frame and slices numpy index arrays; that cannot
   * exist at 100 TB. Instead:
   *
-  *   1. a global row position comes from one sort plus one count per
-  *      sorted partition: partition i starts at the sum of the counts before
-  *      it (the `__ROW_UID__` trick of the reference's Dask layout, which
-  *      derives uids from per-partition lengths,
-  *      `DaskScalableDataFrame.py:643-684`, without a driver materialize);
-  *      the row count is the sum of those counts, so there is no separate
-  *      `count()`, and the positioned frame declares itself range-partitioned
-  *      and sorted by position. The positions are shared: one frame object
-  *      positioned again with the same sort key, `shuffle` and `seed` (the
-  *      K ranks of one epoch) reuses the first positioning, so all ranks
-  *      read one sort's shuffle output, one snapshot of the rows;
+  *   1. a global row position and the row count come from
+  *      [[graft.core.Positions.of]]: one sort plus one count per sorted
+  *      partition, no separate `count()`, and a positioned frame that
+  *      declares itself range-partitioned and sorted by position. The
+  *      positions are shared: one frame object positioned again with the
+  *      same sort key, `shuffle` and `seed` (the K ranks of one epoch)
+  *      reuses the first positioning, so all ranks read one sort's shuffle
+  *      output, one snapshot of the rows;
   *   2. seeded shuffling = ordering by `xxhash64(uid, seed)` — deterministic
   *      on any cluster layout (a partition-seeded `rand()` is not), and
   *      identical across shard ranks as the reference requires
@@ -44,7 +37,7 @@ import org.apache.spark.sql.types.{LongType, StructField}
   */
 object BatchStream {
 
-  val PosCol = "__pos__"
+  val PosCol: String = Positions.PosCol
   val ShardPosCol = "__shard_pos__"
   val BatchCol = "__batch_id__"
 
@@ -76,8 +69,8 @@ object BatchStream {
     * refers back to its frame, so dropping a frame releases its positions
     * and the sort's shuffle output; a new key replaces the entry.
     */
-  private final case class Positions(key: (Seq[Column], Boolean, Long), frame: DataFrame, rows: Long)
-  private val memo = new java.util.WeakHashMap[DataFrame, Positions]()
+  private final case class Memo(key: (Seq[Column], Boolean, Long), frame: DataFrame, rows: Long)
+  private val memo = new java.util.WeakHashMap[DataFrame, Memo]()
 
   /** The positioned frame and its row count (step 1 above), shared by every
     * call on the same frame object and key.
@@ -86,45 +79,13 @@ object BatchStream {
       seed: Long): (DataFrame, Long) = {
     val key = (orderBy, shuffle, seed)
     val p = memo.synchronized(Option(memo.get(df))).filter(_.key == key).getOrElse {
-      val (frame, rows) = position(df, orderBy, shuffle, seed)
-      val fresh = Positions(key, frame, rows)
+      val sortKey = if (shuffle) xxhash64(orderBy :+ lit(seed): _*) +: orderBy else orderBy
+      val (frame, rows) = Positions.of(df, sortKey)
+      val fresh = Memo(key, frame, rows)
       memo.synchronized(memo.put(df, fresh))
       fresh
     }
     (p.frame, p.rows)
-  }
-
-  /** One positioning: a global sort's partitions hold ascending key ranges,
-    * which is what makes the declared range partitioning and ordering by
-    * [[PosCol]] true.
-    */
-  private def position(df: DataFrame, orderBy: Seq[Column], shuffle: Boolean,
-      seed: Long): (DataFrame, Long) = {
-    val sortKey: Seq[Column] =
-      if (shuffle) Seq(xxhash64(orderBy :+ lit(seed): _*)) ++ orderBy
-      else orderBy
-    val sorted = df.orderBy(sortKey: _*)
-    val qe = sorted.queryExecution
-    // one registered execution: work run through toRdd outside it (the
-    // sort's scans and Exchange) reaches no execution-end event
-    val (rows, counts) = SQLExecution.withNewExecutionId(qe, Some("position")) {
-      val rows = qe.toRdd
-      (rows, rows.mapPartitions(it => Iterator.single(it.size.toLong)).collect())
-    }
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val schema = sorted.schema.add(StructField(PosCol, LongType, nullable = false))
-    val withPos = rows.mapPartitionsWithIndex[InternalRow] { (i, it) =>
-      val pos = new SpecificInternalRow(Seq(LongType))
-      val joined = new JoinedRow
-      val project = UnsafeProjection.create(schema)
-      var next = offsets(i)
-      it.map { r =>
-        pos.setLong(0, next)
-        next += 1
-        project(joined(r, pos))
-      }
-    }
-    (PositionBridge.positioned(df.sparkSession, withPos, schema), offsets.last)
   }
 
   /** Filter to the requested shard and assign batch ids — all Column

@@ -11,7 +11,7 @@ import graft.processor.ScalableEncoders.HashedTextVectorization
 
 /** The native hashed-token-count kernel must be BIT-IDENTICAL, values and
   * dataType, to the Column spellings it replaced: the per-token `aggregate`
-  * fold ([[TextAnalysis.hashedTokenFeaturesReference]], q139's oracle
+  * fold ([[countsReference]], q139's oracle
   * contract) and the vectorizer's cast + L2 `aggregate`/`transform`
   * ([[vectorizerReference]]). The reference legs cost O(dim²·tokens) per
   * row with L2, so they stay at dim ≤ 64 over a few hundred rows.
@@ -21,12 +21,22 @@ class HashedTokenCountsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   import spark.implicits._
 
+  /** The portable built-in spelling of [[TextAnalysis.hashedTokenFeatures]]:
+    * a single-pass fold into a counts accumulator, each token hashed once.
+    * O(dim·tokens) per doc.
+    */
+  private def countsReference(text: Column, dim: Int): Column =
+    aggregate(
+      transform(TextAnalysis.tokens(text), t => pmod(TextAnalysis.hash60(t), lit(dim.toLong)).cast("int")),
+      typedLit(Seq.fill(dim)(0L)),
+      (acc, b) => transform(acc, (v, i) => when(i === b, v + 1L).otherwise(v)))
+
   /** The `HashedTextVectorization.transform` Column spelling before the
     * kernel: its L2 norm referenced the whole count fold from inside the
     * divide lambda, re-running it once per element.
     */
   private def vectorizerReference(in: Column, dim: Int, norm: String): Column = {
-    val counts = transform(TextAnalysis.hashedTokenFeaturesReference(in, dim), _.cast("double"))
+    val counts = transform(countsReference(in, dim), _.cast("double"))
     if (norm == "none") counts
     else {
       val l2 = sqrt(aggregate(counts, lit(0.0), (acc, v) => acc + v * v))
@@ -78,7 +88,7 @@ class HashedTokenCountsSpec extends AnyFunSuite {
     for (dim <- Seq(1, 3, 8, 16, 64))
       assertIdentical(s"hashedTokenFeatures dim=$dim",
         TextAnalysis.hashedTokenFeatures(col("t"), dim),
-        TextAnalysis.hashedTokenFeaturesReference(col("t"), dim))
+        countsReference(col("t"), dim))
   }
 
   test("HashedTextVectorization == its old Column spelling bit for bit, both norms") {

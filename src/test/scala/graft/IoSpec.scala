@@ -132,6 +132,26 @@ class IoSpec extends AnyFunSuite {
     assert(got(3L) == "plain")
   }
 
+  test("readAll unions same-format paths and refuses mixed formats; fromBinaryFiles reads assets") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_readall")
+    val a = dir.resolve("a.parquet").toString
+    val b = dir.resolve("b.parquet").toString
+    Writers.write(spark.range(0, 3).toDF("id"), a)
+    Writers.write(spark.range(3, 5).toDF("id"), b)
+    val back = Readers.readAll(spark, Seq(a, b))
+    assert(back.collect().map(_.getLong(0)).toSeq.sorted == (0L until 5L))
+    intercept[IllegalArgumentException](Readers.readAll(spark, Seq(a, dir.resolve("c.csv").toString)))
+
+    val assets = java.nio.file.Files.createTempDirectory("graft_assets")
+    java.nio.file.Files.write(assets.resolve("one.bin"), Array[Byte](1, 2, 3))
+    java.nio.file.Files.write(assets.resolve("two.bin"), Array[Byte](9))
+    val rows = graft.ops.Multimodal.fromBinaryFiles(spark, assets.toString)
+      .select(col("asset.path"), col("asset.data"), col("asset.meta").getItem("length"))
+      .collect().map(r => (r.getString(0).split("/").last, r.getAs[Array[Byte]](1).toSeq, r.getString(2)))
+      .sortBy(_._1).toSeq
+    assert(rows == Seq(("one.bin", Seq[Byte](1, 2, 3), "3"), ("two.bin", Seq[Byte](9), "1")))
+  }
+
   test("writers honor numRows-based chunking") {
     val dir = java.nio.file.Files.createTempDirectory("graft_chunk").toString + "/out.csv"
     val df = spark.range(10).toDF("id")

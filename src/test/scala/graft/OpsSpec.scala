@@ -1847,6 +1847,18 @@ class OpsSpec extends AnyFunSuite {
       s"expected the three highest-scored docs, got $got")
   }
 
+  test("selectByTokenBudget: a -Infinity score still ranks ahead of a null score") {
+    import graft.ops.Sampling
+    import spark.implicits._
+    // the null doc has the smaller id: a null -> +Inf stand-in key ties with
+    // -(-Inf) and the id tie-break would hand it the budget
+    val df = Seq((2L, Option(Double.NegativeInfinity), 10L), (1L, None: Option[Double], 10L))
+      .toDF("id", "score", "tok")
+    val got = Sampling.selectByTokenBudget(df, col("id"), col("score"), col("tok"), 10L)
+      .select("id").collect().map(_.getLong(0)).toSeq
+    assert(got == Seq(2L), s"the scored doc must take the one-doc budget, got $got")
+  }
+
   test("selectByTokenBudget: null/negative token counts fail loud, not silent budget drift") {
     import graft.ops.Sampling
     import spark.implicits._

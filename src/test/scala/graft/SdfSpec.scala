@@ -108,6 +108,35 @@ class SdfSpec extends AnyFunSuite {
     assert(b.any_ && !b.all_)
   }
 
+  test("SCol abs_/min_/max_/count_/notna, expandingMin/Max, applyUdf; SDF semi/anti joins") {
+    import org.apache.spark.sql.expressions.Window
+    val sdf = SDF(Seq((1, Option(-3.0)), (2, None: Option[Double]), (3, Option(5.0)), (4, Option(-7.0)))
+      .toDF("i", "v"))
+    val v = sdf("v")
+    assert(v.min_ == -7.0 && v.max_ == 5.0)
+    assert(v.count_ == 3L, "count_ skips nulls, like pandas count")
+    val w = Window.orderBy(col("i"))
+    val out = sdf.df
+      .withColumn("a", v.abs_)
+      .withColumn("nn", v.notna)
+      .withColumn("emin", v.expandingMin(w))
+      .withColumn("emax", v.expandingMax(w))
+      .withColumn("sq", sdf("i").applyUdf((x: Int) => x * x))
+      .orderBy(col("i")).collect()
+    assert(out.map(r => Option(r.getAs[Any]("a"))).toSeq == Seq(Some(3.0), None, Some(5.0), Some(7.0)))
+    assert(out.map(_.getAs[Boolean]("nn")).toSeq == Seq(true, false, true, true))
+    assert(out.map(_.getAs[Double]("emin")).toSeq == Seq(-3.0, -3.0, -3.0, -7.0))
+    assert(out.map(_.getAs[Double]("emax")).toSeq == Seq(-3.0, -3.0, 5.0, 5.0))
+    assert(out.map(_.getAs[Int]("sq")).toSeq == Seq(1, 4, 9, 16))
+    val right = SDF(Seq((1, "x"), (3, "y"), (3, "z"), (9, "w")).toDF("i", "tag"))
+    def ids(f: SDF): Seq[Int] = f.df.select("i").collect().map(_.getInt(0)).toSeq.sorted
+    // semi keeps each matching left row once (no duplication by 3's two
+    // matches) and no right columns; anti is its complement
+    assert(ids(sdf.semiJoin(right, Seq("i"))) == Seq(1, 3))
+    assert(sdf.semiJoin(right, Seq("i")).columns.toSeq == Seq("i", "v"))
+    assert(ids(sdf.antiJoin(right, Seq("i"))) == Seq(2, 4))
+  }
+
   test("describe(): long-format stats in one pass") {
     val sdf = SDF(Seq((1.0, 10.0), (2.0, 20.0), (3.0, 30.0), (4.0, 40.0)).toDF("a", "b"))
     val d = sdf.describe(Seq("a", "b")).collect()
