@@ -33,7 +33,9 @@ import java.nio.file.{Files, Paths}
   *     [[graft.functions.OptBarrier]] fencing, exercising the custom
   *     barrier expression through executor-side codegen.
   *
-  * Usage: `sbt "runMain graft.ClusterValidate [sfDir] [outJson]"`, env
+  * Usage: `sbt "runMain graft.ClusterValidate [sfDir] [outJson]"` (outJson
+  * defaults to [[DefaultOut]], under `target/`, so a bare run never
+  * overwrites a committed `CLUSTER_r<round>.json`), env
   * `GRAFT_CLUSTER_MASTER` (default `local-cluster[2,16,4096]`),
   * `GRAFT_QUERY_FILTER` (comma prefix filter, default all).
   */
@@ -103,9 +105,12 @@ object ClusterValidate {
     }
   }
 
+  /** Where a run writes its record when no path is given. */
+  val DefaultOut = "target/cluster_validate.json"
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val outPath = if (args.length > 1) args(1) else "CLUSTER_r18.json"
+    val outPath = if (args.length > 1) args(1) else DefaultOut
     val master = sys.env.getOrElse("GRAFT_CLUSTER_MASTER", "local-cluster[2,16,4096]")
     val all = (QueryCorpus.queries.toSeq ++ extras).toMap
     val qs = QueryRunner.selectFromEnv(all.keys.toSeq.sorted).map(n => n -> all(n))

@@ -49,7 +49,16 @@ object GraftExtensions {
     //   hashed_token_counts(word_tokens(text), 16, 'l2')
     "hashed_token_counts" -> ((exprs: Seq[Expression]) =>
       HashedTokenCounts(exprs.head, literalInt("hashed_token_counts", exprs(1)),
-        if (exprs.size >= 3) literalString("hashed_token_counts", exprs(2)) else "count")))
+        if (exprs.size >= 3) literalString("hashed_token_counts", exprs(2)) else "count")),
+    // SQL form takes the hash-function count as an int literal:
+    //   minhash_signature(shingles_from_tokens(word_tokens(text), 3), 4)
+    "minhash_signature" -> ((exprs: Seq[Expression]) =>
+      MinHashSignature(exprs.head, literalInt("minhash_signature", exprs(1)))),
+    "gopher_flags" -> ((exprs: Seq[Expression]) => GopherFlags(exprs.head)),
+    // SQL form takes the stopword set as trailing string literals:
+    //   quality_signals(text, word_tokens(text), 'the', 'and', ...)
+    "quality_signals" -> ((exprs: Seq[Expression]) =>
+      QualitySignals(exprs.head, exprs(1), exprs.drop(2).map(literalString("quality_signals", _)))))
 
   private def literalString(fn: String, e: Expression): String = {
     require(e.foldable, s"$fn string arguments must be literals, got $e")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The first 60 bits of md5 as ONE codegen'd Expression — bit-identical to
@@ -72,7 +73,26 @@ object Md5Hash60 {
   def hash(bytes: Array[Byte]): Long = {
     val md = digests.get()
     md.reset()
-    val d = md.digest(bytes)
+    top60(md.digest(bytes))
+  }
+
+  /** `hash(salt ++ s.getBytes)` without building the concatenation: the
+    * digest reads the salt, then the string's bytes in place when they sit
+    * in a heap array.
+    */
+  def hashSalted(salt: Array[Byte], s: UTF8String): Long = {
+    val md = digests.get()
+    md.reset()
+    md.update(salt)
+    s.getBaseObject match {
+      case base: Array[Byte] =>
+        md.update(base, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+      case _ => md.update(s.getBytes)
+    }
+    top60(md.digest())
+  }
+
+  private def top60(d: Array[Byte]): Long = {
     var v = 0L
     var i = 0
     while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }

@@ -97,16 +97,29 @@ object TextAnalysis {
     */
   def qualityStruct(c: Column): Column = qualityStructStaged(c, tokens(c))
 
-  /** [[qualityStruct]] over a pre-tokenized column (see [[langIdStaged]]). */
-  def qualityStructStaged(c: Column, toks: Column): Column = {
+  /** [[qualityStruct]] over a pre-tokenized column (see [[langIdStaged]]).
+    * Evaluated by the native [[graft.functions.QualitySignals]] codegen
+    * Expression (one pass over the tokens and one over the text's bytes);
+    * [[qualityStructStagedReference]] keeps the built-in spelling for the
+    * differential spec.
+    */
+  def qualityStructStaged(c: Column, toks: Column): Column =
+    graft.functions.QualitySignals.quality_signals(c, toks, Stopwords)
+
+  /** Every profile's stopwords: the [[qualityStruct]] stopword set. */
+  private val Stopwords: Seq[String] = LangProfiles.values.flatten.toSeq.distinct
+
+  /** The built-in spelling of [[qualityStructStaged]] — pinned
+    * field-identical to the native kernel by CurateKernelsSpec.
+    */
+  def qualityStructStagedReference(c: Column, toks: Column): Column = {
     val nWords = size(toks).cast("double")
     val meanWordLen = aggregate(toks, lit(0L), (a, t) => a + length(t)).cast("double") /
       greatest(nWords, lit(1.0))
     val punct = (length(c) - length(regexp_replace(c, "[!\"#$%&'()*+,\\-./:;<=>?@\\[\\]^_`{|}~]", "")))
       .cast("double")
     val punctRatio = punct / greatest(length(c).cast("double"), lit(1.0))
-    val stop = size(filter(toks, t => t.isin(LangProfiles.values.flatten.toSeq.distinct.map(lit): _*)))
-      .cast("double")
+    val stop = size(filter(toks, t => t.isin(Stopwords.map(lit): _*))).cast("double")
     val stopRatio = stop / greatest(nWords, lit(1.0))
     // null gate: Spark's least()/greatest() SKIP null operands, so without
     // it a NULL document scored 0.8 — every least() clause silently
@@ -132,10 +145,18 @@ object TextAnalysis {
     * lines starting with a bullet and ending with an ellipsis, plus the
     * composite `gopher_pass` gate at the published thresholds (≥80% alpha
     * words, symbol ratio ≤0.1, ≤90% bullet starts, ≤30% ellipsis ends).
-    * Shuffle-free column algebra over the raw text; every count is a
-    * portable regex.
+    * Shuffle-free: evaluated by the native [[graft.functions.GopherFlags]]
+    * codegen Expression (one pass over the text's bytes);
+    * [[gopherFlagsReference]] keeps the built-in spelling, where every
+    * count is a portable regex, for the differential spec and SQL replay
+    * documentation.
     */
-  def gopherFlags(c: Column): Column = {
+  def gopherFlags(c: Column): Column = graft.functions.GopherFlags.gopher_flags(c)
+
+  /** The built-in spelling of [[gopherFlags]] — pinned field-identical to
+    * the native kernel by CurateKernelsSpec.
+    */
+  def gopherFlagsReference(c: Column): Column = {
     val words = regexp_extract_all(c, lit("\\S+"), lit(0))
     val nWords = greatest(size(words), lit(1)).cast("double")
     val alphaFrac = size(filter(words, w => w.rlike("[A-Za-z]"))).cast("double") / nWords

@@ -2,7 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** ClusterValidate's fork precondition mirrors the Spark launcher's checks. */
+/** ClusterValidate's fork precondition mirrors the Spark launcher's checks,
+  * and a run given no output path writes no committed file.
+  */
 class ClusterValidateSpec extends AnyFunSuite {
 
   test("forkPreconditionError: Spark home from SPARK_HOME or spark.test.home, Scala suffix from SPARK_SCALA_VERSION or the launcher build dir") {
@@ -31,5 +33,17 @@ class ClusterValidateSpec extends AnyFunSuite {
       assert(got.isEmpty == want.isEmpty && want.forall(w => got.exists(_.contains(w))),
         s"$master $env $props $dirs: got $got, want $want")
     }
+  }
+
+  test("the default record path names no committed file: it sits under the ignored target/") {
+    val out = java.nio.file.Paths.get(ClusterValidate.DefaultOut).normalize()
+    assert(!out.isAbsolute && out.getNameCount > 1 && out.getName(0).toString == "target",
+      s"default output $out is not under target/")
+    val ignored = scala.io.Source.fromFile(".gitignore")
+    try assert(ignored.getLines().map(_.trim).contains("target/"), ".gitignore no longer ignores target/")
+    finally ignored.close()
+    val committedRecords = Option(new java.io.File(".").list()).toSeq.flatten
+      .filter(n => n.startsWith("CLUSTER_") && n.endsWith(".json"))
+    assert(!committedRecords.contains(out.toString))
   }
 }

@@ -367,4 +367,65 @@ class PlanSpec extends AnyFunSuite {
         s"$name: $cart cartesian/nested-loop joins (allowed $cartAllow):\n$p")
     }
   }
+
+  test("curate kernels: gopher flags, quality and MinHash plan with no higher-order function") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayFilter, ArrayTransform}
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import graft.ops.{Dedup, TextAnalysis}
+    val t = spark.range(4).select(concat(lit("a b... c\n- d # e "), col("id").cast("string")).as("t"))
+    for ((label, c) <- Seq(
+        "gopherFlags" -> TextAnalysis.gopherFlags(col("t")),
+        "qualityStruct" -> TextAnalysis.qualityStruct(col("t")),
+        "minhashSignature" -> Dedup.minhashSignature(col("t"), 3, 4))) {
+      val plan = t.select(c).queryExecution.optimizedPlan
+      val hofs = plan.flatMap(_.expressions.flatMap(_.collect {
+        case e @ (_: ArrayTransform | _: ArrayFilter | _: ArrayAggregate) => e
+      }))
+      assert(hofs.isEmpty, s"$label plans an interpreted higher-order function:\n$plan")
+    }
+  }
+
+  test("near-dup verify: shingles are built on the pair-joined rows, never on the document side") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.functions.ShinglesFromTokens
+    import graft.ops.Dedup
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case other => other.children
+    }
+    def all(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(all)
+    // the verify stage runs inside each op's eager cut, so read the plan
+    // that localCheckpoint executed
+    def cutPlan(build: => Unit): SparkPlan = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          if (funcName == "localCheckpoint") plans.add(qe.executedPlan)
+        override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        build
+        org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      assert(plans.size == 1, s"expected one eager cut, got ${plans.size}")
+      plans.peek()
+    }
+    val docs = spark.read.parquet(dir + "/documents.parquet").select(col("doc_id"), col("text"))
+    for ((label, plan) <- Seq(
+        "verifiedNearDupPairs" -> cutPlan(Dedup.verifiedNearDupPairs(docs, col("text"), col("doc_id"))),
+        "verifiedHubEdges" -> cutPlan(Dedup.verifiedHubEdges(docs, col("text"), col("doc_id"))))) {
+      val shingling = all(plan).filter(_.expressions.exists(_.exists(_.isInstanceOf[ShinglesFromTokens])))
+      assert(shingling.nonEmpty, s"$label: no shingle kernel in its verify plan:\n$plan")
+      shingling.foreach { node =>
+        assert(all(node).exists(_.isInstanceOf[BaseJoinExec]),
+          s"$label shingles documents below the pair join:\n$plan")
+      }
+    }
+  }
 }
