@@ -7,11 +7,11 @@ import graft.queries.QueryCorpus
 /** Per-query profiling main (developer tool, not a driver artifact): runs
   * each selected corpus query `GRAFT_PROFILE_REPEATS` times (default 5) in
   * ONE JVM under the engine session, printing per-run wall time plus Spark
-  * job count, task count, and summed executor task time. The task-time line
-  * separates "the plan does more work" (task time up) from "the box was
-  * contended / JIT was cold" (wall up, task time flat) — the distinction
-  * round verdicts keep needing when a query's bench line moves between
-  * rounds. A failed run prints its failure and the loop goes on, so
+  * job count, task count, summed executor task time and shuffle write
+  * bytes. The task-time line separates "the plan does more work" (task
+  * time up) from "the box was contended / JIT was cold" (wall up, task
+  * time flat) — the distinction round verdicts keep needing when a
+  * query's bench line moves between rounds. A failed run prints its failure and the loop goes on, so
   * `GRAFT_PROFILE_REPEATS=1` with the prefix `q` is a full-corpus wall sweep.
   *
   * Usage: sbt "runMain graft.ProfileQ q64_asof_join q175_web_pipeline"
@@ -50,7 +50,7 @@ object ProfileQ {
       val c = counter()
       val out = c.observe(spark.sparkContext)(QueryRunner.run(spark)(
         QueryRunner.materialize(QueryCorpus.queries(name)(spark, sfDir))))
-      println(f"[profile] $name run$i%2d wall=${out.secs}%7.3f s jobs=${c.jobs}%3d tasks=${c.tasks}%5d taskTime=${c.taskTimeMs / 1000.0}%8.2f s" +
+      println(f"[profile] $name run$i%2d wall=${out.secs}%7.3f s jobs=${c.jobs}%3d tasks=${c.tasks}%5d taskTime=${c.taskTimeMs / 1000.0}%8.2f s shuffleWrite=${c.shuffleWriteBytes}%d B" +
         out.failure.fold("")("  FAIL " + _))
     }
     spark.stop()

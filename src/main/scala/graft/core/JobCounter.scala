@@ -7,24 +7,26 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftbridge.ListenerBridge
 
 /** Counts the Spark jobs, SQL executions (driver-blocking actions), tasks of
-  * completed stages and their executor run time that one body of driver
-  * code launches; use one counter per measurement. Subclasses may override
+  * completed stages, their executor run time and their shuffle write bytes
+  * that one body of driver code launches; use one counter per measurement. Subclasses may override
   * the callbacks to trace events, calling `super` to keep the counts.
   */
 class JobCounter extends SparkListener {
   private val jobCount, sqlExecutionCount, taskCount = new AtomicInteger(0)
-  private val taskTime = new AtomicLong(0L)
+  private val taskTime, shuffleWrite = new AtomicLong(0L)
 
   def jobs: Int = jobCount.get
   def sqlExecutions: Int = sqlExecutionCount.get
   def tasks: Int = taskCount.get
   def taskTimeMs: Long = taskTime.get
+  def shuffleWriteBytes: Long = shuffleWrite.get
 
   override def onJobStart(j: SparkListenerJobStart): Unit = jobCount.incrementAndGet()
 
   override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
     taskCount.addAndGet(s.stageInfo.numTasks)
     taskTime.addAndGet(s.stageInfo.taskMetrics.executorRunTime)
+    shuffleWrite.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
   }
 
   override def onOtherEvent(event: SparkListenerEvent): Unit = event match {

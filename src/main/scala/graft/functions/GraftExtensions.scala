@@ -55,10 +55,7 @@ object GraftExtensions {
     "minhash_signature" -> ((exprs: Seq[Expression]) =>
       MinHashSignature(exprs.head, literalInt("minhash_signature", exprs(1)))),
     "gopher_flags" -> ((exprs: Seq[Expression]) => GopherFlags(exprs.head)),
-    // SQL form takes the stopword set as trailing string literals:
-    //   quality_signals(text, word_tokens(text), 'the', 'and', ...)
-    "quality_signals" -> ((exprs: Seq[Expression]) =>
-      QualitySignals(exprs.head, exprs(1), exprs.drop(2).map(literalString("quality_signals", _)))))
+    "quality_signals" -> ((exprs: Seq[Expression]) => QualitySignals(exprs.head, exprs(1))))
 
   private def literalString(fn: String, e: Expression): String = {
     require(e.foldable, s"$fn string arguments must be literals, got $e")

@@ -198,7 +198,9 @@ object GopherFlags {
   * and `qualityStructStaged`. The Column spelling
   * ([[graft.ops.TextAnalysis.qualityStructStagedReference]]) folds the
   * tokens through an interpreted `aggregate` and an `isin` `filter` and
-  * strips punctuation with a regex replace.
+  * strips punctuation with a regex replace. The stopword set is the
+  * constant [[QualitySignals.Stopwords]], so the SQL form
+  * `quality_signals(text, toks)` scores exactly as `qualityStruct` does.
   *
   * Pinned to the Column spelling by a differential spec. What it reproduces:
   *   - lengths count code points, as `length` does;
@@ -213,7 +215,7 @@ object GopherFlags {
   *   - `size` of a null token array is -1 under `legacySizeOfNull`, else
   *     null, captured at construction as `Size` captures it.
   */
-case class QualitySignals(text: Expression, toks: Expression, stopwords: Seq[String],
+case class QualitySignals(text: Expression, toks: Expression,
     legacySizeOfNull: Boolean = SQLConf.get.legacySizeOfNull) extends BinaryExpression {
 
   override def left: Expression = text
@@ -230,23 +232,19 @@ case class QualitySignals(text: Expression, toks: Expression, stopwords: Seq[Str
         s"quality_signals requires (string, array<string>) input, got ($t, $a)")
     }
 
-  @transient private lazy val stopSet: java.util.HashSet[UTF8String] =
-    QualitySignals.stopSet(stopwords)
-
   override def eval(input: InternalRow): Any =
     QualitySignals.signals(text.eval(input).asInstanceOf[UTF8String],
-      toks.eval(input).asInstanceOf[ArrayData], stopSet, legacySizeOfNull)
+      toks.eval(input).asInstanceOf[ArrayData], legacySizeOfNull)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val obj = QualitySignals.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val stop = ctx.addReferenceObj("stopwords", stopSet, "java.util.HashSet")
     val t = text.genCode(ctx)
     val a = toks.genCode(ctx)
     ev.copy(code = code"""
       |${t.code}
       |${a.code}
       |${CodeGenerator.javaType(dataType)} ${ev.value} = $obj.signals(
-      |  ${t.isNull} ? null : ${t.value}, ${a.isNull} ? null : ${a.value}, $stop,
+      |  ${t.isNull} ? null : ${t.value}, ${a.isNull} ? null : ${a.value},
       |  $legacySizeOfNull);
       |""".stripMargin, isNull = FalseLiteral)
   }
@@ -267,9 +265,22 @@ object QualitySignals {
     StructField("stopword_ratio", DoubleType),
     StructField("quality", DoubleType)))
 
-  def stopSet(stopwords: Seq[String]): java.util.HashSet[UTF8String] = {
+  /** Frequent-word profiles of the language-ID heuristic
+    * ([[graft.ops.TextAnalysis.langId]] reads them as `LangProfiles`).
+    */
+  val LangProfiles: Map[String, Seq[String]] = Map(
+    "en" -> Seq("the", "and", "of", "to", "is"),
+    "de" -> Seq("der", "und", "die", "das", "ist"),
+    "fr" -> Seq("le", "la", "et", "les", "est"),
+    "es" -> Seq("el", "de", "la", "y", "es"),
+    "zh" -> Seq.empty) // CJK detected by charset in langId
+
+  /** The quality score's stopwords: every profile's words. */
+  val Stopwords: Seq[String] = LangProfiles.values.flatten.toSeq.distinct
+
+  private val StopSet: java.util.HashSet[UTF8String] = {
     val s = new java.util.HashSet[UTF8String]()
-    stopwords.foreach(w => s.add(UTF8String.fromString(w)))
+    Stopwords.foreach(w => s.add(UTF8String.fromString(w)))
     s
   }
 
@@ -301,8 +312,7 @@ object QualitySignals {
     if (a == null) null else a * b
 
   /** The scalar kernel (shared by interpreted eval and codegen). */
-  def signals(text: UTF8String, toks: ArrayData, stop: java.util.HashSet[UTF8String],
-      legacySizeOfNull: Boolean): InternalRow = {
+  def signals(text: UTF8String, toks: ArrayData, legacySizeOfNull: Boolean): InternalRow = {
     val nullSize: java.lang.Double = if (legacySizeOfNull) -1.0 else null
     var nWords, sumLen, stops: java.lang.Double = nullSize
     if (toks != null) {
@@ -316,7 +326,7 @@ object QualitySignals {
         else {
           val t = toks.getUTF8String(i)
           len += t.numChars
-          if (stop.contains(t)) s += 1
+          if (StopSet.contains(t)) s += 1
         }
         i += 1
       }
@@ -347,7 +357,7 @@ object QualitySignals {
   }
 
   /** Column-facing constructor (Spark 4 Column↔Expression bridge). */
-  def quality_signals(text: Column, toks: Column, stopwords: Seq[String]): Column =
+  def quality_signals(text: Column, toks: Column): Column =
     ColumnBridge.column(QualitySignals(ColumnBridge.expression(text),
-      ColumnBridge.expression(toks), stopwords))
+      ColumnBridge.expression(toks)))
 }

@@ -173,13 +173,15 @@ object Dedup {
       exactPrepass: Boolean = false): DataFrame = {
     val (plan, release) =
       candidatePlan(df, textCol, idCol, k, numHashes, bands, maxBucketSize, exactPrepass)
-    materialize(plan, release)
+    materialize(plan.distinct(), release)
   }
 
   /** Lazy candidate-pair plan plus the caches to release once it has been
-    * materialized — shared by [[minhashCandidates]] (materializes the pairs)
-    * and [[verifiedNearDupPairs]] (materializes only once, after the
-    * Jaccard-verify stage, saving an intermediate checkpoint round-trip).
+    * materialized — shared by [[minhashCandidates]] (materializes the
+    * distinct pairs) and [[verifiedNearDupPairs]] (materializes only once,
+    * after the Jaccard-verify stage, saving an intermediate checkpoint
+    * round-trip). A pair repeats once per band its two documents share:
+    * each caller dedupes in a shuffle it already pays.
     */
   private def candidatePlan(df: DataFrame, textCol: Column, idCol: Column,
       k: Int, numHashes: Int, bands: Int,
@@ -208,8 +210,7 @@ object Dedup {
       val memberPairs = digests.join(groups, "__digest__")
         .filter(col("id") =!= col("rep_id"))
         .select(col("rep_id").as("id_a"), col("id").as("id_b"))
-      (repPairs.unionByName(memberPairs).distinct(),
-        release ++ Seq(digests, groups))
+      (repPairs.unionByName(memberPairs), release ++ Seq(digests, groups))
     }
   }
 
@@ -259,7 +260,8 @@ object Dedup {
       .select(col("id"), col("b.band").as("band"), col("b.band_hash").as("band_hash"))
 
   /** Lazy candidate-pair plan over `(id, __text__)` docs plus the frames the
-    * caller must unpersist once the plan has been materialized.
+    * caller must unpersist once the plan has been materialized. A pair
+    * repeats once per shared band (see [[candidatePlan]]).
     */
   private def lshPairPlan(docs: DataFrame, k: Int, numHashes: Int, bands: Int,
       maxBucketSize: Option[Long]): (DataFrame, Seq[DataFrame]) = {
@@ -280,7 +282,6 @@ object Dedup {
       col("l.band") === col("r.band") && col("l.band_hash") === col("r.band_hash") &&
         col("l.id") < col("r.id"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct()
     (pairs, withBands +: scratch)
   }
 
@@ -303,25 +304,34 @@ object Dedup {
   }
 
   /** Verify candidate `(id_a, id_b)` pairs by exact shingle Jaccard ≥
-    * `threshold`, returning (id_a, id_b, jac) with jac rounded to 4 (the
-    * oracle-portable quantum). One join brings each pair's two texts: the
-    * pair list, one row per (pair, member), is its small side and the
-    * documents stream past it, so the distinct shingles are derived only
-    * for documents in a candidate pair, and no join side holds the corpus's
-    * text or shingles. A pair-keyed aggregate then puts the two arrays on
-    * one row.
+    * `threshold`, returning distinct (id_a, id_b, jac) with jac rounded to 4
+    * (the oracle-portable quantum). `cands` may repeat a pair. The pair list
+    * is first grouped by member document — one row per document in some
+    * candidate pair, carrying the set of that document's pairs, which also
+    * dedupes them — and joined to `(id, text)`, so the distinct shingles
+    * are derived once per candidate document: never for the rest of the
+    * corpus, and never once per pair (in a clique-shaped pair list a
+    * replica cluster of m docs gives m(m−1)/2 pairs, yet each doc is
+    * shingled once). Only then are the pairs exploded, and a pair-keyed
+    * aggregate puts each pair's two arrays on one row. The grouped pair list
+    * carries ids only, so the join never needs the corpus's text or
+    * shingles on its small side.
     */
   private def verifyPairs(cands: DataFrame, df: DataFrame, textCol: Column, idCol: Column,
       k: Int, threshold: Double): DataFrame = {
-    val members = cands.select(col("id_a"), col("id_b"),
-      explode(array(col("id_a"), col("id_b"))).as("doc_id"))
+    def member(id: String, isA: Boolean) =
+      struct(col(id).as("doc_id"), col("id_a"), col("id_b"), lit(isA).as("is_a"))
+    val pairsByDoc = cands
+      .select(explode(array(member("id_a", isA = true), member("id_b", isA = false))).as("m"))
+      .groupBy(col("m.doc_id").as("doc_id"))
+      .agg(collect_set(struct(col("m.id_a"), col("m.id_b"), col("m.is_a"))).as("pairs"))
     df.select(idCol.as("doc_id"), textCol.as("text"))
-      .join(members, "doc_id")
-      .select(col("id_a"), col("id_b"), (col("doc_id") === col("id_a")).as("is_a"),
-        array_distinct(shingles(col("text"), k)).as("sh"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(first(when(col("is_a"), col("sh")), ignoreNulls = true).as("sh_a"),
-        first(when(!col("is_a"), col("sh")), ignoreNulls = true).as("sh_b"))
+      .join(pairsByDoc, "doc_id")
+      .select(array_distinct(shingles(col("text"), k)).as("sh"), col("pairs"))
+      .select(col("sh"), explode(col("pairs")).as("p"))
+      .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+      .agg(first(when(col("p.is_a"), col("sh")), ignoreNulls = true).as("sh_a"),
+        first(when(!col("p.is_a"), col("sh")), ignoreNulls = true).as("sh_b"))
       .withColumn("jac", round(jaccardShingles(col("sh_a"), col("sh_b")), 4))
       .filter(col("jac") >= threshold)
       .select(col("id_a"), col("id_b"), col("jac"))
@@ -377,9 +387,9 @@ object Dedup {
       .withColumn("id_a", min(col("id")).over(Window.partitionBy(col("band"), col("band_hash"))))
       .filter(col("id") > col("id_a"))
       .select(col("id_a"), col("id").as("id_b"))
-      .distinct()
     // the pair frame carries only ids until the verify join, and that join
-    // sees star-linear traffic
+    // sees star-linear traffic; a pair repeats once per shared band, and
+    // verifyPairs dedupes it
     val verified = verifyPairs(cands, df, textCol, idCol, k, threshold)
       .select(col("id_a"), col("id_b"))
     materialize(verified, Seq(withBands, hot))
@@ -406,7 +416,8 @@ object Dedup {
     jaccardShingles(array_distinct(shingles(a, k)), array_distinct(shingles(b, k)))
 
   /** Jaccard over precomputed distinct-shingle arrays — compute the arrays
-    * once per document BEFORE a pair join, not per pair.
+    * once per document and attach them to the pair rows, never once per
+    * pair (see [[verifyPairs]]).
     */
   def jaccardShingles(sa: Column, sb: Column): Column = {
     val inter = size(array_intersect(sa, sb)).cast("double")

@@ -55,13 +55,10 @@ object TextAnalysis {
   def fingerprint(c: Column): Column =
     hash60(trim(regexp_replace(lower(c), "\\s+", " ")))
 
-  /** Frequent-word profiles for the n-gram language-ID heuristic. */
-  val LangProfiles: Map[String, Seq[String]] = Map(
-    "en" -> Seq("the", "and", "of", "to", "is"),
-    "de" -> Seq("der", "und", "die", "das", "ist"),
-    "fr" -> Seq("le", "la", "et", "les", "est"),
-    "es" -> Seq("el", "de", "la", "y", "es"),
-    "zh" -> Seq.empty) // CJK detected by charset below
+  /** Frequent-word profiles for the n-gram language-ID heuristic; their
+    * union is [[qualityStruct]]'s stopword set.
+    */
+  val LangProfiles: Map[String, Seq[String]] = graft.functions.QualitySignals.LangProfiles
 
   /** Language-ID heuristic: score each profile by stopword hits per token;
     * CJK characters short-circuit to zh; zero scores → "und" (undetermined);
@@ -104,10 +101,7 @@ object TextAnalysis {
     * differential spec.
     */
   def qualityStructStaged(c: Column, toks: Column): Column =
-    graft.functions.QualitySignals.quality_signals(c, toks, Stopwords)
-
-  /** Every profile's stopwords: the [[qualityStruct]] stopword set. */
-  private val Stopwords: Seq[String] = LangProfiles.values.flatten.toSeq.distinct
+    graft.functions.QualitySignals.quality_signals(c, toks)
 
   /** The built-in spelling of [[qualityStructStaged]] — pinned
     * field-identical to the native kernel by CurateKernelsSpec.
@@ -119,7 +113,8 @@ object TextAnalysis {
     val punct = (length(c) - length(regexp_replace(c, "[!\"#$%&'()*+,\\-./:;<=>?@\\[\\]^_`{|}~]", "")))
       .cast("double")
     val punctRatio = punct / greatest(length(c).cast("double"), lit(1.0))
-    val stop = size(filter(toks, t => t.isin(Stopwords.map(lit): _*))).cast("double")
+    val stopwords = graft.functions.QualitySignals.Stopwords
+    val stop = size(filter(toks, t => t.isin(stopwords.map(lit): _*))).cast("double")
     val stopRatio = stop / greatest(nWords, lit(1.0))
     // null gate: Spark's least()/greatest() SKIP null operands, so without
     // it a NULL document scored 0.8 — every least() clause silently

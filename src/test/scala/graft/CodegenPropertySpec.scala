@@ -90,7 +90,7 @@ class CodegenPropertySpec extends AnyFunSuite {
       HashedTokenCounts.hashed_token_counts(WordTokens.word_tokens(col("s")), 7, "none"),
       HashedTokenCounts.hashed_token_counts(WordTokens.word_tokens(col("s")), 7, "l2"),
       GopherFlags.gopher_flags(col("s")),
-      QualitySignals.quality_signals(col("s"), WordTokens.word_tokens(col("s")), vocab),
+      QualitySignals.quality_signals(col("s"), WordTokens.word_tokens(col("s"))),
       MinHashSignature.minhash_signature(
         ShinglesFromTokens.shingles_from_tokens(WordTokens.word_tokens(col("s")), 3), 4),
       VocabTokenCount.vocab_token_count(col("s"), vocab),

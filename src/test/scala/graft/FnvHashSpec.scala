@@ -63,21 +63,23 @@ class FnvHashSpec extends AnyFunSuite {
       == FnvHash64.hash("abc".getBytes("UTF-8")))
     assert(spark.sql("SELECT round(product_exact(x), 4) AS p FROM VALUES (1.5),(2.0),(NULL) t(x)")
       .head().getDouble(0) == 3.0)
-    // the curate kernels: each SQL form equals its Column form
-    import graft.functions.{GopherFlags, MinHashSignature, QualitySignals, ShinglesFromTokens, WordTokens}
+    // the curate kernels: each SQL form equals the op-level Column form,
+    // quality_signals with qualityStruct's own stopword set
+    import graft.ops.{Dedup, TextAnalysis}
     val text = "The cat sat on the mat...\n- a bullet line\n# heading"
     val sqlRow = spark.sql(
       s"""SELECT minhash_signature(shingles_from_tokens(word_tokens(t), 3), 4) AS m,
-         |  gopher_flags(t) AS g, quality_signals(t, word_tokens(t), 'the', 'on') AS q
+         |  gopher_flags(t) AS g, quality_signals(t, word_tokens(t)) AS q
          |FROM VALUES ('${text.replace("\n", "\\n")}') v(t)""".stripMargin).head()
     val t = col("t")
     val colRow = Seq(text).toDF("t").select(
-      MinHashSignature.minhash_signature(
-        ShinglesFromTokens.shingles_from_tokens(WordTokens.word_tokens(t), 3), 4),
-      GopherFlags.gopher_flags(t),
-      QualitySignals.quality_signals(t, WordTokens.word_tokens(t), Seq("the", "on"))).head()
+      Dedup.minhashFromShinglesReference(TextAnalysis.shingles(t, 3), 4),
+      TextAnalysis.gopherFlagsReference(t),
+      TextAnalysis.qualityStructStagedReference(t, TextAnalysis.tokens(t))).head()
     assert(sqlRow.toSeq == colRow.toSeq)
-    assert(sqlRow.getSeq[Long](0).forall(_ >= 0L) && sqlRow.getStruct(2).getLong(0) == 10L)
+    // 10 words, two of them "the"
+    assert(sqlRow.getSeq[Long](0).forall(_ >= 0L) && sqlRow.getStruct(2).getLong(0) == 10L &&
+      sqlRow.getStruct(2).getDouble(3) == 0.2)
   }
 
   test("expression checksum equals the multimodal decode stub checksum") {

@@ -385,9 +385,10 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("near-dup verify: shingles are built on the pair-joined rows, never on the document side") {
+  test("near-dup verify: shingles are built once per candidate document, before the pairs fan out") {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.util.QueryExecutionListener
@@ -420,12 +421,16 @@ class PlanSpec extends AnyFunSuite {
     for ((label, plan) <- Seq(
         "verifiedNearDupPairs" -> cutPlan(Dedup.verifiedNearDupPairs(docs, col("text"), col("doc_id"))),
         "verifiedHubEdges" -> cutPlan(Dedup.verifiedHubEdges(docs, col("text"), col("doc_id"))))) {
+      // one shingle build (not one per pair side), on the rows of the join
+      // with the per-document pair lists (only candidate documents), and
+      // below the explode that fans each document out to its pairs (so not
+      // once per pair member)
       val shingling = all(plan).filter(_.expressions.exists(_.exists(_.isInstanceOf[ShinglesFromTokens])))
-      assert(shingling.nonEmpty, s"$label: no shingle kernel in its verify plan:\n$plan")
-      shingling.foreach { node =>
-        assert(all(node).exists(_.isInstanceOf[BaseJoinExec]),
-          s"$label shingles documents below the pair join:\n$plan")
-      }
+      assert(shingling.size == 1, s"$label: ${shingling.size} shingle builds in its verify plan:\n$plan")
+      assert(all(shingling.head).exists(_.isInstanceOf[BaseJoinExec]),
+        s"$label shingles documents that are in no candidate pair:\n$plan")
+      assert(all(plan).exists(n => n.isInstanceOf[GenerateExec] && all(n).contains(shingling.head)),
+        s"$label shingles once per pair member, not once per document:\n$plan")
     }
   }
 }
