@@ -237,37 +237,16 @@ object ArrowIpc {
     } finally alloc.close()
   }
 
-  /** Read an Arrow IPC stream file back as a DataFrame (driver-side parse,
-    * parallelized out to `defaultParallelism`; any Hadoop-`FileSystem`
-    * path). Refuses the Arrow random-access FILE format (`ARROW1` magic +
-    * footer) up front with a pointed message — a bare `.arrow` extension
+  /** Read one Arrow IPC stream file back as a DataFrame (any
+    * Hadoop-`FileSystem` path): the [[readStreamSharded]] path over a single
+    * file, so the driver parses only the header and one task parses the
+    * file. Refuses the Arrow random-access FILE format (`ARROW1` magic +
+    * footer) at call time with a pointed message — a bare `.arrow` extension
     * conventionally means the file format, and feeding one to the stream
     * reader would otherwise fail with whatever the stream parser trips on.
-    *
-    * DRIVER-MEMORY CEILING (same discipline as the TfIdf vocab / BPE
-    * word-table ceilings): this path materializes the WHOLE feed as
-    * `Seq[InternalRow]` in driver heap — it exists for re-ingesting one
-    * training worker's feed file, not bulk data. Files larger than `maxBytes`
-    * (default 1 GiB of on-disk IPC bytes; row-ized heap is a small multiple
-    * of that) are refused with a pointer to [[readStreamSharded]], the
-    * distributed one-shard-per-task scale path. Raise `maxBytes` explicitly
-    * only with a driver heap sized for it.
     */
-  def readStream(spark: SparkSession, path: String,
-      maxBytes: Long = 1L << 30): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new HadoopPath(path)
-    val len = p.getFileSystem(conf).getFileStatus(p).getLen
-    require(len <= maxBytes,
-      s"$path is $len bytes > maxBytes $maxBytes — readStream parses the whole feed " +
-        "driver-side (one-worker feed granularity); use readStreamSharded on a " +
-        "sharded feed dir for distributed ingest, or raise maxBytes with a driver " +
-        "heap sized for the row-ized feed")
-    val (sparkSchema, rows) = parseShard(p, conf)
-    ArrowBridge.internalCreateDataFrame(spark,
-      spark.sparkContext.parallelize(rows,
-        math.max(1, spark.sparkContext.defaultParallelism)), sparkSchema)
-  }
+  def readStream(spark: SparkSession, path: String): DataFrame =
+    readFiles(spark, Seq(path), spark.sessionState.newHadoopConf())
 
   /** DISTRIBUTED shard source — the symmetric scale path to
     * [[writeStreamSharded]]: every `shard-*.arrows` file in `dir` parses in
@@ -287,7 +266,14 @@ object ArrowIpc {
       .filter(_.getName.matches("shard-\\d{5}\\.arrows"))
       .sortBy(_.getName).map(_.toString).toSeq
     require(files.nonEmpty, s"no shard-*.arrows files under $dir")
-    // schema from shard 0, driver-side (header parse only — cheap)
+    readFiles(spark, files, conf)
+  }
+
+  /** One task per IPC stream file; the schema comes from the first file's
+    * header, read driver-side (header parse only — cheap).
+    */
+  private def readFiles(spark: SparkSession, files: Seq[String],
+      conf: org.apache.hadoop.conf.Configuration): DataFrame = {
     val sparkSchema = readSchemaOnly(new HadoopPath(files.head), conf)
     val serConf = new SerializableConfiguration(conf)
     val schemaBc = spark.sparkContext.broadcast(sparkSchema)
@@ -300,37 +286,42 @@ object ArrowIpc {
     ArrowBridge.internalCreateDataFrame(spark, rdd, sparkSchema)
   }
 
-  /** Open + fully parse one IPC stream shard (runs driver-side for
-    * [[readStream]], executor-side for [[readStreamSharded]]). Applies the
-    * ARROW1 file-format sniff before handing bytes to the stream parser.
+  /** Open one IPC stream file, refusing the Arrow random-access FILE format
+    * (`ARROW1` magic) before the stream parser sees its bytes.
+    */
+  private def openStream(p: HadoopPath,
+      conf: org.apache.hadoop.conf.Configuration): org.apache.hadoop.fs.FSDataInputStream = {
+    val in = p.getFileSystem(conf).open(p)
+    // loop to 6 bytes or EOF — a single read() may short-read on HDFS/s3a
+    // streams, which would silently skip the pointed file-format refusal
+    val magic = new Array[Byte](6)
+    var got = 0
+    var r = 0
+    while (got < 6 && { r = in.read(magic, got, 6 - got); r > 0 }) got += r
+    if (got == 6 && java.util.Arrays.equals(magic, "ARROW1".getBytes(StandardCharsets.US_ASCII)))
+      try throw new IllegalArgumentException(
+        s"$p is an Arrow random-access FILE (ARROW1 magic + footer), not an IPC " +
+          "STREAM — this reader speaks the stream format (.arrows); rewrite the file " +
+          "with an IPC stream writer (pyarrow.ipc.new_stream) or read it with a " +
+          "file-format reader")
+      finally in.close()
+    in.seek(0L)
+    in
+  }
+
+  /** Fully parse one IPC stream shard, executor-side.
     *
     * Each batch is wrapped as a `ColumnarBatch` of `ArrowColumnVector`s and
     * every row is copied into an on-heap `UnsafeRow` (the vectors' strings
     * point into Arrow memory, which is freed when the shard closes).
-    * Memory bound: the whole shard row-izes into one `Seq[InternalRow]` in the
-    * calling JVM — a DataLoader shard (one worker's slice), not bulk data.
-    * [[readStream]] enforces a byte ceiling driver-side;
-    * [[readStreamSharded]] bounds it to one shard per executor task.
+    * Memory bound: the whole shard row-izes into one `Seq[InternalRow]` in
+    * the task — a DataLoader shard (one worker's slice), not bulk data.
     */
   private def parseShard(p: HadoopPath,
       conf: org.apache.hadoop.conf.Configuration): (StructType, Seq[InternalRow]) = {
     val alloc = new RootAllocator(Long.MaxValue)
     try {
-      val in = p.getFileSystem(conf).open(p)
-      // loop to 6 bytes or EOF — a single read() may short-read on HDFS/s3a
-      // streams, which would silently skip the pointed file-format refusal
-      val magic = new Array[Byte](6)
-      var got = 0
-      var r = 0
-      while (got < 6 && { r = in.read(magic, got, 6 - got); r > 0 }) got += r
-      if (got == 6 && java.util.Arrays.equals(magic, "ARROW1".getBytes(StandardCharsets.US_ASCII)))
-        try throw new IllegalArgumentException(
-          s"$p is an Arrow random-access FILE (ARROW1 magic + footer), not an IPC " +
-            "STREAM — this reader speaks the stream format (.arrows); rewrite the file " +
-            "with an IPC stream writer (pyarrow.ipc.new_stream) or read it with a " +
-            "file-format reader")
-        finally in.close()
-      in.seek(0L)
+      val in = openStream(p, conf)
       val reader = new ArrowStreamReader(in, alloc)
       try {
         val root = reader.getVectorSchemaRoot
@@ -352,7 +343,7 @@ object ArrowIpc {
       conf: org.apache.hadoop.conf.Configuration): StructType = {
     val alloc = new RootAllocator(Long.MaxValue)
     try {
-      val in = p.getFileSystem(conf).open(p)
+      val in = openStream(p, conf)
       val reader = new ArrowStreamReader(in, alloc)
       try sparkSchemaOf(reader.getVectorSchemaRoot.getSchema)
       finally { reader.close(); in.close() }

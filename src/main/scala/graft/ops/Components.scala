@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   * Lineage discipline: each round chains join→agg onto the previous round's
   * plan. Left unbroken, the logical plan and the RDD DAG grow linearly with
   * rounds — planning slows every iteration, and one lost executor recomputes
-  * the WHOLE chain from the raw edges. `localCheckpoint` every
-  * [[CheckpointEvery]] rounds truncates both, bounding recompute depth and
-  * keeping the plan constant-size regardless of iteration count.
+  * the WHOLE chain from the raw edges. An eager cut ([[Snapshots.cut]])
+  * every [[CheckpointEvery]] rounds truncates both, bounding recompute depth
+  * and keeping the plan constant-size regardless of iteration count.
   */
 object Components {
 
@@ -41,37 +41,23 @@ object Components {
   val SmallGraphMaxEdges = 100000L
 
   /** @param edges two-column frame of undirected edges (ids)
-    * @param checkpointDir when set, lineage truncation uses RELIABLE
-    *        `checkpoint()` into this directory (HDFS/S3/posix path via
-    *        `setCheckpointDir`) instead of `localCheckpoint`. On a real
-    *        cluster this is the 100 TB-safe default: `localCheckpoint`
-    *        blocks die with their executor, so a long iterative job would
-    *        restart from round zero on any executor loss; a reliable
-    *        checkpoint survives and the job resumes from the last cut.
-    *        Locally `None` (the default) keeps the zero-IO fast path.
-    *        Two Spark realities to plan for: `setCheckpointDir` is
-    *        application-GLOBAL (this call re-points any later
-    *        `checkpoint()` in the app — use one dir per app), and
-    *        checkpoint files outlive the job unless
-    *        `spark.cleaner.referenceTracking.cleanCheckpoints=true` is set,
-    *        so long-running pipelines should enable that conf or clean the
-    *        directory between runs.
     * @return (id, component) — component = min node id reachable.
     *         Logs a warning when `maxIter` is hit before convergence
     *         (labels then under-merge); use [[connectedComponentsWithStatus]]
     *         to branch on it programmatically.
+    *
+    * The distributed path's lineage cuts go through [[Snapshots.cut]]: they
+    * are reliable checkpoints whenever the application has a checkpoint dir,
+    * so on a cluster a lost executor resumes the loop from the last cut
+    * instead of round zero, and local checkpoints otherwise.
     */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 10, checkpointDir: Option[String] = None,
-      smallGraphMaxEdges: Long = SmallGraphMaxEdges): DataFrame =
-    connectedComponentsWithStatus(edges, aCol, bCol, maxIter, checkpointDir,
-      smallGraphMaxEdges)._1
+      maxIter: Int = 10, smallGraphMaxEdges: Long = SmallGraphMaxEdges): DataFrame =
+    connectedComponentsWithStatus(edges, aCol, bCol, maxIter, smallGraphMaxEdges)._1
 
   /** [[connectedComponents]] plus an explicit converged flag. */
   def connectedComponentsWithStatus(edges: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 10, checkpointDir: Option[String] = None,
-      smallGraphMaxEdges: Long = SmallGraphMaxEdges): (DataFrame, Boolean) = {
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
+      maxIter: Int = 10, smallGraphMaxEdges: Long = SmallGraphMaxEdges): (DataFrame, Boolean) = {
     val integralIds = Seq(aCol, bCol).forall(c => edges.schema(c).dataType match {
       case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType => true
       case _ => false
@@ -157,12 +143,9 @@ object Components {
           (jumped, Some(nm))
         }
       val checkpointed = (iter + 1) % CheckpointEvery == 0
-      // eager (local or reliable) checkpoint truncates plan+DAG; otherwise
-      // cache lazily (the labelSum job below materializes it)
-      val next =
-        if (!checkpointed) propagated.persist()
-        else if (checkpointDir.isDefined) propagated.checkpoint(true)
-        else propagated.localCheckpoint(true)
+      // an eager cut truncates plan+DAG; otherwise cache lazily (the
+      // labelSum job below materializes it)
+      val next = if (checkpointed) Snapshots.cut(propagated) else propagated.persist()
       val nextSum = labelSum(next)
       roundScratch.foreach(_.unpersist())
       val prospective = nextSum == prevSum
@@ -192,10 +175,7 @@ object Components {
     // the call (the persist-without-unpersist leak class)
     val result = prevCached match {
       case Some(cached) =>
-        val cut =
-          if (checkpointDir.isDefined) labels.checkpoint(true)
-          else labels.localCheckpoint(true)
-        cached.unpersist(false)
+        val cut = Snapshots.cut(labels, release = Seq(cached))
         // the final cut is eager and self-contained — the last mid-loop
         // checkpoint (if any) is now superseded too
         lastSnap.foreach(Snapshots.release)

@@ -158,12 +158,13 @@ object Dedup {
     *     count before the pair join, bounding work to `buckets × cap²`
     *     pairs. With `exactPrepass` the cap only ever fires on genuinely
     *     adversarial NEAR-dup mass (e.g. one template with per-doc noise).
-    * Both off by default: the oracle query replays the uncapped join.
+    * Both off by default; [[verifiedNearDupPairs]] and the oracle queries
+    * replay the uncapped join without a prepass.
     *
     * Lifecycle: the banded-signature (and prepass digest) frames are
     * persisted only for the duration of the call — the candidate id pairs
     * (two longs per row, orders of magnitude smaller than the corpus) are
-    * eagerly materialized via `localCheckpoint` and every input cache is
+    * eagerly cut through [[Snapshots.cut]] and every input cache is
     * released before returning, so repeated calls on a long-lived session
     * cannot leak BlockManager memory.
     */
@@ -171,57 +172,33 @@ object Dedup {
       k: Int = 3, numHashes: Int = 8, bands: Int = 4,
       maxBucketSize: Option[Long] = None,
       exactPrepass: Boolean = false): DataFrame = {
-    val (plan, release) =
-      candidatePlan(df, textCol, idCol, k, numHashes, bands, maxBucketSize, exactPrepass)
-    materialize(plan.distinct(), release)
-  }
-
-  /** Lazy candidate-pair plan plus the caches to release once it has been
-    * materialized — shared by [[minhashCandidates]] (materializes the
-    * distinct pairs) and [[verifiedNearDupPairs]] (materializes only once,
-    * after the Jaccard-verify stage, saving an intermediate checkpoint
-    * round-trip). A pair repeats once per band its two documents share:
-    * each caller dedupes in a shuffle it already pays.
-    */
-  private def candidatePlan(df: DataFrame, textCol: Column, idCol: Column,
-      k: Int, numHashes: Int, bands: Int,
-      maxBucketSize: Option[Long],
-      exactPrepass: Boolean): (DataFrame, Seq[DataFrame]) = {
     val docs = df.select(idCol.as("id"), textCol.as("__text__"))
-    if (!exactPrepass) lshPairPlan(docs, k, numHashes, bands, maxBucketSize)
-    else {
-      // joinDigest, not raw fingerprint: a null __digest__ would silently
-      // fall out of the member-chain equi-join below — every null-text doc
-      // except the rep would then SURVIVE dedup, making the prepass flag
-      // (documented as a pure performance guard) change results. Null-text
-      // docs are mutual exact duplicates here, exactly as the non-prepass
-      // path treats them (identical all-null signatures).
-      val digests = docs
-        .select(col("id"), joinDigest(col("__text__")).as("__digest__"))
-        .persist()
-      // rep = min id per digest; groups frame is (digest, rep_id) only
-      val groups = digests.groupBy(col("__digest__"))
-        .agg(min(col("id")).as("rep_id"))
-        .persist()
-      val reps = docs.join(groups.select(col("rep_id")),
-        docs("id") === col("rep_id"), "left_semi")
-      val (repPairs, release) = lshPairPlan(reps, k, numHashes, bands, maxBucketSize)
-      // rep_id is the group minimum, so (rep_id, id) is already (lo, hi)
-      val memberPairs = digests.join(groups, "__digest__")
-        .filter(col("id") =!= col("rep_id"))
-        .select(col("rep_id").as("id_a"), col("id").as("id_b"))
-      (repPairs.unionByName(memberPairs), release ++ Seq(digests, groups))
-    }
-  }
-
-  /** Eagerly compute `plan` (cutting its lineage), then release the caches
-    * it was built from — the persist-without-unpersist fix: inputs are only
-    * cached for the duration of the building job.
-    */
-  private def materialize(plan: DataFrame, release: Seq[DataFrame]): DataFrame = {
-    val out = plan.localCheckpoint(true)
-    release.foreach(_.unpersist(false))
-    out
+    val (plan, release) =
+      if (!exactPrepass) lshPairPlan(docs, k, numHashes, bands, maxBucketSize)
+      else {
+        // joinDigest, not raw fingerprint: a null __digest__ would silently
+        // fall out of the member-chain equi-join below — every null-text doc
+        // except the rep would then SURVIVE dedup, making the prepass flag
+        // (documented as a pure performance guard) change results. Null-text
+        // docs are mutual exact duplicates here, exactly as the non-prepass
+        // path treats them (identical all-null signatures).
+        val digests = docs
+          .select(col("id"), joinDigest(col("__text__")).as("__digest__"))
+          .persist()
+        // rep = min id per digest; groups frame is (digest, rep_id) only
+        val groups = digests.groupBy(col("__digest__"))
+          .agg(min(col("id")).as("rep_id"))
+          .persist()
+        val reps = docs.join(groups.select(col("rep_id")),
+          docs("id") === col("rep_id"), "left_semi")
+        val (repPairs, release) = lshPairPlan(reps, k, numHashes, bands, maxBucketSize)
+        // rep_id is the group minimum, so (rep_id, id) is already (lo, hi)
+        val memberPairs = digests.join(groups, "__digest__")
+          .filter(col("id") =!= col("rep_id"))
+          .select(col("rep_id").as("id_a"), col("id").as("id_b"))
+        (repPairs.unionByName(memberPairs), release ++ Seq(digests, groups))
+      }
+    Snapshots.cut(plan.distinct(), release = release)
   }
 
   /** Banded LSH signatures `(id, band, band_hash)` — the persistable
@@ -261,7 +238,9 @@ object Dedup {
 
   /** Lazy candidate-pair plan over `(id, __text__)` docs plus the frames the
     * caller must unpersist once the plan has been materialized. A pair
-    * repeats once per shared band (see [[candidatePlan]]).
+    * repeats once per band its two documents share: [[minhashCandidates]]
+    * dedupes in its `distinct`, [[verifiedNearDupPairs]] in the verify
+    * stage's pair-keyed aggregate.
     */
   private def lshPairPlan(docs: DataFrame, k: Int, numHashes: Int, bands: Int,
       maxBucketSize: Option[Long]): (DataFrame, Seq[DataFrame]) = {
@@ -349,11 +328,10 @@ object Dedup {
     */
   def verifiedNearDupPairs(df: DataFrame, textCol: Column, idCol: Column,
       k: Int = 3, numHashes: Int = 8, bands: Int = 4,
-      threshold: Double = 0.5, maxBucketSize: Option[Long] = None,
-      exactPrepass: Boolean = false): DataFrame = {
-    val (cands, release) =
-      candidatePlan(df, textCol, idCol, k, numHashes, bands, maxBucketSize, exactPrepass)
-    materialize(verifyPairs(cands, df, textCol, idCol, k, threshold), release)
+      threshold: Double = 0.5): DataFrame = {
+    val (cands, release) = lshPairPlan(
+      df.select(idCol.as("id"), textCol.as("__text__")), k, numHashes, bands, None)
+    Snapshots.cut(verifyPairs(cands, df, textCol, idCol, k, threshold), release = release)
   }
 
   /** Star-reduced verified near-dup EDGES for component building — the
@@ -392,7 +370,7 @@ object Dedup {
     // verifyPairs dedupes it
     val verified = verifyPairs(cands, df, textCol, idCol, k, threshold)
       .select(col("id_a"), col("id_b"))
-    materialize(verified, Seq(withBands, hot))
+    Snapshots.cut(verified, release = Seq(withBands, hot))
   }
 
   /** Jaccard ESTIMATE from minhash signatures: the fraction of agreeing

@@ -19,11 +19,11 @@ import org.apache.spark.sql.functions._
   * small rank frames broadcast (map-side hash probe, no rank-side exchange,
   * rank vector held on the driver between rounds), web-scale ones
   * sort-merge against the sorted cached
-  * edges with the connectedComponents lineage discipline —
-  * `localCheckpoint` every few rounds (or reliable `checkpoint()` when a
-  * dir is given) so a 50-round job neither re-executes its history nor
-  * overflows the planner. Only (node, double) pairs ever shuffle; edges are
-  * persisted once and released before returning.
+  * edges with the connectedComponents lineage discipline — an eager
+  * [[Snapshots.cut]] every few rounds (reliable whenever the application
+  * has a checkpoint dir) so a 50-round job neither re-executes its history
+  * nor overflows the planner. Only (node, double) pairs ever shuffle;
+  * edges are persisted once and released before returning.
   */
 object Graph {
 
@@ -60,12 +60,11 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
       sources: Seq[String], iterations: Int = 10, damping: Double = 0.85,
       checkpointEvery: Int = 4, edgesDistinct: Boolean = false,
-      checkpointDir: Option[String] = None,
       broadcastNodeLimit: Long = defaultBroadcastNodeLimit,
       smallGraphMaxBytes: Long = defaultSmallGraphMaxBytes,
       precomputedDegrees: Option[DataFrame] = None): DataFrame =
     pageRankImpl(edges, srcCol, dstCol, iterations, damping, checkpointEvery,
-      checkpointDir, Some(sources), edgesDistinct, broadcastNodeLimit,
+      Some(sources), edgesDistinct, broadcastNodeLimit,
       smallGraphMaxBytes, precomputedDegrees)
 
   /** Damped PageRank over a directed edge list.
@@ -91,9 +90,6 @@ object Graph {
     *                     tolerance-based stopping where float noise decides
     *                     the round count).
     * @param damping      d in [0,1); 0.85 is the standard choice.
-    * @param checkpointDir when set, reliable `checkpoint()` for executor-loss
-    *                     recovery (see connectedComponents for the tradeoff);
-    *                     `localCheckpoint` otherwise.
     * @param edgesDistinct caller-asserted "no parallel edges": skips the
     *                      (src,dst) dedup pass. The q184 purchase graph is
     *                      distinct by construction (pairs.distinct + a
@@ -163,13 +159,12 @@ object Graph {
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 10, damping: Double = 0.85,
-      checkpointEvery: Int = 4, checkpointDir: Option[String] = None,
-      edgesDistinct: Boolean = false,
+      checkpointEvery: Int = 4, edgesDistinct: Boolean = false,
       broadcastNodeLimit: Long = defaultBroadcastNodeLimit,
       smallGraphMaxBytes: Long = defaultSmallGraphMaxBytes,
       precomputedDegrees: Option[DataFrame] = None): DataFrame =
     pageRankImpl(edges, srcCol, dstCol, iterations, damping, checkpointEvery,
-      checkpointDir, None, edgesDistinct, broadcastNodeLimit,
+      None, edgesDistinct, broadcastNodeLimit,
       smallGraphMaxBytes, precomputedDegrees)
 
   /** 1M short-id nodes ≈ 50 MB of (string node, long deg, double rank)
@@ -219,13 +214,12 @@ object Graph {
     * wall) for a loop the driver sweeps in under a second. Both tiers are
     * exact; the budget only trades driver memory for per-round job latency.
     */
-  private[graft] def admitsLocalEdgeTier(m: Long, maxBytes: Long): Boolean =
-    m * 16L <= maxBytes
+  private[graft] def admitsLocalEdgeTier(m: Long, budgetBytes: Long): Boolean =
+    m * 16L <= budgetBytes
 
   private def pageRankImpl(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int, damping: Double,
-      checkpointEvery: Int, checkpointDir: Option[String],
-      teleportTo: Option[Seq[String]],
+      checkpointEvery: Int, teleportTo: Option[Seq[String]],
       edgesDistinct: Boolean, broadcastNodeLimit: Long,
       smallGraphMaxBytes: Long,
       precomputedDegrees: Option[DataFrame] = None): DataFrame = {
@@ -235,13 +229,6 @@ object Graph {
       "precomputedDegrees requires edgesDistinct=true — the dedup path would " +
         "change |E| underneath the supplied out-degrees")
     val owner = edges.sparkSession
-    // One deliberate exception to the conf-scoping story below: an explicit
-    // checkpointDir lands on the shared SparkContext (checkpoint dirs have
-    // no per-session scoping in Spark), so it is PROCESS-global — visible to
-    // every session and concurrent job until changed. Callers who need full
-    // isolation should leave it None (reliable checkpoints then require the
-    // context dir to be set by whoever owns the application).
-    checkpointDir.foreach(owner.sparkContext.setCheckpointDir)
     // The loop is a fixed 10-30× replay of one join+agg shape over frames
     // whose sizes we know exactly (cached edge list, |V|-row rank frame):
     // AQE's per-shuffle re-planning barrier and the runtime bloom-filter
@@ -271,7 +258,7 @@ object Graph {
     loopSession.conf.set("spark.sql.adaptive.enabled", "false")
     loopSession.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
     val ranks = pageRankLoop(rebind(edges, loopSession), srcCol, dstCol,
-      iterations, damping, checkpointEvery, checkpointDir, teleportTo,
+      iterations, damping, checkpointEvery, teleportTo,
       edgesDistinct, broadcastNodeLimit, smallGraphMaxBytes,
       precomputedDegrees.map(rebind(_, loopSession)))
     // hand the result back on the CALLER's session — otherwise everything
@@ -315,8 +302,7 @@ object Graph {
 
   private def pageRankLoop(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int, damping: Double,
-      checkpointEvery: Int, checkpointDir: Option[String],
-      teleportTo: Option[Seq[String]],
+      checkpointEvery: Int, teleportTo: Option[Seq[String]],
       edgesDistinct: Boolean, broadcastNodeLimit: Long,
       smallGraphMaxBytes: Long,
       precomputedDegrees: Option[DataFrame]): DataFrame = {
@@ -458,9 +444,6 @@ object Graph {
     // released on each exit path.
     val withDeg = preDeg.withColumn("__t__", tele)
 
-    def snapshot(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint(true)
-
     // Join-strategy fork, decided ONCE from the just-counted |V| — the same
     // stats-driven choice Catalyst would make per-join if the loop's frames
     // carried accurate stats (they don't: each round's rank frame is an agg
@@ -555,7 +538,7 @@ object Graph {
       // lineage so a 50-round job neither re-executes its history nor
       // overflows the planner.
       if (i % window == 0 || i == iterations) {
-        next = snapshot(next)
+        next = Snapshots.cut(next)
         // superseded snapshot: safe to release now the successor has
         // eagerly materialized (see Snapshots for why plain unpersist
         // would be a no-op here)
@@ -570,7 +553,7 @@ object Graph {
     // Dedup/Components lifecycle pattern); no extra checkpoint pass.
     // Only the 0-iteration path still references withDeg and needs one.
     val out =
-      if (iterations == 0) snapshot(ranks.select(col("node"), col("rank")))
+      if (iterations == 0) Snapshots.cut(ranks.select(col("node"), col("rank")))
       else ranks.select(col("node"), col("rank"))
     eLoop.unpersist(false) // covers e: aliased, or already released at re-layout
     preDeg.unpersist(false) // the loop's one cached node frame (withDeg is lazy over it)
@@ -603,11 +586,10 @@ object Graph {
     *     the cached edge partitions + map-side-combined sum keyed on dst +
     *     a ≤|V|-row collect.
     *
-    * checkpointDir is irrelevant here: the loop state is a driver array, so
+    * No lineage cut happens here: the loop state is a driver array, so
     * there is no executor-side lineage to recover — a lost executor only
     * re-runs the current round's tasks from the (re-computable) edge
-    * list. The SMJ fork keeps the reliable-checkpoint cadence for web-scale
-    * rank frames.
+    * list. The SMJ fork keeps the cut cadence for web-scale rank frames.
     *
     * Driver folds run in a FIXED array order (the one initial collect), so
     * repeated runs on the same session are reproducible to the bit — same

@@ -228,18 +228,17 @@ object RankStats {
     // The pair ids MUST be pinned before the self-join: the two join sides
     // evaluate the frame independently (no CSE across join inputs), and
     // monotonically_increasing_id depends on intra-partition row order —
-    // nondeterministic above an exchange — so without the eager checkpoint
+    // nondeterministic above an exchange — so without the eager cut
     // the same physical row could carry DIFFERENT __i__ values on each side,
     // double- or zero-counting pairs. Exact kendall is O(n²) pairs and thus
-    // inherently bounded-n (use kendallSampled beyond that), so the
-    // localCheckpoint is small by construction.
-    val d = df.select(col(a).cast("double").as("x"), col(b).cast("double").as("y"))
+    // inherently bounded-n (use kendallSampled beyond that), so the cut is
+    // small by construction; it is released once the aggregate has run.
+    val d = Snapshots.cut(df.select(col(a).cast("double").as("x"), col(b).cast("double").as("y"))
       .filter(col("x").isNotNull && col("y").isNotNull)
-      .withColumn("__i__", monotonically_increasing_id()) // any distinct ids: pairs count once via <
-      .localCheckpoint(true)
+      .withColumn("__i__", monotonically_increasing_id())) // any distinct ids: pairs count once via <
     val l = d.as("l"); val r = d.as("r")
     val prod = (col("l.x") - col("r.x")) * (col("l.y") - col("r.y"))
-    val row = l.join(r, col("l.__i__") < col("r.__i__"))
+    val row = try l.join(r, col("l.__i__") < col("r.__i__"))
       .agg(
         sum(when(prod > 0, 1L).otherwise(0L)).as("c"),
         sum(when(prod < 0, 1L).otherwise(0L)).as("d"),
@@ -247,6 +246,7 @@ object RankStats {
         sum(when(col("l.y") === col("r.y"), 1L).otherwise(0L)).as("n2"),
         count(lit(1)).as("n0"))
       .head()
+    finally Snapshots.release(d)
     if (row.isNullAt(4) || row.getLong(4) == 0L) Double.NaN
     else {
       val Seq(c, disc, n1, n2, n0) = (0 to 4).map(row.getLong(_))

@@ -2,20 +2,53 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 
-/** Lifecycle helper for eagerly-checkpointed loop snapshots.
+/** The one lineage-cut policy of graft's operators, and the lifecycle helper
+  * for the snapshots it cuts.
   *
-  * `Dataset.unpersist` is a NO-OP for checkpointed frames: `localCheckpoint`
-  * persists its materialized RDD at the RDD level, outside the CacheManager
-  * that `Dataset.unpersist` talks to. Iterative operators (PageRank,
-  * connectedComponents) that snapshot per round must release each superseded
-  * snapshot by unpersisting THAT RDD — reached through the `LogicalRDD` the
-  * checkpoint wrapped it in — or every round's blocks linger until session
-  * teardown (O(iterations) leaked caches per call).
-  *
-  * Only safe once a SUCCESSOR snapshot has eagerly materialized: until then,
-  * downstream lineage still reads the old snapshot's blocks.
+  * Every operator that truncates lineage goes through [[cut]], so the choice
+  * between a local and a reliable checkpoint is made once, from application
+  * state, never by a per-call knob (which would have to re-point the
+  * application-global checkpoint dir behind every other workload's back).
   */
-private[ops] object Snapshots {
+private[graft] object Snapshots {
+
+  /** Cut `df`'s lineage, then unpersist the `release` caches it was built
+    * from (cut first, so the cut's job still reads them).
+    *
+    *   - When the application has a checkpoint dir (set on the
+    *     `SparkContext`, or by `spark.checkpoint.dir` at startup), a
+    *     reliable `checkpoint`: the cut survives the loss of the
+    *     executor that computed it, the rule Spark ML's periodic
+    *     checkpointers follow. Reliable cuts are always eager, whatever
+    *     `eager` says: the eager cut computes the chain and writes the files
+    *     in one job, while a lazy one would recompute the chain in a second
+    *     job after the first action. Checkpoint files outlive the job
+    *     unless `spark.cleaner.referenceTracking.cleanCheckpoints=true` is
+    *     set.
+    *   - Otherwise a `localCheckpoint(eager)`: blocks on the executors, no
+    *     file I/O, lost with their executor.
+    */
+  def cut(df: DataFrame, eager: Boolean = true, release: Seq[DataFrame] = Nil): DataFrame = {
+    val out =
+      if (df.sparkSession.sparkContext.getCheckpointDir.isEmpty) df.localCheckpoint(eager)
+      else df.checkpoint(true)
+    release.foreach(_.unpersist(false))
+    out
+  }
+
+  /** Release a superseded snapshot.
+    *
+    * `Dataset.unpersist` is a NO-OP for checkpointed frames: `localCheckpoint`
+    * persists its materialized RDD at the RDD level, outside the CacheManager
+    * that `Dataset.unpersist` talks to. Iterative operators (PageRank,
+    * connectedComponents) that snapshot per round must release each
+    * superseded snapshot by unpersisting THAT RDD — reached through the
+    * `LogicalRDD` the checkpoint wrapped it in — or every round's blocks
+    * linger until session teardown (O(iterations) leaked caches per call).
+    *
+    * Only safe once a SUCCESSOR snapshot has eagerly materialized: until then,
+    * downstream lineage still reads the old snapshot's blocks.
+    */
   def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
     case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
     case _ => df.unpersist(false)

@@ -286,8 +286,7 @@ object TextAnalysis {
         count(lit(1)).as("__n__"))
       .select(col("id"),
         (-col("__s__").cast("double") / col("__n__")).as(out))
-      .localCheckpoint(true)
-    result
+    Snapshots.cut(result)
   }
 
   /** Unicode-script profile (CCNet's routing signal next to [[langId]]):
@@ -442,8 +441,7 @@ object TextAnalysis {
       .groupBy(col("id"))
       .agg((sum(when(col("__nd__") > 1, 1L).otherwise(0L)).cast("double") /
         count(lit(1)).cast("double")).as(out))
-      .localCheckpoint(true)
-    result
+    Snapshots.cut(result)
   }
 
   /** Duplicate-span REMOVAL — the rewrite counterpart of
@@ -535,14 +533,15 @@ object TextAnalysis {
     // and every caller's first action then re-read the blocks as a second
     // job. Only the FINAL result stage is deferred: under AQE the call
     // still executes the adaptive plan, so every upstream exchange stage
-    // materializes here, at the localCheckpoint call. The caller's first
+    // materializes here, at the cut. The caller's first
     // full action (q208's kSel count, q182's noop write, a test's collect)
     // then computes that last stage AND persists it in one job; Spark
     // finalizes the local checkpoint at that job's end, launching a
     // completion job only for partitions the action skipped (none of the
     // callers take/limit). Callers that fan out CONCURRENT jobs before any
     // full action would compute the last stage twice — none do; keep a
-    // materializing action first if one appears.
+    // materializing action first if one appears. With a checkpoint dir set
+    // the cut is reliable and therefore eager (see Snapshots.cut).
     val result = base
       .join(coveredSets, Seq("id"), "left")
       .withColumn("__ps__", keptExpr)
@@ -551,8 +550,7 @@ object TextAnalysis {
         array_join(
           transform(col("__ps__"), p => element_at(col("__t__"), p + 1)), " ")
           .as(out))
-      .localCheckpoint(false)
-    result
+    Snapshots.cut(result, eager = false)
   }
 
   /** Unigram-LM quality score — the CCNet-style perplexity proxy without an
@@ -594,8 +592,7 @@ object TextAnalysis {
       .select(col("id"),
         (-aggregate(col("__xs__"), lit(0.0), (a, x) => a + x.getField("lp"))
           / size(col("__xs__"))).as(out))
-      .localCheckpoint(true)
-    result
+    Snapshots.cut(result)
   }
 
   /** Flesch reading-ease estimate from portable regex counts — the classic
@@ -736,9 +733,7 @@ object TextAnalysis {
       .join(broadcast(ratios), Seq("__b__"))
       .groupBy(col("id"))
       .agg(sum(col("__lr__")).as(out))
-      .localCheckpoint(true)
-    counts.unpersist(false)
-    result
+    Snapshots.cut(result, release = Seq(counts))
   }
 
   /** Corpus-wide top-N k-grams by occurrence count (stopword/boilerplate
@@ -870,9 +865,7 @@ object TextAnalysis {
       .join(benchGrams, Seq("__gh__"), "left_semi")
       .select(col("id"))
       .distinct()
-      .localCheckpoint(true) // eager: small id frame, lineage-free
-    benchGrams.unpersist(false)
-    out
+    Snapshots.cut(out, release = Seq(benchGrams)) // small id frame, lineage-free
   }
 
   /** Keyword tagging against a broadcast lexicon: the word-level matches of

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.core.GraftSession.table
-import graft.ops.{Bpe, Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.ops.{Bpe, Dedup, Multimodal, Similarity, Snapshots, TextAnalysis}
 
 /** LLM-training-data operator corpus (SURVEY.md §7 M5b; graded first-class):
   * dedup (exact / MinHash+LSH / SimHash / n-gram Jaccard / embedding-cosine),
@@ -1526,7 +1526,7 @@ object LlmOpsQueries {
       // exact dedup reads its input twice (digest groupBy + keeper
       // semi-join) and the quality gates read it again — unstaged, this
       // plan scanned the documents parquet SIX times
-      val corpus = docs.unionByName(dupes).localCheckpoint(true)
+      val corpus = Snapshots.cut(docs.unionByName(dupes))
       val keepers = Dedup.exactDedupRows(corpus, col("text"), col("doc_id"))
       val gated = keepers
         .withColumn("n_tok", TextAnalysis.tokenCount(col("text")))
@@ -2392,9 +2392,8 @@ object LlmOpsQueries {
       // regex/scoring lineage per consumer doubles the CPU — at 100 TB this
       // is the disk-backed staging dataset every multi-consumer pipeline
       // writes between phases
-      val staged = gated
-        .select(col("doc_id"), col("clean"), col("n_tok"), col("score"))
-        .localCheckpoint(true)
+      val staged = Snapshots.cut(gated
+        .select(col("doc_id"), col("clean"), col("n_tok"), col("score")))
       val keepers = Dedup.exactDedupRows(staged, col("clean"), col("doc_id"))
       graft.ops.Sampling.selectByTokenBudget(
           keepers.select(col("doc_id"), col("n_tok"), col("score")),

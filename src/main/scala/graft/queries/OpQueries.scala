@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.core.GraftSession.table
-import graft.ops.{RankStats, WindowStats}
+import graft.ops.{RankStats, Snapshots, WindowStats}
 import graft.sdf.SDF
 
 /** Operator-surface corpus: each query drives the pandas-flavored
@@ -1657,17 +1657,16 @@ object OpQueries {
       // dedup-is-the-layout trick (the pageRankLoop discipline): repartition
       // on c FIRST so the (c,s) dedup runs exchange-free on top of it AND
       // the checkpointed layout is hash-partitioned by c — the customer
-      // degree count below then needs no exchange either (localCheckpoint
-      // preserves outputPartitioning). One shuffle buys dedup + degree
-      // layout together.
+      // degree count below then needs no exchange either (a checkpoint,
+      // local or reliable, preserves outputPartitioning). One shuffle buys
+      // dedup + degree layout together.
       val nShuffle = s.sessionState.conf.numShufflePartitions
-      val pairs = table(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
+      val pairs = Snapshots.cut(table(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
         .join(table(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
         .repartition(nShuffle, col("c"))
-        .dropDuplicates("c", "s")
-        .localCheckpoint(true)
+        .dropDuplicates("c", "s"))
       // LONG node encoding (customer X → 2X, supplier Y → 2Y+1 — disjoint
       // by parity, the arithmetic twin of the old "c"/"s" string prefixes):
       // the whole PageRank loop then runs on 8-byte ids — no 2|E| string

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.core.GraftSession.table
+import graft.ops.Snapshots
 import graft.processor.Processors._
 import graft.processor.TfIdfVectorization
 
@@ -225,14 +226,13 @@ object ProcessorQueries {
       // child before shuffling it, and this child (tokenize + HOF
       // vectorization) is shuffle-free — unstaged, the whole transform
       // would execute twice (once for range bounds, once for real)
-      val entries = tfidf.transformFrame(docs, "text", "vec")
+      val entries = Snapshots.cut(tfidf.transformFrame(docs, "text", "vec")
         .select(col("doc_id"),
           posexplode(arrays_zip(col("vec.indices"), col("vec.values"))).as(Seq("pos", "entry")))
         .select(
           col("doc_id"),
           col("entry.indices").cast("long").as("term_idx"),
-          round(col("entry.values"), 4).as("w"))
-        .localCheckpoint(true)
+          round(col("entry.values"), 4).as("w")))
       entries.orderBy(col("doc_id"), col("term_idx"))
     },
     oracle = Some("""

@@ -186,18 +186,6 @@ class ArrowIpcSpec extends AnyFunSuite {
     assert(back.map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((1L, "a"), (2L, "b")))
   }
 
-  test("readStream refuses a feed above the driver-memory byte ceiling") {
-    import spark.implicits._
-    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
-    val out = Files.createTempDirectory("arrowcap").resolve("feed.arrows").toString
-    ArrowIpc.writeStream(df, out)
-    val e = intercept[IllegalArgumentException](
-      ArrowIpc.readStream(spark, out, maxBytes = 10L))
-    assert(e.getMessage.contains("readStreamSharded") && e.getMessage.contains("maxBytes"))
-    // explicit raise reads fine
-    assert(ArrowIpc.readStream(spark, out, maxBytes = 1L << 20).count() == 2L)
-  }
-
   test("re-writing an existing feed (dest present) commits cleanly, new content wins") {
     import spark.implicits._
     val dir = Files.createTempDirectory("arrowrw").toString

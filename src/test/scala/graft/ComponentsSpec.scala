@@ -57,11 +57,11 @@ class ComponentsSpec extends AnyFunSuite {
 
   test("reliable checkpoint dir: same labels, checkpoint files actually written") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
-    try {
+    try org.apache.spark.CheckpointDirBridge.withCheckpointDir(spark.sparkContext, dir.getAbsolutePath) {
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L))
         .toDF("id_a", "id_b")
       val (labels, converged) = Components.connectedComponentsWithStatus(
-        edges, "id_a", "id_b", maxIter = 15, checkpointDir = Some(dir.getAbsolutePath),
+        edges, "id_a", "id_b", maxIter = 15,
         smallGraphMaxEdges = 0) // reliable checkpoints only exist on the distributed path
       assert(converged)
       val comps = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

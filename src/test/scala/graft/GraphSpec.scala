@@ -284,12 +284,14 @@ class GraphSpec extends AnyFunSuite {
     val edges = Seq(("1", "2"), ("2", "3"), ("3", "1"), ("1", "4"), ("4", "2"))
     val df = edges.toDF("src", "dst")
     val want = referencePageRank(edges, 7, 0.85)
-    for (limit <- Seq(Long.MaxValue, 0L)) {
-      val got = Graph.pageRank(df, "src", "dst", iterations = 7,
-          checkpointEvery = 2, checkpointDir = Some(ckpt), broadcastNodeLimit = limit)
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      for ((k, v) <- want)
-        assert(math.abs(got(k) - v) < 1e-9, s"limit=$limit node $k: ${got(k)} vs $v")
+    org.apache.spark.CheckpointDirBridge.withCheckpointDir(spark.sparkContext, ckpt) {
+      for (limit <- Seq(Long.MaxValue, 0L)) {
+        val got = Graph.pageRank(df, "src", "dst", iterations = 7,
+            checkpointEvery = 2, broadcastNodeLimit = limit)
+          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+        for ((k, v) <- want)
+          assert(math.abs(got(k) - v) < 1e-9, s"limit=$limit node $k: ${got(k)} vs $v")
+      }
     }
   }
 

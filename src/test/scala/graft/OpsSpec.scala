@@ -121,6 +121,13 @@ class OpsSpec extends AnyFunSuite {
       df.filter(col("id") > 800), col("t"), dim = 64).count()
     assert(sc.getPersistentRDDs.size <= b3 + 1,
       s"dsirScores leaked its bucket cache (${sc.getPersistentRDDs.size - b3} extra RDDs)")
+    // kendall returns a scalar, so it may leave no persisted RDD at all
+    // (ids, not counts: earlier results' RDDs may be collected meanwhile)
+    val b4 = sc.getPersistentRDDs.keySet
+    val tau = graft.ops.RankStats.kendall(df.select(col("id"), (col("id") % 7).as("m")), "id", "m")
+    assert(!tau.isNaN)
+    val added = sc.getPersistentRDDs.keySet -- b4
+    assert(added.isEmpty, s"kendall leaked its id-pinned checkpoint (RDDs ${added.mkString(", ")})")
   }
 
   test("decontaminate removes exactly the docs sharing a k-gram with the benchmark") {
