@@ -85,17 +85,13 @@ object Readers {
       case _ => meta.path
     }
     val df = meta.format match {
-      case Format.Csv => spark.read.options(csvOpts).csv(path)
-      case Format.Tsv => spark.read.options(csvOpts + ("sep" -> "\t")).csv(path)
-      case Format.Parquet => spark.read.parquet(path)
-      case Format.Orc => spark.read.orc(path)
-      case Format.JsonLines | Format.Json => spark.read.json(path)
       case Format.Binary => spark.read.format("binaryFile").load(path)
       case Format.Npz => Npz.read(spark, path)
       case Format.Pickle => Pickle.readRecords(spark, path)
       case Format.Arrow => ArrowIpc.readStream(spark, path)
       case Format.Yaml =>
-        throw new IllegalArgumentException("YAML is a config format; use Config.load")
+        throw new IllegalArgumentException("YAML is a config format; use PipelineConfig.fromFile")
+      case native => scan(spark, native, Seq(path))
     }
     // post-read schema filter, `Schema.filter_df` semantics
     // (`src/bears/util/schema.py:655-681`): prune to declared columns,
@@ -120,7 +116,14 @@ object Readers {
     require(paths.nonEmpty)
     val fmt = Format.detect(paths.head)
     require(paths.forall(Format.detect(_) == fmt), "mixed formats in multi-path read")
-    fmt match {
+    scan(spark, fmt, paths)
+  }
+
+  /** The Spark-native formats, each one scan over every path; the
+    * single-file codecs are not multi-path and refuse.
+    */
+  private def scan(spark: SparkSession, format: Format, paths: Seq[String]): DataFrame =
+    format match {
       case Format.Csv => spark.read.options(csvOpts).csv(paths: _*)
       case Format.Tsv => spark.read.options(csvOpts + ("sep" -> "\t")).csv(paths: _*)
       case Format.Parquet => spark.read.parquet(paths: _*)
@@ -128,7 +131,6 @@ object Readers {
       case Format.JsonLines | Format.Json => spark.read.json(paths: _*)
       case other => throw new IllegalArgumentException(s"multi-path $other")
     }
-  }
 
   // multiLine: the engine's own CSV sink quotes embedded newlines
   // (quoteAll-compatible default Univocity writer behavior), so the reader

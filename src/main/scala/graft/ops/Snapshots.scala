@@ -46,11 +46,21 @@ private[graft] object Snapshots {
     * `LogicalRDD` the checkpoint wrapped it in — or every round's blocks
     * linger until session teardown (O(iterations) leaked caches per call).
     *
+    * A reliable snapshot's checkpoint files are deleted too: Spark removes
+    * them only when `spark.cleaner.referenceTracking.cleanCheckpoints` is
+    * set, so every superseded round would otherwise stay on disk until the
+    * dir is cleaned.
+    *
     * Only safe once a SUCCESSOR snapshot has eagerly materialized: until then,
-    * downstream lineage still reads the old snapshot's blocks.
+    * downstream lineage still reads the old snapshot's blocks and files.
     */
   def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+    case lr: org.apache.spark.sql.execution.LogicalRDD =>
+      lr.rdd.unpersist(false)
+      lr.rdd.getCheckpointFile.foreach { f =>
+        val path = new org.apache.hadoop.fs.Path(f)
+        path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(path, true)
+      }
     case _ => df.unpersist(false)
   }
 }

@@ -1,10 +1,13 @@
 package graft.processor
 
+import java.nio.file.{Files, Paths}
+import scala.collection.immutable.VectorMap
 import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import graft.core.{MLSchema, MLType}
-import graft.io.{FileMetadata, Writers}
+import graft.io.{FileMetadata, Format, Writers}
 
 /** Pipeline config — the reference's YAML structure
   * (`src/bears/processor/_DataPipeline.py:146-162`): ordered steps of
@@ -92,7 +95,7 @@ object PipelineConfig {
     * deterministic round-trip" regression (list param, nested-pair param,
     * tuple fixpoint, corrupt-shape loudness).
     */
-  private def toScalaDeep(a: Any): Any = a match {
+  private[processor] def toScalaDeep(a: Any): Any = a match {
     case l: java.util.List[_] => l.asScala.toList.map(toScalaDeep)
     case m: java.util.Map[_, _] =>
       m.asScala.map { case (k, v) => k.toString -> toScalaDeep(v) }.toMap
@@ -111,7 +114,7 @@ object PipelineConfig {
     * the writer fails loud like the reader, instead of emitting bean
     * garbage for a param type nobody anticipated.
     */
-  private def toJavaDeep(a: Any): Any = a match {
+  private[processor] def toJavaDeep(a: Any): Any = a match {
     case (x, y) =>
       // ArrayList, not java.util.List.of — List.of rejects null elements,
       // and a YAML null inside a pair is representable
@@ -143,8 +146,8 @@ object PipelineConfig {
     case n: java.lang.Number => n // covers boxed Int/Long/Double + Scala Big*
     case b: java.lang.Boolean => b
     case other => throw new IllegalArgumentException(
-      s"config param holds unserializable value of ${other.getClass.getName}: $other — " +
-        "params must be scalars, Seqs/Maps, or pairs")
+      s"unserializable value of ${other.getClass.getName}: $other — " +
+        "config params and fitted state must be scalars, Seqs/Maps, or pairs")
   }
 
   private def asJava(config: PipelineConfig): java.util.Map[String, Any] = {
@@ -394,97 +397,35 @@ final class DataPipeline(
     }
   }
 
-  /** Serializable fitted state — replaces the reference's pickling
-    * (`_DataPipeline.py:1040-1064`) with explicit JSON.
+  /** Save the fitted state as one plain-value tree: `[{transformer,
+    * bindings: [{inputs: [..], output, state: {..}}]}]`, one entry per
+    * resolved step, each binding's `state` its processor's
+    * [[DataProcessor.state]]. The reference pickles the whole pipeline
+    * (`_DataPipeline.py:1040-1064`); graft saves the explicit state, data
+    * not code. A `.pkl`/`.pickle` path writes the tree through
+    * [[graft.io.Pickle]], so a Python tool can `pickle.load` it; any other
+    * path writes it as JSON.
     */
   def saveState(path: String): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.createArrayNode()
-    steps.foreach { s =>
-      val stepNode = mapper.createObjectNode()
-      stepNode.put("transformer", s.transformer)
-      val binds = mapper.createArrayNode()
-      s.bindings.foreach { case (ins, proc, o) =>
-        val b = mapper.createObjectNode()
-        // a comma inside a column name would mis-split on loadState
-        ins.foreach(n => require(!n.contains(","),
-          s"saveState: input column name contains ',': $n"))
-        b.put("inputs", ins.mkString(","))
-        b.put("output", o)
-        val st = mapper.createObjectNode()
-        proc.state.foreach { case (k, v) => st.put(k, v) }
-        b.set[com.fasterxml.jackson.databind.JsonNode]("state", st)
-        binds.add(b)
-      }
-      stepNode.set[com.fasterxml.jackson.databind.JsonNode]("bindings", binds)
-      node.add(stepNode)
-    }
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), mapper.writeValueAsString(node))
+    val tree = steps.map(s => VectorMap("transformer" -> s.transformer,
+      "bindings" -> s.bindings.map { case (ins, proc, o) =>
+        VectorMap("inputs" -> ins, "output" -> o, "state" -> proc.state)
+      }))
+    if (Format.detect(path) == Format.Pickle) graft.io.Pickle.dump(tree, path)
+    else Files.writeString(Paths.get(path),
+      new ObjectMapper().writeValueAsString(PipelineConfig.toJavaDeep(tree)))
   }
 
-  /** Restore fitted state into a freshly-configured pipeline. */
-  def loadState(path: String): this.type = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
-    restoreEntries((0 until node.size()).map { i =>
-      val stepNode = node.get(i)
-      val binds = stepNode.get("bindings")
-      (stepNode.get("transformer").asText(), (0 until binds.size()).map { j =>
-        val b = binds.get(j)
-        val stateMap = b.get("state").properties().asScala
-          .map(e => e.getKey -> e.getValue.asText()).toMap
-        (b.get("inputs").asText().split(",").toSeq, stateMap, b.get("output").asText())
-      })
-    })
-  }
-
-  /** Fitted state as a pickle blob — the reference serializes whole
-    * pipelines with (cloud)pickle (`_DataPipeline.py:1040-1064`); the JVM
-    * analog pickles the explicit fitted STATE (data, not code — the
-    * container-blob contract of `io.Pickle`), so a bears-side Python tool
-    * can `pickle.load` a graft pipeline's state and vice versa. Structure:
-    * `[{"transformer": str, "bindings": [{"inputs": [str], "output": str,
-    * "state": {str: str}}]}]` — same shape as the JSON form, but inputs
-    * travel as a real list (no comma-join restriction on column names).
+  /** Restore fitted state saved by [[saveState]] (or a Python
+    * `pickle.dump` of the same tree) into a freshly-configured pipeline,
+    * picking the codec from the path the same way.
     */
-  def saveStatePickle(path: String): Unit = {
-    val blob = steps.map { s =>
-      scala.collection.immutable.VectorMap[Any, Any](
-        "transformer" -> s.transformer,
-        "bindings" -> s.bindings.map { case (ins, proc, o) =>
-          scala.collection.immutable.VectorMap[Any, Any](
-            "inputs" -> ins, "output" -> o,
-            "state" -> scala.collection.immutable.VectorMap.from[Any, Any](proc.state))
-        })
-    }
-    graft.io.Pickle.dump(blob, path)
-  }
+  def loadState(path: String): this.type = restoreEntries(
+    if (Format.detect(path) == Format.Pickle) graft.io.Pickle.load(path)
+    else PipelineConfig.toScalaDeep(
+      new ObjectMapper().readValue(Files.readString(Paths.get(path)), classOf[Object])))
 
-  /** Restore fitted state from a pickle blob written by [[saveStatePickle]]
-    * (or by Python `pickle.dump` of the same structure).
-    */
-  def loadStatePickle(path: String): this.type = {
-    val blob = graft.io.Pickle.load(path) match {
-      case rows: Seq[_] => rows
-      case other => throw new IllegalArgumentException(
-        s"pipeline state pickle: expected a list of step dicts, got " +
-          s"${if (other == null) "None" else other.getClass.getSimpleName}")
-    }
-    restoreEntries(blob.map { step =>
-      val m = step.asInstanceOf[collection.Map[Any, Any]]
-      (m("transformer").toString,
-        m("bindings").asInstanceOf[Seq[Any]].map { bind =>
-          val b = bind.asInstanceOf[collection.Map[Any, Any]]
-          (b("inputs").asInstanceOf[Seq[Any]].map(_.toString),
-            b("state").asInstanceOf[collection.Map[Any, Any]]
-              .map { case (k, v) => k.toString -> v.toString }.toMap,
-            b("output").toString)
-        })
-    })
-  }
-
-  /** Shared restore: entries are `(transformer, bindings)` with each binding
-    * `(inputCols, fittedState, outputCol)`.
+  /** Restore the state tree [[saveState]] writes.
     *
     * Saved entries are the RESOLVED steps in config order (minus any
     * missing-column SKIPs), so each entry matches the next not-yet-consumed
@@ -494,20 +435,33 @@ final class DataPipeline(
     * steps with different removal lists) would restore BOTH with the first
     * step's params, silently changing the second step's behavior.
     */
-  private def restoreEntries(
-      entries: Seq[(String, Seq[(Seq[String], Map[String, String], String)])]): this.type = {
+  private def restoreEntries(tree: Any): this.type = {
+    def map(v: Any, what: String): collection.Map[Any, Any] = v match {
+      case m: collection.Map[_, _] => m.asInstanceOf[collection.Map[Any, Any]]
+      case other => throw new IllegalArgumentException(s"pipeline state: $what is $other, not a map")
+    }
     val out = Seq.newBuilder[ResolvedStep]
     var cursor = 0
-    entries.zipWithIndex.foreach { case ((name, binds), i) =>
+    FittedState.list(tree).zipWithIndex.foreach { case (entry, i) =>
+      val e = map(entry, s"entry $i")
+      val name = FittedState.string(e("transformer"))
       val found = config.steps.indexWhere(_.transformer == name, cursor)
       if (found < 0) throw new IllegalArgumentException(
         s"state references unknown (or out-of-order) step $name at entry $i")
       val cfg = config.steps(found)
       cursor = found + 1
-      out += ResolvedStep(name, binds.map { case (ins, stateMap, o) =>
+      out += ResolvedStep(name, FittedState.list(e("bindings")).map { binding =>
+        val b = map(binding, s"a binding of entry $i ($name)")
+        val ins = b("inputs") match {
+          case xs: collection.Seq[_] => FittedState.strings(xs)
+          case other => throw new IllegalArgumentException(
+            s"pipeline state: entry $i ($name) holds inputs $other, not a list: a file in the " +
+              "earlier format (comma-joined inputs, state flattened to strings); fit and save again")
+        }
         val proc = ProcessorRegistry.create(name, cfg.params)
-        proc.restore(stateMap)
-        (ins, proc, o)
+        proc.restore(map(b("state"), s"the state of entry $i ($name)")
+          .map { case (k, v) => FittedState.string(k) -> v }.toMap)
+        (ins, proc, FittedState.string(b("output")))
       })
     }
     resolved = Some(out.result())

@@ -67,12 +67,15 @@ trait DataProcessor extends Serializable {
   def outputMLType: MLType
   def missingColumnBehavior: MissingColumnBehavior = MissingColumnBehavior.Error
 
-  /** Serializable fitted state (JSON-friendly), for pipeline save/load —
-    * reference pickles the processor (`_DataPipeline.py:1040-1064`); we
-    * persist explicit state instead.
+  /** Fitted state as plain values, for pipeline save/load — the reference
+    * pickles the processor (`_DataPipeline.py:1040-1064`); graft saves
+    * explicit state instead. Values are strings, longs, doubles, booleans,
+    * null, and `Seq`s/`Map`s of those, the tree both the JSON and the pickle
+    * codec carry ([[DataPipeline.saveState]]); empty when unfitted or
+    * stateless. `restore` reads it back through [[FittedState]].
     */
-  def state: Map[String, String] = Map.empty
-  def restore(state: Map[String, String]): Unit = ()
+  def state: Map[String, Any] = Map.empty
+  def restore(state: Map[String, Any]): Unit = ()
 
   /** The fit over `inputCols` of `df` as an [[AggregateFit]], which a
     * pipeline fuses with its neighbours' into one `agg`; `None` for a
@@ -84,6 +87,39 @@ trait DataProcessor extends Serializable {
 
   protected def notFitted(what: String): Nothing =
     throw new IllegalStateException(s"$name: .fit() must be called before $what")
+}
+
+/** Readers for the plain values of [[DataProcessor.state]] as either codec
+  * gives them back: JSON holds Java `Integer`s where pickle holds `Long`s, and
+  * Jackson writes a non-finite double as the string `NaN`, `Infinity` or
+  * `-Infinity`. Anything else refuses loudly rather than restore a
+  * misread value.
+  */
+private[processor] object FittedState {
+  def list(v: Any): Seq[Any] = v match {
+    case xs: collection.Seq[_] => xs.toSeq
+    case other => refuse("a list", other)
+  }
+  def string(v: Any): String = v match {
+    case s: String => s
+    case other => refuse("a string", other)
+  }
+  def strings(v: Any): Seq[String] = list(v).map(string)
+  def long(v: Any): Long = v match {
+    case n: java.lang.Long => n
+    case n: java.lang.Integer => n.longValue
+    case other => refuse("an integer", other)
+  }
+  def double(v: Any): Double = v match {
+    case d: java.lang.Double => d
+    case "NaN" => Double.NaN
+    case "Infinity" => Double.PositiveInfinity
+    case "-Infinity" => Double.NegativeInfinity
+    case other => refuse("a double", other)
+  }
+  private def refuse(what: String, v: Any): Nothing =
+    throw new IllegalArgumentException(s"fitted state: expected $what, got " +
+      (if (v == null) "null" else s"${v.getClass.getSimpleName} $v"))
 }
 
 /** 1:1 processor shape (`src/bears/processor/_SingleColumnProcessor.py:15-65`). */

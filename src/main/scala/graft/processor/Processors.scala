@@ -174,17 +174,10 @@ object Processors {
       concat_ws(sep, parts: _*)
     }
 
-    override def state: Map[String, String] =
-      orderedCols.map { c =>
-        // a comma inside a column name would mis-split on restore
-        c.foreach(n => require(!n.contains(","),
-          s"TextConcatenation state: column name contains ',': $n"))
-        Map("ordered_cols" -> c.mkString(","))
-      }.getOrElse(Map.empty)
-    override def restore(s: Map[String, String]): Unit =
-      // "".split(",") is Array(""), not empty -- keep the round-trip exact
-      s.get("ordered_cols").foreach(v =>
-        orderedCols = Some(if (v.isEmpty) Seq.empty else v.split(",").toSeq))
+    override def state: Map[String, Any] =
+      orderedCols.fold(Map.empty[String, Any])(c => Map("ordered_cols" -> c))
+    override def restore(s: Map[String, Any]): Unit =
+      s.get("ordered_cols").foreach(v => orderedCols = Some(FittedState.strings(v)))
   }
 
   // ---- categorical (§2.10) ---------------------------------------------
@@ -256,23 +249,13 @@ object Processors {
       element_at(typedLit(enc.map { case (l, i) => i -> l }.toMap), in.cast("long"))
     }
 
-    // state: 0x1f separates label from code, 0x1e separates entries.
-    // Labels are arbitrary DATA values -- one containing a separator would
-    // silently corrupt the round-trip (restore would mis-split or
-    // MatchError), so the writer fails loud naming the label instead.
-    override def state: Map[String, String] =
-      encoding.map { e =>
-        e.foreach { case (l, _) =>
-          require(!l.exists(c => c == '\u001e' || c == '\u001f'),
-            s"LabelEncoding state: label contains a reserved separator " +
-              s"(0x1e/0x1f): ${l.map(c => f"$c%c(${c.toInt}%#x)").mkString}")
-        }
-        Map("labels" -> e.map { case (l, i) => s"$l\u001f$i" }.mkString("\u001e"))
-      }.getOrElse(Map.empty)
-    override def restore(s: Map[String, String]): Unit = s.get("labels").foreach { v =>
-      encoding = Some(v.split('\u001e').toSeq.map { kv =>
-        val Array(l, i) = kv.split('\u001f'); l -> i.toLong
-      })
+    override def state: Map[String, Any] = encoding.fold(Map.empty[String, Any])(e =>
+      Map("labels" -> e.map(_._1), "codes" -> e.map(_._2)))
+    override def restore(s: Map[String, Any]): Unit = s.get("labels").foreach { l =>
+      val labels = FittedState.strings(l)
+      val codes = FittedState.list(s("codes")).map(FittedState.long)
+      require(labels.size == codes.size, s"$name state: ${labels.size} labels, ${codes.size} codes")
+      encoding = Some(labels.zip(codes))
     }
   }
   object LabelEncoding {
@@ -344,8 +327,9 @@ object Processors {
       val v = imputed.getOrElse(notFitted("transform"))
       coalesce(in, lit(v))
     }
-    override def state: Map[String, String] = imputed.map(v => Map("imputed" -> v)).getOrElse(Map.empty)
-    override def restore(s: Map[String, String]): Unit = s.get("imputed").foreach(v => imputed = Some(v))
+    override def state: Map[String, Any] = imputed.fold(Map.empty[String, Any])(v => Map("imputed" -> v))
+    override def restore(s: Map[String, Any]): Unit =
+      s.get("imputed").foreach(v => imputed = Some(FittedState.string(v)))
   }
 
   // ---- numeric (§2.10) --------------------------------------------------
@@ -380,17 +364,19 @@ object Processors {
         case "constant" => return Some(AggregateFit.Stateless)
         case other => throw new IllegalArgumentException(s"strategy: $other")
       }
-      Some(AggregateFit(Seq(agg.cast("double")),
-        v => imputed = Option(v.head).map(_.asInstanceOf[Double])))
+      // a NaN fit (Inf - Inf in avg gives a sign-set NaN) is stored as
+      // Java's canonical NaN, the one NaN both state codecs carry, so a
+      // loaded pipeline imputes the same bits
+      Some(AggregateFit(Seq(agg.cast("double")), v => imputed = Option(v.head)
+        .map(_.asInstanceOf[Double]).map(d => if (d.isNaN) Double.NaN else d)))
     }
     def transform(in: Column): Column = {
       val v = imputed.getOrElse(notFitted("transform"))
       coalesce(in, lit(v))
     }
-    override def state: Map[String, String] =
-      imputed.map(v => Map("imputed" -> v.toString)).getOrElse(Map.empty)
-    override def restore(s: Map[String, String]): Unit =
-      s.get("imputed").foreach(v => imputed = Some(v.toDouble))
+    override def state: Map[String, Any] = imputed.fold(Map.empty[String, Any])(v => Map("imputed" -> v))
+    override def restore(s: Map[String, Any]): Unit =
+      s.get("imputed").foreach(v => imputed = Some(FittedState.double(v)))
   }
 
   // ---- vector (§2.10) ---------------------------------------------------

@@ -41,7 +41,7 @@ object ScalableEncoders {
     * Fitted-state serialization is distributed too: set `state_path` to a
     * parquet location and `state`/`restore` write/read the code table there;
     * without it, saving a pipeline containing this processor refuses loudly
-    * (the table does not fit in a JSON string by design).
+    * (the table does not fit in a driver-side state file by design).
     */
   final class DenseRankLabelEncoding(params: Map[String, Any]) extends FrameLevelProcessor {
     import Processors.P._
@@ -138,18 +138,18 @@ object ScalableEncoders {
       joined.withColumn(outputCol, col(labelC)).drop(labelC, codeC)
     }
 
-    override def state: Map[String, String] = codes match {
+    override def state: Map[String, Any] = codes match {
       case None => Map.empty
       case Some(table) =>
         val p = statePath.getOrElse(throw new IllegalStateException(
           s"$name: the fitted code table is DISTRIBUTED (that is the point of this " +
-            "processor) and cannot serialize into pipeline JSON — set the state_path " +
+            "processor) and cannot serialize into the pipeline state — set the state_path " +
             "param to a parquet location, or use LabelEncoding for driver-sized label spaces"))
         table.write.mode("overwrite").parquet(p)
         Map("state_path" -> p)
     }
-    override def restore(s: Map[String, String]): Unit = s.get("state_path").foreach { p =>
-      codes = Some(org.apache.spark.sql.SparkSession.active.read.parquet(p))
+    override def restore(s: Map[String, Any]): Unit = s.get("state_path").foreach { p =>
+      codes = Some(org.apache.spark.sql.SparkSession.active.read.parquet(FittedState.string(p)))
     }
   }
 

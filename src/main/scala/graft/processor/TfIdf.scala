@@ -160,18 +160,14 @@ final class TfIdfVectorization(params: Map[String, Any]) extends FrameLevelProce
   private def size_of_matches(arr: Column, t: Column): Column =
     size(filter(arr, x => x === t)).cast("double")
 
-  override def state: Map[String, String] =
-    vocab.map(v => Map("vocab" -> v.map { case (t, (i, f)) => s"$t\u001f$i\u001f$f" }
-      .mkString("\u001e"))).getOrElse(Map.empty)
-  override def restore(s: Map[String, String]): Unit = s.get("vocab").foreach { v =>
-    // empty vocabulary (reachable: minDf > doc count leaves zero terms)
-    // serializes to "" -- "".split returns Array(""), whose lone entry would
-    // MatchError on the 3-field split below
-    vocab = Some(
-      if (v.isEmpty) Seq.empty
-      else v.split('\u001e').toSeq.map { e =>
-        val Array(t, i, f) = e.split('\u001f'); t -> (i.toInt, f.toDouble)
-      })
+  /** The vocabulary as a list of (term, index, idf) lists. */
+  override def state: Map[String, Any] = vocab.fold(Map.empty[String, Any])(v =>
+    Map("vocab" -> v.map { case (t, (i, f)) => Seq(t, i.toLong, f) }))
+  override def restore(s: Map[String, Any]): Unit = s.get("vocab").foreach { v =>
+    vocab = Some(FittedState.list(v).map(e => FittedState.list(e) match {
+      case Seq(t, i, f) => FittedState.string(t) -> (FittedState.long(i).toInt, FittedState.double(f))
+      case other => throw new IllegalArgumentException(s"$name state: vocabulary entry $other")
+    }))
   }
 }
 

@@ -1283,7 +1283,7 @@ object LlmOpsQueries {
       -- shingles but the engine still bands its all-null signature — the
       -- band hash degrades to hash60('') (concat_ws skips nulls), making
       -- null-text docs mutual candidates BY CONTRACT (they are mutual
-      -- exact duplicates; see Dedup.candidatePlan). array_to_string skips
+      -- exact duplicates; see Dedup.minhashCandidates). array_to_string skips
       -- NULLs the same way, so the grid reproduces that constant.
       sig AS (
         SELECT c.doc_id, c.side, r.h, s.sig

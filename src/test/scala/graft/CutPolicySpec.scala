@@ -30,18 +30,29 @@ class CutPolicySpec extends AnyFunSuite {
   private def deleteTree(dir: Path): Unit =
     Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
 
-  /** `op` digested once in local mode and once with a fresh checkpoint dir. */
-  private def checkFamily(name: String)(op: => DataFrame): Unit = {
+  private def checkpointDirs(dir: Path): Seq[Path] =
+    Files.walk(dir).iterator().asScala
+      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("rdd-")).toSeq
+
+  /** `op` digested once in local mode and once with a fresh checkpoint dir;
+    * `resultOnly`: no checkpoint but the result's stays on disk.
+    */
+  private def checkFamily(name: String, resultOnly: Boolean = false)(op: => DataFrame): Unit = {
     clearCaches()
     val local = ResultDigest.digest(op)
     val dir = Files.createTempDirectory("graft-cut")
     try {
       clearCaches()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       val reliable = withCheckpointDir(spark.sparkContext, dir.toString)(ResultDigest.digest(op))
       assert(regularFiles(dir).nonEmpty, s"$name wrote no checkpoint files under the dir")
       assert(reliable.matches(local), s"$name: reliable $reliable vs local $local")
-      val held = spark.sparkContext.getPersistentRDDs.size
+      val held = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
       assert(held == 0, s"$name left $held persisted RDDs in reliable mode")
+      if (resultOnly) {
+        val kept = checkpointDirs(dir)
+        assert(kept.size == 1, s"$name left ${kept.size} checkpoint dirs: ${kept.mkString(", ")}")
+      }
     } finally {
       clearCaches()
       deleteTree(dir)
@@ -55,7 +66,7 @@ class CutPolicySpec extends AnyFunSuite {
 
   test("connectedComponents on the distributed path cuts reliably under a checkpoint dir") {
     val chain = (0L until 60L).map(i => (i, i + 1)).toDF("a", "b")
-    checkFamily("connectedComponents")(
+    checkFamily("connectedComponents", resultOnly = true)(
       Components.connectedComponents(chain, "a", "b", maxIter = 15, smallGraphMaxEdges = 0L))
   }
 
@@ -77,8 +88,10 @@ class CutPolicySpec extends AnyFunSuite {
   test("pageRank on the sort-merge tier cuts reliably under a checkpoint dir") {
     val edges = (0L until 40L).flatMap(i => Seq((i, (i * 7 + 1) % 40), (i, (i + 3) % 40)))
       .toDF("src", "dst")
-    checkFamily("pageRank")(
-      Graph.pageRank(edges, "src", "dst", iterations = 6, checkpointEvery = 2,
+    // no dangling node, so the snapshot window is 3 rounds: round 6's
+    // snapshot supersedes round 3's
+    checkFamily("pageRank", resultOnly = true)(
+      Graph.pageRank(edges, "src", "dst", iterations = 6, checkpointEvery = 1,
         broadcastNodeLimit = 0L))
   }
 

@@ -267,10 +267,11 @@ class GraphSpec extends AnyFunSuite {
     for (limit <- Seq(Long.MaxValue, 0L)) { // broadcast fork, then SMJ fork
       spark.catalog.clearCache()
       sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      val before = sc.getPersistentRDDs.keySet
       val ranks = Graph.pageRank(edges, "src", "dst", iterations = 6,
         broadcastNodeLimit = limit)
       ranks.count()
-      val held = sc.getPersistentRDDs.size
+      val held = (sc.getPersistentRDDs.keySet -- before).size
       assert(held <= 1,
         s"$held persisted RDDs after pageRank (broadcastNodeLimit=$limit) — internal caches leaked")
     }
@@ -377,12 +378,13 @@ class GraphSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     spark.catalog.clearCache()
     sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val before = sc.getPersistentRDDs.keySet
     val chain = (0L until 400L).map(i => (i, i + 1)).toDF("a", "b")
     val comps = graft.ops.Components.connectedComponents(chain, "a", "b",
       maxIter = 20, smallGraphMaxEdges = 0L)
     import org.apache.spark.sql.functions.{col, count_distinct}
     assert(comps.select(count_distinct(col("component"))).head().getLong(0) == 1L)
-    val held = sc.getPersistentRDDs.size
+    val held = (sc.getPersistentRDDs.keySet -- before).size
     assert(held <= 1,
       s"$held persisted RDDs after connectedComponents — superseded checkpoints leaked")
   }

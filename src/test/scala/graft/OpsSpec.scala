@@ -99,35 +99,37 @@ class OpsSpec extends AnyFunSuite {
     val docs = (1L to 80L).map(i => (i, s"some document body $i with shared words")) ++
       Seq((900L, "alpha beta gamma delta epsilon"), (901L, "alpha beta gamma delta zeta"))
     val df = docs.toDF("id", "t")
+    // new RDD ids, not counts: the map holds weak values, so an earlier
+    // result's RDD collected meanwhile would hide a leaked one
+    def added(before: Set[Int]): Set[Int] = sc.getPersistentRDDs.keySet.toSet -- before
+    val b0 = sc.getPersistentRDDs.keySet.toSet
     val pairs = Dedup.verifiedNearDupPairs(df, col("t"), col("id"), threshold = 0.3)
     pairs.count()
-    val leaked = sc.getPersistentRDDs.size
+    val leaked = added(b0).size
     // verifiedNearDupPairs materializes exactly one checkpointed result
     assert(leaked <= 1, s"$leaked persisted RDDs after verifiedNearDupPairs (inputs not released)")
     val cands = Dedup.minhashCandidates(df, col("t"), col("id"), exactPrepass = true)
     cands.count()
-    assert(sc.getPersistentRDDs.size <= 2,
-      s"${sc.getPersistentRDDs.size} persisted RDDs after minhashCandidates (prepass caches not released)")
-    val before = sc.getPersistentRDDs.size
+    assert(added(b0).size <= 2,
+      s"${added(b0).size} persisted RDDs after minhashCandidates (prepass caches not released)")
+    val before = sc.getPersistentRDDs.keySet.toSet
     TextAnalysis.duplicateSpanFraction(df, col("id"), col("t")).count()
-    assert(sc.getPersistentRDDs.size <= before + 1,
-      s"duplicateSpanFraction leaked its gram cache (${sc.getPersistentRDDs.size - before} extra RDDs)")
-    val b2 = sc.getPersistentRDDs.size
+    assert(added(before).size <= 1,
+      s"duplicateSpanFraction leaked its gram cache (${added(before).size} extra RDDs)")
+    val b2 = sc.getPersistentRDDs.keySet.toSet
     TextAnalysis.removeDuplicateSpans(df, col("id"), col("t"), k = 3).count()
-    assert(sc.getPersistentRDDs.size <= b2 + 1,
-      s"removeDuplicateSpans leaked its token cache (${sc.getPersistentRDDs.size - b2} extra RDDs)")
-    val b3 = sc.getPersistentRDDs.size
+    assert(added(b2).size <= 1,
+      s"removeDuplicateSpans leaked its token cache (${added(b2).size} extra RDDs)")
+    val b3 = sc.getPersistentRDDs.keySet.toSet
     TextAnalysis.dsirScores(df, col("id"), col("t"),
       df.filter(col("id") > 800), col("t"), dim = 64).count()
-    assert(sc.getPersistentRDDs.size <= b3 + 1,
-      s"dsirScores leaked its bucket cache (${sc.getPersistentRDDs.size - b3} extra RDDs)")
+    assert(added(b3).size <= 1,
+      s"dsirScores leaked its bucket cache (${added(b3).size} extra RDDs)")
     // kendall returns a scalar, so it may leave no persisted RDD at all
-    // (ids, not counts: earlier results' RDDs may be collected meanwhile)
-    val b4 = sc.getPersistentRDDs.keySet
+    val b4 = sc.getPersistentRDDs.keySet.toSet
     val tau = graft.ops.RankStats.kendall(df.select(col("id"), (col("id") % 7).as("m")), "id", "m")
     assert(!tau.isNaN)
-    val added = sc.getPersistentRDDs.keySet -- b4
-    assert(added.isEmpty, s"kendall leaked its id-pinned checkpoint (RDDs ${added.mkString(", ")})")
+    assert(added(b4).isEmpty, s"kendall leaked its id-pinned checkpoint (RDDs ${added(b4).mkString(", ")})")
   }
 
   test("decontaminate removes exactly the docs sharing a k-gram with the benchmark") {
@@ -1642,10 +1644,12 @@ class OpsSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     spark.catalog.clearCache()
     sc.getPersistentRDDs.values.foreach(_.unpersist(true))
+    val before = sc.getPersistentRDDs.keySet
     TextAnalysis.dsirScoresWithin(docs, col("doc_id"), col("text"),
       col("lang") === "en", dim = 64).count()
-    assert(sc.getPersistentRDDs.size <= 1,
-      s"dsirScoresWithin leaked caches (${sc.getPersistentRDDs.size} persisted RDDs)")
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size <= 1,
+      s"dsirScoresWithin leaked caches (${added.size} persisted RDDs)")
   }
 
   test("lshPlan: midpoint tracks the target threshold, bands divide the signature") {

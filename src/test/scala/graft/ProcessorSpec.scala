@@ -144,8 +144,6 @@ class ProcessorSpec extends AnyFunSuite {
     val p = new TfIdfVectorization(Map("output_sparse" -> true, "min_df" -> "5"))
     p.fit(df, "t")
     assert(p.fittedVocabulary.isEmpty)
-    // regression: "" .split gave Array(""), whose lone entry MatchError'd
-    // on the 3-field parse in restore
     val p2 = new TfIdfVectorization(Map("output_sparse" -> true))
     p2.restore(p.state)
     assert(p2.fittedVocabulary.isEmpty)
@@ -153,21 +151,18 @@ class ProcessorSpec extends AnyFunSuite {
     assert(out.getInt(0) == 0)
   }
 
-  test("LabelEncoding state fails loud on labels containing reserved separators") {
+  test("LabelEncoding state round-trips labels holding 0x1e, 0x1f and ','") {
+    // labels are arbitrary data values, exported as a list: no character
+    // is reserved
+    val labels = Seq("ok", "bad\u001flabel", "rec\u001esep", "a,b")
     val enc = new LabelEncoding(Map("encoding_range" -> "one_to_n"))
-    // labels are arbitrary data values: a 0x1f inside one would silently
-    // mis-split (or MatchError) on restore — the writer must reject it
-    val df = Seq("ok", "badlabel").toDF("l")
-    enc.fit(df, "l")
-    val e = intercept[IllegalArgumentException](enc.state)
-    assert(e.getMessage.contains("reserved separator"))
-    // clean labels still round-trip
-    val good = new LabelEncoding(Map("encoding_range" -> "one_to_n"))
-    good.fit(Seq("x", "y").toDF("l"), "l")
+    enc.fit(labels.toDF("l"), "l")
     val restored = new LabelEncoding(Map("encoding_range" -> "one_to_n"))
-    restored.restore(good.state)
-    assert(col1(Seq("x", "y", "z").toDF("l")
-      .withColumn("o", restored.transform($"l")), "o") == Seq(1L, 2L, 0L))
+    restored.restore(enc.state)
+    val probe = (labels :+ "z").toDF("l")
+    assert(col1(probe.withColumn("o", restored.transform($"l")), "o") ==
+      col1(probe.withColumn("o", enc.transform($"l")), "o"))
+    assert(col1(probe.withColumn("o", restored.transform($"l")), "o") == Seq(3L, 2L, 4L, 1L, 0L))
   }
 
   test("pipeline config parsing, MLType pattern matching, save/load state") {
@@ -256,19 +251,39 @@ class ProcessorSpec extends AnyFunSuite {
     val pipe = new DataPipeline(cfg)
     val out = pipe.fitTransform(df, schema)
     val tmp = java.nio.file.Files.createTempFile("pipe", ".pkl").toString
-    pipe.saveStatePickle(tmp)
+    pipe.saveState(tmp)
     // the blob IS the documented structure (list of step dicts, inputs as a
-    // real list — no comma-join restriction)
+    // real list)
     val blob = graft.io.Pickle.load(tmp).asInstanceOf[Seq[Any]]
       .map(_.asInstanceOf[collection.Map[Any, Any]])
     assert(blob.map(_("transformer")) == Seq("LabelEncoding", "CaseTransformation"))
     val binds = blob.head("bindings").asInstanceOf[Seq[Any]]
       .map(_.asInstanceOf[collection.Map[Any, Any]])
     assert(binds.head("inputs").isInstanceOf[Seq[_]])
-    val pipe2 = new DataPipeline(cfg).loadStatePickle(tmp)
+    assert(binds.head("state") == Map("labels" -> Seq("a", "b"), "codes" -> Seq(1L, 2L)))
+    val pipe2 = new DataPipeline(cfg).loadState(tmp)
     val out2 = pipe2.transform(df, schema)
     assert(out2.select("cat_enc", "up").collect().toSeq ==
       out.select("cat_enc", "up").collect().toSeq)
+  }
+
+  test("loadState refuses a state file in the earlier string-flattened format") {
+    // the earlier JSON form comma-joined the inputs and flattened every
+    // processor's state into one separator-encoded string
+    val cfg = PipelineConfig.fromYaml(
+      """pipeline:
+        |  - input: [cat]
+        |    transformer: LabelEncoding
+        |    output: "{col_name}_enc"
+        |""".stripMargin)
+    import java.util.{List => JList, Map => JMap}
+    val tmp = java.nio.file.Files.createTempFile("pipe_old", ".json")
+    java.nio.file.Files.writeString(tmp, new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(JList.of(JMap.of("transformer", "LabelEncoding", "bindings",
+        JList.of(JMap.of("inputs", "cat", "output", "cat_enc",
+          "state", JMap.of("labels", "a\u001f1\u001eb\u001f2")))))))
+    val e = intercept[IllegalArgumentException](new DataPipeline(cfg).loadState(tmp.toString))
+    assert(e.getMessage.contains("not a list") && e.getMessage.contains("earlier format"), e.getMessage)
   }
 
   test("loadState restores same-name steps by position, not first-match params") {
