@@ -26,9 +26,9 @@ import java.nio.file.{Files, Paths}
   *   - `x_arrow_shard_roundtrip`: [[graft.io.ArrowIpc.writeStreamSharded]]
   *     (executor-side `FileSystem.create` + task-commit rename + driver
   *     existence re-check) → `readStreamSharded` (one shard = one task);
-  *   - `x_pagerank_smj_forced`: the distributed SMJ PageRank loop with both
-  *     small-graph admissions zeroed, so the per-round join/agg pipeline
-  *     shuffles across executor JVMs even at validation scale;
+  *   - `x_pagerank_smj_forced`: the distributed SMJ PageRank loop
+  *     ([[graft.ops.Graph.pageRankSortMerge]]), so the per-round join/agg
+  *     pipeline shuffles across executor JVMs even at validation scale;
   *   - `x_spread_barrier`: [[graft.ops.Scale.spreadForCompute]] +
   *     [[graft.functions.OptBarrier]] fencing, exercising the custom
   *     barrier expression through executor-side codegen.
@@ -59,9 +59,8 @@ object ClusterValidate {
       val e = GraftSession.table(s, dir, "lineitem")
         .select(concat(lit("o"), col("l_orderkey")).as("src"),
           concat(lit("p"), col("l_partkey")).as("dst"))
-      // both admissions zeroed -> the web-scale SMJ loop tier, even here
-      graft.ops.Graph.pageRank(e, "src", "dst", iterations = 3,
-        broadcastNodeLimit = 0L, smallGraphMaxBytes = 0L)
+      // the web-scale sort-merge loop, even on this small graph
+      graft.ops.Graph.pageRankSortMerge(e, "src", "dst", iterations = 3)
     },
     "x_spread_barrier" -> { (s: SparkSession, dir: String) =>
       import org.apache.spark.sql.functions._

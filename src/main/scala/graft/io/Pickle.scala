@@ -453,7 +453,7 @@ object Pickle {
     case big: BigInt => writeBigInt(out, big)
     case d: Double =>
       out.write(Op.BINFLOAT)
-      out.write(ByteBuffer.allocate(8).putLong(java.lang.Double.doubleToLongBits(d)).array())
+      out.write(ByteBuffer.allocate(8).putLong(java.lang.Double.doubleToRawLongBits(d)).array())
     case f: Float =>
       writeValue(out, f.toDouble)
     case s: String =>

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Link-graph analytics for corpus curation.
@@ -11,31 +11,23 @@ import org.apache.spark.sql.functions._
   * surface has no graph operator, so this is parity-plus alongside
   * [[Components.connectedComponents]].
   *
-  * PageRank here is the standard damped power iteration expressed as
-  * DataFrame algebra — each round is ONE contribution join (edges ⋈ ranks;
-  * the edge list is shuffled onto the join key once and cached, so no round
-  * moves an edge) + one sum aggregate. The join strategy is chosen ONCE
-  * from the measured |V|, mirroring Catalyst's stats-driven selection:
-  * small rank frames broadcast (map-side hash probe, no rank-side exchange,
-  * rank vector held on the driver between rounds), web-scale ones
-  * sort-merge against the sorted cached
-  * edges with the connectedComponents lineage discipline — an eager
-  * [[Snapshots.cut]] every few rounds (reliable whenever the application
-  * has a checkpoint dir) so a 50-round job neither re-executes its history
-  * nor overflows the planner. Only (node, double) pairs ever shuffle;
-  * edges are persisted once and released before returning.
+  * PageRank here is the standard damped power iteration, run by one of two
+  * loops chosen ONCE from a one-pass profile of the graph, mirroring
+  * Catalyst's stats-driven join selection:
+  *   - a graph whose rank vector and packed edge list fit the driver budgets
+  *     ([[admitsDriverLoop]]) is gathered once into int-indexed driver
+  *     arrays, and every round is a zero-job driver sweep;
+  *   - anything bigger runs as DataFrame algebra — each round ONE
+  *     sort-merge contribution join (edges ⋈ ranks; the edge list is
+  *     shuffled onto the join key once and cached, so no round moves an
+  *     edge) + one sum aggregate, with the connectedComponents lineage
+  *     discipline: an eager [[Snapshots.cut]] every few rounds (reliable
+  *     whenever the application has a checkpoint dir) so a 50-round job
+  *     neither re-executes its history nor overflows the planner. Only
+  *     (node, double) pairs ever shuffle; edges are persisted once and
+  *     released before returning.
   */
 object Graph {
-
-  /** One (node, rank/outdeg) contribution row of the driver-held rank
-    * vector — a case class so [[pageRankDriverVector]]'s per-round
-    * LocalRelation carries its column names without a Project on top (see
-    * the note at its use site). Two variants, one per node-id regime (the
-    * loop keeps INTEGRAL ids native end-to-end — see the note at the
-    * idType fork in [[pageRankLoop]]).
-    */
-  private[graft] final case class RankContribution(node: String, w: Double)
-  private[graft] final case class RankContributionL(node: java.lang.Long, w: Double)
 
   /** In/out degree per node — the one-pass graph profile run before
     * choosing iteration counts and skew mitigations (a power-law hub
@@ -53,19 +45,16 @@ object Graph {
   /** Personalized PageRank: teleportation lands on the `sources` node set
     * (uniformly) instead of all nodes — rank becomes proximity TO the
     * sources (seed-expansion for domain curation: "pages near these known-
-    * good hosts"). Same loop, shuffles and lifecycle as [[pageRank]]; the
+    * good hosts"). Same loops, shuffles and lifecycle as [[pageRank]]; the
     * base term is per-node (source or not) and dangling mass returns to
     * the sources. Implemented by generalizing the teleport vector.
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
       sources: Seq[String], iterations: Int = 10, damping: Double = 0.85,
-      checkpointEvery: Int = 4, edgesDistinct: Boolean = false,
-      broadcastNodeLimit: Long = defaultBroadcastNodeLimit,
-      smallGraphMaxBytes: Long = defaultSmallGraphMaxBytes,
+      edgesDistinct: Boolean = false,
       precomputedDegrees: Option[DataFrame] = None): DataFrame =
-    pageRankImpl(edges, srcCol, dstCol, iterations, damping, checkpointEvery,
-      Some(sources), edgesDistinct, broadcastNodeLimit,
-      smallGraphMaxBytes, precomputedDegrees)
+    pageRankImpl(edges, srcCol, dstCol, iterations, damping, Some(sources),
+      edgesDistinct, precomputedDegrees, driverLoopAllowed = true)
 
   /** Damped PageRank over a directed edge list.
     *
@@ -77,12 +66,19 @@ object Graph {
     * Parallel edges are collapsed (`distinct`) before degrees are taken,
     * unless the caller asserts `edgesDistinct`.
     *
-    * Scale shape: contributions shuffle `(dst, rank/deg)` pairs — 16 bytes
-    * per edge per round after map-side partial aggregation; the dangling
-    * total rides INSIDE each round's plan as a broadcast 1-row aggregate
-    * (no per-round driver action; graphs with no dangling nodes skip the
-    * branch entirely, probed once). Degrees and the node set are computed
-    * once and cached for the whole loop.
+    * Loop choice: one profile aggregate over the degree frame measures |V|,
+    * the average id bytes and |E|. When both the rank vector and the packed
+    * edge list fit the driver budgets ([[admitsDriverLoop]]: 1M nodes,
+    * 64 MB of rank rows, 16 B per edge within 256 MB) the loop runs on the
+    * driver with zero Spark jobs per round; otherwise it runs the
+    * sort-merge loop. Both loops compute the same ranks.
+    *
+    * Scale shape of the sort-merge loop: contributions shuffle
+    * `(dst, rank/deg)` pairs — 16 bytes per edge per round after map-side
+    * partial aggregation; the dangling total rides INSIDE each round's plan
+    * as a broadcast 1-row aggregate (no per-round driver action; graphs
+    * with no dangling nodes skip the branch entirely, probed once). Degrees
+    * and the node set are computed once and cached for the whole loop.
     *
     * @param edges        (srcCol, dstCol) directed edge list.
     * @param iterations   fixed round count (PageRank at fixed iterations is
@@ -97,33 +93,28 @@ object Graph {
     *                      aggregate over the edge list just to re-prove it
     *                      is a wasted pass at any scale. The assertion also
     *                      lets the edge lineage stay LAZY (it evaluates
-    *                      more than once: the degree pass, then the fork's
-    *                      one-shot gather or re-layout), so it must be
-    *                      DETERMINISTIC across evaluations — true of every
-    *                      frame this engine produces (seeded sample
-    *                      included), NOT true of `limit()` on unordered
-    *                      input. With a nondeterministic lineage the result
-    *                      is undefined; every tier guards loudly — the
-    *                      driver-local tier via its gather-count guard, the
-    *                      distributed tiers via a cross-tier |E| re-check
-    *                      at their materializing count (a mismatch vs the
-    *                      profile pass throws instead of silently
+    *                      more than once: the degree pass, then the driver
+    *                      loop's one-shot gather or the sort-merge loop's
+    *                      re-layout), so it must be DETERMINISTIC across
+    *                      evaluations — true of every frame this engine
+    *                      produces (seeded sample included), NOT true of
+    *                      `limit()` on unordered input. With a
+    *                      nondeterministic lineage the result is undefined;
+    *                      both loops guard loudly — the driver loop via its
+    *                      gather-count guard, the sort-merge loop via an
+    *                      |E| re-check at its re-layout count (a mismatch vs
+    *                      the profile pass throws instead of silently
     *                      dropping/duplicating edges). Callers with such
     *                      inputs should checkpoint first or leave
     *                      edgesDistinct=false (the dedup path's layout
     *                      cache pins one materialization).
-    * @param broadcastNodeLimit rank frames with at most this many nodes take
-    *                      the broadcast-join loop (see below); larger graphs
-    *                      take the exchange-free sort-merge loop. 0 forces
-    *                      the SMJ path (spec hook).
     * @return (node, rank) — ranks sum to 1 over all distinct nodes.
     *
-    * Conf scoping: the loop adjusts AQE, the runtime bloom filter, and (on
-    * the small-graph gather tier) `spark.sql.shuffle.partitions` — but on a
-    * CLONED session (`newSession()`, sharing the SparkContext and cache
-    * manager), never the caller's. Queries planned concurrently on the
-    * caller's session are unaffected, and the result frame is re-bound to
-    * the caller's session before returning, so downstream plans see the
+    * Conf scoping: the loop turns off AQE and the runtime bloom filter —
+    * but on a CLONED session (`newSession()`, sharing the SparkContext and
+    * cache manager), never the caller's. Queries planned concurrently on
+    * the caller's session are unaffected, and the result frame is re-bound
+    * to the caller's session before returning, so downstream plans see the
     * caller's own conf.
     *
     * @param precomputedDegrees caller-supplied `(node, out_degree)` frame —
@@ -143,86 +134,74 @@ object Graph {
     *                      |E| under them). TRUSTED input: per-node errors
     *                      are garbage-in-garbage-out. Total-count
     *                      inconsistencies fail loudly — Σ out_degree is
-    *                      cross-checked against the edges actually
-    *                      gathered/laid out by every tier (the same |E|
-    *                      guards that police nondeterministic lineage) —
-    *                      and a degrees frame MISSING a node that appears
-    *                      only as a dst (zero out-degree, so it slips the
-    *                      Σdeg=|E| check) fails the driver/broadcast tiers
-    *                      with a named require at the gather. The SMJ tier
-    *                      cannot detect that case without re-deriving the
-    *                      node set from 2|E| endpoint rows (the exact pass
-    *                      this parameter exists to skip): there a missing
-    *                      dst-only node is silently absent from the output
-    *                      and shifts teleport mass — supply a COMPLETE
-    *                      node set.
+    *                      cross-checked against the edges each loop
+    *                      actually gathers or lays out (the same |E|
+    *                      guards that police nondeterministic lineage).
+    *                      A degrees frame MISSING a node that appears only
+    *                      as a dst (zero out-degree, so it slips the
+    *                      Σdeg=|E| check) fails the driver loop at its
+    *                      gather: the edges into that node find no index,
+    *                      so the gather comes back short of |E|. The
+    *                      sort-merge loop cannot detect that case without
+    *                      re-deriving the node set from 2|E| endpoint rows
+    *                      (the exact pass this parameter exists to skip):
+    *                      there a missing dst-only node is silently absent
+    *                      from the output and shifts teleport mass —
+    *                      supply a COMPLETE node set.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 10, damping: Double = 0.85,
-      checkpointEvery: Int = 4, edgesDistinct: Boolean = false,
-      broadcastNodeLimit: Long = defaultBroadcastNodeLimit,
-      smallGraphMaxBytes: Long = defaultSmallGraphMaxBytes,
+      edgesDistinct: Boolean = false,
       precomputedDegrees: Option[DataFrame] = None): DataFrame =
-    pageRankImpl(edges, srcCol, dstCol, iterations, damping, checkpointEvery,
-      None, edgesDistinct, broadcastNodeLimit,
-      smallGraphMaxBytes, precomputedDegrees)
+    pageRankImpl(edges, srcCol, dstCol, iterations, damping, None,
+      edgesDistinct, precomputedDegrees, driverLoopAllowed = true)
 
-  /** 1M short-id nodes ≈ 50 MB of (string node, long deg, double rank)
-    * rows — well inside executor broadcast budgets, far under the 8 GB
-    * broadcast cap, and a trivial per-round driver collect. Web-scale
-    * graphs (|V| in the billions) sail past this and stay on the shuffle
-    * loop. The row cap is paired with a BYTE guard measured from the actual
-    * node ids (see broadcastByteBudget): a graph of 200-byte URL ids near
-    * this row limit would otherwise broadcast hundreds of MB per round.
+  /** [[pageRank]] on the sort-merge loop whatever the graph's size: the
+    * loop graphs past the driver budgets take, reachable on small graphs so
+    * specs and ClusterValidate can exercise it. Same cloned session,
+    * profile and guards; only the admission is skipped.
     */
-  val defaultBroadcastNodeLimit: Long = 1L << 20
+  private[graft] def pageRankSortMerge(edges: DataFrame, srcCol: String, dstCol: String,
+      iterations: Int = 10, damping: Double = 0.85,
+      edgesDistinct: Boolean = false,
+      precomputedDegrees: Option[DataFrame] = None): DataFrame =
+    pageRankImpl(edges, srcCol, dstCol, iterations, damping, None,
+      edgesDistinct, precomputedDegrees, driverLoopAllowed = false)
 
-  /** Upper bound on the estimated rank-frame bytes (|V| × (avg id length +
-    * fixed per-row overhead)) the broadcast fork will accept — graphs over
-    * it take the shuffle loop regardless of row count.
+  /** Sort-merge loop lineage cut cadence, in rounds (tripled when no node
+    * dangles; see the window in [[pageRankLoop]]).
     */
-  val broadcastByteBudget: Long = 64L << 20
+  private val CheckpointEvery = 4
 
-  /** The broadcast-fork admission decision, extracted so its boundary math
-    * is directly spec-pinned (GraphSpec): a graph must pass BOTH the row cap
-    * and the measured-byte budget — 1M rows of 200-byte URL ids is a
-    * ~230 MB per-round broadcast and must fall to the SMJ loop even though
-    * the row cap alone would admit it. 32 bytes/row covers the (long deg,
-    * double rank, struct/offset) overhead beside the id itself.
+  /** Driver-loop budgets. The rank vector: 1M short-id nodes ≈ 50 MB of
+    * (node, long deg, double rank) rows, a trivial one-time driver collect;
+    * the row cap is paired with a BYTE budget measured from the actual
+    * ids, so 1M rows of 200-byte URL ids (~230 MB) fall to the sort-merge
+    * loop. The edge list: the gather never materializes id strings on the
+    * driver (ids resolve to int indexes distributed and each edge arrives as
+    * ONE packed long), so its driver peak is chunks (8 B/edge) + the two int
+    * arrays (8 B/edge) = 16 B/edge.
     */
-  private[graft] def admitsBroadcastFork(n: Long, avgIdLen: Double,
-      nodeLimit: Long): Boolean =
-    n <= nodeLimit && n * (avgIdLen.toLong + 32L) <= broadcastByteBudget
+  private val NodeLimit: Long = 1L << 20
+  private val RankByteBudget: Long = 64L << 20
+  private val EdgeByteBudget: Long = 256L << 20
 
-  /** Edge-list byte budget for the driver-LOCAL small-graph tier inside the
-    * driver-held fork (see [[pageRankDriverHeld]]): graphs whose measured
-    * edge bytes fit run every round as a zero-job driver array sweep; bigger
-    * edge lists keep the edges distributed and gather one Spark job per
-    * round. 0 forces the distributed gather (spec hook).
+  /** The driver-loop admission, extracted so its boundary math is directly
+    * spec-pinned (GraphSpec): the graph must pass the row cap, the
+    * measured-byte rank budget (32 bytes/row covers the long deg, double
+    * rank and struct/offset overhead beside the id itself) AND the 16 B/edge
+    * edge budget — the 11.7M-edge sf1.0 bench graph (179 MiB) is admitted.
+    * Both loops are exact; the budgets only trade driver memory for
+    * per-round job latency.
     */
-  val defaultSmallGraphMaxBytes: Long = 256L << 20
-
-  /** Local-edge-tier admission, priced at the gather's ACTUAL driver cost:
-    * the local tier never materializes id strings on the driver — ids
-    * resolve to int indexes DISTRIBUTED (broadcast-probe joins) and each
-    * edge arrives as ONE packed long, so the driver peak is chunks
-    * (8 B/edge) + the two int arrays (8 B/edge) = 16 B/edge. The previous
-    * model (2×avgIdLen+24 ≈ 46 B/edge) priced edges as if their STRINGS
-    * crossed the driver — stale since the long-packed gather landed — and
-    * at sf1.0 it pushed the 11.7M-edge bench graph onto the per-round
-    * distributed-gather tier: 2 jobs × 10 rounds of pure scheduling (~10 s
-    * wall) for a loop the driver sweeps in under a second. Both tiers are
-    * exact; the budget only trades driver memory for per-round job latency.
-    */
-  private[graft] def admitsLocalEdgeTier(m: Long, budgetBytes: Long): Boolean =
-    m * 16L <= budgetBytes
+  private[graft] def admitsDriverLoop(n: Long, avgIdLen: Double, m: Long): Boolean =
+    n <= NodeLimit && n * (avgIdLen.toLong + 32L) <= RankByteBudget &&
+      m * 16L <= EdgeByteBudget
 
   private def pageRankImpl(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, damping: Double,
-      checkpointEvery: Int, teleportTo: Option[Seq[String]],
-      edgesDistinct: Boolean, broadcastNodeLimit: Long,
-      smallGraphMaxBytes: Long,
-      precomputedDegrees: Option[DataFrame] = None): DataFrame = {
+      iterations: Int, damping: Double, teleportTo: Option[Seq[String]],
+      edgesDistinct: Boolean, precomputedDegrees: Option[DataFrame],
+      driverLoopAllowed: Boolean): DataFrame = {
     require(iterations >= 0, "iterations must be non-negative")
     require(damping >= 0 && damping < 1, "damping must be in [0,1)")
     require(precomputedDegrees.isEmpty || edgesDistinct,
@@ -258,22 +237,21 @@ object Graph {
     loopSession.conf.set("spark.sql.adaptive.enabled", "false")
     loopSession.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
     val ranks = pageRankLoop(rebind(edges, loopSession), srcCol, dstCol,
-      iterations, damping, checkpointEvery, teleportTo,
-      edgesDistinct, broadcastNodeLimit, smallGraphMaxBytes,
-      precomputedDegrees.map(rebind(_, loopSession)))
+      iterations, damping, teleportTo, edgesDistinct,
+      precomputedDegrees.map(rebind(_, loopSession)), driverLoopAllowed)
     // hand the result back on the CALLER's session — otherwise everything
     // downstream of pageRank would keep planning under the loop's conf
     rebind(ranks, owner)
   }
 
-  /** Cross-tier |E| guard for the SMJ-loop edge re-layout: the laid-out
+  /** |E| guard for the sort-merge loop's edge re-layout: the laid-out
     * count must equal the profiled edge count `m` or the lineage is
     * nondeterministic (it would silently drop/duplicate edges). On failure
     * releases BOTH caches before throwing — a guard failure must not leak
     * the just-persisted layout or the caller-visible edge cache into the
-    * BlockManager (the driver-held tier unpersists first for the same
-    * reason). Package-private so the no-leak contract is spec-testable
-    * without manufacturing a nondeterministic lineage.
+    * BlockManager (the driver loop unpersists first for the same reason).
+    * Package-private so the no-leak contract is spec-testable without
+    * manufacturing a nondeterministic lineage.
     */
   private[graft] def relayoutGuard(laid: DataFrame, e: DataFrame,
       laidCount: Long, m: Long): Unit =
@@ -301,11 +279,9 @@ object Graph {
   }
 
   private def pageRankLoop(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, damping: Double,
-      checkpointEvery: Int, teleportTo: Option[Seq[String]],
-      edgesDistinct: Boolean, broadcastNodeLimit: Long,
-      smallGraphMaxBytes: Long,
-      precomputedDegrees: Option[DataFrame]): DataFrame = {
+      iterations: Int, damping: Double, teleportTo: Option[Seq[String]],
+      edgesDistinct: Boolean, precomputedDegrees: Option[DataFrame],
+      driverLoopAllowed: Boolean): DataFrame = {
 
     // The edge list is shuffled onto its join key ONCE for the whole loop
     // (the bucketed-join layout expressed via cache partitioning — at
@@ -318,17 +294,17 @@ object Graph {
     //     partitioning on src satisfies the wider clustering requirement)
     //     and the sort stays partition-local. One shuffle, not three.
     //   - caller-asserted distinct → defer layout AND caching until the
-    //     fork: the broadcast fork wants fewer, fatter partitions than the
-    //     session default, and an eager default-width shuffle+sort would be
-    //     thrown away at the fork. The cast list stays a LAZY projection
-    //     here — the driver-local tier consumes it exactly twice (the
-    //     degree pass and the one-shot edge gather), and re-running a
+    //     fork: the driver loop needs no layout at all, so an eager
+    //     shuffle+sort would be thrown away there. The cast list stays a
+    //     LAZY projection here — the driver loop consumes it exactly twice
+    //     (the degree pass and the one-shot edge gather), and re-running a
     //     projection lineage twice measured well under the cost of writing
     //     the edge strings through the BlockManager and reading them back
-    //     (the removeDuplicateSpans/DSIR staging verdict, r7). The tiers
-    //     that DO re-read per round persist at the fork below; callers
-    //     whose edge lineage is itself expensive should stage it before
-    //     calling (the q184 checkpoint pattern).
+    //     (the removeDuplicateSpans/DSIR staging verdict, r7). The
+    //     sort-merge loop, which re-reads the edges every round, lays them
+    //     out and persists them at the fork below; callers whose edge
+    //     lineage is itself expensive should stage it before calling (the
+    //     q184 checkpoint pattern).
     val shufflePartitions = edges.sparkSession.sessionState.conf.numShufflePartitions
     // Node-id regime, decided ONCE from the input schema: integral src/dst
     // (and, when supplied, an integral precomputed-degrees node column)
@@ -372,7 +348,7 @@ object Graph {
       case Some(pd) =>
         // caller-supplied (node, out_degree): normalize to the loop schema —
         // string node, LONG deg with null marking dangling. Correctness
-        // guards live downstream: every tier's |E| cross-check compares the
+        // guards live downstream: each loop's |E| cross-check compares the
         // edges it actually gathers/lays out against m = Σ deg from the
         // profile aggregate, so a degrees frame inconsistent with the edge
         // list (missing nodes, wrong totals) throws instead of silently
@@ -405,7 +381,7 @@ object Graph {
     val prof = preDeg.agg(
       count(lit(1)).as("__n__"),
       sum(when(col("deg").isNull, 1L).otherwise(0L)).as("__dang__"),
-      // id byte width for the broadcast budget: longs are fixed 8 bytes
+      // id byte width for the rank byte budget: longs are fixed 8 bytes
       // (length() is a string function; measuring decimal digits would
       // under-count the actual row bytes anyway)
       coalesce(avg(if (integralIds) lit(8.0) else length(col("node")).cast("double")),
@@ -444,53 +420,46 @@ object Graph {
     // released on each exit path.
     val withDeg = preDeg.withColumn("__t__", tele)
 
-    // Join-strategy fork, decided ONCE from the just-counted |V| — the same
-    // stats-driven choice Catalyst would make per-join if the loop's frames
-    // carried accurate stats (they don't: each round's rank frame is an agg
-    // output with estimated size):
-    //   - |V| ≤ broadcastNodeLimit → hold the rank vector on the DRIVER
-    //     between rounds (a per-round broadcast of a ≤64 MB frame IS a
-    //     driver round-trip, so the driver-held form is the same data
-    //     movement with strictly less machinery). Within that,
-    //     pageRankDriverHeld measures the EDGE list too: when it fits
-    //     smallGraphByteBudget the whole loop runs driver-locally (zero
-    //     jobs per round — a per-round Spark job has a ~0.1-0.5 s scheduling
-    //     floor that dwarfs a few-million-edge sweep); bigger edge lists
-    //     keep the edges distributed and gather one Spark job per round.
-    //   - |V| > limit → the rank frame can't broadcast (web-scale graphs);
-    //     SMJ against the sorted cached edges, zero edge-side exchange per
-    //     round, snapshots on the lineage window below.
+    // Loop choice, decided ONCE from the profile — the stats-driven choice
+    // Catalyst would make per join if the loop's frames carried accurate
+    // stats (they don't: each round's rank frame is an agg output with
+    // estimated size):
+    //   - rank vector and packed edge list within the driver budgets → the
+    //     driver loop: one edge gather, then ZERO Spark jobs per round (a
+    //     per-round job has a ~0.1-0.5 s scheduling floor that dwarfs a
+    //     few-million-edge array sweep);
+    //   - otherwise → SMJ against the sorted cached edges, zero edge-side
+    //     exchange per round, snapshots on the lineage window below.
     // The row cap alone would admit fat string ids (a 1M-node host graph of
-    // 200-byte URL ids is a multi-hundred-MB broadcast PER ROUND), so the
-    // fork also byte-checks against the ACTUAL ids (avgIdLen measured by
-    // the profile aggregate above).
-    if (admitsBroadcastFork(n, avgIdLen, broadcastNodeLimit))
-      return pageRankDriverHeld(e, withDeg, preDeg, iterations, damping,
-        hasDangling, shufflePartitions, avgIdLen, m, smallGraphMaxBytes,
-        integralIds)
+    // 200-byte URL ids is a multi-hundred-MB driver vector), so admission
+    // also byte-checks against the ACTUAL ids (avgIdLen measured by the
+    // profile aggregate above).
+    if (driverLoopAllowed && admitsDriverLoop(n, avgIdLen, m))
+      return pageRankDriverLoop(e, withDeg, preDeg, iterations, damping,
+        hasDangling, m, integralIds)
 
     // SMJ loop layout: with a deferred-layout edge cache (edgesDistinct) the
     // default-width partition+sort layout the per-round merge join reuses
     // exchange-free; dedup'd caches already carry it.
-    val (eLoop, loopDeg) = if (edgesDistinct) {
+    val eLoop = if (edgesDistinct) {
       val laid = e.repartition(shufflePartitions, col("src"))
         .sortWithinPartitions(col("src")).persist()
-      // the materializing count doubles as the cross-tier |E| guard: the
+      // the materializing count doubles as the |E| guard: the
       // lazy caller-asserted-distinct lineage already evaluated once for
       // the degree pass (which measured m); a nondeterministic lineage
       // would otherwise silently drop/duplicate edges in this re-layout
       val laidCount = laid.count()
       relayoutGuard(laid, e, laidCount, m)
       e.unpersist(false)
-      (laid, withDeg)
-    } else (e, withDeg)
+      laid
+    } else e
 
     // Lineage-truncation cadence: the dangling branch references the rank
     // frame twice per round, so the uncheckpointed plan DOUBLES per round
     // and the window must stay tight; without it growth is linear (one
     // reference) and a 3× wider window safely trades planner depth for
     // fewer eager materialization jobs.
-    val window = if (hasDangling) checkpointEvery else checkpointEvery * 3
+    val window = if (hasDangling) CheckpointEvery else CheckpointEvery * 3
 
     // `deg` and the teleport weight ride inside the aggregation stream, so
     // each round is exactly ONE join (ranks ⋈ edges) + ONE node-keyed
@@ -498,9 +467,9 @@ object Graph {
     // (deg, __t__), which both completes the node set (no per-round
     // null-fill join against the node list) and forwards the static
     // columns through `max` (contribution rows carry nulls there).
-    val zeroRows = loopDeg.select(col("node"), col("deg"), col("__t__"),
+    val zeroRows = withDeg.select(col("node"), col("deg"), col("__t__"),
       lit(0.0).as("__w__"))
-    var ranks = loopDeg.select(col("node"), col("deg"), col("__t__").as("rank"))
+    var ranks = withDeg.select(col("node"), col("deg"), col("__t__").as("rank"))
     var prevCached: Option[DataFrame] = None
     var i = 0
     while (i < iterations) {
@@ -560,45 +529,27 @@ object Graph {
     out
   }
 
-  /** Small-graph loops: the rank vector lives on the DRIVER between rounds.
-    *
-    * The broadcast fork's admission guard already bounds the rank frame to
-    * [[broadcastByteBudget]] (measured from the real ids) — at that size a
-    * per-round broadcast is a |V|-row driver collect by definition, so
-    * holding the vector driver-side is the SAME data movement with strictly
-    * less machinery: no per-round checkpoint job, no BlockManager writes,
-    * no zero-row union completing the node set (nodes missing from the
-    * gather merge in O(1) on the driver), and the dangling mass is a
-    * driver-side array fold — exact, zero extra jobs.
-    *
-    * Within the fork, the EDGE list is byte-measured too (m × 2 × the
-    * already-measured avg id length), picking one of two gathers:
-    *   - edges fit `smallGraphMaxBytes` → collect them ONCE into
-    *     int-indexed arrays and run every round as a driver-local edge
-    *     sweep: ZERO Spark jobs per round. A per-round Spark job has a
-    *     ~0.1-0.5 s floor (scheduling, codegen, broadcast torrent) that
-    *     dwarfs a few-million-edge array traversal — measured 4-5× off
-    *     q184's loop at sf0.1. The same regime as
-    *     [[Components.connectedComponents]]'s small-graph fast path.
-    *   - bigger edge lists stay DISTRIBUTED (|V| small does not bound |E|):
-    *     each round broadcasts the (node, rank/outdeg) vector as a
-    *     LocalRelation and runs ONE Spark job — broadcast hash join over
-    *     the cached edge partitions + map-side-combined sum keyed on dst +
-    *     a ≤|V|-row collect.
+  /** The driver loop: the rank vector lives on the DRIVER between rounds,
+    * and the edge list is gathered ONCE into int-indexed arrays, so every
+    * round is a driver-local edge sweep with ZERO Spark jobs. A per-round
+    * Spark job has a ~0.1-0.5 s floor (scheduling, codegen, broadcast
+    * torrent) that dwarfs a few-million-edge array traversal — measured
+    * 4-5× off q184's loop at sf0.1. The same regime as
+    * [[Components.connectedComponents]]'s small-graph fast path. No
+    * zero-row union completes the node set (every node has a slot), and
+    * the dangling mass is a driver-side array fold — exact, zero extra jobs.
     *
     * No lineage cut happens here: the loop state is a driver array, so
-    * there is no executor-side lineage to recover — a lost executor only
-    * re-runs the current round's tasks from the (re-computable) edge
-    * list. The SMJ fork keeps the cut cadence for web-scale rank frames.
+    * there is no executor-side lineage to recover. The sort-merge loop
+    * keeps the cut cadence for web-scale rank frames.
     *
     * Driver folds run in a FIXED array order (the one initial collect), so
     * repeated runs on the same session are reproducible to the bit — same
     * property the snapshot loop had.
     */
-  private def pageRankDriverHeld(e: DataFrame, withDeg: DataFrame,
+  private def pageRankDriverLoop(e: DataFrame, withDeg: DataFrame,
       preDeg: DataFrame, iterations: Int, damping: Double,
-      hasDangling: Boolean, shufflePartitions: Int, avgIdLen: Double,
-      m: Long, smallGraphMaxBytes: Long, integralIds: Boolean): DataFrame = {
+      hasDangling: Boolean, m: Long, integralIds: Boolean): DataFrame = {
     val spark = e.sparkSession
     // |E| arrives from the caller's profile aggregate — no edge-count job.
     // The one |V|-row collect that seeds the driver vector; admission
@@ -620,190 +571,81 @@ object Graph {
       tele(j) = r.getDouble(2)
       j += 1
     }
-    val index = new java.util.HashMap[AnyRef, Integer](n * 2)
-    j = 0; while (j < n) { index.put(nodes(j), j); j += 1 }
     import spark.implicits._
     // boxed-Long → Option at the LocalRelation boundary: null node entries
-    // survive on both id regimes (nullable column, matching the join-based
-    // tiers' null semantics)
+    // survive on both id regimes (nullable column, matching the sort-merge
+    // loop's null semantics)
     def longNode(j: Int): Option[Long] =
       Option(nodes(j).asInstanceOf[java.lang.Long]).map(_.longValue)
 
-    val localEdges = Graph.admitsLocalEdgeTier(m, smallGraphMaxBytes)
-
-    // per-round mass gather, fork-bound once: rank/outdeg weights in `w`
-    // (indexed like `nodes`), returns damping-unscaled mass per node index
-    var loopEdges = e // whichever cached frame the loop ends up reading
-    val gather: Array[Double] => Array[Double] =
-      if (localEdges) {
-        // one gather of the edge list into int-indexed arrays (from the
-        // lazy lineage when the caller asserted distinct — this tier reads
-        // it exactly once, so caching first would only add the write). The
-        // id → index resolution runs DISTRIBUTED: two broadcast probes of
-        // the (id, index) LocalRelation over the cached edges, so the
-        // driver receives 8-byte int pairs instead of two string ids per
-        // edge (less transfer, less Row/GC work — the string ids already
-        // crossed once in the node collect above). Join semantics mirror
-        // the join-based tiers exactly: src maps through a PLAIN-equality
-        // left join (a null src matches nothing → −1, it never
-        // contributes), dst through a NULL-SAFE inner join (a null dst IS
-        // a groupable node there, so it keeps its index here too).
-        val idxDf =
-          if (integralIds)
-            (0 until n).map(j => (longNode(j), j)).toDF("__n__", "__i__")
-          else
-            (0 until n).map(j => (nodes(j).asInstanceOf[String], j)).toDF("__n__", "__i__")
-        val pairs = e
-          .join(broadcast(idxDf.select(col("__n__").as("__sn__"), col("__i__").as("__si__"))),
-            col("src") === col("__sn__"), "left")
-          .join(broadcast(idxDf.select(col("__n__").as("__dn__"), col("__i__").as("__di__"))),
-            col("dst") <=> col("__dn__"))
-          .select(shiftleft(coalesce(col("__si__"), lit(-1)).cast("long"), 32)
-            .bitwiseOR(col("__di__").cast("long").bitwiseAND(lit(0xffffffffL)))
-            .as("__p__"))
-        // Driver-memory discipline for the gather: a row-level collect()
-        // holds the full Row array AND its builder copies NEXT TO the final
-        // int arrays — a peak near 3× the edge-byte budget, which would let
-        // a future budget bump OOM a small driver. Instead each (src, dst)
-        // index pair is packed into ONE long inside codegen (above) and each
-        // executor partition ships a single primitive long[] chunk, so the
-        // one collect job's driver peak is chunks (8 B/edge) + the two int
-        // arrays (8 B/edge) = 16 B/edge — ~1/16 of the 256 MB budget, with
-        // no per-Row allocation at all. |E| is known from the profile
-        // aggregate, so the arrays size exactly; toIntExact backstops an
-        // absurd budget override.
-        val chunks = pairs.select(col("__p__"))
-          .as(org.apache.spark.sql.Encoders.scalaLong)
-          .rdd.mapPartitions { it =>
-            val b = new scala.collection.mutable.ArrayBuilder.ofLong
-            while (it.hasNext) b += it.next()
-            Iterator.single(b.result())
-          }.collect()
-        val mLen = java.lang.Math.toIntExact(m)
-        val srcIdx = new Array[Int](mLen)
-        val dstIdx = new Array[Int](mLen)
-        var k = 0L
-        for (chunk <- chunks) {
-          var c = 0
-          while (c < chunk.length) {
-            if (k < mLen) {
-              srcIdx(k.toInt) = (chunk(c) >> 32).toInt
-              dstIdx(k.toInt) = chunk(c).toInt
-            }
-            k += 1L; c += 1
-          }
+    // One gather of the edge list into int-indexed arrays (from the lazy
+    // lineage when the caller asserted distinct — this loop reads it
+    // exactly once, so caching first would only add the write). The
+    // id → index resolution runs DISTRIBUTED: two broadcast probes of the
+    // (id, index) LocalRelation over the edges, so the driver receives
+    // 8-byte int pairs instead of two string ids per edge (less transfer,
+    // less Row/GC work — the string ids already crossed once in the node
+    // collect above). Join semantics mirror the sort-merge loop exactly:
+    // src maps through a PLAIN-equality left join (a null src matches
+    // nothing → −1, it never contributes), dst through a NULL-SAFE inner
+    // join (a null dst IS a groupable node there, so it keeps its index
+    // here too).
+    val idxDf =
+      if (integralIds)
+        (0 until n).map(j => (longNode(j), j)).toDF("__n__", "__i__")
+      else
+        (0 until n).map(j => (nodes(j).asInstanceOf[String], j)).toDF("__n__", "__i__")
+    val pairs = e
+      .join(broadcast(idxDf.select(col("__n__").as("__sn__"), col("__i__").as("__si__"))),
+        col("src") === col("__sn__"), "left")
+      .join(broadcast(idxDf.select(col("__n__").as("__dn__"), col("__i__").as("__di__"))),
+        col("dst") <=> col("__dn__"))
+      .select(shiftleft(coalesce(col("__si__"), lit(-1)).cast("long"), 32)
+        .bitwiseOR(col("__di__").cast("long").bitwiseAND(lit(0xffffffffL)))
+        .as("__p__"))
+    // Driver-memory discipline for the gather: a row-level collect() holds
+    // the full Row array AND its builder copies NEXT TO the final int
+    // arrays — a peak near 3× the edge-byte budget, which would let a
+    // future budget bump OOM a small driver. Instead each (src, dst) index
+    // pair is packed into ONE long inside codegen (above) and each executor
+    // partition ships a single primitive long[] chunk, so the one collect
+    // job's driver peak is chunks (8 B/edge) + the two int arrays
+    // (8 B/edge) = 16 B/edge, with no per-Row allocation at all. |E| is
+    // known from the profile aggregate, so the arrays size exactly.
+    val chunks = pairs.select(col("__p__"))
+      .as(org.apache.spark.sql.Encoders.scalaLong)
+      .rdd.mapPartitions { it =>
+        val b = new scala.collection.mutable.ArrayBuilder.ofLong
+        while (it.hasNext) b += it.next()
+        Iterator.single(b.result())
+      }.collect()
+    val mLen = java.lang.Math.toIntExact(m)
+    val srcIdx = new Array[Int](mLen)
+    val dstIdx = new Array[Int](mLen)
+    var got = 0L
+    for (chunk <- chunks) {
+      var c = 0
+      while (c < chunk.length) {
+        if (got < mLen) {
+          srcIdx(got.toInt) = (chunk(c) >> 32).toInt
+          dstIdx(got.toInt) = chunk(c).toInt
         }
-        // the gather is done with the cached frame either way — release it
-        // BEFORE the guard below so a guard failure can't leak cache blocks
-        e.unpersist(false)
-        // loudness guard: the joins assume every endpoint is in the node
-        // index (true by construction — the index derives from these same
-        // edges' endpoints). If a refactor ever broke that, the inner dst
-        // join would silently DROP (or duplicate) edges; this catches it.
-        require(k == m,
-          s"edge-index join returned $k rows for $m edges — node index no longer covers all endpoints")
-        w => {
-          val mass = new Array[Double](n)
-          var k = 0
-          while (k < srcIdx.length) {
-            if (srcIdx(k) >= 0) mass(dstIdx(k)) += w(srcIdx(k))
-            k += 1
-          }
-          mass
-        }
-      } else {
-        // fewer, fatter partitions (~150k edge rows each) for the whole
-        // loop: with |V| small, every extra partition is pure task-launch
-        // overhead × iterations, and partial aggregation duplicates up to
-        // |V| keys PER MAP PARTITION per round. The conf set lands on the
-        // loop's CLONED session (see pageRankImpl), so nothing outside this
-        // call ever plans under it; the floor of 8 just keeps the loop's
-        // own aggregates from collapsing to a width that can't spread.
-        val floor = math.min(8L, shufflePartitions.toLong)
-        val target = math.max(floor, math.min(shufflePartitions.toLong, m / 150000L + 1)).toInt
-        val eLoop =
-          if (target >= shufflePartitions) {
-            // this tier re-reads the edge frame EVERY round, so it must be
-            // cached — a deferred-layout (edgesDistinct) edge list arrives
-            // lazy and is materialized eagerly here so the count doubles as
-            // the cross-tier |E| guard (the lazy lineage already evaluated
-            // once for the degree pass that measured m; a nondeterministic
-            // lineage would otherwise silently drop/duplicate edges). An
-            // already-cached dedup'd list skips the extra job — its one
-            // materialization is pinned.
-            if (e.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-              e.persist()
-              val eCount = e.count()
-              require(eCount == m,
-                s"edge cache returned $eCount rows for $m profiled edges — " +
-                  "nondeterministic edge lineage? checkpoint/stage the edges or use edgesDistinct=false")
-            }
-            e
-          } else {
-            val relaid = e.repartition(target, col("src")).persist()
-            // materializing count doubles as the cross-tier |E| guard
-            // (same contract as the re-layout in pageRankLoop)
-            val relaidCount = relaid.count()
-            require(relaidCount == m,
-              s"edge re-layout returned $relaidCount rows for $m profiled edges — " +
-                "nondeterministic edge lineage? checkpoint/stage the edges or use edgesDistinct=false")
-            e.unpersist(false)
-            spark.conf.set("spark.sql.shuffle.partitions", target.toString)
-            relaid
-          }
-        loopEdges = eLoop
-        w => {
-          // the case class names the columns AT the LocalRelation — a
-          // toDF/select rename here would wrap it in a Project and cost an
-          // extra per-round job executing it before the broadcast build.
-          // A null node with out-edges can't contribute on any tier (the
-          // contribution equi-join drops null keys), so skipping it here
-          // is a no-op semantically and keeps the boxed-Long unbox safe.
-          val rankDf =
-            if (integralIds) {
-              val contribs = Array.newBuilder[RankContributionL]
-              contribs.sizeHint(n)
-              var k = 0
-              while (k < n) {
-                if (degs(k) > 0L && nodes(k) != null)
-                  contribs += RankContributionL(nodes(k).asInstanceOf[java.lang.Long], w(k))
-                k += 1
-              }
-              spark.createDataFrame(contribs.result().toIndexedSeq)
-            } else {
-              val contribs = Array.newBuilder[RankContribution]
-              contribs.sizeHint(n)
-              var k = 0
-              while (k < n) {
-                if (degs(k) > 0L)
-                  contribs += RankContribution(nodes(k).asInstanceOf[String], w(k))
-                k += 1
-              }
-              spark.createDataFrame(contribs.result().toIndexedSeq)
-            }
-          val gathered = broadcast(rankDf)
-            .join(eLoop.withColumnRenamed("src", "node"), Seq("node"))
-            .groupBy(col("dst"))
-            .agg(sum(col("w")).as("__m__"))
-            .collect()
-          val mass = new Array[Double](n)
-          var g = 0
-          while (g < gathered.length) {
-            val row = gathered(g)
-            val slot = index.get(row.get(0))
-            // a dst-only node absent from precomputedDegrees passes every
-            // Σdeg=|E| cross-check (it contributes 0 out-degree) but has no
-            // slot here — fail with the cause, not an anonymous NPE
-            require(slot != null,
-              s"pageRank: edge dst '${row.get(0)}' is absent from precomputedDegrees — " +
-                "the degrees frame must carry one row per DISTINCT node (src or dst), " +
-                "including zero-out-degree dangling nodes")
-            mass(slot.intValue()) = row.getDouble(1)
-            g += 1
-          }
-          mass
-        }
+        got += 1L; c += 1
       }
+    }
+    // the gather is done with the edge frame — release it BEFORE the guard
+    // below so a guard failure can't leak cache blocks
+    e.unpersist(false)
+    // loudness guard: the inner dst join DROPS an edge whose dst has no
+    // index, and a lineage that evaluates differently than in the degree
+    // pass drops or duplicates edges — either way the gather no longer
+    // matches the profiled |E|. By construction the index covers every
+    // endpoint, so this fires on a precomputedDegrees frame missing a
+    // dst-only node or on a nondeterministic edge lineage.
+    require(got == m,
+      s"edge-index join returned $got rows for $m edges — node index no longer covers all " +
+        "endpoints (precomputedDegrees must carry one row per DISTINCT node, src or dst, " +
+        "and the edge lineage must be deterministic)")
 
     var rank = tele.clone()
     var i = 0
@@ -818,7 +660,12 @@ object Graph {
         if (degs(j) > 0L) w(j) = rank(j) / degs(j).toDouble
         j += 1
       }
-      val mass = gather(w)
+      val mass = new Array[Double](n)
+      var k = 0
+      while (k < mLen) {
+        if (srcIdx(k) >= 0) mass(dstIdx(k)) += w(srcIdx(k))
+        k += 1
+      }
       val next = new Array[Double](n)
       j = 0
       while (j < n) {
@@ -829,11 +676,10 @@ object Graph {
       rank = next
       i += 1
     }
-    loopEdges.unpersist(false) // no-op if the local tier already released e
     // Slice discipline for the driver-held result: a LocalRelation splits
     // into defaultParallelism slices, so every downstream shuffle/sort runs
-    // 32 concurrent tasks over a frame that is ≤ the 64 MB broadcast budget
-    // by admission — and each such task pays a fixed ~0.25 s of
+    // 32 concurrent tasks over a frame that is ≤ the 64 MB rank budget by
+    // admission — and each such task pays a fixed ~0.25 s of
     // TaskMemoryManager contention (measured: sorting a 16k-row local frame
     // cost ~9 s of summed task time at 32 slices vs ~0.1 s at 4, same
     // wall-parallel work). Size slices to the data (~64k rows each): small

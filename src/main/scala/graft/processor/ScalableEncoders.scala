@@ -39,7 +39,9 @@ object ScalableEncoders {
     *     `map(na_action="ignore")`), both matching LabelEncoding.
     *
     * Fitted-state serialization is distributed too: set `state_path` to a
-    * parquet location and `state`/`restore` write/read the code table there;
+    * parquet location and `state`/`restore` write/read the code table there
+    * (`state` writes only a table not already there: once after `fit`,
+    * never after a `restore` from that same path);
     * without it, saving a pipeline containing this processor refuses loudly
     * (the table does not fit in a driver-side state file by design).
     */
@@ -60,6 +62,13 @@ object ScalableEncoders {
 
     /** (`__dre_label__` string, `__dre_code__` long) — fitted code table. */
     private var codes: Option[DataFrame] = None
+
+    /** Where [[codes]] already sits as parquet: set by a `state` write and
+      * by `restore`, cleared by `fit`. `state` writes only when the table is
+      * not there yet — a restored table READS that path, so overwriting it
+      * would delete the files it is being read from.
+      */
+    private var storedAt: Option[String] = None
 
     /** The fitted (label, code) table — distributed; for tests and export. */
     def fittedCodes: DataFrame = codes.getOrElse(notFitted("fittedCodes"))
@@ -93,6 +102,7 @@ object ScalableEncoders {
         case other => throw new IllegalArgumentException(s"encoding_range: $other")
       }
       codes = Some(indexed.select(col("__dre_label__"), code.as("__dre_code__")))
+      storedAt = None
       this
     }
 
@@ -145,11 +155,16 @@ object ScalableEncoders {
           s"$name: the fitted code table is DISTRIBUTED (that is the point of this " +
             "processor) and cannot serialize into the pipeline state — set the state_path " +
             "param to a parquet location, or use LabelEncoding for driver-sized label spaces"))
-        table.write.mode("overwrite").parquet(p)
+        if (!storedAt.contains(p)) {
+          table.write.mode("overwrite").parquet(p)
+          storedAt = Some(p)
+        }
         Map("state_path" -> p)
     }
-    override def restore(s: Map[String, Any]): Unit = s.get("state_path").foreach { p =>
-      codes = Some(org.apache.spark.sql.SparkSession.active.read.parquet(FittedState.string(p)))
+    override def restore(s: Map[String, Any]): Unit = s.get("state_path").foreach { v =>
+      val p = FittedState.string(v)
+      codes = Some(org.apache.spark.sql.SparkSession.active.read.parquet(p))
+      storedAt = Some(p)
     }
   }
 

@@ -86,13 +86,12 @@ class CutPolicySpec extends AnyFunSuite {
   }
 
   test("pageRank on the sort-merge tier cuts reliably under a checkpoint dir") {
-    val edges = (0L until 40L).flatMap(i => Seq((i, (i * 7 + 1) % 40), (i, (i + 3) % 40)))
-      .toDF("src", "dst")
-    // no dangling node, so the snapshot window is 3 rounds: round 6's
-    // snapshot supersedes round 3's
+    // node 40 dangles, so the snapshot window is 4 rounds: round 8's
+    // snapshot supersedes round 4's
+    val edges = ((0L until 40L).flatMap(i => Seq((i, (i * 7 + 1) % 40), (i, (i + 3) % 40))) :+
+      ((0L, 40L))).toDF("src", "dst")
     checkFamily("pageRank", resultOnly = true)(
-      Graph.pageRank(edges, "src", "dst", iterations = 6, checkpointEvery = 1,
-        broadcastNodeLimit = 0L))
+      Graph.pageRankSortMerge(edges, "src", "dst", iterations = 8))
   }
 
   test("a reliable cut is eager even when a lazy one is asked for, and computes its plan once") {

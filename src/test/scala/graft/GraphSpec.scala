@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Graph
 
@@ -84,49 +84,37 @@ class GraphSpec extends AnyFunSuite {
     assert(degs("a") == ((1L, 1L)) && degs("b") == ((2L, 2L)) && degs("d") == ((1L, 1L)))
   }
 
+  /** The two loops: the driver loop every small graph here is admitted
+    * to, and the sort-merge loop graphs past the driver budgets take.
+    */
+  private val loops: Seq[(String, DataFrame => Int => DataFrame)] = Seq(
+    "local" -> (df => it => Graph.pageRank(df, "src", "dst", iterations = it)),
+    "smj" -> (df => it => Graph.pageRankSortMerge(df, "src", "dst", iterations = it)))
+
   test("pageRank: all three tiers (local / distributed gather / SMJ) match the reference") {
-    // every graph here is small enough to take the driver-held fork's local
-    // tier by default, so the other two need forcing: smallGraphMaxBytes=0
-    // keeps the edges distributed (per-round Spark gather), and
-    // broadcastNodeLimit=0 forces the web-scale sort-merge loop.
-    // node 5 is dangling, so each tier's dangling redistribution is hit too
+    // node 5 is dangling, so each loop's dangling redistribution is hit too
     val edges = Seq(("1", "2"), ("2", "3"), ("3", "1"), ("1", "4"), ("4", "2"),
       ("2", "5"))
     val df = edges.toDF("src", "dst")
-    val viaSmj = Graph.pageRank(df, "src", "dst", iterations = 12,
-        broadcastNodeLimit = 0L)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val viaGather = Graph.pageRank(df, "src", "dst", iterations = 12,
-        smallGraphMaxBytes = 0L)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val viaLocal = Graph.pageRank(df, "src", "dst", iterations = 12)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val want = referencePageRank(edges, 12, 0.85)
-    for ((k, v) <- want) {
-      assert(math.abs(viaSmj(k) - v) < 1e-9, s"SMJ node $k: ${viaSmj(k)} vs $v")
-      assert(math.abs(viaGather(k) - v) < 1e-9, s"gather node $k: ${viaGather(k)} vs $v")
-      assert(math.abs(viaLocal(k) - v) < 1e-9, s"local node $k: ${viaLocal(k)} vs $v")
+    for ((loop, run) <- loops) {
+      val got = run(df)(12).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      for ((k, v) <- want) assert(math.abs(got(k) - v) < 1e-9, s"$loop node $k: ${got(k)} vs $v")
     }
   }
 
   test("pageRank: null-id edges behave identically on all three tiers (join semantics)") {
     // a null src never contributes (equi-joins drop null keys) but a null
     // dst IS a groupable node — the driver-local sweep must agree with the
-    // join-based tiers on both
+    // sort-merge loop on both
     val edges = Seq((null.asInstanceOf[String], "a"), ("a", "b"), ("b", null),
       ("b", "a")).toDF("src", "dst")
-    def run(bLimit: Long, sBytes: Long): Map[Option[String], Double] =
-      Graph.pageRank(edges, "src", "dst", iterations = 6,
-          broadcastNodeLimit = bLimit, smallGraphMaxBytes = sBytes)
-        .collect().map(r => Option(r.getString(0)) -> r.getDouble(1)).toMap
-    val local = run(Graph.defaultBroadcastNodeLimit, Graph.defaultSmallGraphMaxBytes)
-    val gathered = run(Graph.defaultBroadcastNodeLimit, 0L)
-    val smj = run(0L, 0L)
-    assert(local.keySet == smj.keySet && local.keySet.contains(None))
-    for ((k, v) <- smj) {
-      assert(math.abs(local(k) - v) < 1e-12, s"local vs SMJ at $k: ${local(k)} vs $v")
-      assert(math.abs(gathered(k) - v) < 1e-12, s"gather vs SMJ at $k: ${gathered(k)} vs $v")
+    val Seq(local, smj) = loops.map { case (_, run) =>
+      run(edges)(6).collect().map(r => Option(r.getString(0)) -> r.getDouble(1)).toMap
     }
+    assert(local.keySet == smj.keySet && local.keySet.contains(None))
+    for ((k, v) <- smj)
+      assert(math.abs(local(k) - v) < 1e-12, s"local vs SMJ at $k: ${local(k)} vs $v")
   }
 
   test("pageRank: edgesDistinct=true on an already-distinct list matches the dedup path") {
@@ -142,26 +130,18 @@ class GraphSpec extends AnyFunSuite {
   test("pageRank: integral-id graphs keep LONG nodes on all three tiers and match the string path") {
     // same topology under both id regimes (string "1".."5" vs long 1..5,
     // node 5 dangling) — ranks must agree to the bit, the integral path's
-    // output node column must be BIGINT, and every tier must take it
+    // output node column must be BIGINT, and both loops must take it
     val sEdges = Seq(("1", "2"), ("2", "3"), ("3", "1"), ("1", "4"), ("4", "2"), ("2", "5"))
     val lEdges = sEdges.map { case (a, b) => (a.toLong, b.toLong) }
     val want = Graph.pageRank(sEdges.toDF("src", "dst"), "src", "dst", iterations = 9)
       .collect().map(r => r.getString(0).toLong -> r.getDouble(1)).toMap
-    def run(bLimit: Long, sBytes: Long): Map[Long, Double] = {
-      val out = Graph.pageRank(lEdges.toDF("src", "dst"), "src", "dst", iterations = 9,
-        broadcastNodeLimit = bLimit, smallGraphMaxBytes = sBytes)
+    for ((loop, run) <- loops) {
+      val out = run(lEdges.toDF("src", "dst"))(9)
       assert(out.schema("node").dataType == org.apache.spark.sql.types.LongType,
-        s"integral graph must keep LONG node ids, got ${out.schema("node").dataType}")
-      out.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    }
-    val local = run(Graph.defaultBroadcastNodeLimit, Graph.defaultSmallGraphMaxBytes)
-    val gathered = run(Graph.defaultBroadcastNodeLimit, 0L)
-    val smj = run(0L, 0L)
-    assert(local.keySet == want.keySet)
-    for ((k, v) <- want) {
-      assert(math.abs(local(k) - v) < 1e-12, s"local node $k")
-      assert(math.abs(gathered(k) - v) < 1e-12, s"gather node $k")
-      assert(math.abs(smj(k) - v) < 1e-12, s"smj node $k")
+        s"$loop: integral graph must keep LONG node ids, got ${out.schema("node").dataType}")
+      val got = out.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(got.keySet == want.keySet, loop)
+      for ((k, v) <- want) assert(math.abs(got(k) - v) < 1e-12, s"$loop node $k")
     }
   }
 
@@ -181,26 +161,34 @@ class GraphSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Graph.pageRank(df, "src", "dst", iterations = 2, precomputedDegrees = Some(degs))
     }
-    // inconsistent totals (Σ deg ≠ |E|) trip the cross-tier guard loudly
+    // inconsistent totals (Σ deg ≠ |E|) trip the |E| guard loudly
     val wrong = Seq((1L, 9L), (2L, 2L), (3L, 1L), (4L, 1L), (5L, 0L)).toDF("node", "out_degree")
     intercept[IllegalArgumentException] {
       Graph.pageRank(df, "src", "dst", iterations = 2, edgesDistinct = true,
         precomputedDegrees = Some(wrong)).collect()
     }
+    // a missing dst-only node (deg 0, so Σ deg = |E| still holds): the
+    // driver loop's gather finds no index for the edge into it and refuses
+    val missingDst = Seq((1L, 2L), (2L, 2L), (3L, 1L), (4L, 1L)).toDF("node", "out_degree")
+    val e = intercept[IllegalArgumentException] {
+      Graph.pageRank(df, "src", "dst", iterations = 2, edgesDistinct = true,
+        precomputedDegrees = Some(missingDst)).collect()
+    }
+    assert(e.getMessage.contains("edge-index join returned 5 rows for 6 edges"), e.getMessage)
   }
 
   test("edgesDistinct: cross-tier |E| guard trips loudly on a nondeterministic lineage") {
     // The caller-asserted-distinct contract keeps the edge lineage LAZY, so
     // it evaluates once for the degree pass (which measures m) and again in
-    // whichever tier runs. This lineage drops one more edge per evaluation
-    // — the contract violation the guards exist for: every tier must refuse
+    // whichever loop runs. This lineage drops one more edge per evaluation
+    // — the contract violation the guards exist for: both loops must refuse
     // loudly instead of silently dropping/duplicating edges.
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val base = (0 until 50).map(i => (s"n$i", s"n${(i + 1) % 50}"))
     val schema = StructType(Seq(
       StructField("src", StringType), StructField("dst", StringType)))
-    def nondet(): org.apache.spark.sql.DataFrame = {
+    def nondet(): DataFrame = {
       // static object, NOT a captured counter: task closures deserialize
       // into copies, while a by-name object reference resolves to the one
       // shared instance in the local-mode JVM
@@ -212,27 +200,20 @@ class GraphSpec extends AnyFunSuite {
       spark.createDataFrame(rdd, schema)
     }
     try {
-      // SMJ tier (broadcastNodeLimit=0): guard at the re-layout count
+      // sort-merge loop: guard at the re-layout count
       val eSmj = intercept[IllegalArgumentException] {
-        Graph.pageRank(nondet(), "src", "dst", iterations = 2,
-          edgesDistinct = true, broadcastNodeLimit = 0L)
+        Graph.pageRankSortMerge(nondet(), "src", "dst", iterations = 2,
+          edgesDistinct = true)
       }
       assert(eSmj.getMessage.contains("nondeterministic edge lineage"))
-      // driver-held distributed-gather tier (smallGraphMaxBytes=0): guard at
-      // the edge-cache materializing count
-      val eGather = intercept[IllegalArgumentException] {
-        Graph.pageRank(nondet(), "src", "dst", iterations = 2,
-          edgesDistinct = true, smallGraphMaxBytes = 0L)
-      }
-      assert(eGather.getMessage.contains("nondeterministic edge lineage"))
-      // driver-local tier: the pre-existing gather-count guard
+      // driver loop: the gather-count guard
       val eLocal = intercept[IllegalArgumentException] {
         Graph.pageRank(nondet(), "src", "dst", iterations = 2,
           edgesDistinct = true)
       }
       assert(eLocal.getMessage.contains("node index no longer covers"))
     } finally {
-      // a tripped guard aborts mid-flight, so its tier caches stay behind
+      // a tripped guard aborts mid-flight, so its loop caches stay behind
       // by design — release them UNCONDITIONALLY (a failing assertion above
       // must not leak blocks into the shared session for later suites)
       spark.catalog.clearCache()
@@ -245,14 +226,12 @@ class GraphSpec extends AnyFunSuite {
       .toDF("src", "dst")
     def depth(r: org.apache.spark.rdd.RDD[_]): Int =
       if (r.dependencies.isEmpty) 1 else 1 + r.dependencies.map(d => depth(d.rdd)).max
-    // both forks: the broadcast loop snapshots per round, the SMJ loop on
-    // the checkpointEvery window — neither may let lineage grow with rounds
-    for (limit <- Seq(Long.MaxValue, 0L)) {
-      val ranks = Graph.pageRank(edges, "src", "dst", iterations = 12,
-        checkpointEvery = 4, broadcastNodeLimit = limit)
-      val d = depth(ranks.rdd)
+    // both loops: the driver loop returns a local relation, the SMJ loop
+    // snapshots on its window — neither may let lineage grow with rounds
+    for ((loop, run) <- loops) {
+      val d = depth(run(edges)(12).rdd)
       assert(d < 30,
-        s"RDD lineage depth $d (broadcastNodeLimit=$limit) — grew with iterations, checkpoint not truncating")
+        s"RDD lineage depth $d ($loop) — grew with iterations, checkpoint not truncating")
     }
   }
 
@@ -264,79 +243,69 @@ class GraphSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val edges = (0L until 300L).map(i => (i.toString, ((i * 7 + 1) % 300).toString))
       .toDF("src", "dst")
-    for (limit <- Seq(Long.MaxValue, 0L)) { // broadcast fork, then SMJ fork
+    for ((loop, run) <- loops) {
       spark.catalog.clearCache()
       sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       val before = sc.getPersistentRDDs.keySet
-      val ranks = Graph.pageRank(edges, "src", "dst", iterations = 6,
-        broadcastNodeLimit = limit)
-      ranks.count()
+      run(edges)(6).count()
       val held = (sc.getPersistentRDDs.keySet -- before).size
       assert(held <= 1,
-        s"$held persisted RDDs after pageRank (broadcastNodeLimit=$limit) — internal caches leaked")
+        s"$held persisted RDDs after pageRank ($loop) — internal caches leaked")
     }
   }
 
   test("pageRank with a reliable checkpoint dir matches the reference on both forks") {
-    // the broadcast fork must NOT reliable-checkpoint per round (window
-    // cadence only, persist between cuts) — this pins the path's values;
+    // the SMJ loop cuts reliably on its window (dangling node 5: a 4-round
+    // window, so 7 rounds cut at 4 and 7) — this pins the path's values;
     // the I/O cadence itself is the documented design
     val ckpt = java.nio.file.Files.createTempDirectory("pr_ckpt").toString
-    val edges = Seq(("1", "2"), ("2", "3"), ("3", "1"), ("1", "4"), ("4", "2"))
+    val edges = Seq(("1", "2"), ("2", "3"), ("3", "1"), ("1", "4"), ("4", "2"), ("2", "5"))
     val df = edges.toDF("src", "dst")
     val want = referencePageRank(edges, 7, 0.85)
     org.apache.spark.CheckpointDirBridge.withCheckpointDir(spark.sparkContext, ckpt) {
-      for (limit <- Seq(Long.MaxValue, 0L)) {
-        val got = Graph.pageRank(df, "src", "dst", iterations = 7,
-            checkpointEvery = 2, broadcastNodeLimit = limit)
-          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      for ((loop, run) <- loops) {
+        val got = run(df)(7).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
         for ((k, v) <- want)
-          assert(math.abs(got(k) - v) < 1e-9, s"limit=$limit node $k: ${got(k)} vs $v")
+          assert(math.abs(got(k) - v) < 1e-9, s"$loop node $k: ${got(k)} vs $v")
       }
     }
   }
 
-  test("broadcast-fork admission: byte budget rejects fat ids even under the row cap") {
-    val rowCap = Graph.defaultBroadcastNodeLimit // 1M rows
+  test("driver-loop admission: node, id-byte and edge budgets") {
+    val rowCap = 1L << 20 // 1M nodes
+    val rankBudget = 64L << 20 // rank rows: n * (avg id bytes + 32)
+    val edgeBudget = 256L << 20 // packed gather: 16 B/edge
+    val m = 1000L
     // 1M nodes of 20-byte ids ≈ 52 MB — inside the 64 MB budget, admitted
-    assert(Graph.admitsBroadcastFork(rowCap, avgIdLen = 20.0, nodeLimit = rowCap))
+    assert(Graph.admitsDriverLoop(rowCap, avgIdLen = 20.0, m))
     // 1M nodes of 200-byte URL ids ≈ 232 MB — row cap passes, bytes refuse
-    assert(!Graph.admitsBroadcastFork(rowCap, avgIdLen = 200.0, nodeLimit = rowCap))
+    assert(!Graph.admitsDriverLoop(rowCap, avgIdLen = 200.0, m))
     // exact boundary: n*(len+32) == 64 MB admits; one more byte refuses
-    val n = 1L << 20
-    val lenAtBudget = (Graph.broadcastByteBudget / n) - 32L // 32
-    assert(Graph.admitsBroadcastFork(n, lenAtBudget.toDouble, nodeLimit = rowCap))
-    assert(!Graph.admitsBroadcastFork(n, (lenAtBudget + 1).toDouble, nodeLimit = rowCap))
-    // row cap still binds independently of bytes
-    assert(!Graph.admitsBroadcastFork(rowCap + 1, avgIdLen = 1.0, nodeLimit = rowCap))
-    // forced-SMJ spec hook (nodeLimit=0) refuses everything
-    assert(!Graph.admitsBroadcastFork(1L, avgIdLen = 1.0, nodeLimit = 0L))
-  }
-
-  test("local-edge-tier admission prices the gather at 16 B/edge (packed longs, not strings)") {
-    val budget = Graph.defaultSmallGraphMaxBytes // 256 MB
-    // the r12 regression case: the sf1.0 bench graph (11.7M edges) must be
-    // ADMITTED — 16 B/edge = 179 MiB actual driver peak; the stale
-    // string-priced model (46 B/edge) bounced it to 2 jobs/round
-    assert(Graph.admitsLocalEdgeTier(11737420L, budget))
-    // exact boundary at the budget; one more edge refuses
-    val mAtBudget = budget / 16L
-    assert(Graph.admitsLocalEdgeTier(mAtBudget, budget))
-    assert(!Graph.admitsLocalEdgeTier(mAtBudget + 1, budget))
-    // forced-distributed spec hook (maxBytes=0) refuses everything
-    assert(!Graph.admitsLocalEdgeTier(1L, 0L))
+    val lenAtBudget = (rankBudget / rowCap) - 32L // 32
+    assert(Graph.admitsDriverLoop(rowCap, lenAtBudget.toDouble, m))
+    assert(!Graph.admitsDriverLoop(rowCap, (lenAtBudget + 1).toDouble, m))
+    // row cap binds independently of bytes
+    assert(!Graph.admitsDriverLoop(rowCap + 1, avgIdLen = 1.0, m))
+    // the sf1.0 bench graph (11.7M edges) is ADMITTED — 16 B/edge =
+    // 179 MiB actual driver peak; a string-priced model (46 B/edge) would
+    // bounce it off the driver loop
+    assert(Graph.admitsDriverLoop(1000L, avgIdLen = 8.0, 11737420L))
+    // exact edge boundary at the budget; one more edge refuses
+    val mAtBudget = edgeBudget / 16L
+    assert(Graph.admitsDriverLoop(1000L, avgIdLen = 8.0, mAtBudget))
+    assert(!Graph.admitsDriverLoop(1000L, avgIdLen = 8.0, mAtBudget + 1))
   }
 
   test("pageRank byte guard: fat string ids refuse the broadcast fork") {
-    // ids ~70kB each: 3 nodes pass any row cap but blow the 64 MB byte
-    // budget × |V|... scaled down: the guard multiplies n by avg id length,
-    // so 3 nodes × 30MB ids > 64MB budget → must take the SMJ loop and
-    // still compute correct ranks
+    // the guard multiplies n by avg id length, so a 3-cycle of 30 MB ids
+    // passes any row cap but exceeds the 64 MB rank budget → must take the
+    // SMJ loop and still compute correct ranks
     val fat = "x" * (30 << 20)
-    val edges = Seq((fat + "a", fat + "b"), (fat + "b", fat + "a"))
+    assert(!Graph.admitsDriverLoop(3L, fat.length + 1.0, 3L))
+    val edges = Seq((fat + "a", fat + "b"), (fat + "b", fat + "c"), (fat + "c", fat + "a"))
     val got = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", iterations = 4)
       .collect().map(r => r.getString(0).last -> r.getDouble(1)).toMap
-    assert(math.abs(got('a') - 0.5) < 1e-9 && math.abs(got('b') - 0.5) < 1e-9)
+    for (k <- "abc") assert(math.abs(got(k) - 1.0 / 3) < 1e-9, s"node $k: ${got(k)}")
   }
 
   test("pageRank never mutates the caller's session confs (set values and unset-ness both)") {
@@ -390,7 +359,7 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("relayoutGuard releases both edge caches before throwing on |E| mismatch") {
-    // the SMJ-tier guard fires between laid.persist() and the loop; a
+    // the SMJ-loop guard fires between laid.persist() and the loop; a
     // failure must unpersist BOTH the laid-out layout and the caller-visible
     // edge cache, or a nondeterministic-lineage abort leaks BlockManager
     // memory (r10 advice item; deterministic trigger needs a

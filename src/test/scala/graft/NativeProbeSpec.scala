@@ -139,14 +139,13 @@ class NativeProbeSpec extends AnyFunSuite {
     // the snapshot cadence.
     val counter = new graft.core.JobCounter
     // star graph with a dangling center: 1..40 -> 0, node 0 has no out-edges.
-    // broadcastNodeLimit=0 forces the web-scale SMJ loop — the invariant
+    // pageRankSortMerge forces the web-scale SMJ loop — the invariant
     // under test is THAT path's: no action may scale with iterations when
-    // |V| is too big to broadcast. (The broadcast fork snapshots per round
-    // by design; its per-round work is |V|-bounded and locally measured.)
+    // the graph is past the driver budgets. (The driver loop runs no job per
+    // round at all; the cadence spec below pins it.)
     val edges = (1 to 40).map(i => (i.toString, "0")).toDF("src", "dst")
     val ranks = counter.observe(spark.sparkContext)(
-      graft.ops.Graph.pageRank(edges, "src", "dst", iterations = 8,
-        broadcastNodeLimit = 0L))
+      graft.ops.Graph.pageRankSortMerge(edges, "src", "dst", iterations = 8))
     val execs = counter.sqlExecutions
     val total = ranks.agg(sum(col("rank"))).head().getDouble(0)
     assert(math.abs(total - 1.0) < 1e-9, s"rank mass not conserved: $total")
@@ -158,48 +157,35 @@ class NativeProbeSpec extends AnyFunSuite {
   }
 
   test("pageRank driver-held fork: per-iteration job cadence stays at its designed constant") {
-    // Companion to the forced-SMJ guard above (ADVICE r5): the driver-held
-    // fork's per-round driver-job count is a designed constant per tier —
-    //   - local-edge tier (default on a small graph): ZERO jobs per round,
-    //     every round is a driver array sweep;
-    //   - distributed-gather tier (smallGraphMaxBytes=0): TWO jobs per round
-    //     (the broadcast build — BroadcastExchange always collects via an
-    //     RDD job, even for a LocalRelation child — plus the gather collect).
-    // Measure jobs at 8 and 16 iterations on the same graph: the delta
-    // isolates per-iteration cost from the fixed setup actions and fails an
-    // accidental extra per-round action (old snapshot-per-round shape) on
-    // either tier.
-    def countJobs(iterations: Int, smallBytes: Long): Int = {
+    // Companion to the forced-SMJ guard above (ADVICE r5): the driver
+    // loop's per-round job count is a designed constant — ZERO, every round
+    // is a driver array sweep. Measure jobs at 8 and 16 iterations on the
+    // same graph: the delta isolates per-iteration cost from the fixed
+    // setup actions and fails an accidental per-round action (old
+    // snapshot-per-round shape).
+    def countJobs(iterations: Int): Int = {
       val counter = new graft.core.JobCounter
       // symmetrized ring: every node has out-edges, so hasDangling=false
       val edges = (0 until 60).flatMap(i =>
         Seq((i.toString, ((i + 1) % 60).toString), (((i + 1) % 60).toString, i.toString)))
         .toDF("src", "dst")
       counter.observe(spark.sparkContext)(
-        graft.ops.Graph.pageRank(edges, "src", "dst", iterations = iterations,
-          smallGraphMaxBytes = smallBytes).count())
+        graft.ops.Graph.pageRank(edges, "src", "dst", iterations = iterations).count())
       counter.jobs
     }
-    val localAt8 = countJobs(8, graft.ops.Graph.defaultSmallGraphMaxBytes)
-    val localAt16 = countJobs(16, graft.ops.Graph.defaultSmallGraphMaxBytes)
+    val localAt8 = countJobs(8)
+    val localAt16 = countJobs(16)
     assert(localAt16 - localAt8 <= 2,
-      s"local tier grew ${localAt16 - localAt8} jobs over 8 extra iterations — designed cadence is 0 jobs per round")
-    assert(localAt8 <= 12, s"local tier ran $localAt8 jobs for 8 iterations — setup actions grew")
-    val distAt8 = countJobs(8, 0L)
-    val distAt16 = countJobs(16, 0L)
-    // designed: 8 extra iterations = 16 extra jobs; <= 20 allows listener
-    // noise but fails a third per-round action (24 extra) outright
-    assert(distAt16 - distAt8 <= 20,
-      s"distributed tier grew ${distAt16 - distAt8} jobs over 8 extra iterations — designed cadence is 2 jobs per round")
+      s"driver loop grew ${localAt16 - localAt8} jobs over 8 extra iterations — designed cadence is 0 jobs per round")
+    assert(localAt8 <= 12, s"driver loop ran $localAt8 jobs for 8 iterations — setup actions grew")
   }
 
   test("pageRank BENCH-SIZED graph (sf0.1 customer↔supplier): driver-local tier engages, 0 jobs/round") {
     // Round-12 verdict item 2: the spec graphs above prove the tier cadence
     // in isolation; this proves the FORK DECISION on the exact graph the
     // bench times (q184's symmetrized purchase graph at sf0.1 — ~7k nodes,
-    // ~120k edges). A silent fall-through to the distributed-gather or SMJ
-    // tier would add >= 1 job per round and read exactly like the r11
-    // 1.84× bench anomaly.
+    // ~120k edges). A silent fall-through to the SMJ loop would add >= 1
+    // job per round and read exactly like the r11 1.84× bench anomaly.
     val dir = "/root/testdata/sf0.1"
     assume(new java.io.File(dir).isDirectory, s"$dir not present")
     def edgesOf(): org.apache.spark.sql.DataFrame = {
@@ -225,7 +211,7 @@ class NativeProbeSpec extends AnyFunSuite {
     val at20 = countJobs(20)
     assert(at20 - at10 <= 2,
       s"bench-sized graph grew ${at20 - at10} jobs over 10 extra iterations — " +
-        "the driver-local tier no longer engages at sf0.1 (fork regression)")
+        "the driver loop no longer engages at sf0.1 (fork regression)")
     assert(at10 <= 12,
       s"bench-sized graph ran $at10 jobs for 10 iterations — setup actions grew " +
         "(designed: degree+profile+node collect+edge gather+result count ≈ 6-8)")

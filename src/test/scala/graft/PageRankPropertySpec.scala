@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Graph, Sampling, TextAnalysis}
 
-/** Randomized differentials for PageRank (all three tiers vs an
+/** Randomized differentials for PageRank (both loops vs an
   * independent driver power iteration on random sparse digraphs) and the
   * budget/braid selection ops. GraphSpec pins hand cases and the
   * documented corners; these run fresh topologies every time — dangling
@@ -43,13 +43,10 @@ class PageRankPropertySpec extends AnyFunSuite {
       val edges = Seq.fill(80)(sampled(e))
       val want = referencePageRank(edges, 10, 0.85)
       val df = edges.toDF("src", "dst")
-      for ((bLimit, sBytes, tier) <- Seq(
-        (Graph.defaultBroadcastNodeLimit, Graph.defaultSmallGraphMaxBytes, "local"),
-        (Graph.defaultBroadcastNodeLimit, 0L, "gather"),
-        (0L, 0L, "smj"))) {
-        val got = Graph.pageRank(df, "src", "dst", iterations = 10,
-            broadcastNodeLimit = bLimit, smallGraphMaxBytes = sBytes)
-          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      for ((tier, ranks) <- Seq(
+        "local" -> Graph.pageRank(df, "src", "dst", iterations = 10),
+        "smj" -> Graph.pageRankSortMerge(df, "src", "dst", iterations = 10))) {
+        val got = ranks.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
         assert(got.keySet == want.keySet, s"trial $trial $tier node set")
         want.foreach { case (k, v) =>
           assert(math.abs(got(k) - v) < 1e-9, s"trial $trial $tier node $k: ${got(k)} vs $v")

@@ -61,6 +61,8 @@ class PickleSpec extends AnyFunSuite {
       x.size == y.size && x.zip(y).forall { case (p, q) => structEq(p, q) }
     case (x: Byte, y: Long) => x.toLong == y
     case (x: Long, y: Byte) => x == y.toLong
+    case (x: Double, y: Double) =>
+      java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(y)
     case (x, y) => x == y
   }
 
@@ -92,9 +94,14 @@ class PickleSpec extends AnyFunSuite {
   test("Scala dump → Scala load round-trip identity") {
     val blob = canonicalBlob + ("raw" -> Array[Byte](1, 2, 3)) +
       ("long_str" -> ("x" * 300)) + ("long_bytes" -> Array.fill[Byte](300)(7)) +
-      ("deep" -> Vector(Map("a" -> Vector(Map("b" -> Set(1L, 2L))))))
+      ("deep" -> Vector(Map("a" -> Vector(Map("b" -> Set(1L, 2L)))))) +
+      ("negnan" -> java.lang.Double.longBitsToDouble(0xfff8000000000000L))
     val got = Pickle.loads(Pickle.dumps(blob))
     assert(structEq(got, blob))
+    // CPython `pickle.dumps(x, 4)` of that NaN holds BINFLOAT ff f8 00 … 00:
+    // the sign bit survives
+    val negNan = Pickle.dumps(java.lang.Double.longBitsToDouble(0xfff8000000000000L))
+    assert(negNan.containsSlice(Array[Byte]('G'.toByte, 0xff.toByte, 0xf8.toByte, 0, 0, 0, 0, 0, 0)))
   }
 
   test("writer emits protocol 4 with documented opcodes (golden prefix)") {

@@ -3,6 +3,7 @@ package graft
 import java.lang.Double.{doubleToLongBits, doubleToRawLongBits}
 import java.nio.file.Files
 import java.util.regex.Pattern
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -111,6 +112,16 @@ class StateRoundTripSpec extends AnyFunSuite {
       doubleToLongBits(p.state("imputed").asInstanceOf[Double]) }
     assert(imputed.toSet == Set(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0)
       .map(doubleToLongBits), "the imputers must fit NaN, +Inf, -Inf and -0.0")
+    // the distributed code tables are written once, not on every state call
+    def parts(table: String): Set[String] = {
+      val files = Files.list(dir.resolve(table))
+      try files.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("part-")).toSet
+      finally files.close()
+    }
+    val written = Seq("dre", "sle").map(parts)
+    assert(written.forall(_.nonEmpty))
+    procs.foreach(_.state)
+    assert(Seq("dre", "sle").map(parts) == written, "a second state call rewrote a code table")
 
     for (ext <- Seq(".json", ".pkl")) {
       val path = dir.resolve("state" + ext).toString
@@ -121,10 +132,15 @@ class StateRoundTripSpec extends AnyFunSuite {
       val loaded = new DataPipeline(config).loadState(path)
       assert(loaded.steps.map(_.bindings.map(b => (b._1, b._3))) ==
         fitted.steps.map(_.bindings.map(b => (b._1, b._3))), ext)
-      val got = rows(loaded.transform(frame, schema), outputs)
-      outputs.indices.foreach { i =>
-        assert(got.map(_.asInstanceOf[Seq[Any]](i)) == want.map(_.asInstanceOf[Seq[Any]](i)),
-          s"$ext: step $i (${cfgSteps(i)._1}) transforms differently after loadState")
+      // saving the loaded pipeline again must keep the code tables it reads
+      loaded.saveState(path)
+      val reloaded = new DataPipeline(config).loadState(path)
+      for ((pipe, what) <- Seq(loaded -> "loadState", reloaded -> "a second save and load")) {
+        val got = rows(pipe.transform(frame, schema), outputs)
+        outputs.indices.foreach { i =>
+          assert(got.map(_.asInstanceOf[Seq[Any]](i)) == want.map(_.asInstanceOf[Seq[Any]](i)),
+            s"$ext: step $i (${cfgSteps(i)._1}) transforms differently after $what")
+        }
       }
     }
   }
