@@ -271,10 +271,11 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
-  test("driver-loop admission: node, id-byte and edge budgets") {
+  // the driver loop's admission (admitsDriverLoop) holds the former
+  // broadcast-fork node/id-byte budgets and the local-edge-tier edge budget
+  test("broadcast-fork admission: byte budget rejects fat ids even under the row cap") {
     val rowCap = 1L << 20 // 1M nodes
     val rankBudget = 64L << 20 // rank rows: n * (avg id bytes + 32)
-    val edgeBudget = 256L << 20 // packed gather: 16 B/edge
     val m = 1000L
     // 1M nodes of 20-byte ids ≈ 52 MB — inside the 64 MB budget, admitted
     assert(Graph.admitsDriverLoop(rowCap, avgIdLen = 20.0, m))
@@ -286,6 +287,10 @@ class GraphSpec extends AnyFunSuite {
     assert(!Graph.admitsDriverLoop(rowCap, (lenAtBudget + 1).toDouble, m))
     // row cap binds independently of bytes
     assert(!Graph.admitsDriverLoop(rowCap + 1, avgIdLen = 1.0, m))
+  }
+
+  test("local-edge-tier admission prices the gather at 16 B/edge (packed longs, not strings)") {
+    val edgeBudget = 256L << 20 // packed gather: 16 B/edge
     // the sf1.0 bench graph (11.7M edges) is ADMITTED — 16 B/edge =
     // 179 MiB actual driver peak; a string-priced model (46 B/edge) would
     // bounce it off the driver loop
