@@ -104,6 +104,19 @@ object ClusterValidate {
     }
   }
 
+  /** The executor memory to ask `master` for: a `local-cluster[N,C,M]`
+    * worker grants M MiB and runs one executor, so ask for all of it (more
+    * aborts the cluster phase with `requested ... MiB/executor`, after the
+    * local phase has run); any other master gets 4g.
+    */
+  def executorMemory(master: String): String = {
+    val LocalCluster = """local-cluster\[\s*\d+\s*,\s*\d+\s*,\s*(\d+)\s*]""".r
+    master match {
+      case LocalCluster(mib) => s"${mib}m"
+      case _ => "4g"
+    }
+  }
+
   /** Where a run writes its record when no path is given. */
   val DefaultOut = "target/cluster_validate.json"
 
@@ -133,7 +146,7 @@ object ClusterValidate {
     }
     val driverPid = ProcessHandle.current().pid()
     val tClus0 = System.nanoTime()
-    val spark = GraftSession.multiJvm(master, 32, Seq(jar))
+    val spark = GraftSession.multiJvm(master, 32, Seq(jar), executorMemory(master))
     val pids = spark.sparkContext.parallelize(1 to 256, 64)
       .map(_ => ProcessHandle.current().pid()).distinct().collect().sorted.toSeq
     println(s"[cluster] driver pid=$driverPid executor pids=${pids.mkString(",")}")

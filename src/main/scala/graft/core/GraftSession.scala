@@ -66,7 +66,8 @@ object GraftSession {
     * driver classpath alone never reaches a forked JVM), JDK-17 module
     * opens for the executor JVMs (spark-submit injects these for the driver
     * only; standalone `ExecutorRunner` forks a bare `java`), and an explicit
-    * executor memory matching the worker grant.
+    * executor memory, which must fit the worker grant
+    * ([[graft.ClusterValidate.executorMemory]] derives it from the master).
     *
     * This is the validation path for everything `local[n]` structurally
     * cannot test: task/closure serialization, broadcast transfer over the
@@ -74,7 +75,7 @@ object GraftSession {
     * codegen class loading from a fetched jar.
     */
   def multiJvm(master: String, parallelism: Int, jars: Seq[String],
-      executorMem: String = "4g"): SparkSession = {
+      executorMem: String): SparkSession = {
     require(jars.nonEmpty, "multiJvm needs the application jar for executors " +
       "(sbt package → target/scala-2.13/*.jar)")
     val spark = engineBuilder(master, parallelism)

@@ -38,6 +38,17 @@ object Positions {
     * weight fails the positioning; it is never read as 0.
     */
   def of(df: DataFrame, orderBy: Seq[Column], weight: Option[Column] = None): (DataFrame, Long) = {
+    val (frame, starts) = withStarts(df, orderBy, weight)
+    (frame, starts.last)
+  }
+
+  /** [[of]], returning the first position of each sorted partition followed
+    * by the row count in place of the count alone: partition `i` holds
+    * positions `starts(i)` until `starts(i + 1)`. The counts the positions
+    * are taken from give these, so no extra job runs.
+    */
+  def withStarts(df: DataFrame, orderBy: Seq[Column],
+      weight: Option[Column] = None): (DataFrame, IndexedSeq[Long]) = {
     val checked = weight.map { w =>
       val v = w.cast("long")
       when(v.isNull, raise_error(lit("Positions.of: null weight"))).otherwise(v)
@@ -79,6 +90,6 @@ object Positions {
       }
     }
     val n = starts.last._1
-    (PositionBridge.positioned(df.sparkSession, withPos, schema, n), n)
+    (PositionBridge.positioned(df.sparkSession, withPos, schema, n), starts.map(_._1).toIndexedSeq)
   }
 }

@@ -11,9 +11,9 @@ package graft.stream
   *     last batch, which lands in [B, 2B) with ≤1 row spread across shards
   *     (distributed inference: every worker must receive every step).
   *
-  * All functions are driver-side O(P+S) arithmetic; the row-space assignment
-  * they produce is applied to the distributed frame as Column arithmetic in
-  * [[BatchStream]] — nothing here scales with N.
+  * All functions are driver-side O(P+S) arithmetic; [[BatchStream]] applies
+  * the row-space assignment they produce to each positioned row as it reads
+  * the rank's intervals — nothing here scales with N.
   */
 object Sharding {
 

@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ClusterValidate's fork precondition mirrors the Spark launcher's checks,
-  * and a run given no output path writes no committed file.
+  * its executors ask for no more memory than a worker grants, and a run
+  * given no output path writes no committed file.
   */
 class ClusterValidateSpec extends AnyFunSuite {
 
@@ -33,6 +34,18 @@ class ClusterValidateSpec extends AnyFunSuite {
       assert(got.isEmpty == want.isEmpty && want.forall(w => got.exists(_.contains(w))),
         s"$master $env $props $dirs: got $got, want $want")
     }
+  }
+
+  test("executorMemory: a local-cluster master's worker grant, else 4g") {
+    val cases = Seq(
+      "local-cluster[2,1,1536]" -> "1536m",
+      "local-cluster[2,16,4096]" -> "4096m",
+      "local-cluster[ 3 , 2 , 512 ]" -> "512m",
+      "local[4]" -> "4g",
+      "spark://h:7077" -> "4g",
+      "local-cluster[2,1]" -> "4g")
+    for ((master, want) <- cases)
+      assert(ClusterValidate.executorMemory(master) == want, master)
   }
 
   test("the default record path names no committed file: it sits under the ignored target/") {

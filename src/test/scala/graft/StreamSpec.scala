@@ -308,9 +308,10 @@ class StreamSpec extends AnyFunSuite {
     val assigned = assignJobs.observe(spark.sparkContext)(BatchStream.assign(df, Seq(col("id")), plan))
     val consumeJobs = new JobCounter
     val batches = consumeJobs.observe(spark.sparkContext)(idBatches(assigned))
-    // the sort's sampling and map jobs, then the per-partition count; one read
+    // the sort's sampling and map jobs, then the per-partition count; one
+    // read of the rows with no SQL execution
     assert((assignJobs.jobs, assignJobs.sqlExecutions) == ((3, 1)))
-    assert((consumeJobs.jobs, consumeJobs.sqlExecutions) == ((1, 1)))
+    assert((consumeJobs.jobs, consumeJobs.sqlExecutions) == ((1, 0)))
     assert(batches.map(_._2.size).sum == 26L)
 
     // another rank of the same frame object reuses its positions; a new seed
@@ -333,6 +334,36 @@ class StreamSpec extends AnyFunSuite {
 
     // a caller's reorder brings the Exchange and Sort back: same batches
     assert(idBatches(assigned.repartition(7)) == batches)
+  }
+
+  test("spark toLocalBatches: each rank reads only the sorted partitions its intervals meet") {
+    import graft.core.JobCounter
+    val n = 500L
+    val seed = 11L
+    val df = spark.range(0, n, 1, 7).withColumn("payload", concat(lit("r"), col("id")))
+    val byHash = spark.range(n).select(col("id"), xxhash64(col("id"), lit(seed)))
+      .collect().map(r => (r.getLong(1), r.getLong(0))).sorted.map(_._2).toIndexedSeq
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "6") {
+      val sizes = BatchStream.withPosition(df, Seq(col("id")), shuffle = true, seed)
+        .rdd.mapPartitions(it => Iterator.single(it.size.toLong)).collect()
+      val starts = sizes.scanLeft(0L)(_ + _)
+      val nonEmpty = sizes.count(_ > 0)
+      assert(nonEmpty >= 5, s"sorted partition sizes: ${sizes.mkString(",")}")
+      val bounds = Sharding.inMemoryShardBounds(n, 3, 7L, dropLast = true)
+      (0 until 3).foreach { r =>
+        val plan = BatchStream.Plan(numRows = Some(7L), shard = (r, 3), dropLast = Some(true),
+          shuffle = true, seed = seed)
+        val (a, e, _) = bounds(r)
+        val meets = sizes.indices.count(i => sizes(i) > 0 && starts(i) < e && a < starts(i + 1))
+        val assigned = BatchStream.assign(df, Seq(col("id")), plan)
+        val read = new JobCounter
+        val batches = read.observe(spark.sparkContext)(idBatches(assigned))
+        assert(meets < nonEmpty, s"rank $r meets every partition: ${sizes.mkString(",")}")
+        assert((read.tasks, read.sqlExecutions) == ((meets, 0)), s"rank $r")
+        assert(batches == referenceBatches(byHash, plan), plan)
+      }
+    }
   }
 
   test("spark withPosition: the positioned frame caches, aggregates and holds distinct positions") {

@@ -8,10 +8,15 @@ Each seed is one pair: both checkouts run their own perfbench/run.py with
 that seed, the parent first on odd pairs and the change first on even ones,
 so a drift in host load does not favour one side. Every run's line is
 printed as it finishes; then, per metric, each side's median, the parent's
-interquartile range, the change's median delta, and in how many pairs the
-change was better (ties count for neither side); then the failure totals.
-Which direction is better comes from the change's BENCHMARK.json (unlisted
-metrics: lower is better).
+interquartile range, the change's median delta, in how many pairs the
+change was better (ties count for neither side), and whether a gain is
+claimable: the change wins at least 9 in 10 of the pairs and its median is
+better than the parent's by more than the parent's interquartile range.
+Then the failure totals. Which direction is better comes from the change's
+BENCHMARK.json (unlisted metrics: lower is better).
+
+The summary arithmetic is `summarize`; `python3 tools/test_bench_ab.py`
+checks it.
 """
 import argparse
 import json
@@ -57,6 +62,20 @@ def quartiles(xs):
     return q1, q3
 
 
+def summarize(pairs, higher):
+    """Per-metric summary of (parent, change) value pairs: both medians, the
+    parent's interquartile range, the change's wins (ties count for neither
+    side) and whether a gain is claimable."""
+    par = [p for p, _ in pairs]
+    chg = [c for _, c in pairs]
+    wins = sum(1 for p, c in pairs if (c > p if higher else c < p))
+    q1, q3 = quartiles(par)
+    pm, cm = statistics.median(par), statistics.median(chg)
+    gain = cm - pm if higher else pm - cm
+    return {"parent": pm, "parent_iqr": q3 - q1, "change": cm, "wins": wins, "pairs": len(pairs),
+            "claim": 10 * wins >= 9 * len(pairs) and gain > q3 - q1}
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent", required=True)
@@ -87,22 +106,19 @@ def main():
                 names.append(k)
     print(f"\n{args.workload}: {len(records['parent'])} pairs at --seconds {args.seconds:g}")
     print(f"{'metric':32} {'better':6} {'parent':>12} {'parent_iqr':>12} {'change':>12} "
-          f"{'delta':>8} {'wins':>7}")
+          f"{'delta':>8} {'wins':>7} {'claim':>5}")
     for name in names:
         pairs = [(p["metrics"][name]["value"], c["metrics"][name]["value"])
                  for p, c in zip(records["parent"], records["change"])
                  if p and c and name in p["metrics"] and name in c["metrics"]]
         if not pairs:
             continue
-        par = [p for p, _ in pairs]
-        chg = [c for _, c in pairs]
         up = name in higher
-        wins = sum(1 for p, c in pairs if (c > p if up else c < p))
-        q1, q3 = quartiles(par)
-        pm, cm = statistics.median(par), statistics.median(chg)
+        m = summarize(pairs, up)
+        pm, cm = m["parent"], m["change"]
         delta = f"{(cm - pm) / pm * 100:+.1f}%" if pm else "n/a"
-        print(f"{name:32} {'higher' if up else 'lower':6} {pm:12.6g} {q3 - q1:12.6g} {cm:12.6g} "
-              f"{delta:>8} {wins:>3}/{len(pairs):<3}")
+        print(f"{name:32} {'higher' if up else 'lower':6} {pm:12.6g} {m['parent_iqr']:12.6g} "
+              f"{cm:12.6g} {delta:>8} {m['wins']:>3}/{m['pairs']:<3} {'yes' if m['claim'] else 'no':>5}")
     for side in ("parent", "change"):
         recs = records[side]
         ok = [r for r in recs if r]
