@@ -179,7 +179,6 @@ object ClusterValidate {
     val json =
       s"""{
   "metric": "multi_jvm_validation",
-  "round": 18,
   "master": ${Bench.jstr(master)},
   "sf": ${Bench.jstr(sfDir)},
   "driver_pid": $driverPid,

@@ -4,6 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.core.DriverGather
 
 /** Frame wire compression — the reference's `compress()`/`decompress()`
   * (`src/bears/core/frame/ScalableDataFrame.py:336-393, 2057-2086`): rows as
@@ -68,30 +69,28 @@ object Compress {
     * "frame → one in-memory payload" API, and anything larger belongs on the
     * executors ([[compressPerPartition]]).
     */
-  val DriverCompressRowCeiling: Long = 5000000L
+  val DriverCompressRowCeiling: Int = 5000000
 
   /** Whole frame → one compressed JSON-lines payload (driver-side — the
     * reference's `ScalableDataFrame` compress contract, which is also
     * driver-side). Guarded: the payload materializes ALL rows on the driver,
     * so frames above [[DriverCompressRowCeiling]] rows refuse loudly and
     * point at the distributed [[compressPerPartition]] path. Guard and
-    * collect are ONE job over the same `limit(ceiling+1)` plan: the ceiling
-    * is checked on exactly the rows collected (no separate probe scan, no
-    * probe-vs-collect TOCTOU on non-deterministic sources), and the limit
-    * bounds the collect itself so an over-ceiling frame never materializes
-    * more than ceiling+1 rows before refusing.
+    * collect are ONE bounded gather ([[graft.core.DriverGather]]): the
+    * ceiling is checked on exactly the rows collected, and an over-ceiling
+    * frame never materializes more than ceiling+1 rows before refusing.
     */
-  def compress(df: DataFrame, codec: String = Gzip,
-      rowCeiling: Long = DriverCompressRowCeiling): Array[Byte] = {
-    // limit() takes an Int — clamp so an absurd Long ceiling can't overflow
-    // into a negative limit (the probe then simply checks at Int.MaxValue-1)
-    val probe = math.min(rowCeiling + 1, Int.MaxValue.toLong - 1).toInt
-    val lines = df.toJSON.limit(probe).collect()
-    if (lines.length > rowCeiling)
-      throw new IllegalStateException(
-        s"Compress.compress: frame exceeds $rowCeiling rows — a whole-frame " +
-          "driver-side payload at this size risks driver OOM. Use compressPerPartition " +
-          "(distributed, one payload per partition) or write a compressed file format instead.")
+  def compress(df: DataFrame, codec: String = Gzip): Array[Byte] =
+    compress(df, codec, DriverCompressRowCeiling)
+
+  /** [[compress]] under a given row ceiling, so a spec reaches the refusal
+    * with a tiny frame.
+    */
+  private[graft] def compress(df: DataFrame, codec: String, ceiling: Int): Array[Byte] = {
+    val lines = DriverGather.atMost(df.toJSON, ceiling)(
+      s"Compress.compress: frame exceeds $ceiling rows — a whole-frame " +
+        "driver-side payload at this size risks driver OOM. Use compressPerPartition " +
+        "(distributed, one payload per partition) or write a compressed file format instead.")
     encoder(codec)(lines.mkString("\n"))
   }
 

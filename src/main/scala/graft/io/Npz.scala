@@ -7,6 +7,7 @@ import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import graft.core.DriverGather
 
 /** NPZ / NPY source and sink — reference `reader/dataframe/NpzReader.py`
   * (~70 LoC: numpy `.npz` → columns) and the NPZ sink
@@ -209,6 +210,8 @@ object Npz {
 
   /** Driver-side collect → one deflated `<col>.npy` zip member per column
     * (the reference's `np.savez` sink, `ScalableDataFrame.py:2015-2017`).
+    * Like the pickle sink it holds at most [[Pickle.MaxSinkRows]] rows and
+    * refuses past them before any file is created.
     */
   def write(df: DataFrame, path: String): Unit = {
     require(Storage.detect(path) == Storage.Local,
@@ -216,7 +219,9 @@ object Npz {
     df.schema.fields.foreach { f =>
       require(writable(f.dataType), s"NPY sink for ${f.dataType} unsupported (column ${f.name})")
     }
-    val rows = df.collect().toIndexedSeq
+    val rows = DriverGather.atMost(df, Pickle.MaxSinkRows)(
+      s"NPZ sink: over ${Pickle.MaxSinkRows} rows exceeds the driver ceiling — " +
+        "npz is a driver-interchange format; write parquet for bulk data").toIndexedSeq
     val zout = new ZipOutputStream(new FileOutputStream(path))
     try {
       df.schema.fields.zipWithIndex.foreach { case (f, i) =>

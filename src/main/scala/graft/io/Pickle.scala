@@ -8,6 +8,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import graft.core.DriverGather
 
 /** Pure-JVM pickle source and sink — reference
   * `reader/binary/PickleReader.py:20-34` (`pickle.load` → StructuredBlob) and
@@ -519,9 +520,9 @@ object Pickle {
   /** Max rows the records sink will collect to the driver — pickle is a
     * single-blob driver format (reference contract); bulk data goes to
     * parquet. Loud refusal beyond the ceiling, same policy as TF-IDF's
-    * driver-vocab ceiling.
+    * driver-vocab ceiling; [[Npz.write]] shares it.
     */
-  val MaxSinkRows: Long = 1000000L
+  val MaxSinkRows: Int = 1000000
 
   /** Read a records pickle (Python list-of-dicts, or dict-of-lists columns
     * blob) as a DataFrame. Column order = first-seen key order; types are
@@ -625,22 +626,18 @@ object Pickle {
     * the over-ceiling refusal path with a tiny frame against a tiny ceiling
     * (the production entry point above always passes [[MaxSinkRows]]).
     */
-  private[graft] def writeRecords(df: DataFrame, path: String, maxRows: Long): Unit = {
+  private[graft] def writeRecords(df: DataFrame, path: String, maxRows: Int): Unit = {
     require(Storage.detect(path) == Storage.Local,
       s"pickle sink writes a driver-local file (got: $path)")
-    require(maxRows > 0 && maxRows < Int.MaxValue, s"pickle sink ceiling $maxRows out of range")
-    // single pass: collect at most ceiling+1 rows — the +1 row proves the
-    // overflow without a separate count() job re-running the upstream plan
     val names = df.schema.fieldNames
-    val rows = df.limit((maxRows + 1).toInt).collect().map { r =>
+    val rows = DriverGather.atMost(df, maxRows)(
+      s"pickle sink: over $maxRows rows exceeds the driver ceiling — " +
+        "pickle is a driver-interchange format; write parquet for bulk data").map { r =>
       val m = mutable.LinkedHashMap.empty[Any, Any]
       var i = 0
       while (i < names.length) { m(names(i)) = fromSparkValue(r.get(i)); i += 1 }
       m
     }
-    require(rows.length <= maxRows,
-      s"pickle sink: over $maxRows rows exceeds the driver ceiling — " +
-        "pickle is a driver-interchange format; write parquet for bulk data")
     dump(mutable.ArrayBuffer.from(rows), path)
   }
 

@@ -16,12 +16,11 @@ import org.apache.spark.sql.functions._
   * and the window is the same sort a sort-merge range join would need,
   * minus the quadratic candidate expansion.
   *
-  * Skew caveat: one giant key = one task's window. The salted variant for
-  * that workload: bucket `leftTime` into coarse ranges, salt the key with
-  * the range id, and carry each range's last-right-row-before-boundary as a
-  * seed row into the next range (one extra narrow pass) — keeps per-task
-  * windows bounded without changing results. Not built here because no
-  * oracle workload exhibits the skew; this note is the recipe.
+  * Skew caveat: one giant key = one task's window. [[backwardSalted]] is
+  * the variant for that workload: it buckets the time axis into coarse
+  * ranges, salts the key with the range id, and seeds each range with the
+  * last right row of the ranges before it — per-task windows stay bounded
+  * and results do not change.
   */
 object AsOfJoin {
 
@@ -42,22 +41,11 @@ object AsOfJoin {
       rightPayload: Map[String, String],
       strict: Boolean = false): DataFrame = {
 
-    val leftCols = left.columns.toSeq
     // side 0 = right, 1 = left: at equal times the right row sorts first,
     // so `last(...)` has already seen it (inclusive semantics); strict mode
     // flips the order so equal-time right rows sort after the left row.
     val sideOrder = if (strict) Seq(col("__t__"), col("__side__").desc) else Seq(col("__t__"), col("__side__"))
-
-    val taggedRight = right.select(
-      keys.map(col) ++
-        Seq(col(rightTime).as("__t__"), lit(0).as("__side__")) ++
-        rightPayload.map { case (from, to) => col(from).as(s"__p_$to") }: _*)
-    val taggedLeft = left.select(
-      keys.map(col) ++
-        Seq(col(leftTime).as("__t__"), lit(1).as("__side__")) ++
-        leftCols.filterNot(keys.contains).map(c => col(c).as(s"__l_$c")): _*)
-
-    val unioned = taggedLeft.unionByName(taggedRight, allowMissingColumns = true)
+    val unioned = tagAndUnion(left, right, keys, leftTime, rightTime, rightPayload)
     val w = Window.partitionBy(keys.map(col): _*).orderBy(sideOrder: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
@@ -66,17 +54,9 @@ object AsOfJoin {
     // and its field values (nulls included) are preserved; independent
     // per-column last() windows could mix values from different right rows
     // when the matched row holds a null in one payload column.
-    val payloadStruct = struct(
-      rightPayload.values.toSeq.map(to => col(s"__p_$to").as(to)): _*)
     val carried = unioned.withColumn("__c__",
-      last(when(col("__side__") === 0, payloadStruct), ignoreNulls = true).over(w))
-
-    carried.filter(col("__side__") === 1)
-      .select(
-        keys.map(col) ++
-          Seq(col("__t__").as(leftTime)) ++
-          leftCols.filterNot(c => keys.contains(c) || c == leftTime).map(c => col(s"__l_$c").as(c)) ++
-          rightPayload.values.map(to => col("__c__").getField(to).as(to)): _*)
+      last(when(col("__side__") === 0, payloadStruct(rightPayload)), ignoreNulls = true).over(w))
+    matchedLeftRows(carried, left, keys, leftTime, rightPayload)
   }
 
   /** pandas `merge_asof(direction="forward")`: for each left row, the
@@ -95,37 +75,17 @@ object AsOfJoin {
       rightPayload: Map[String, String],
       strict: Boolean = false): DataFrame = {
 
-    val leftCols = left.columns.toSeq
     // inclusive: left (side 1) sorts BEFORE equal-time right (side 0) so the
     // right row is in the left row's following frame; strict: right first,
     // excluding it from the frame.
     val sideOrder =
       if (strict) Seq(col("__t__"), col("__side__")) else Seq(col("__t__"), col("__side__").desc)
-
-    val taggedRight = right.select(
-      keys.map(col) ++
-        Seq(col(rightTime).as("__t__"), lit(0).as("__side__")) ++
-        rightPayload.map { case (from, to) => col(from).as(s"__p_$to") }: _*)
-    val taggedLeft = left.select(
-      keys.map(col) ++
-        Seq(col(leftTime).as("__t__"), lit(1).as("__side__")) ++
-        leftCols.filterNot(keys.contains).map(c => col(c).as(s"__l_$c")): _*)
-
-    val unioned = taggedLeft.unionByName(taggedRight, allowMissingColumns = true)
+    val unioned = tagAndUnion(left, right, keys, leftTime, rightTime, rightPayload)
     val w = Window.partitionBy(keys.map(col): _*).orderBy(sideOrder: _*)
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-
-    val payloadStruct = struct(
-      rightPayload.values.toSeq.map(to => col(s"__p_$to").as(to)): _*)
     val carried = unioned.withColumn("__c__",
-      first(when(col("__side__") === 0, payloadStruct), ignoreNulls = true).over(w))
-
-    carried.filter(col("__side__") === 1)
-      .select(
-        keys.map(col) ++
-          Seq(col("__t__").as(leftTime)) ++
-          leftCols.filterNot(c => keys.contains(c) || c == leftTime).map(c => col(s"__l_$c").as(c)) ++
-          rightPayload.values.map(to => col("__c__").getField(to).as(to)): _*)
+      first(when(col("__side__") === 0, payloadStruct(rightPayload)), ignoreNulls = true).over(w))
+    matchedLeftRows(carried, left, keys, leftTime, rightPayload)
   }
 
   /** pandas `merge_asof(direction="nearest")`: the closer of the backward
@@ -144,29 +104,18 @@ object AsOfJoin {
       rightTime: String,
       rightPayload: Map[String, String]): DataFrame = {
 
-    val leftCols = left.columns.toSeq
     val sideOrder = Seq(col("__t__"), col("__side__"))
-
-    val taggedRight = right.select(
-      keys.map(col) ++
-        Seq(col(rightTime).as("__t__"), lit(0).as("__side__")) ++
-        rightPayload.map { case (from, to) => col(from).as(s"__p_$to") }: _*)
-    val taggedLeft = left.select(
-      keys.map(col) ++
-        Seq(col(leftTime).as("__t__"), lit(1).as("__side__")) ++
-        leftCols.filterNot(keys.contains).map(c => col(c).as(s"__l_$c")): _*)
-
-    val unioned = taggedLeft.unionByName(taggedRight, allowMissingColumns = true)
+    val unioned = tagAndUnion(left, right, keys, leftTime, rightTime, rightPayload)
     val wb = Window.partitionBy(keys.map(col): _*).orderBy(sideOrder: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wf = Window.partitionBy(keys.map(col): _*).orderBy(sideOrder: _*)
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
 
     // carry the matched right TIME alongside the payload: distance decides
-    val payloadStruct = struct(
+    val timedPayload = struct(
       (col("__t__").as("__rt__") +:
         rightPayload.values.toSeq.map(to => col(s"__p_$to").as(to))): _*)
-    val rightOnly = when(col("__side__") === 0, payloadStruct)
+    val rightOnly = when(col("__side__") === 0, timedPayload)
     val carried = unioned
       .withColumn("__b__", last(rightOnly, ignoreNulls = true).over(wb))
       .withColumn("__f__", first(rightOnly, ignoreNulls = true).over(wf))
@@ -185,13 +134,7 @@ object AsOfJoin {
       .when(tD - bD <= fD - tD, col("__b__")) // tie -> backward (pandas)
       .otherwise(col("__f__"))
 
-    carried.withColumn("__c__", chosen)
-      .filter(col("__side__") === 1)
-      .select(
-        keys.map(col) ++
-          Seq(col("__t__").as(leftTime)) ++
-          leftCols.filterNot(c => keys.contains(c) || c == leftTime).map(c => col(s"__l_$c").as(c)) ++
-          rightPayload.values.map(to => col("__c__").getField(to).as(to)): _*)
+    matchedLeftRows(carried.withColumn("__c__", chosen), left, keys, leftTime, rightPayload)
   }
 
   /** [[backward]] for SKEWED keys — the §2.3 skew-cliff closer. `backward`
@@ -227,18 +170,8 @@ object AsOfJoin {
       strict: Boolean = false,
       salts: Int = 32): DataFrame = {
     require(salts >= 1, "salts must be >= 1")
-    val leftCols = left.columns.toSeq
     val sideOrder = if (strict) Seq(col("__t__"), col("__side__").desc) else Seq(col("__t__"), col("__side__"))
-
-    val taggedRight = right.select(
-      keys.map(col) ++
-        Seq(col(rightTime).as("__t__"), lit(0).as("__side__")) ++
-        rightPayload.map { case (from, to) => col(from).as(s"__p_$to") }: _*)
-    val taggedLeft = left.select(
-      keys.map(col) ++
-        Seq(col(leftTime).as("__t__"), lit(1).as("__side__")) ++
-        leftCols.filterNot(keys.contains).map(c => col(c).as(s"__l_$c")): _*)
-    val unioned = taggedLeft.unionByName(taggedRight, allowMissingColumns = true)
+    val unioned = tagAndUnion(left, right, keys, leftTime, rightTime, rightPayload)
 
     // time-range bucketing: boundaries from approx quantiles of the combined
     // time axis; a when-chain of <= salts-1 comparisons assigns the bucket
@@ -259,15 +192,14 @@ object AsOfJoin {
       })
     val salted = unioned.withColumn("__salt__", saltExpr)
 
-    val payloadStruct = struct(
-      rightPayload.values.toSeq.map(to => col(s"__p_$to").as(to)): _*)
+    val payload = payloadStruct(rightPayload)
 
     // last right payload per (key, range): the candidate carry-OUT of each
     // range — max_by over time picks the latest right row atomically
     val grpCols = keys.map(col) :+ col("__salt__")
     val rangeLast = salted.filter(col("__side__") === 0)
       .groupBy(grpCols: _*)
-      .agg(max_by(payloadStruct, col("__t__")).as("__rl__"))
+      .agg(max_by(payload, col("__t__")).as("__rl__"))
     // carry-IN per (key, range) = last non-null carry-out over earlier
     // ranges; the scan window sees <= salts rows per key — never skewed
     val keyRanges = salted.select(grpCols: _*).distinct()
@@ -287,13 +219,41 @@ object AsOfJoin {
     val w = Window.partitionBy(grpCols: _*).orderBy(sideOrder: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val carried = withSeeds.withColumn("__c__",
-      last(when(col("__side__") <= 0, payloadStruct), ignoreNulls = true).over(w))
+      last(when(col("__side__") <= 0, payload), ignoreNulls = true).over(w))
+    matchedLeftRows(carried, left, keys, leftTime, rightPayload)
+  }
 
+  /** Both sides in one frame: the keys, the event time as `__t__`, the side
+    * as `__side__` (0 = right, 1 = left), the right payload as `__p_<to>`
+    * and every other left column as `__l_<name>`.
+    */
+  private def tagAndUnion(left: DataFrame, right: DataFrame, keys: Seq[String],
+      leftTime: String, rightTime: String, rightPayload: Map[String, String]): DataFrame = {
+    val taggedRight = right.select(
+      keys.map(col) ++
+        Seq(col(rightTime).as("__t__"), lit(0).as("__side__")) ++
+        rightPayload.map { case (from, to) => col(from).as(s"__p_$to") }: _*)
+    val taggedLeft = left.select(
+      keys.map(col) ++
+        Seq(col(leftTime).as("__t__"), lit(1).as("__side__")) ++
+        left.columns.toSeq.filterNot(keys.contains).map(c => col(c).as(s"__l_$c")): _*)
+    taggedLeft.unionByName(taggedRight, allowMissingColumns = true)
+  }
+
+  /** One right row's payload as a struct of its output names. */
+  private def payloadStruct(rightPayload: Map[String, String]): Column =
+    struct(rightPayload.values.toSeq.map(to => col(s"__p_$to").as(to)): _*)
+
+  /** The left rows of `carried` back in `left`'s columns, followed by the
+    * payload fields of the matched struct `__c__`.
+    */
+  private def matchedLeftRows(carried: DataFrame, left: DataFrame, keys: Seq[String],
+      leftTime: String, rightPayload: Map[String, String]): DataFrame =
     carried.filter(col("__side__") === 1)
       .select(
         keys.map(col) ++
           Seq(col("__t__").as(leftTime)) ++
-          leftCols.filterNot(c => keys.contains(c) || c == leftTime).map(c => col(s"__l_$c").as(c)) ++
+          left.columns.toSeq.filterNot(c => keys.contains(c) || c == leftTime)
+            .map(c => col(s"__l_$c").as(c)) ++
           rightPayload.values.map(to => col("__c__").getField(to).as(to)): _*)
-  }
 }

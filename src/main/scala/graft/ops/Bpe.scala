@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.DriverGather
 
 /** Byte-pair-encoding tokenizer TRAINING at corpus scale — the op a
   * 100 TB training-data pipeline runs once per dataset release to fit the
@@ -20,8 +21,8 @@ import org.apache.spark.sql.functions._
   *      corpus (~1M distinct words for 100 GB of English), and it shrinks
   *      RELATIVE to corpus size as the corpus grows.
   *   2. `train` (DRIVER-LOCAL, EXACT): the merge loop on the collected
-  *      word table, under a hard `maxDistinctWords` ceiling with a loud
-  *      refusal (the TF-IDF driver-vocab ceiling policy). This is not a
+  *      word table, under the hard [[MaxDistinctWords]] ceiling with a loud
+  *      refusal (one bounded [[graft.core.DriverGather]]). This is not a
   *      compromise: HuggingFace `tokenizers` and SentencePiece train from
   *      an in-memory word-frequency table too — per-round arg-max over
   *      mutating state is inherently sequential, and the corpus-sized work
@@ -53,6 +54,13 @@ object Bpe {
     */
   final case class Merge(rank: Int, left: String, right: String, token: String, pairCount: Long)
 
+  /** Driver ceiling on the collected word table of [[train]] and
+    * [[vocabulary]]: 2M words × ~10 symbols ≈ 160 MB of driver state.
+    * Past it both refuse loudly, never truncate silently;
+    * [[cappedWordCounts]] is the way around.
+    */
+  val MaxDistinctWords: Int = 2000000
+
   // ------------------------------------------------------- phase 1 (cluster)
 
   /** Corpus → (word, count): the distributed pass. Pre-tokenizer is the
@@ -68,22 +76,22 @@ object Bpe {
 
   /** Exact BPE merge loop over a (word, count) table. Words are symbol
     * sequences of Unicode CODEPOINTS (the engine-wide char-unit contract —
-    * an astral emoji is ONE base symbol) plus [[EndOfWord]].
-    *
-    * @param maxDistinctWords hard driver ceiling — loud refusal, never a
-    *   silent truncation. 2M words × ~10 symbols ≈ 160 MB of driver state.
+    * an astral emoji is ONE base symbol) plus [[EndOfWord]]. The table is
+    * collected once, under [[MaxDistinctWords]]; callers running
+    * [[train]] and [[vocabulary]] on one computed table should `.cache()` it
+    * to share one materialization across both calls.
     */
-  def train(wordCounts: DataFrame, numMerges: Int,
-      maxDistinctWords: Long = 2000000L): Seq[Merge] = {
+  def train(wordCounts: DataFrame, numMerges: Int): Seq[Merge] =
+    train(wordCounts, numMerges, MaxDistinctWords)
+
+  /** [[train]] under a given ceiling, so a spec reaches the refusal with a
+    * tiny table.
+    */
+  private[graft] def train(wordCounts: DataFrame, numMerges: Int, ceiling: Int): Seq[Merge] = {
     require(numMerges >= 0, s"numMerges $numMerges < 0")
-    val rows = withPinned(wordCounts) { wc =>
-      val total = wc.count()
-      require(total <= maxDistinctWords,
-        s"BPE train: $total distinct words exceeds the $maxDistinctWords driver ceiling — " +
-          "raise maxDistinctWords deliberately or pre-filter rare words " +
-          "(e.g. wordCounts.filter(col(\"n\") >= 2))")
-      wc.select(col("word").cast("string"), col("n").cast("long")).collect()
-    }
+    val rows = DriverGather.atMost(
+      wordCounts.select(col("word").cast("string"), col("n").cast("long")), ceiling)(
+      tableRefusal("train", ceiling))
     val words: Array[(Array[String], Long)] = rows.iterator
       .filter(r => !r.isNullAt(0) && r.getString(0).nonEmpty)
       .map { r =>
@@ -112,24 +120,17 @@ object Bpe {
     * partitioning.
     */
   def cappedWordCounts(wordCounts: DataFrame,
-      maxDistinctWords: Long = 2000000L): DataFrame = {
+      maxDistinctWords: Long = MaxDistinctWords): DataFrame = {
     require(maxDistinctWords > 0 && maxDistinctWords <= Int.MaxValue,
       s"maxDistinctWords $maxDistinctWords out of range")
     wordCounts.orderBy(col("n").desc, col("word").asc)
       .limit(maxDistinctWords.toInt)
   }
 
-  /** Persist `df` around `body` unless the caller already cached it — the
-    * ceiling count() and the collect() would otherwise each re-run the
-    * corpus-scale aggregation (the expensive pass at the 100 TB design
-    * point). Callers running train + vocabulary should still `.cache()` the
-    * word table themselves to share ONE materialization across both calls.
-    */
-  private def withPinned[T](df: DataFrame)(body: DataFrame => T): T = {
-    val wasCached = df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    if (!wasCached) df.persist()
-    try body(df) finally { if (!wasCached) df.unpersist() }
-  }
+  private def tableRefusal(op: String, ceiling: Int): String =
+    s"BPE $op: more than $ceiling distinct words exceeds the driver ceiling — " +
+      "cap the table to its most frequent words with cappedWordCounts, or pre-filter " +
+      "rare words (e.g. wordCounts.filter(col(\"n\") >= 2))"
 
   /** The exact incremental merge loop over pre-built symbol sequences —
     * public both for the spec differential and for callers that already
@@ -234,19 +235,14 @@ object Bpe {
     * a `split(word, "")` Column would cut astral chars into surrogate
     * halves (the exact UTF-16 bug class r14 unified away).
     */
-  def vocabulary(spark: SparkSession, wordCounts: DataFrame, ms: Seq[Merge],
-      maxDistinctWords: Long = 2000000L): DataFrame = {
+  def vocabulary(spark: SparkSession, wordCounts: DataFrame, ms: Seq[Merge]): DataFrame = {
     import spark.implicits._
     // explicit codepoint ordering: default String order is UTF-16
     // code-UNIT order, which files astral symbols (surrogate range)
     // BEFORE BMP chars in U+E000..U+FFFF — not codepoint order
     val base = mutable.SortedSet.empty[String](Ordering.by((s: String) => s.codePointAt(0)))
-    withPinned(wordCounts) { wc =>
-      val total = wc.count()
-      require(total <= maxDistinctWords,
-        s"BPE vocabulary: $total distinct words exceeds the $maxDistinctWords driver ceiling")
-      wc.select("word").collect()
-    }.foreach { r =>
+    DriverGather.atMost(wordCounts.select("word"), MaxDistinctWords)(
+      tableRefusal("vocabulary", MaxDistinctWords)).foreach { r =>
       if (!r.isNullAt(0))
         r.getString(0).codePoints().toArray
           .foreach(cp => base += new String(Character.toChars(cp)))

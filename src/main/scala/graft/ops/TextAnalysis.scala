@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.core.DriverGather
 
 /** Text-analysis operators for large-scale training-data pipelines
   * (parity-plus over the reference — SURVEY.md §7 M5b): language ID, quality
@@ -750,29 +751,30 @@ object TextAnalysis {
       .orderBy(col("freq").desc, col("gram"))
       .limit(topN)
 
+  /** Driver ceiling on [[stripBoilerplate]]'s collected line-hash set. */
+  val MaxBoilerplateLines: Int = 100000
+
   /** Boilerplate-line removal (the CCNet/Common-Crawl cleaning step): drop
     * every line that appears in at least `minDocFreq` distinct documents
     * (nav menus, cookie banners, copyright footers), preserving the order
     * of surviving lines. Frequencies come from one line-hash-keyed
     * aggregate over per-doc DISTINCT lines; the resulting boilerplate set
     * is tiny by construction (a line must recur across `minDocFreq` docs to
-    * qualify), so it collects to the driver (capped) and the removal itself
-    * is a map-side HOF filter — document text never shuffles.
+    * qualify), so it collects to the driver (at most [[MaxBoilerplateLines]])
+    * and the removal itself is a map-side HOF filter — document text never
+    * shuffles.
     */
   def stripBoilerplate(df: org.apache.spark.sql.DataFrame, textCol: Column,
-      minDocFreq: Long, out: String = "text_clean",
-      maxBoilerplateLines: Int = 100000): org.apache.spark.sql.DataFrame = {
+      minDocFreq: Long, out: String = "text_clean"): org.apache.spark.sql.DataFrame = {
     val lines = split(textCol, "\n")
-    val hot = df
+    val hot = DriverGather.atMost(df
       .select(explode(array_distinct(lines)).as("__l__"))
       .groupBy(hash60(col("__l__")).as("__lh__"))
       .agg(count(lit(1)).as("__df__")) // per-doc distinct => count == doc freq
       .filter(col("__df__") >= minDocFreq)
-      .select(col("__lh__"))
-      .limit(maxBoilerplateLines + 1)
-      .collect().map(_.getLong(0))
-    require(hot.length <= maxBoilerplateLines,
-      s"boilerplate set exceeds $maxBoilerplateLines lines; raise minDocFreq")
+      .select(col("__lh__")), MaxBoilerplateLines)(
+      s"stripBoilerplate: boilerplate set exceeds $MaxBoilerplateLines lines at " +
+        s"minDocFreq=$minDocFreq; raise minDocFreq").map(_.getLong(0))
     val hotSet = typedLit(hot.toSeq)
     val kept = filter(lines, l => !array_contains(hotSet, hash60(l)))
     df.withColumn(out, concat_ws("\n", kept))

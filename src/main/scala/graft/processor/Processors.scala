@@ -208,14 +208,9 @@ object Processors {
       // fit would gather the whole key space; encode such columns with a
       // hash/dense-rank instead.
       val c = col(inputCols.head)
-      val filled = missingFill.fold(c)(f => coalesce(c, lit(f)))
       // sorted in the column's own type, so longs above 2^53 and wide
-      // decimals keep their order; NaN is no label and -0.0 is the label 0.0
-      val label = df.select(filled).schema.head.dataType match {
-        case dt @ (FloatType | DoubleType) =>
-          when(!isnan(filled), when(filled === 0, lit(0).cast(dt)).otherwise(filled))
-        case _ => filled
-      }
+      // decimals keep their order
+      val label = LabelEncoding.fitLabel(df, missingFill.fold(c)(f => coalesce(c, lit(f))))
       Some(AggregateFit(Seq(sort_array(collect_set(label))),
         v => fitLabels(v.head.asInstanceOf[collection.Seq[Any]].map(_.toString).toSeq)))
     }
@@ -262,6 +257,18 @@ object Processors {
     val UnknownByRange: Map[String, Long] = Map(
       "one_to_n" -> 0L, "binary_zero_one" -> -1L,
       "binary_plus_minus_one" -> 0L, "zero_to_n_minus_one" -> -1L)
+
+    /** The label a fit sees for `filled`: for a float or double column NaN
+      * is no label (null) and -0.0 is the label 0.0; any other value is its
+      * own label. LabelEncoding and DenseRankLabelEncoding both fit by it.
+      */
+    private[processor] def fitLabel(df: DataFrame, filled: Column): Column =
+      df.select(filled).schema.head.dataType match {
+        case dt @ (FloatType | DoubleType) =>
+          when(!isnan(filled), when(filled === 0, lit(0).cast(dt)).otherwise(filled))
+        case _ => filled
+      }
+
     val BinaryPositive = Set("1", "Y", "YES", "TRUE", "T")
     val BinaryNegative = Set("0", "-1", "N", "NO", "FALSE", "F")
 

@@ -75,17 +75,18 @@ object ScalableEncoders {
 
     override def fit(df: DataFrame, inputCol: String): this.type = {
       val c = col(inputCol)
-      val filled = missingFill.fold(c)(f => coalesce(c, lit(f)))
-      // sorted in the column's own type, as LabelEncoding sorts its labels
-      // (np.unique); the JOIN key is always the string form so restore()d
-      // tables round-trip type-exactly
-      val d = df.select(filled.cast("string").as("__dre_label__"),
-          filled.as("__dre_sort__"))
+      // LabelEncoding's labels (NaN none, -0.0 folded into 0.0), sorted in
+      // the column's own type as LabelEncoding sorts them (np.unique); the
+      // JOIN key is always the string form so restore()d tables round-trip
+      // type-exactly
+      val label = Processors.LabelEncoding.fitLabel(df,
+        missingFill.fold(c)(f => coalesce(c, lit(f))))
+      val d = df.select(label.cast("string").as("__dre_label__"), label.as("__dre_sort__"))
         .na.drop("any", Seq("__dre_label__"))
         .dropDuplicates("__dre_label__")
       // zero-based exact global dense index: the label's position in
-      // (sort value, label) order — the label breaks sort-value ties such
-      // as -0.0 and 0.0; the returned row count is the label count
+      // (sort value, label) order — the label breaks any sort-value tie;
+      // the returned row count is the label count
       // (LabelEncoding's non-empty contract and the binary modes' ≤2 bound)
       val (indexed, cnt) = Positions.of(d, Seq(col("__dre_sort__"), col("__dre_label__")))
       require(cnt > 0, "input must contain at least one non-null label")

@@ -2,7 +2,7 @@ package graft.processor
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.MLType
+import graft.core.{DriverGather, MLType}
 
 /** TF-IDF vectorization (`src/bears/processor/_text/_TFIDFVectorization
   * .py:16-76`, which wraps sklearn's TfidfVectorizer).
@@ -22,8 +22,10 @@ import graft.core.MLType
   *
   * Scale: fit shuffles one row per distinct term (partial-aggregated);
   * transform is embarrassingly parallel. The vocabulary must fit in the
-  * driver/broadcast (`max_features` caps it), which is the same constraint
-  * sklearn+bears has — but here the corpus itself never leaves the cluster.
+  * driver/broadcast, which is the same constraint sklearn+bears has — but
+  * here the corpus itself never leaves the cluster. `max_features` caps it
+  * to the top k terms; without it the fit gathers at most
+  * [[TfIdfVectorization.UncappedVocabCeiling]] terms and refuses past them.
   */
 final class TfIdfVectorization(params: Map[String, Any]) extends FrameLevelProcessor {
   import Processors.P._
@@ -36,10 +38,6 @@ final class TfIdfVectorization(params: Map[String, Any]) extends FrameLevelProce
   private val maxFeatures: Option[Int] = opt(params, "max_features").map(_.toInt)
   private val minDf: Long = opt(params, "min_df").map(_.toLong).getOrElse(1L)
   private val outputSparse: Boolean = bool(params, "output_sparse", d = false)
-  private val uncapped: Boolean = bool(params, "uncapped", d = false)
-  // override point for specs (pins the refusal without a 1M-term fixture)
-  private val vocabCeiling: Int = opt(params, "uncapped_vocab_ceiling")
-    .map(_.toInt).getOrElse(TfIdfVectorization.UncappedVocabCeiling)
 
   /** term → (index, idf); index dense over sorted vocabulary. */
   private var vocab: Option[Seq[(String, (Int, Double))]] = None
@@ -69,14 +67,19 @@ final class TfIdfVectorization(params: Map[String, Any]) extends FrameLevelProce
     */
   private val DocSentinel = "\u0000\u0000"
 
-  override def fit(df: DataFrame, inputCol: String): this.type = {
+  override def fit(df: DataFrame, inputCol: String): this.type =
+    fit(df, inputCol, TfIdfVectorization.UncappedVocabCeiling)
+
+  /** [[fit]] under a given vocabulary ceiling, so a spec reaches the
+    * refusal with a tiny corpus.
+    */
+  private[graft] def fit(df: DataFrame, inputCol: String, vocabCeiling: Int): this.type = {
     // Driver-memory contract (the sklearn/Spark-ML CountVectorizer
     // contract): the fitted vocabulary lives on the driver. With
     // max_features set, the top-k limit bounds the collect to k+1 rows.
     // With max_features UNSET the collect would gather EVERY distinct term
     // passing minDf — at web scale an effectively unbounded term space — so
-    // it is bounded at UncappedVocabCeiling and refuses loudly past it
-    // unless `uncapped=true` explicitly opts in (vocabularies known small).
+    // it gathers at most the ceiling's terms and refuses loudly past them.
     // ONE corpus pass for n AND the document frequencies: every non-null
     // doc emits the sentinel row alongside its distinct tokens, so the
     // doc count rides the same explode → groupBy(term) aggregate instead
@@ -88,29 +91,20 @@ final class TfIdfVectorization(params: Map[String, Any]) extends FrameLevelProce
     val dfreq = exploded
       .groupBy("term").agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
-    val kept = maxFeatures match {
+    val rows = (maxFeatures match {
       // +1: the sentinel provably heads this ordering and occupies row 0
-      case Some(k) => dfreq.orderBy(col("df").desc, col("term")).limit(k + 1)
-      // no feature cap AND explicit opt-in → no ordering needed, so don't
-      // pay a |vocab|-row range sort just to position the sentinel; find()
-      // scans the collect
-      case None if uncapped => dfreq
-      // no feature cap WITHOUT opt-in: bound the collect at the ceiling +
-      // sentinel + one witness row — if the witness arrives, the vocabulary
-      // exceeds the ceiling and the fit refuses LOUDLY instead of gathering
-      // an unbounded term space onto the driver (a config-driven pipeline on
-      // a web-scale corpus would otherwise OOM the driver by omission)
-      case None => dfreq.limit(vocabCeiling + 2)
-    }
-    val rows = kept.collect().map(r => r.getString(0) -> r.getLong(1))
-    if (maxFeatures.isEmpty && !uncapped &&
-        rows.length > vocabCeiling + 1)
-      throw new IllegalStateException(
+      case Some(k) => dfreq.orderBy(col("df").desc, col("term")).limit(k + 1).collect()
+      // no feature cap: the ceiling's terms plus the sentinel, unordered
+      // (find() locates the sentinel); past them the fit refuses LOUDLY
+      // instead of gathering an unbounded term space onto the driver (a
+      // config-driven pipeline on a web-scale corpus would otherwise OOM
+      // the driver by omission)
+      case None => DriverGather.atMost(dfreq, vocabCeiling + 1)(
         s"$name.fit: vocabulary exceeds $vocabCeiling terms with " +
           "max_features unset — an unbounded driver collect at this scale. Set max_features " +
-          "(top-k by document frequency, the sklearn contract), pass uncapped=true to opt into " +
-          "the full collect for a vocabulary you know is small, or use the HashedTextVectorization " +
+          "(top-k by document frequency, the sklearn contract) or use the HashedTextVectorization " +
           "processor (hashing trick — no vocabulary pass, unbounded term space).")
+    }).map(r => r.getString(0) -> r.getLong(1))
     // minDf > n leaves no terms AND no sentinel (every df ≤ n < minDf):
     // empty vocabulary, n vacuous
     val n = rows.find(_._1 == DocSentinel).map(_._2).getOrElse {
@@ -175,8 +169,8 @@ object TfIdfVectorization {
   /** Ceiling for the max_features-UNSET fit collect: 1M (term, df) rows ≈
     * tens of MB of driver heap / broadcast — comfortably safe, far above any
     * vocabulary worth an uncapped dense index, and far below the term space
-    * of a web corpus. Past it the fit refuses and points at `max_features`,
-    * `uncapped=true`, or the hashing-trick `HashedTextVectorization`.
+    * of a web corpus. Past it the fit refuses and points at `max_features`
+    * or the hashing-trick `HashedTextVectorization`.
     */
   val UncappedVocabCeiling: Int = 1000000
 }

@@ -2,6 +2,7 @@ package graft.sdf
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.DriverGather
 
 /** Pandas-flavored series surface — the reference's `ScalableSeries`
   * (`src/bears/core/frame/ScalableSeries.py:49`) over a Spark `Column` bound
@@ -261,15 +262,12 @@ final class SCol(private val df: DataFrame, val col: Column, val name: String) {
     */
   def unique: Seq[Any] = uniqueCapped(SCol.UniqueCollectCeiling)
 
-  private[graft] def uniqueCapped(ceiling: Int): Seq[Any] = {
-    val rows = df.select(col).distinct().limit(ceiling + 1).collect()
-    if (rows.length > ceiling)
-      throw new IllegalStateException(
-        s"SCol.unique on '$name': more than $ceiling distinct values — " +
-          "an unbounded driver collect. Keep the distinct as a DataFrame " +
-          "(df.select(col).distinct()) or use nunique() for the cardinality.")
-    rows.map(_.get(0)).toSeq
-  }
+  private[graft] def uniqueCapped(ceiling: Int): Seq[Any] =
+    DriverGather.atMost(df.select(col).distinct(), ceiling)(
+      s"SCol.unique on '$name': more than $ceiling distinct values — " +
+        "an unbounded driver collect. Keep the distinct as a DataFrame " +
+        "(df.select(col).distinct()) or use nunique() for the cardinality.")
+      .map(_.get(0)).toSeq
 
   /** `value_counts` (`ScalableSeries.py:991-993`) — returns a frame. */
   def valueCounts(normalize: Boolean = false, ascending: Boolean = false, dropna: Boolean = true): DataFrame = {

@@ -3,7 +3,7 @@ package graft.sdf
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Positions
+import graft.core.{DriverGather, Positions}
 
 /** Pandas-flavored DataFrame surface — the capability layer of the
   * reference's `ScalableDataFrame` (`src/bears/core/frame/ScalableDataFrame
@@ -406,17 +406,12 @@ final class SDF private (private var _df: DataFrame) {
 
   /** pandas `pd.crosstab(index, columns)` — contingency counts with the
     * column domain discovered from the data (one distinct collect, bounded
-    * by `maxColumns` — same driver budget class as Spark's own pivot
-    * inference) and zero-filled like pandas. Columns are named by value,
-    * sorted; one groupBy shuffle, map-side partial counts.
+    * by [[SDF.MaxPivotColumns]] — same driver budget class as Spark's own
+    * pivot inference) and zero-filled like pandas. Columns are named by
+    * value, sorted; one groupBy shuffle, map-side partial counts.
     */
-  def crosstab(rowCol: String, colCol: String, maxColumns: Int = 1000): SDF = {
-    val vals = _df.select(col(colCol).cast("string"))
-      .filter(col(colCol).isNotNull) // pandas drops null keys on both axes
-      .distinct().limit(maxColumns + 1)
-      .collect().map(_.getString(0)).sorted.toSeq
-    require(vals.size <= maxColumns,
-      s"crosstab: $colCol exceeds $maxColumns distinct values")
+  def crosstab(rowCol: String, colCol: String): SDF = {
+    val vals = pivotDomain(colCol, "crosstab").toSeq
     SDF(_df
       .filter(col(rowCol).isNotNull && col(colCol).isNotNull)
       .groupBy(col(rowCol))
@@ -688,20 +683,29 @@ final class SDF private (private var _df: DataFrame) {
 
   /** pandas `get_dummies` — one 0/1 indicator column per distinct value of
     * `colName`, appended as `{prefix}_{value}` in sorted value order. The
-    * category vocabulary is collected to the driver (bounded by cardinality —
-    * the same bound pandas' output width imposes); the indicators themselves
-    * are one codegen'd projection, no shuffle. Nulls get no indicator row
-    * (all-zero), matching pandas `dummy_na=False`.
+    * category vocabulary is collected to the driver, at most
+    * [[SDF.MaxPivotColumns]] values like [[crosstab]]'s column domain; the
+    * indicators themselves are one codegen'd projection, no shuffle. Nulls
+    * get no indicator row (all-zero), matching pandas `dummy_na=False`.
     */
   def getDummies(colName: String, prefix: Option[String] = None): SDF = {
     val p = prefix.getOrElse(colName)
-    val values = _df.select(col(colName).cast("string"))
-      .filter(col(colName).isNotNull).distinct()
-      .collect().map(_.getString(0)).sorted
+    val values = pivotDomain(colName, "getDummies")
     val indicators = values.map(v =>
       when(col(colName).cast("string") === v, 1).otherwise(0).as(s"${p}_$v"))
     SDF(_df.select(_df.columns.map(col).toSeq ++ indicators: _*))
   }
+
+  /** The sorted distinct non-null string values of `c` — one output column
+    * each — or a refusal past [[SDF.MaxPivotColumns]] of them (pandas drops
+    * null keys).
+    */
+  private def pivotDomain(c: String, op: String): Array[String] =
+    DriverGather.atMost(_df.select(col(c).cast("string")).filter(col(c).isNotNull).distinct(),
+      SDF.MaxPivotColumns)(
+      s"$op: $c exceeds ${SDF.MaxPivotColumns} distinct values, one output column each; " +
+        s"bucket or filter the column first, or aggregate with groupBy($c) to keep the " +
+        "values as rows").map(_.getString(0)).sorted
 
   /** pandas `empty`. */
   def isEmpty: Boolean = _df.isEmpty
@@ -749,6 +753,12 @@ final class SDF private (private var _df: DataFrame) {
 
 object SDF {
   def apply(df: DataFrame): SDF = new SDF(df)
+
+  /** Driver ceiling on the distinct values that [[SDF.crosstab]] and
+    * [[SDF.getDummies]] turn into columns — the budget class of Spark's own
+    * pivot value inference.
+    */
+  val MaxPivotColumns: Int = 1000
 
   /** merge(validate=) — key-multiplicity assertion ("1:1"/"1:m"/"m:1"/"m:m"),
     * reference semantics at `ScalableDataFrame.py:1820-1836`.

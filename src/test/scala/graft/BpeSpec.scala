@@ -137,7 +137,7 @@ class BpeSpec extends AnyFunSuite {
   test("ceiling refusal and merge-count exhaustion") {
     import spark.implicits._
     val wc = Seq(("ab", 2L), ("cd", 1L)).toDF("word", "n")
-    val e = intercept[IllegalArgumentException](Bpe.train(wc, 5, maxDistinctWords = 1L))
+    val e = intercept[IllegalStateException](Bpe.train(wc, 5, ceiling = 1))
     assert(e.getMessage.contains("ceiling"))
     // asking for more merges than pairs exist: stops cleanly
     val ms = Bpe.train(wc, numMerges = 100)
@@ -158,13 +158,13 @@ class BpeSpec extends AnyFunSuite {
     val tail = (0 until 30).map(i => (new String(Array(
       (0x4E00 + 2 * i).toChar, (0x4E01 + 2 * i).toChar)), 1L)) // disjoint CJK pairs
     val wc = (head ++ tail).toDF("word", "n")
-    val ceiling = 40L
-    val e = intercept[IllegalArgumentException](Bpe.train(wc, 5, maxDistinctWords = ceiling))
-    assert(e.getMessage.contains("ceiling"))
+    val ceiling = 40
+    val e = intercept[IllegalStateException](Bpe.train(wc, 5, ceiling = ceiling))
+    assert(e.getMessage.contains("ceiling") && e.getMessage.contains("cappedWordCounts"))
     val capped = Bpe.cappedWordCounts(wc, ceiling)
     assert(capped.count() == 40)
-    val msCapped = Bpe.train(capped, 10, maxDistinctWords = ceiling)
-    val msFull = Bpe.train(wc, 10, maxDistinctWords = 2000000L)
+    val msCapped = Bpe.train(capped, 10, ceiling = ceiling)
+    val msFull = Bpe.train(wc, 10)
     assert(msCapped.nonEmpty)
     assert(msCapped.map(m => (m.left, m.right)) == msFull.map(m => (m.left, m.right)),
       "count-1 disjoint tail must not change the merge sequence")

@@ -46,8 +46,8 @@ class ComponentsPropertySpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast == want, "driver fast path diverged from union-find")
     // distributed loop, forced
-    val (dist, converged) = Components.connectedComponentsWithStatus(
-      df, "a", "b", maxIter = 12, smallGraphMaxEdges = 0L)
+    val (dist, converged) = Components.connectedComponentsDistributed(
+      df, "a", "b", maxIter = 12)
     assert(converged, "distributed loop must converge within 12 rounds")
     val distMap = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(distMap == want, "distributed loop diverged from union-find")

@@ -27,8 +27,8 @@ class ComponentsSpec extends AnyFunSuite {
     // checkpoint cycles at CheckpointEvery=3
     val n = 100L
     val edges = (0L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val (labels, converged) = Components.connectedComponentsWithStatus(
-      edges, "id_a", "id_b", maxIter = 15, smallGraphMaxEdges = 0) // force the distributed path
+    val (labels, converged) = Components.connectedComponentsDistributed(
+      edges, "id_a", "id_b", maxIter = 15)
     assert(converged, "diameter-100 chain must converge within 15 jumping rounds")
     val comps = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((0L to n).forall(comps(_) == 0L))
@@ -39,8 +39,8 @@ class ComponentsSpec extends AnyFunSuite {
     val d = depth(labels.rdd)
     assert(d < 40, s"RDD lineage depth $d — grew with iterations, checkpoint not truncating")
 
-    val (_, hitCap) = Components.connectedComponentsWithStatus(
-      edges, "id_a", "id_b", maxIter = 2, smallGraphMaxEdges = 0)
+    val (_, hitCap) = Components.connectedComponentsDistributed(
+      edges, "id_a", "id_b", maxIter = 2)
     assert(!hitCap, "maxIter=2 on a diameter-100 chain must report non-convergence")
   }
 
@@ -49,10 +49,11 @@ class ComponentsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val edges = (0 until 400).map(_ => (rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
       .filter { case (a, b) => a != b }.toDF("id_a", "id_b")
-    def labels(threshold: Long) = Components.connectedComponents(
-      edges, "id_a", "id_b", maxIter = 20, smallGraphMaxEdges = threshold)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels(100000L) == labels(0L), "fast path must reproduce the iterative fixed point")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val fast = Components.connectedComponents(edges, "id_a", "id_b", maxIter = 20)
+    val dist = Components.connectedComponentsDistributed(edges, "id_a", "id_b", maxIter = 20)._1
+    assert(labels(fast) == labels(dist), "fast path must reproduce the iterative fixed point")
   }
 
   test("reliable checkpoint dir: same labels, checkpoint files actually written") {
@@ -60,9 +61,9 @@ class ComponentsSpec extends AnyFunSuite {
     try org.apache.spark.CheckpointDirBridge.withCheckpointDir(spark.sparkContext, dir.getAbsolutePath) {
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L))
         .toDF("id_a", "id_b")
-      val (labels, converged) = Components.connectedComponentsWithStatus(
-        edges, "id_a", "id_b", maxIter = 15,
-        smallGraphMaxEdges = 0) // reliable checkpoints only exist on the distributed path
+      // reliable checkpoints only exist on the distributed path
+      val (labels, converged) = Components.connectedComponentsDistributed(
+        edges, "id_a", "id_b", maxIter = 15)
       assert(converged)
       val comps = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert((1L to 7L).forall(comps(_) == 1L))

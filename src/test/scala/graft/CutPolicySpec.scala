@@ -67,7 +67,7 @@ class CutPolicySpec extends AnyFunSuite {
   test("connectedComponents on the distributed path cuts reliably under a checkpoint dir") {
     val chain = (0L until 60L).map(i => (i, i + 1)).toDF("a", "b")
     checkFamily("connectedComponents", resultOnly = true)(
-      Components.connectedComponents(chain, "a", "b", maxIter = 15, smallGraphMaxEdges = 0L))
+      Components.connectedComponentsDistributed(chain, "a", "b", maxIter = 15)._1)
   }
 
   test("verifiedNearDupPairs cuts reliably under a checkpoint dir") {

@@ -348,14 +348,14 @@ class GraphSpec extends AnyFunSuite {
 
   test("connectedComponents releases superseded mid-loop checkpoints") {
     // a high-diameter chain forces enough rounds to cross several
-    // checkpoint boundaries; smallGraphMaxEdges=0 forces the scale path
+    // checkpoint boundaries on the distributed path
     val sc = spark.sparkContext
     spark.catalog.clearCache()
     sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     val before = sc.getPersistentRDDs.keySet
     val chain = (0L until 400L).map(i => (i, i + 1)).toDF("a", "b")
-    val comps = graft.ops.Components.connectedComponents(chain, "a", "b",
-      maxIter = 20, smallGraphMaxEdges = 0L)
+    val (comps, _) = graft.ops.Components.connectedComponentsDistributed(chain, "a", "b",
+      maxIter = 20)
     import org.apache.spark.sql.functions.{col, count_distinct}
     assert(comps.select(count_distinct(col("component"))).head().getLong(0) == 1L)
     val held = (sc.getPersistentRDDs.keySet -- before).size

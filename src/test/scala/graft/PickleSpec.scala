@@ -161,8 +161,8 @@ class PickleSpec extends AnyFunSuite {
     // and the REFUSAL path actually executes (r14 ADVICE: the old test only
     // asserted the constant): same require/limit interplay, tiny ceiling
     val over = Files.createTempDirectory("pkl").resolve("over.pkl").toString
-    val e = intercept[IllegalArgumentException](
-      Pickle.writeRecords(df.toDF(), over, maxRows = 3L))
+    val e = intercept[IllegalStateException](
+      Pickle.writeRecords(df.toDF(), over, maxRows = 3))
     assert(e.getMessage.contains("exceeds the driver ceiling"))
     assert(!Files.exists(Paths.get(over))) // refusal happens before any write
   }

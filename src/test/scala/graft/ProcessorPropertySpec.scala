@@ -129,6 +129,9 @@ class ProcessorPropertySpec extends AnyFunSuite {
     val strData = Seq.fill(150)(sampled(Gen.frequency(
       9 -> Gen.oneOf(strLabels), 1 -> Gen.const(null.asInstanceOf[String]))))
     val numData = Seq.fill(150)(sampled(Gen.chooseNum(-50, 2000))).map(_.toLong)
+    // doubles: NaN is no label and -0.0 is the label 0.0 in both fits
+    val dblData = Seq(-0.0, 0.0, Double.NaN) ++
+      Seq.fill(60)(sampled(Gen.oneOf(-0.0, 0.0, Double.NaN, 1.5, 2.0, -3.25)))
     for (range <- Seq("one_to_n", "zero_to_n_minus_one")) {
       // string column, fit on a subset so some labels are unknown at transform
       val sdf = strData.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("i", "v")
@@ -149,6 +152,14 @@ class ProcessorPropertySpec extends AnyFunSuite {
       val gotN = dren.transformFrame(ndf, "v", "c").select(col("i"), col("c")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(gotN == wantN, s"numeric $range")
+      val ddf = dblData.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("i", "v")
+      val led = new LabelEncoding(Map("encoding_range" -> range)); led.fit(ddf, "v")
+      val dred = new DenseRankLabelEncoding(Map("encoding_range" -> range)); dred.fit(ddf, "v")
+      val wantD = ddf.select(col("i"), led.transform(col("v")).as("c")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val gotD = dred.transformFrame(ddf, "v", "c").select(col("i"), col("c")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(gotD == wantD, s"double $range")
     }
   }
 }

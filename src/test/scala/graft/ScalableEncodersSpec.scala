@@ -162,28 +162,28 @@ class ScalableEncodersSpec extends AnyFunSuite {
 
   test("TFIDF uncapped fit refuses past the ceiling; uncapped=true / max_features accepted") {
     val df = Seq("aa bb cc dd ee", "ff gg hh ii jj").toDF("t")
-    val guarded = new TfIdfVectorization(Map("uncapped_vocab_ceiling" -> 3))
-    val e = intercept[IllegalStateException] { guarded.fit(df, "t") }
+    val guarded = new TfIdfVectorization(Map.empty)
+    val e = intercept[IllegalStateException] { guarded.fit(df, "t", vocabCeiling = 3) }
     assert(e.getMessage.contains("max_features") &&
       e.getMessage.contains("HashedTextVectorization"))
-    // explicit opt-in collects the full (10-term) vocabulary
-    val opted = new TfIdfVectorization(Map("uncapped_vocab_ceiling" -> 3, "uncapped" -> true))
-    opted.fit(df, "t")
-    assert(opted.fittedVocabulary.length == 10)
+    // a vocabulary exactly at the ceiling collects in full (10 terms)
+    val atCeiling = new TfIdfVectorization(Map.empty)
+    atCeiling.fit(df, "t", vocabCeiling = 10)
+    assert(atCeiling.fittedVocabulary.length == 10)
     // a cap bounds the collect regardless of ceiling
-    val capped = new TfIdfVectorization(Map("uncapped_vocab_ceiling" -> 3, "max_features" -> 2))
-    capped.fit(df, "t")
+    val capped = new TfIdfVectorization(Map("max_features" -> 2))
+    capped.fit(df, "t", vocabCeiling = 3)
     assert(capped.fittedVocabulary.length == 2)
   }
 
   test("Compress.compress refuses past the row ceiling, pointing at the per-partition path") {
     val df = spark.range(10).toDF("id")
     val e = intercept[IllegalStateException] {
-      graft.io.Compress.compress(df, rowCeiling = 5L)
+      graft.io.Compress.compress(df, graft.io.Compress.Gzip, ceiling = 5)
     }
     assert(e.getMessage.contains("compressPerPartition"))
     // at/below the ceiling the payload round-trips as before
-    val ok = graft.io.Compress.compress(df, rowCeiling = 10L)
+    val ok = graft.io.Compress.compress(df, graft.io.Compress.Gzip, ceiling = 10)
     assert(graft.io.Compress.decompress(spark, ok, Some(df.schema)).count() == 10)
   }
 
