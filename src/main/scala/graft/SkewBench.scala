@@ -13,7 +13,10 @@ import org.apache.spark.sql.functions._
   * collapsing identical texts to one representative before the LSH, and
   * `maxBucketSize` dropping (with a logged count) the buckets the
   * near-template mass floods — the band join stays LINEAR in corpus size,
-  * so the skewed run must land within ~2x of the uniform run. Without
+  * so the skewed run must land within ~2x of the uniform run. The cap
+  * sizes each bucket with a window over `(band, band_hash)`, so a hot
+  * bucket's band rows still reach one window task before they drop; what
+  * the cap bounds is the pair join behind it. Without
   * them the template cluster alone contributes C(5000,2) ≈ 12.5M verify
   * pairs and the ratio explodes. The agg-based ops (global line dedup,
   * duplicate-span removal) carry duplicate mass through map-side partial

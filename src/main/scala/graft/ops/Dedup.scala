@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.ObservedMetrics
 import TextAnalysis.{hash60, shingles}
 
 /** Deduplication operators for training-data pipelines (parity-plus,
@@ -147,10 +148,10 @@ object Dedup {
     * band in one bucket, and the within-bucket self-join is quadratic).
     * Two guards, composable:
     *   - `exactPrepass`: collapse byte-identical texts to one representative
-    *     per content digest BEFORE the LSH (one linear digest groupBy; the
-    *     text itself never shuffles — only (id, digest) pairs and the
-    *     semi-join keeper ids move). Exact-duplicate groups re-enter the
-    *     output as LINEAR (representative, member) chains — enough for
+    *     per content digest BEFORE the LSH (one window minimum over the
+    *     digest; the text itself never shuffles — only (id, digest) pairs
+    *     and the semi-join keeper ids move). Exact-duplicate groups re-enter
+    *     the output as LINEAR (representative, member) chains — enough for
     *     connected components to merge the cluster without the m² pair
     *     blowup. With the prepass on, the LSH sees at most one doc per
     *     distinct content, so duplicate mass can never flood a bucket.
@@ -161,44 +162,39 @@ object Dedup {
     * Both off by default; [[verifiedNearDupPairs]] and the oracle queries
     * replay the uncapped join without a prepass.
     *
-    * Lifecycle: the banded-signature (and prepass digest) frames are
-    * persisted only for the duration of the call — the candidate id pairs
-    * (two longs per row, orders of magnitude smaller than the corpus) are
-    * eagerly cut through [[Snapshots.cut]] and every input cache is
-    * released before returning, so repeated calls on a long-lived session
-    * cannot leak BlockManager memory.
+    * Lifecycle: the banded signatures (and the prepass's `(id, digest,
+    * rep_id)` rows, read by two branches) are persisted only for the call.
+    * The candidate id pairs are eagerly cut through [[Snapshots.cut]], the
+    * call's only job, and every input cache is released before returning.
     */
   def minhashCandidates(df: DataFrame, textCol: Column, idCol: Column,
       k: Int = 3, numHashes: Int = 8, bands: Int = 4,
       maxBucketSize: Option[Long] = None,
       exactPrepass: Boolean = false): DataFrame = {
     val docs = df.select(idCol.as("id"), textCol.as("__text__"))
-    val (plan, release) =
+    val (plan, release, logDropped) =
       if (!exactPrepass) lshPairPlan(docs, k, numHashes, bands, maxBucketSize)
       else {
-        // joinDigest, not raw fingerprint: a null __digest__ would silently
-        // fall out of the member-chain equi-join below — every null-text doc
-        // except the rep would then SURVIVE dedup, making the prepass flag
-        // (documented as a pure performance guard) change results. Null-text
-        // docs are mutual exact duplicates here, exactly as the non-prepass
-        // path treats them (identical all-null signatures).
+        // rep_id = min id per digest. Null-text docs share joinDigest's
+        // sentinel, so they are mutual exact duplicates here, exactly as the
+        // non-prepass path treats them (identical all-null signatures).
         val digests = docs
           .select(col("id"), joinDigest(col("__text__")).as("__digest__"))
+          .withColumn("rep_id", min(col("id")).over(Window.partitionBy(col("__digest__"))))
           .persist()
-        // rep = min id per digest; groups frame is (digest, rep_id) only
-        val groups = digests.groupBy(col("__digest__"))
-          .agg(min(col("id")).as("rep_id"))
-          .persist()
-        val reps = docs.join(groups.select(col("rep_id")),
+        val reps = docs.join(digests.filter(col("id") === col("rep_id")).select(col("rep_id")),
           docs("id") === col("rep_id"), "left_semi")
-        val (repPairs, release) = lshPairPlan(reps, k, numHashes, bands, maxBucketSize)
+        val (repPairs, release, logDropped) =
+          lshPairPlan(reps, k, numHashes, bands, maxBucketSize)
         // rep_id is the group minimum, so (rep_id, id) is already (lo, hi)
-        val memberPairs = digests.join(groups, "__digest__")
-          .filter(col("id") =!= col("rep_id"))
+        val memberPairs = digests.filter(col("id") =!= col("rep_id"))
           .select(col("rep_id").as("id_a"), col("id").as("id_b"))
-        (repPairs.unionByName(memberPairs), release ++ Seq(digests, groups))
+        (repPairs.unionByName(memberPairs), release :+ digests, logDropped)
       }
-    Snapshots.cut(plan.distinct(), release = release)
+    val pairs = plan.distinct()
+    val out = Snapshots.cut(pairs, release = release)
+    logDropped(pairs)
+    out
   }
 
   /** Banded LSH signatures `(id, band, band_hash)` — the persistable
@@ -236,24 +232,24 @@ object Dedup {
       .select(col("id"), explode(lshBands(col("__sig__"), numHashes, bands)).as("b"))
       .select(col("id"), col("b.band").as("band"), col("b.band_hash").as("band_hash"))
 
-  /** Lazy candidate-pair plan over `(id, __text__)` docs plus the frames the
-    * caller must unpersist once the plan has been materialized. A pair
-    * repeats once per band its two documents share: [[minhashCandidates]]
-    * dedupes in its `distinct`, [[verifiedNearDupPairs]] in the verify
-    * stage's pair-keyed aggregate.
+  /** Lazy candidate-pair plan over `(id, __text__)` docs, the frames to
+    * unpersist once it has been materialized, and the [[capBuckets]] log
+    * call. A pair repeats once per band its two documents share:
+    * [[minhashCandidates]] dedupes in its `distinct`, [[verifiedNearDupPairs]]
+    * in the verify stage's pair-keyed aggregate.
     */
   private def lshPairPlan(docs: DataFrame, k: Int, numHashes: Int, bands: Int,
-      maxBucketSize: Option[Long]): (DataFrame, Seq[DataFrame]) = {
+      maxBucketSize: Option[Long]): (DataFrame, Seq[DataFrame], DataFrame => Unit) = {
     // persist the banded signatures: the candidate self-join reads this
     // frame on both sides, and uncached each side would recompute the whole
     // tokenize→shingle→minhash pipeline (measured ~2× on the q91 profile).
     // The cached rows are (id, band, band_hash) — three scalars.
     val withBands = bandedSignatures(docs, k, numHashes, bands).persist()
-    val (pruned, scratch) = maxBucketSize match {
-      case None => (withBands, Seq.empty[DataFrame])
-      case Some(cap) =>
-        val (kept, hot) = dropHotBuckets(withBands, cap, "minhashCandidates")
-        (kept, Seq(hot))
+    // the cap's window (and its metric) sits above the cached scan: an
+    // observed node inside a persisted plan reports nothing
+    val (pruned, logDropped) = maxBucketSize match {
+      case None => (withBands, (_: DataFrame) => ())
+      case Some(cap) => capBuckets(withBands, cap, "minhashCandidates")
     }
     val l = pruned.as("l")
     val r = pruned.as("r")
@@ -261,25 +257,34 @@ object Dedup {
       col("l.band") === col("r.band") && col("l.band_hash") === col("r.band_hash") &&
         col("l.id") < col("r.id"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-    (pairs, withBands +: scratch)
+    (pairs, Seq(withBands), logDropped)
   }
 
-  /** Drop LSH buckets over `cap` docs, logging their count under `op`.
-    * Returns the kept band rows and the persisted hot-bucket frame to release.
+  /** The band rows of buckets of at most `cap` rows, with the bucket's min
+    * id as `hub`: one window over `(band, band_hash)`, no census job, no join
+    * back. The returned call logs the dropped-bucket count under `op` from a
+    * metric of the window's pass; give it the frame whose cut ran that pass.
     */
-  private def dropHotBuckets(withBands: DataFrame, cap: Long,
-      op: String): (DataFrame, DataFrame) = {
-    val hot = withBands.groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("__bsz__"))
-      .filter(col("__bsz__") > cap)
-      .persist()
-    val nHot = hot.count()
-    if (nHot > 0)
-      org.apache.log4j.Logger.getLogger(getClass)
-        .warn(s"$op: dropping $nHot LSH bucket(s) over cap=$cap " +
-          "(pathological duplicate mass — run exactDedup first)")
-    (withBands.join(hot.select(col("band"), col("band_hash")),
-      Seq("band", "band_hash"), "left_anti"), hot)
+  private def capBuckets(bandRows: DataFrame, cap: Long,
+      op: String): (DataFrame, DataFrame => Unit) = {
+    val bucket = Window.partitionBy(col("band"), col("band_hash"))
+    val metric = s"$op dropped buckets ${java.util.UUID.randomUUID()}"
+    val sized = bandRows
+      .select(col("*"), count(lit(1)).over(bucket).as("__bsz__"),
+        min(col("id")).over(bucket).as("hub"))
+      // a dropped bucket's rows add up to exactly one
+      .observe(metric, sum(when(col("__bsz__") > cap, lit(1.0) / col("__bsz__"))).as("n"))
+    def logDropped(ran: DataFrame): Unit = {
+      // null: no band row reached the window (or that side never ran)
+      val nHot = ObservedMetrics.of(ran, metric)
+        .collect { case r if !r.isNullAt(0) => math.round(r.getDouble(0)) }
+        .maxOption.getOrElse(0L)
+      if (nHot > 0)
+        org.apache.log4j.Logger.getLogger(getClass)
+          .warn(s"$op: dropping $nHot LSH bucket(s) over cap=$cap " +
+            "(pathological duplicate mass — run exactDedup first)")
+    }
+    (sized.filter(col("__bsz__") <= cap).drop("__bsz__"), logDropped)
   }
 
   /** Verify candidate `(id_a, id_b)` pairs by exact shingle Jaccard ≥
@@ -329,7 +334,7 @@ object Dedup {
   def verifiedNearDupPairs(df: DataFrame, textCol: Column, idCol: Column,
       k: Int = 3, numHashes: Int = 8, bands: Int = 4,
       threshold: Double = 0.5): DataFrame = {
-    val (cands, release) = lshPairPlan(
+    val (cands, release, _) = lshPairPlan(
       df.select(idCol.as("id"), textCol.as("__text__")), k, numHashes, bands, None)
     Snapshots.cut(verifyPairs(cands, df, textCol, idCol, k, threshold), release = release)
   }
@@ -342,35 +347,34 @@ object Dedup {
     * traffic (the clique is quadratic in cluster size — a 10×-replicated
     * corpus pays 45 shingle-array joins per cluster where the star pays 9).
     * Buckets above `maxBucketSize` are dropped with a logged count before
-    * any pair forms (the [[lshPairPlan]] cap, mandatory here: a token run
-    * shared by a large corpus fraction — boilerplate — otherwise floods one
-    * bucket and the hub fan-out alone becomes the corpus). Connectivity
-    * through the hub is exactly what connected components consume; the star
-    * loses only the corner where two members verify against each other but
-    * neither verifies against the bucket's min-id doc — for replica
-    * clusters (what collapse exists for) the hub is itself a replica and
-    * the corner is empty. Returns distinct verified (id_a, id_b) with
-    * id_a < id_b, eagerly materialized, all internal caches released.
+    * any pair forms (mandatory here: a token run shared by a large corpus
+    * fraction — boilerplate — otherwise floods one bucket and the hub
+    * fan-out alone becomes the corpus). Size and hub come from one window
+    * ([[capBuckets]]) inside the eager cut, the call's only job; nothing is
+    * persisted. Connectivity through the hub is exactly what connected
+    * components consume; the star loses only the corner where two members
+    * verify against each other but neither verifies against the bucket's
+    * min-id doc — for replica clusters (what collapse exists for) the hub is
+    * itself a replica and the corner is empty. Returns distinct verified
+    * (id_a, id_b) with id_a < id_b, eagerly materialized.
     */
   def verifiedHubEdges(df: DataFrame, textCol: Column, idCol: Column,
       k: Int = 3, numHashes: Int = 4, bands: Int = 2,
       threshold: Double = 0.5, maxBucketSize: Long = 64L): DataFrame = {
     require(maxBucketSize >= 2, s"maxBucketSize must be >= 2: $maxBucketSize")
     val docs = df.select(idCol.as("id"), textCol.as("__text__"))
-    val withBands = bandedSignatures(docs, k, numHashes, bands).persist()
-    val (pruned, hot) = dropHotBuckets(withBands, maxBucketSize, "verifiedHubEdges")
-    // the hub is a window minimum over the bucket: no bucket-keyed join, so
-    // no broadcast of the band rows
-    val cands = pruned
-      .withColumn("id_a", min(col("id")).over(Window.partitionBy(col("band"), col("band_hash"))))
-      .filter(col("id") > col("id_a"))
-      .select(col("id_a"), col("id").as("id_b"))
+    val (kept, logDropped) = capBuckets(bandedSignatures(docs, k, numHashes, bands),
+      maxBucketSize, "verifiedHubEdges")
     // the pair frame carries only ids until the verify join, and that join
     // sees star-linear traffic; a pair repeats once per shared band, and
     // verifyPairs dedupes it
+    val cands = kept.filter(col("id") > col("hub"))
+      .select(col("hub").as("id_a"), col("id").as("id_b"))
     val verified = verifyPairs(cands, df, textCol, idCol, k, threshold)
       .select(col("id_a"), col("id_b"))
-    Snapshots.cut(verified, release = Seq(withBands, hot))
+    val out = Snapshots.cut(verified)
+    logDropped(verified)
+    out
   }
 
   /** Jaccard ESTIMATE from minhash signatures: the fraction of agreeing

@@ -233,7 +233,7 @@ object Processors {
     def transform(in: Column): Column = {
       val enc = encoding.getOrElse(notFitted("transform"))
       val filled = missingFill.fold(in)(f => coalesce(in, lit(f)))
-      val mapped = element_at(typedLit(enc.toMap), filled.cast("string"))
+      val mapped = element_at(typedLit(enc.toMap), graft.functions.LabelKey.label_key(filled))
       // null input (no missing fill) stays null, like map(na_action="ignore")
       when(filled.isNull, lit(null)).otherwise(coalesce(mapped, lit(unknownValue)))
     }

@@ -126,7 +126,7 @@ object ScalableEncoders {
       val renamed = table.toDF(labelC, codeC)
       val in = col(inputCol)
       val filled = missingFill.fold(in)(f => coalesce(in, lit(f)))
-      val keyed = df.withColumn(keyC, filled.cast("string"))
+      val keyed = df.withColumn(keyC, graft.functions.LabelKey.label_key(filled))
       val joined = keyed.join(renamed, keyed(keyC) === renamed(labelC), "left")
       // null input (no missing fill) stays null; unseen label → unknownValue
       joined

@@ -745,9 +745,11 @@ final class SDF private (private var _df: DataFrame) {
     * `DataPipeline.transformLocal` for no-job inference).
     */
   def asRecord: Map[String, Any] = {
-    val rows = _df.limit(2).collect()
-    require(rows.length == 1, s"asRecord requires exactly 1 row, found ${rows.length}")
-    columns.zip(rows.head.toSeq).toMap
+    val rows = DriverGather.upTo(_df, 1)
+    // None: a second row exists, the most the probe can see
+    val found = rows.fold(2)(_.length)
+    require(found == 1, s"asRecord requires exactly 1 row, found $found")
+    columns.zip(rows.get.head.toSeq).toMap
   }
 }
 

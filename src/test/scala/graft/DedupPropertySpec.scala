@@ -118,18 +118,23 @@ class DedupPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("verifiedHubEdges: components match the clique's on replica clusters; cap drops hot buckets") {
-    // replica-cluster corpus (the collapse target): every cluster is one
-    // base text plus per-replica suffixes — hub-star edges must yield the
-    // SAME connected components as the quadratic clique pairs
+  // replica-cluster corpus (the collapse target): every cluster is one base
+  // text plus per-replica suffixes
+  private lazy val replicaCorpus = {
     val bases = Seq(
       "the quick brown fox jumps over the lazy dog near the river bank today",
       "machine learning systems process large volumes of text data every single day",
       "completely different content about cooking pasta with garlic and olive oil")
-    val corpus = (for {
+    (for {
       (t, c) <- bases.zipWithIndex
       r <- 0 until 5
     } yield (c * 100L + r, s"$t rep$r")).toDF("id", "text")
+  }
+
+  test("verifiedHubEdges: components match the clique's on replica clusters; cap drops hot buckets") {
+    // hub-star edges must yield the SAME connected components as the
+    // quadratic clique pairs
+    val corpus = replicaCorpus
     val hub = Dedup.verifiedHubEdges(corpus, col("text"), col("id"),
       k = 3, numHashes = 4, bands = 2, threshold = 0.5, maxBucketSize = 64L)
     val clique = Dedup.verifiedNearDupPairs(corpus, col("text"), col("id"),
@@ -151,6 +156,39 @@ class DedupPropertySpec extends AnyFunSuite {
     val capped = Dedup.verifiedHubEdges(corpus.filter(col("id") < 100), col("text"), col("id"),
       k = 3, numHashes = 4, bands = 2, threshold = 0.5, maxBucketSize = 3L)
     assert(capped.count() == 0, "over-cap bucket must be dropped entirely")
+  }
+
+  test("verifiedHubEdges logs the dropped-bucket count of a direct census; empty corpus gives no edges") {
+    val corpus = replicaCorpus.filter(col("id") < 100)
+    def census(cap: Long): Long =
+      Dedup.minhashBands(corpus, col("text"), col("id"), k = 3, numHashes = 4, bands = 2)
+        .groupBy(col("band"), col("band_hash")).count()
+        .filter(col("count") > cap).count()
+    // every bucket with a pair is over the cap, so nothing survives
+    // downstream: the count must not depend on a surviving candidate
+    def logged(op: String, cap: Long)(run: => Unit): Seq[Long] =
+      LogCapture.warnings("graft.ops.Dedup$")(run)
+        .flatMap(s"""$op: dropping (\\d+) LSH bucket""".r.findFirstMatchIn(_))
+        .map(_.group(1).toLong)
+    def hub(cap: Long) = logged("verifiedHubEdges", cap) {
+      Dedup.verifiedHubEdges(corpus, col("text"), col("id"),
+        k = 3, numHashes = 4, bands = 2, threshold = 0.5, maxBucketSize = cap)
+    }
+    def cands(cap: Long, prepass: Boolean) = logged("minhashCandidates", cap) {
+      Dedup.minhashCandidates(corpus, col("text"), col("id"),
+        k = 3, numHashes = 4, bands = 2, maxBucketSize = Some(cap), exactPrepass = prepass)
+    }
+    assert(census(3L) > 0, "the cap-3 corpus must have an over-cap bucket")
+    assert(hub(3L) == Seq(census(3L)))
+    assert(cands(3L, prepass = false) == Seq(census(3L)))
+    assert(cands(3L, prepass = true) == Seq(census(3L)), "replicas differ, so the prepass keeps all")
+    assert(census(64L) == 0 && hub(64L).isEmpty && cands(64L, prepass = false).isEmpty,
+      "nothing dropped, nothing logged")
+    val empty = corpus.filter(lit(false))
+    val warned = LogCapture.warnings("graft.ops.Dedup$") {
+      assert(Dedup.verifiedHubEdges(empty, col("text"), col("id"), maxBucketSize = 3L).count() == 0)
+    }
+    assert(warned.isEmpty, s"empty corpus logged $warned")
   }
 
   test("bm25 matches the driver formula") {

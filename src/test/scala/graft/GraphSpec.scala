@@ -91,7 +91,7 @@ class GraphSpec extends AnyFunSuite {
     "local" -> (df => it => Graph.pageRank(df, "src", "dst", iterations = it)),
     "smj" -> (df => it => Graph.pageRankSortMerge(df, "src", "dst", iterations = it)))
 
-  test("pageRank: all three tiers (local / distributed gather / SMJ) match the reference") {
+  test("pageRank: both loops (driver-local / sort-merge) match the reference") {
     // node 5 is dangling, so each loop's dangling redistribution is hit too
     val edges = Seq(("1", "2"), ("2", "3"), ("3", "1"), ("1", "4"), ("4", "2"),
       ("2", "5"))
@@ -103,7 +103,7 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
-  test("pageRank: null-id edges behave identically on all three tiers (join semantics)") {
+  test("pageRank: null-id edges behave identically on both loops (join semantics)") {
     // a null src never contributes (equi-joins drop null keys) but a null
     // dst IS a groupable node — the driver-local sweep must agree with the
     // sort-merge loop on both
@@ -127,7 +127,7 @@ class GraphSpec extends AnyFunSuite {
     for ((k, v) <- safe) assert(math.abs(fast(k) - v) < 1e-12, s"node $k")
   }
 
-  test("pageRank: integral-id graphs keep LONG nodes on all three tiers and match the string path") {
+  test("pageRank: integral-id graphs keep LONG nodes on both loops and match the string path") {
     // same topology under both id regimes (string "1".."5" vs long 1..5,
     // node 5 dangling) — ranks must agree to the bit, the integral path's
     // output node column must be BIGINT, and both loops must take it
@@ -177,7 +177,7 @@ class GraphSpec extends AnyFunSuite {
     assert(e.getMessage.contains("edge-index join returned 5 rows for 6 edges"), e.getMessage)
   }
 
-  test("edgesDistinct: cross-tier |E| guard trips loudly on a nondeterministic lineage") {
+  test("edgesDistinct: both loops' |E| guards trip loudly on a nondeterministic lineage") {
     // The caller-asserted-distinct contract keeps the edge lineage LAZY, so
     // it evaluates once for the degree pass (which measures m) and again in
     // whichever loop runs. This lineage drops one more edge per evaluation
@@ -289,7 +289,7 @@ class GraphSpec extends AnyFunSuite {
     assert(!Graph.admitsDriverLoop(rowCap + 1, avgIdLen = 1.0, m))
   }
 
-  test("local-edge-tier admission prices the gather at 16 B/edge (packed longs, not strings)") {
+  test("driver-loop admission prices the edge gather at 16 B/edge (packed longs, not strings)") {
     val edgeBudget = 256L << 20 // packed gather: 16 B/edge
     // the sf1.0 bench graph (11.7M edges) is ADMITTED — 16 B/edge =
     // 179 MiB actual driver peak; a string-priced model (46 B/edge) would
@@ -301,7 +301,7 @@ class GraphSpec extends AnyFunSuite {
     assert(!Graph.admitsDriverLoop(1000L, avgIdLen = 8.0, mAtBudget + 1))
   }
 
-  test("pageRank byte guard: fat string ids refuse the broadcast fork") {
+  test("pageRank byte guard: fat string ids refuse the driver loop") {
     // the guard multiplies n by avg id length, so a 3-cycle of 30 MB ids
     // passes any row cap but exceeds the 64 MB rank budget → must take the
     // SMJ loop and still compute correct ranks

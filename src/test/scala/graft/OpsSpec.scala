@@ -45,8 +45,18 @@ class OpsSpec extends AnyFunSuite {
       (201L, "completely different rare tokens alpha beta gamma delta"),
       (202L, "completely different rare tokens alpha beta gamma zeta"))
     val df = (clones ++ pair).toDF("id", "t")
-    val capped = Dedup.minhashCandidates(df, col("t"), col("id"), maxBucketSize = Some(10L))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    var capped = Set.empty[(Long, Long)]
+    val warned = LogCapture.warnings("graft.ops.Dedup$") {
+      capped = Dedup.minhashCandidates(df, col("t"), col("id"), maxBucketSize = Some(10L))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    // the logged count is the direct census of over-cap buckets (one per
+    // band here: every clone shares all four)
+    val census = Dedup.minhashBands(df, col("t"), col("id"))
+      .groupBy(col("band"), col("band_hash")).count().filter(col("count") > 10).count()
+    assert(census == 4)
+    assert(warned.flatMap("""minhashCandidates: dropping (\d+) LSH bucket""".r.findFirstMatchIn(_))
+      .map(_.group(1).toLong) == Seq(census), s"logged: $warned")
     assert(!capped.exists { case (a, b) => a <= 120 && b <= 120 },
       "hot clone buckets must be dropped")
     assert(capped.contains((201L, 202L)), "cold near-dup bucket must survive the cap")
@@ -112,6 +122,16 @@ class OpsSpec extends AnyFunSuite {
     cands.count()
     assert(added(b0).size <= 2,
       s"${added(b0).size} persisted RDDs after minhashCandidates (prepass caches not released)")
+    // the capped forms: the bucket-size window caches nothing of its own
+    val b1 = sc.getPersistentRDDs.keySet.toSet
+    Dedup.verifiedHubEdges(df, col("t"), col("id"), threshold = 0.3, maxBucketSize = 8L).count()
+    assert(added(b1).size <= 1,
+      s"${added(b1).size} persisted RDDs after verifiedHubEdges (band rows not released)")
+    val b1c = sc.getPersistentRDDs.keySet.toSet
+    Dedup.minhashCandidates(df, col("t"), col("id"), maxBucketSize = Some(8L),
+      exactPrepass = true).count()
+    assert(added(b1c).size <= 1,
+      s"${added(b1c).size} persisted RDDs after capped minhashCandidates (caches not released)")
     val before = sc.getPersistentRDDs.keySet.toSet
     TextAnalysis.duplicateSpanFraction(df, col("id"), col("t")).count()
     assert(added(before).size <= 1,

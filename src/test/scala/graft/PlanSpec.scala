@@ -238,24 +238,24 @@ class PlanSpec extends AnyFunSuite {
     sqlExecutionsOf(QueryCorpus.queries(queryName)(spark, dir)
       .write.format("noop").mode("overwrite").save())
 
-  test("q208 curation pipeline: staged-pass budget — 7 executions end-to-end") {
+  test("q208 curation pipeline: staged-pass budget — 6 executions end-to-end") {
     // The r6/r7 staging audits' guard, re-pinned for the r13 near-dup
     // collapse prepass. The composed pipeline runs exactly
-    //   (1) the hub-edge hot-bucket census count,
-    //   (2) the verified hub-edge checkpoint cut,
-    //   (3) the connected-components pass over the (tiny) edge list
+    //   (1) the verified hub-edge checkpoint cut (the hot-bucket count is
+    //       a metric observed inside it, not a job of its own),
+    //   (2) the connected-components pass over the (tiny) edge list
     //       (driver union-find fast path at this scale: one collect),
-    //   (4) the duplicate-span removal's eager cut,
-    //   (5) the scale-adaptive selection-k count (reads (4)'s checkpoint —
+    //   (3) the duplicate-span removal's eager cut,
+    //   (4) the scale-adaptive selection-k count (reads (3)'s checkpoint —
     //       no text kernel re-runs),
-    //   (6) the DSIR score cut,
-    //   (7) the final write
+    //   (5) the DSIR score cut,
+    //   (6) the final write
     // — every other stage (survivor semi-join, gates, lang join, Gumbel
-    // top-k, packing) rides lazily inside one of those. An eighth execution
+    // top-k, packing) rides lazily inside one of those. A seventh execution
     // means someone added an eager pass (a staged multi-consumer frame or a
     // stray action).
     val n = sqlExecutions("q208_curation_v3")
-    assert(n <= 7,
+    assert(n <= 6,
       s"q208 ran $n SQL executions — an unstaged pass crept into the pipeline")
   }
 
@@ -290,6 +290,13 @@ class PlanSpec extends AnyFunSuite {
       graft.ops.TextAnalysis.bigramNll(docs, col("text"), col("doc_id")))
     check("unigramNll")(
       graft.ops.TextAnalysis.unigramNll(docs, col("text"), col("doc_id")))
+    // the bucket cap's size window and dropped-bucket metric ride inside
+    // the result cut: no census job
+    check("verifiedHubEdges")(
+      graft.ops.Dedup.verifiedHubEdges(docs, col("text"), col("doc_id"), maxBucketSize = 8L))
+    check("minhashCandidates (capped, prepass)")(
+      graft.ops.Dedup.minhashCandidates(docs, col("text"), col("doc_id"),
+        maxBucketSize = Some(8L), exactPrepass = true))
   }
 
   test("q38 tfidf: staged-pass budget — 3 executions end-to-end") {
@@ -392,7 +399,8 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.util.QueryExecutionListener
-    import graft.functions.ShinglesFromTokens
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import graft.functions.{MinHashSignature, ShinglesFromTokens}
     import graft.ops.Dedup
     def kids(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
@@ -425,7 +433,14 @@ class PlanSpec extends AnyFunSuite {
       // with the per-document pair lists (only candidate documents), and
       // below the explode that fans each document out to its pairs (so not
       // once per pair member)
-      val shingling = all(plan).filter(_.expressions.exists(_.exists(_.isInstanceOf[ShinglesFromTokens])))
+      // the LSH signature's own shingles (inside minhash_signature) are
+      // not the verify stage's; an uncached band-row plan shows them here
+      def verifyShingles(e: Expression): Boolean = e match {
+        case _: MinHashSignature => false
+        case _: ShinglesFromTokens => true
+        case other => other.children.exists(verifyShingles)
+      }
+      val shingling = all(plan).filter(_.expressions.exists(verifyShingles))
       assert(shingling.size == 1, s"$label: ${shingling.size} shingle builds in its verify plan:\n$plan")
       assert(all(shingling.head).exists(_.isInstanceOf[BaseJoinExec]),
         s"$label shingles documents that are in no candidate pair:\n$plan")

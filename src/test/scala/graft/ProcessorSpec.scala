@@ -79,6 +79,22 @@ class ProcessorSpec extends AnyFunSuite {
     assert(col1(ndf.withColumn("e", nenc.transform($"l")), "e") == Seq(1L, 0L, 1L))
   }
 
+  test("LabelEncoding and DenseRankLabelEncoding key -0.0 as the fitted label 0.0; NaN stays unknown") {
+    import graft.processor.ScalableEncoders.DenseRankLabelEncoding
+    val df = Seq(-0.0, 0.0, 1.5, Double.NaN, 2.0).zipWithIndex.toDF("v", "i")
+    def codes(out: DataFrame): Seq[Any] = col1(out.orderBy("i"), "e")
+    val le = new LabelEncoding(Map("encoding_range" -> "one_to_n")).fit(df, "v")
+    assert(le.state("labels") == Seq("0.0", "1.5", "2.0"))
+    assert(codes(df.withColumn("e", le.transform($"v"))) == Seq(1L, 1L, 2L, 0L, 3L))
+    val dre = new DenseRankLabelEncoding(Map("encoding_range" -> "one_to_n"))
+    dre.fit(df, "v")
+    assert(codes(dre.transformFrame(df, "v", "e")) == Seq(1L, 1L, 2L, 0L, 3L))
+    // a string column keeps "-0.0" as a label of its own
+    val sdf = Seq("-0.0", "0.0").toDF("v")
+    val se = new LabelEncoding(Map("encoding_range" -> "one_to_n")).fit(sdf, "v")
+    assert(col1(sdf.withColumn("e", se.transform($"v")), "e") == Seq(1L, 2L))
+  }
+
   test("LabelEncoding binary auto-detect from labelspace") {
     val e1 = LabelEncoding.fromLabelspace(Seq("N", "Y"))
     val df = Seq("Y", "N").toDF("l")

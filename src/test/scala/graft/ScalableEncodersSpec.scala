@@ -160,7 +160,7 @@ class ScalableEncodersSpec extends AnyFunSuite {
     assert(out.select("feat").head().getSeq[Double](0).length == 16)
   }
 
-  test("TFIDF uncapped fit refuses past the ceiling; uncapped=true / max_features accepted") {
+  test("TFIDF fit refuses past the vocabulary ceiling; a vocabulary at the ceiling or under max_features is accepted") {
     val df = Seq("aa bb cc dd ee", "ff gg hh ii jj").toDF("t")
     val guarded = new TfIdfVectorization(Map.empty)
     val e = intercept[IllegalStateException] { guarded.fit(df, "t", vocabCeiling = 3) }
