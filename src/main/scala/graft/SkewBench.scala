@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
   * (`tools/make_skew.py`: 6% byte-identical template docs + 4%
   * near-template — the duplicate-mass pathology the guards exist for) and
   * prints one JSON line with per-op uniform/skew seconds and the ratio.
+  * "Uniform" means no duplicate mass, not cap-free: on the sf1.0 corpus the
+  * guarded `minhash_candidates_guarded` leg (cap 64) still drops 5 buckets.
   *
   * The contract being measured: with the guards ON — `exactPrepass`
   * collapsing identical texts to one representative before the LSH, and

@@ -54,6 +54,13 @@ object GraftExtensions {
     //   minhash_signature(shingles_from_tokens(word_tokens(text), 3), 4)
     "minhash_signature" -> ((exprs: Seq[Expression]) =>
       MinHashSignature(exprs.head, literalInt("minhash_signature", exprs(1)))),
+    // shingle size and hash-function count as int literals:
+    //   minhash_text(text, 3, 4), shingle_hashes(text, 3)
+    "minhash_text" -> ((exprs: Seq[Expression]) =>
+      MinHashText(exprs.head, literalInt("minhash_text", exprs(1)), literalInt("minhash_text", exprs(2)))),
+    "shingle_hashes" -> ((exprs: Seq[Expression]) =>
+      ShingleHashes(exprs.head, literalInt("shingle_hashes", exprs(1)))),
+    "sorted_jaccard" -> ((exprs: Seq[Expression]) => SortedJaccard(exprs.head, exprs(1))),
     "gopher_flags" -> ((exprs: Seq[Expression]) => GopherFlags(exprs.head)),
     "quality_signals" -> ((exprs: Seq[Expression]) => QualitySignals(exprs.head, exprs(1))))
 

@@ -61,36 +61,48 @@ case class Md5Hash60(child: Expression) extends UnaryExpression {
 
 object Md5Hash60 {
 
-  private val digests = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
+  private[functions] val NoSalt = new Array[Byte](0)
 
   /** First 15 hex chars of md5 as an unsigned long: the top 60 bits of the
     * digest = first 8 bytes big-endian, shifted right by the trailing
     * nibble. Shared by interpreted eval and codegen.
     */
-  def hash(bytes: Array[Byte]): Long = {
-    val md = digests.get()
-    md.reset()
-    top60(md.digest(bytes))
-  }
+  def hash(bytes: Array[Byte]): Long = hasher().hash(NoSalt, bytes, 0, bytes.length)
 
   /** `hash(salt ++ s.getBytes)` without building the concatenation: the
     * digest reads the salt, then the string's bytes in place when they sit
     * in a heap array.
     */
-  def hashSalted(salt: Array[Byte], s: UTF8String): Long = {
-    val md = digests.get()
-    md.reset()
-    md.update(salt)
+  def hashSalted(salt: Array[Byte], s: UTF8String): Long =
     s.getBaseObject match {
       case base: Array[Byte] =>
-        md.update(base, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
-      case _ => md.update(s.getBytes)
+        hasher().hash(salt, base, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+      case _ =>
+        val b = s.getBytes
+        hasher().hash(salt, b, 0, b.length)
     }
-    top60(md.digest())
+
+  /** A thread's digest with a reusable output buffer: a kernel that hashes
+    * many slices of one row takes it once and allocates nothing per hash.
+    */
+  final class Hasher private[Md5Hash60] () {
+    private val md = java.security.MessageDigest.getInstance("MD5")
+    private val out = new Array[Byte](16)
+
+    /** `hash(salt ++ bytes[off, off + len))`. */
+    def hash(salt: Array[Byte], bytes: Array[Byte], off: Int, len: Int): Long = {
+      md.update(salt)
+      md.update(bytes, off, len)
+      md.digest(out, 0, 16) // also resets the digest
+      top60(out)
+    }
   }
+
+  private val hashers = new ThreadLocal[Hasher] {
+    override def initialValue(): Hasher = new Hasher
+  }
+
+  def hasher(): Hasher = hashers.get()
 
   private def top60(d: Array[Byte]): Long = {
     var v = 0L

@@ -67,7 +67,7 @@ object MinHashSignature {
   }
 
   /** The `j:` salt bytes for j < numHashes, built once per thread. */
-  private def saltBytes(numHashes: Int): Array[Array[Byte]] = {
+  private[functions] def saltBytes(numHashes: Int): Array[Array[Byte]] = {
     var p = prefixes.get()
     if (p.length < numHashes) {
       p = Array.tabulate(numHashes)(j => s"$j:".getBytes(java.nio.charset.StandardCharsets.UTF_8))

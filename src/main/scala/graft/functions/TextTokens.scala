@@ -19,10 +19,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * code-point scan per document inside whole-stage codegen.
   *
   * Semantics are pinned to the built-in spelling by a differential spec
-  * (FunctionsSpec): lowercase via `UTF8String.toLowerCase` (identical to
-  * `lower()`), token chars are exactly `[\p{L}\p{N}_]` (Unicode letter, any
-  * Unicode number category Nd/Nl/No, underscore), maximal runs, empties
-  * dropped.
+  * (NativeProbeSpec): lowercase in the root locale, token chars are exactly
+  * `[\p{L}\p{N}_]` (Unicode letter, any Unicode number category
+  * Nd/Nl/No, underscore), maximal runs, empties dropped. Tokens do not
+  * depend on the JVM's default locale. `lower()` lowercases non-ASCII text
+  * in that locale, so the two agree under every locale whose case rules are
+  * the root locale's (not tr, az or lt, where `I` lowercases otherwise).
   */
 case class WordTokens(child: Expression, minLen: Int = 1) extends UnaryExpression {
 
@@ -57,7 +59,7 @@ object WordTokens {
     * `\p{L}` is the five Unicode letter categories (= Character.isLetter)
     * and `\p{N}` is Nd ∪ Nl ∪ No.
     */
-  @inline private def isWordCp(cp: Int): Boolean =
+  @inline private[functions] def isWordCp(cp: Int): Boolean =
     cp == '_' || Character.isLetter(cp) || {
       val t = Character.getType(cp)
       t == Character.DECIMAL_DIGIT_NUMBER || t == Character.LETTER_NUMBER ||
@@ -65,13 +67,13 @@ object WordTokens {
     }
 
   /** The scalar kernel (shared by interpreted eval and codegen): lowercase
-    * once, then emit maximal `[\p{L}\p{N}_]` runs of at least `minLen` code
+    * once (root locale), then emit maximal `[\p{L}\p{N}_]` runs of at least `minLen` code
     * points in a single code-point scan — no regex, no per-token closure.
     * (`minLen` counts code points, matching `length()` in the built-in
     * `filter(..., length(t) >= k)` spelling.)
     */
   def tokenize(s: UTF8String, minLen: Int): ArrayData = {
-    val lower = s.toLowerCase.toString
+    val lower = s.toString.toLowerCase(java.util.Locale.ROOT)
     val n = lower.length
     val out = new java.util.ArrayList[AnyRef](Math.max(8, n / 6))
     var i = 0

@@ -80,10 +80,12 @@ object Dedup {
 
   /** MinHash signature: H independent hash functions simulated by salting
     * the shingle hash with the function index — `min_j over shingles of
-    * hash60(j || ':' || shingle)`. Pure expression, one pass per row.
+    * hash60(j || ':' || shingle)`. Evaluated from the text in one pass by
+    * the native [[graft.functions.MinHashText]], bit-identical to
+    * `minhashFromShingles(shingles(textCol, k), numHashes)`.
     */
   def minhashSignature(textCol: Column, k: Int, numHashes: Int): Column =
-    minhashFromShingles(shingles(textCol, k), numHashes)
+    graft.functions.MinHashText.minhash_text(textCol, k, numHashes)
 
   /** Signature from a precomputed shingles column. Evaluated by the native
     * [[graft.functions.MinHashSignature]] codegen Expression, which reads
@@ -236,7 +238,7 @@ object Dedup {
     * unpersist once it has been materialized, and the [[capBuckets]] log
     * call. A pair repeats once per band its two documents share:
     * [[minhashCandidates]] dedupes in its `distinct`, [[verifiedNearDupPairs]]
-    * in the verify stage's pair-keyed aggregate.
+    * in [[verifyPairs]]' per-document pair sets.
     */
   private def lshPairPlan(docs: DataFrame, k: Int, numHashes: Int, bands: Int,
       maxBucketSize: Option[Long]): (DataFrame, Seq[DataFrame], DataFrame => Unit) = {
@@ -260,10 +262,11 @@ object Dedup {
     (pairs, Seq(withBands), logDropped)
   }
 
-  /** The band rows of buckets of at most `cap` rows, with the bucket's min
-    * id as `hub`: one window over `(band, band_hash)`, no census job, no join
-    * back. The returned call logs the dropped-bucket count under `op` from a
-    * metric of the window's pass; give it the frame whose cut ran that pass.
+  /** The band rows of buckets of at most `cap` rows, with the bucket's size
+    * as `__bsz__` and its min id as `hub`: one window over `(band,
+    * band_hash)`, no census job, no join back. The returned call logs the
+    * dropped-bucket count under `op` from a metric of the window's pass;
+    * give it the frame whose cut ran that pass.
     */
   private def capBuckets(bandRows: DataFrame, cap: Long,
       op: String): (DataFrame, DataFrame => Unit) = {
@@ -284,22 +287,35 @@ object Dedup {
           .warn(s"$op: dropping $nHot LSH bucket(s) over cap=$cap " +
             "(pathological duplicate mass — run exactDedup first)")
     }
-    (sized.filter(col("__bsz__") <= cap).drop("__bsz__"), logDropped)
+    (sized.filter(col("__bsz__") <= cap), logDropped)
   }
 
-  /** Verify candidate `(id_a, id_b)` pairs by exact shingle Jaccard ≥
-    * `threshold`, returning distinct (id_a, id_b, jac) with jac rounded to 4
-    * (the oracle-portable quantum). `cands` may repeat a pair. The pair list
-    * is first grouped by member document — one row per document in some
-    * candidate pair, carrying the set of that document's pairs, which also
-    * dedupes them — and joined to `(id, text)`, so the distinct shingles
-    * are derived once per candidate document: never for the rest of the
+  /** A document's verify set: the sorted distinct 60-bit hashes of its word
+    * k-shingles ([[graft.functions.ShingleHashes]]), compared with
+    * [[hashedJaccard]]. Jaccard over these sets differs from string Jaccard
+    * ([[jaccardShingles]]) only when two distinct shingles of the pair
+    * collide in 60 bits.
+    */
+  private def shingleSet(text: Column, k: Int): Column =
+    graft.functions.ShingleHashes.shingle_hashes(text, k)
+
+  private def hashedJaccard(sa: Column, sb: Column): Column =
+    round(graft.functions.SortedJaccard.sorted_jaccard(sa, sb), 4)
+
+  /** Verify candidate `(id_a, id_b)` pairs by shingle Jaccard ≥ `threshold`,
+    * returning distinct (id_a, id_b, jac) with jac rounded to 4 (the
+    * oracle-portable quantum); `jac` is computed over hashed shingle sets
+    * ([[shingleSet]]: it differs from string Jaccard only on a 60-bit
+    * collision between two shingles of the pair). `cands` may repeat a
+    * pair. The pair list is first grouped by member document — one row per
+    * document in some candidate pair, carrying the set of that document's
+    * pairs, which also dedupes them — and joined to `(id, text)`, so the set
+    * is built once per candidate document: never for the rest of the
     * corpus, and never once per pair (in a clique-shaped pair list a
-    * replica cluster of m docs gives m(m−1)/2 pairs, yet each doc is
-    * shingled once). Only then are the pairs exploded, and a pair-keyed
-    * aggregate puts each pair's two arrays on one row. The grouped pair list
-    * carries ids only, so the join never needs the corpus's text or
-    * shingles on its small side.
+    * replica cluster of m docs gives m(m−1)/2 pairs, yet each doc is hashed
+    * once). Only then are the pairs exploded, and a pair-keyed aggregate
+    * puts each pair's two sets on one row. The grouped pair list carries ids
+    * only, so the join never needs the corpus's text on its small side.
     */
   private def verifyPairs(cands: DataFrame, df: DataFrame, textCol: Column, idCol: Column,
       k: Int, threshold: Double): DataFrame = {
@@ -311,20 +327,21 @@ object Dedup {
       .agg(collect_set(struct(col("m.id_a"), col("m.id_b"), col("m.is_a"))).as("pairs"))
     df.select(idCol.as("doc_id"), textCol.as("text"))
       .join(pairsByDoc, "doc_id")
-      .select(array_distinct(shingles(col("text"), k)).as("sh"), col("pairs"))
+      .select(shingleSet(col("text"), k).as("sh"), col("pairs"))
       .select(col("sh"), explode(col("pairs")).as("p"))
       .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
       .agg(first(when(col("p.is_a"), col("sh")), ignoreNulls = true).as("sh_a"),
         first(when(!col("p.is_a"), col("sh")), ignoreNulls = true).as("sh_b"))
-      .withColumn("jac", round(jaccardShingles(col("sh_a"), col("sh_b")), 4))
+      .withColumn("jac", hashedJaccard(col("sh_a"), col("sh_b")))
       .filter(col("jac") >= threshold)
       .select(col("id_a"), col("id_b"), col("jac"))
   }
 
-  /** Full near-dup pipeline: LSH candidate pairs verified by exact n-gram
-    * Jaccard ≥ `threshold` ([[verifyPairs]]). Returns (id_a, id_b, jac) with
-    * jac rounded to 4. Verified pairs are eagerly materialized, so callers
-    * still get a small lineage-free pair frame.
+  /** Full near-dup pipeline: LSH candidate pairs verified by n-gram
+    * Jaccard ≥ `threshold` over hashed shingle sets ([[verifyPairs]]).
+    * Returns (id_a, id_b, jac) with jac rounded to 4. Verified pairs are
+    * eagerly materialized, so callers still get a small lineage-free pair
+    * frame.
     *
     * Lineage determinism: the verify stage reads `df` a second time, after
     * the candidate stage — as with [[Graph.pageRank]]'s edge contract, a
@@ -344,17 +361,29 @@ object Dedup {
     * bucket only (hub = min id) → member candidate edges are emitted and
     * Jaccard-verified: m−1 edges per bucket instead of the clique's
     * m(m−1)/2 pairs, so a replica cluster of ANY size costs LINEAR verify
-    * traffic (the clique is quadratic in cluster size — a 10×-replicated
-    * corpus pays 45 shingle-array joins per cluster where the star pays 9).
+    * work (the clique is quadratic in cluster size — a 10×-replicated
+    * corpus verifies 45 pairs per cluster where the star verifies 9).
     * Buckets above `maxBucketSize` are dropped with a logged count before
     * any pair forms (mandatory here: a token run shared by a large corpus
     * fraction — boilerplate — otherwise floods one bucket and the hub
     * fan-out alone becomes the corpus). Size and hub come from one window
-    * ([[capBuckets]]) inside the eager cut, the call's only job; nothing is
-    * persisted. Connectivity through the hub is exactly what connected
-    * components consume; the star loses only the corner where two members
-    * verify against each other but neither verifies against the bucket's
-    * min-id doc — for replica clusters (what collapse exists for) the hub is
+    * ([[capBuckets]]) inside the eager cut, the call's only action; nothing is
+    * persisted.
+    *
+    * The verify runs by hub. Each row of a kept bucket is a route (document
+    * → hub), the hub's own row included; the text joins the routes, each
+    * routed document's hashed shingle set ([[shingleSet]]) is built once
+    * (a join emits a document's routes in a row, and the kernel reuses its
+    * last result), and the rows shuffle by hub. Each hub group compares the
+    * hub's set with each member's set, and the `distinct` over a member
+    * repeated across bands needs no shuffle of its own, as the rows are
+    * already partitioned by hub. `jac` differs from string Jaccard only on
+    * a 60-bit collision between two shingles of the pair.
+    *
+    * Connectivity through the hub is exactly what connected components
+    * consume; the star loses only the corner where two members verify
+    * against each other but neither verifies against the bucket's min-id
+    * doc — for replica clusters (what collapse exists for) the hub is
     * itself a replica and the corner is empty. Returns distinct verified
     * (id_a, id_b) with id_a < id_b, eagerly materialized.
     */
@@ -365,13 +394,17 @@ object Dedup {
     val docs = df.select(idCol.as("id"), textCol.as("__text__"))
     val (kept, logDropped) = capBuckets(bandedSignatures(docs, k, numHashes, bands),
       maxBucketSize, "verifiedHubEdges")
-    // the pair frame carries only ids until the verify join, and that join
-    // sees star-linear traffic; a pair repeats once per shared band, and
-    // verifyPairs dedupes it
-    val cands = kept.filter(col("id") > col("hub"))
-      .select(col("hub").as("id_a"), col("id").as("id_b"))
-    val verified = verifyPairs(cands, df, textCol, idCol, k, threshold)
-      .select(col("id_a"), col("id_b"))
+    // a bucket of one is no route: its document would be hashed for nothing
+    val routes = kept.filter(col("__bsz__") >= 2).select(col("id").as("doc_id"), col("hub"))
+    // the hub is the smallest id of its group, so its own row comes first
+    val hubSet = first(col("sh")).over(Window.partitionBy(col("hub")).orderBy(col("doc_id")))
+    val verified = df.select(idCol.as("doc_id"), textCol.as("text"))
+      .join(routes, "doc_id")
+      .select(col("hub"), col("doc_id"), shingleSet(col("text"), k).as("sh"))
+      .withColumn("hub_sh", hubSet)
+      .filter(col("doc_id") > col("hub") && hashedJaccard(col("hub_sh"), col("sh")) >= threshold)
+      .select(col("hub").as("id_a"), col("doc_id").as("id_b"))
+      .distinct()
     val out = Snapshots.cut(verified)
     logDropped(verified)
     out
@@ -380,9 +413,11 @@ object Dedup {
   /** Jaccard ESTIMATE from minhash signatures: the fraction of agreeing
     * signature components — E[estimate] = true Jaccard (the MinHash
     * guarantee), s.e. ≈ √(J(1−J)/numHashes). At scale this verifies LSH
-    * candidates WITHOUT re-staging shingles: signatures are 8·numHashes
-    * bytes/doc vs the full shingle set, so the verify join shuffles ~100×
-    * less. Use [[jaccardShingles]] when the exact value is required.
+    * candidates WITHOUT re-staging shingles: a signature is 8·numHashes
+    * bytes/doc, where the hashed shingle set the exact verify shuffles is 8
+    * bytes per distinct shingle, so the verify join moves about
+    * shingles/numHashes times less (~30× for a 250-shingle document at 8
+    * hashes). Use [[jaccardShingles]] when the exact value is required.
     */
   def jaccardEstimate(sigA: Column, sigB: Column): Column =
     // empty-signature guard (ANSI 0/0 throws; engine-built signatures have

@@ -878,14 +878,14 @@ object TextAnalysis {
     */
   def matchedKeywords(textCol: Column, keywords: Seq[String]): Column =
     array_sort(array_intersect(
-      array_distinct(tokens(textCol)), typedLit(keywords.map(_.toLowerCase))))
+      array_distinct(tokens(textCol)), typedLit(keywords.map(_.toLowerCase(java.util.Locale.ROOT)))))
 
   /** Phrase (substring) matches of `phrases` in the lowercased text, in
     * lexicon order — catches multi-word and intra-word patterns the
     * token-level [[matchedKeywords]] cannot.
     */
   def matchedPhrases(textCol: Column, phrases: Seq[String]): Column =
-    filter(typedLit(phrases.map(_.toLowerCase)), p => contains(lower(textCol), p))
+    filter(typedLit(phrases.map(_.toLowerCase(java.util.Locale.ROOT))), p => contains(lower(textCol), p))
 
   /** Overlapping fixed-width character chunks (context-window splitting for
     * LLM corpora): chunk k covers `[k·(size−overlap), … + size)`. Pure HOF

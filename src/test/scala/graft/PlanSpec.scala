@@ -396,11 +396,12 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.util.QueryExecutionListener
     import org.apache.spark.sql.catalyst.expressions.Expression
-    import graft.functions.{MinHashSignature, ShinglesFromTokens}
+    import graft.functions.ShingleHashes
     import graft.ops.Dedup
     def kids(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
@@ -426,26 +427,40 @@ class PlanSpec extends AnyFunSuite {
       plans.peek()
     }
     val docs = spark.read.parquet(dir + "/documents.parquet").select(col("doc_id"), col("text"))
-    for ((label, plan) <- Seq(
-        "verifiedNearDupPairs" -> cutPlan(Dedup.verifiedNearDupPairs(docs, col("text"), col("doc_id"))),
-        "verifiedHubEdges" -> cutPlan(Dedup.verifiedHubEdges(docs, col("text"), col("doc_id"))))) {
-      // one shingle build (not one per pair side), on the rows of the join
-      // with the per-document pair lists (only candidate documents), and
-      // below the explode that fans each document out to its pairs (so not
-      // once per pair member)
-      // the LSH signature's own shingles (inside minhash_signature) are
-      // not the verify stage's; an uncached band-row plan shows them here
-      def verifyShingles(e: Expression): Boolean = e match {
-        case _: MinHashSignature => false
-        case _: ShinglesFromTokens => true
-        case other => other.children.exists(verifyShingles)
-      }
-      val shingling = all(plan).filter(_.expressions.exists(verifyShingles))
-      assert(shingling.size == 1, s"$label: ${shingling.size} shingle builds in its verify plan:\n$plan")
-      assert(all(shingling.head).exists(_.isInstanceOf[BaseJoinExec]),
-        s"$label shingles documents that are in no candidate pair:\n$plan")
-      assert(all(plan).exists(n => n.isInstanceOf[GenerateExec] && all(n).contains(shingling.head)),
-        s"$label shingles once per pair member, not once per document:\n$plan")
+    def hashes(e: Expression): Boolean = e match {
+      case _: ShingleHashes => true
+      case other => other.children.exists(hashes)
     }
+    // one hash build (not one per pair side), on the rows of the join with
+    // the candidate pairs or routes (only candidate documents), and below
+    // the node that fans a document out: the pair explode of the clique
+    // verify, the hub shuffle of the star verify (so not once per pair
+    // member)
+    for ((label, plan, fansOut) <- Seq(
+        ("verifiedNearDupPairs", cutPlan(Dedup.verifiedNearDupPairs(docs, col("text"), col("doc_id"))),
+          (n: SparkPlan) => n.isInstanceOf[GenerateExec]),
+        ("verifiedHubEdges", cutPlan(Dedup.verifiedHubEdges(docs, col("text"), col("doc_id"))),
+          (n: SparkPlan) => n.isInstanceOf[ShuffleExchangeLike]))) {
+      val hashing = all(plan).filter(_.expressions.exists(hashes))
+      assert(hashing.size == 1, s"$label: ${hashing.size} shingle-set builds in its verify plan:\n$plan")
+      assert(all(hashing.head).exists(_.isInstanceOf[BaseJoinExec]),
+        s"$label hashes documents that are in no candidate pair:\n$plan")
+      assert(all(plan).exists(n => fansOut(n) && all(n).contains(hashing.head)),
+        s"$label hashes once per pair member, not once per document:\n$plan")
+    }
+  }
+
+  test("verifiedHubEdges: 4 jobs and one SQL execution on a fixed corpus") {
+    // the band stage, the route broadcast, the hub shuffle and the result
+    // cut; a fifth job means a stage came back between the bands and the
+    // hub groups (the per-document pair sets once took one)
+    import org.apache.spark.sql.functions.col
+    val docs = spark.read.parquet(dir + "/documents.parquet").select(col("doc_id"), col("text"))
+    val counter = new graft.core.JobCounter
+    counter.observe(spark.sparkContext) {
+      graft.ops.Dedup.verifiedHubEdges(docs, col("text"), col("doc_id"))
+    }
+    assert((counter.jobs, counter.sqlExecutions) == (4, 1),
+      s"verifiedHubEdges ran ${counter.jobs} jobs in ${counter.sqlExecutions} SQL executions")
   }
 }

@@ -1,11 +1,13 @@
 #!/usr/bin/env python3
 """Synthesize a SKEWED documents table from an sf directory (bench-only).
 
-The sf1.0 fixture perturbs text per replica, so its LSH buckets stay
-uniform BY CONSTRUCTION — the hot-bucket cap and the exact-dedup prepass
-(the two duplicate-mass guards of the band-join family) are never
-exercised at scale. This tool plants the pathology the guards exist for
-(round-12 verdict item 6):
+The sf1.0 fixture perturbs text per replica, so its LSH buckets are
+mostly small and the exact-dedup prepass finds little to collapse. They are
+not all under the cap, though: SkewBench's guarded `minhashCandidates` leg
+(k = 3, 4 hashes, 2 bands, cap 64) logs 5 dropped buckets on the uniform
+sf1.0 corpus too, so the skew ratio's baseline already pays a few capped
+buckets. Neither guard meets duplicate mass at scale there. This tool
+plants the pathology the guards exist for (round-12 verdict item 6):
 
   - 6% of docs become ONE byte-identical template (exact-dup mass — the
     exactPrepass target: without it, every LSH bucket the template lands
