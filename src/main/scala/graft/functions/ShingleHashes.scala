@@ -210,10 +210,6 @@ object MinHashText {
   * shingles_from_tokens(word_tokens(text, 1), k), md5_hash60)))`, built in
   * the one pass of [[TextGrams]] (the composed chain for a document with a
   * non-ASCII word code point). Null text gives null.
-  *
-  * Consecutive calls with equal text and k reuse the previous array: a join
-  * emits every match of one document in a row, so each document is hashed
-  * once however many candidate routes it has.
   */
 case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
 
@@ -243,15 +239,8 @@ case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
 
 object ShingleHashes {
 
-  /** This thread's last input (a copy) and its result. */
-  private final case class Last(text: UTF8String, k: Int, out: ArrayData)
-
-  private val last = new ThreadLocal[Last]
-
   /** The scalar kernel (shared by interpreted eval and codegen). */
   def hashes(text: UTF8String, k: Int): ArrayData = {
-    val prev = last.get()
-    if (prev != null && prev.k == k && prev.text == text) return prev.out
     val grams = TextGrams.get()
     val hs =
       if (grams.scan(text)) {
@@ -269,9 +258,7 @@ object ShingleHashes {
       if (d == 0 || hs(i) != hs(d - 1)) { hs(d) = hs(i); d += 1 }
       i += 1
     }
-    val out = UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(hs, d))
-    last.set(Last(text.clone(), k, out))
-    out
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(hs, d))
   }
 
   /** Column-facing constructor (Spark 4 Column↔Expression bridge). */

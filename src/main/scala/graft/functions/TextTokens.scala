@@ -100,6 +100,46 @@ object WordTokens {
     ColumnBridge.column(WordTokens(ColumnBridge.expression(c), minLen))
 }
 
+/** `lower()` in the root locale, the lowercasing [[WordTokens]] applies.
+  * Spark's `lower()` lowercases non-ASCII text in the JVM's default locale
+  * (under tr_TR, `TITLE café` becomes `tıtle café`); this does not. All-ASCII
+  * text takes the same byte path as `lower()`.
+  */
+case class LowerRoot(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = StringType
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    child.dataType match {
+      case StringType => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(s"lower_root requires string input, got $other")
+    }
+
+  override protected def nullSafeEval(input: Any): Any =
+    LowerRoot.lower(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val obj = LowerRoot.getClass.getName.stripSuffix("$") + "$.MODULE$"
+    defineCodeGen(ctx, ev, c => s"$obj.lower($c)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): LowerRoot =
+    copy(child = newChild)
+
+  override def prettyName: String = "lower_root"
+}
+
+object LowerRoot {
+
+  /** The scalar kernel (shared by interpreted eval and codegen). */
+  def lower(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toLowerCase
+    else UTF8String.fromString(s.toString.toLowerCase(java.util.Locale.ROOT))
+
+  /** Column-facing constructor (Spark 4 Column↔Expression bridge). */
+  def lower_root(c: Column): Column = ColumnBridge.column(LowerRoot(ColumnBridge.expression(c)))
+}
+
 /** k-gram shingling over a token array as a native expression. The Column
   * spelling (`transform(sequence(...), i => concat_ws(" ", slice(toks, i,
   * k)))`) allocates a slice + evaluates an interpreted lambda per gram

@@ -371,14 +371,15 @@ object Dedup {
     * persisted.
     *
     * The verify runs by hub. Each row of a kept bucket is a route (document
-    * → hub), the hub's own row included; the text joins the routes, each
-    * routed document's hashed shingle set ([[shingleSet]]) is built once
-    * (a join emits a document's routes in a row, and the kernel reuses its
-    * last result), and the rows shuffle by hub. Each hub group compares the
-    * hub's set with each member's set, and the `distinct` over a member
-    * repeated across bands needs no shuffle of its own, as the rows are
-    * already partitioned by hub. `jac` differs from string Jaccard only on
-    * a 60-bit collision between two shingles of the pair.
+    * → hub), the hub's own row included; the text joins the routes, the
+    * hashed shingle set ([[shingleSet]]) is built once per route, and the
+    * rows shuffle by hub. A document has at most `bands` routes, so its set
+    * is hashed and shuffled at most `bands` times; never once per pair.
+    * Each hub group compares the hub's set with each member's set, and the
+    * `distinct` over a member repeated across bands needs no shuffle of its
+    * own, as the rows are already partitioned by hub. `jac` differs from
+    * string Jaccard only on a 60-bit collision between two shingles of the
+    * pair.
     *
     * Connectivity through the hub is exactly what connected components
     * consume; the star loses only the corner where two members verify

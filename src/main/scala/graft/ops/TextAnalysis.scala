@@ -882,10 +882,13 @@ object TextAnalysis {
 
   /** Phrase (substring) matches of `phrases` in the lowercased text, in
     * lexicon order — catches multi-word and intra-word patterns the
-    * token-level [[matchedKeywords]] cannot.
+    * token-level [[matchedKeywords]] cannot. Text and lexicon lowercase in
+    * the root locale, so matches do not depend on the JVM's default locale.
     */
-  def matchedPhrases(textCol: Column, phrases: Seq[String]): Column =
-    filter(typedLit(phrases.map(_.toLowerCase(java.util.Locale.ROOT))), p => contains(lower(textCol), p))
+  def matchedPhrases(textCol: Column, phrases: Seq[String]): Column = {
+    val lowered = graft.functions.LowerRoot.lower_root(textCol)
+    filter(typedLit(phrases.map(_.toLowerCase(java.util.Locale.ROOT))), p => contains(lowered, p))
+  }
 
   /** Overlapping fixed-width character chunks (context-window splitting for
     * LLM corpora): chunk k covers `[k·(size−overlap), … + size)`. Pure HOF

@@ -95,6 +95,7 @@ class CodegenPropertySpec extends AnyFunSuite {
         ShinglesFromTokens.shingles_from_tokens(WordTokens.word_tokens(col("s")), 3), 4),
       MinHashText.minhash_text(col("s"), 3, 4),
       ShingleHashes.shingle_hashes(col("s"), 3),
+      LowerRoot.lower_root(col("s")),
       VocabTokenCount.vocab_token_count(col("s"), vocab),
       VocabTokenCount.vocab_tokenize(col("s"), vocab),
       // the optimizer barrier must be value-identity in both modes — and
